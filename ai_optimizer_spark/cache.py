@@ -47,14 +47,6 @@ def shared_persist(df):
     return df
 
 
-def register_shared(df):
-    """Register an already-persisted DataFrame (e.g. one persisted with a
-    non-default StorageLevel) for the release sweep. Returns ``df``."""
-    with _LOCK:
-        _ACTIVE.append(df)
-    return df
-
-
 def release_shared_caches() -> int:
     """Unpersist every DataFrame registered since the last sweep; returns
     how many entries were released. Safe to call at any time — a registered

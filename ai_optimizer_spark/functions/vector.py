@@ -47,10 +47,6 @@ def cosine_similarity(a, b) -> Column:
     )
 
 
-# d18's call sites adopted the guard first; keep the explicit name alive
-cosine_similarity_safe = cosine_similarity
-
-
 def safe_unit(vec_col, nrm_col) -> Column:
     """Unit-normalize with the zero-norm guard — the cosine_similarity
     policy in ONE place: a zero vector normalizes to the zero vector (its

@@ -1324,7 +1324,7 @@ def semdedup(
             # _safe: ANSI throws on zero-norm vectors (failed encodes emit
             # all-zero embeddings); they cosine to 0 = never a duplicate
             (
-                F.round(V.cosine_similarity_safe("embedding", "ce"), 3) + F.lit(0.0)
+                F.round(V.cosine_similarity("embedding", "ce"), 3) + F.lit(0.0)
             ).alias("cos_c"),
         )
         .select(

@@ -138,33 +138,88 @@ def lsh_bucket_topk(
     )
 
 
+def _unit_rows(vecs):
+    """Stack embeddings into a float64 matrix of unit rows under the
+    `V.cosine_similarity` policy: a zero vector stays zero (cosine 0.0
+    with anything) and a NULL embedding becomes a NaN row (NULL cosine)."""
+    import numpy as np
+
+    dim = next((len(v) for v in vecs if v is not None), 0)
+    X = np.array(
+        [np.full(dim, np.nan) if v is None else v for v in vecs], dtype=np.float64
+    ).reshape(len(vecs), dim)
+    n = np.linalg.norm(X, axis=1, keepdims=True)
+    return X / np.where(n > 0, n, 1.0)
+
+
+def _matmul_topk(emb: DataFrame, q_rows, k: int) -> DataFrame:
+    """Exact cosine top-k per query for the collected `q_rows`
+    (vec_id, embedding), excluding each query itself: one numpy matmul
+    per Arrow batch inside mapInPandas, then the per-query window.
+
+    Spark's higher-order array functions are interpreted (not whole-stage-
+    codegen'd), so an expression kernel pays N·Q·d scalar ops; a normalized
+    `V @ Qᵀ` hits vectorized BLAS, and each batch emits only its local
+    top-k per query, so the shuffle into the final window carries
+    O(batches·Q·k) rows, never N·Q. Per-batch pruning orders by (rounded
+    sim desc NULLs last, vec_id asc) — the same total order as the final
+    window — so pruning can never change the result. The scan is not
+    widened (cf. `widen_scan`): per-row BLAS work is so cheap that the
+    round-robin shuffle and extra Python tasks cost more than the cores
+    buy — measured on 4 cores, v5 ran 2.4 s widened vs 1.1 s not on a
+    16x-tiled sf0.1 corpus (4 scan partitions)."""
+    import numpy as np
+    import pandas as pd
+
+    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
+    qn = _unit_rows([r["embedding"] for r in q_rows])
+    bq = emb.sparkSession.sparkContext.broadcast((q_ids, qn))
+
+    def _score(batches):
+        ids, qmat = bq.value
+        for pdf in batches:
+            if pdf.empty or not len(ids):
+                continue
+            vecs = _unit_rows(list(pdf["embedding"]))
+            if vecs.shape[1] == qmat.shape[1]:
+                sims = np.round(vecs @ qmat.T, 3) + 0.0  # (n, q)
+            else:  # one side is all NULL: every cosine is NULL
+                sims = np.full((len(vecs), len(ids)), np.nan)
+            vec_ids = pdf["vec_id"].to_numpy()
+            parts = []
+            for j in range(len(ids)):
+                mask = vec_ids != ids[j]
+                cand_v, cand_s = vec_ids[mask], sims[mask, j]
+                # NaN (NULL) sims sort last, like the window's NULLS LAST
+                keep = np.lexsort((cand_v, -cand_s, np.isnan(cand_s)))[:k]
+                parts.append(
+                    pd.DataFrame(
+                        {
+                            "query_id": np.full(len(keep), ids[j], dtype=np.int64),
+                            "vec_id": cand_v[keep],
+                            "cos_sim": cand_s[keep],
+                        }
+                    )
+                )
+            yield pd.concat(parts, ignore_index=True)
+
+    partial = emb.mapInPandas(_score, "query_id long, vec_id long, cos_sim double")
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+    return partial.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+
+
 def knn_self_join(t: dict[str, DataFrame], k: int = 3, limit_queries: int = 50) -> DataFrame:
     """Brute-force kNN join: for each of the first `limit_queries` vectors,
     its k nearest neighbours (excluding itself). The all-pairs baseline the
-    ANN variants are judged against.
-
-    r11 (guide §2.2): the candidate side is widened first — the N·Q
-    interpreted HOF cosines are the dominant map cost, and the single-
-    row-group fixture scan ran all of them on ONE core out of 32 (profiled:
-    2 tasks, 1.9 s of the query's 2.0 s in that one stage). No-op on real
-    multi-row-group tables; the query side broadcasts from the narrow scan
-    as before. Per-row arithmetic and the window's total order are
-    partitioning-independent, so results are bit-identical."""
-    from ..tables import widen_scan
-
+    ANN variants are judged against. The query block is one bounded
+    collect; at 100 TB it just grows to a tile loop over `_matmul_topk`."""
     emb = t["embeddings"]
-    q = emb.filter(F.col("vec_id") < limit_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    q_rows = (
+        emb.filter(F.col("vec_id") < limit_queries)
+        .select("vec_id", "embedding")
+        .collect()
     )
-    sim = F.round(V.cosine_similarity("embedding", "query_vec"), 3) + F.lit(0.0)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        widen_scan(emb).crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", sim.alias("cos_sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
+    return _matmul_topk(emb, q_rows, k)
 
 
 def _validate_centroid_rows(rows) -> None:
@@ -199,7 +254,7 @@ def _assign_cells(emb: DataFrame, cents: DataFrame, rows=None) -> DataFrame:
     centroids ship to workers as part of the plan (exactly how FAISS-style
     IVF distributes its coarse quantizer), and the write path clusters the
     store by the resulting cid. `rows` lets a caller that already collected
-    the centroid model (e.g. ivfpq_topk) skip the duplicate collect job."""
+    the centroid model skip the duplicate collect job."""
     if rows is None:
         rows = cents.collect()
     _validate_centroid_rows(rows)
@@ -499,73 +554,6 @@ def ivf_knn_join(
     )
 
 
-def matmul_knn_join(
-    t: dict[str, DataFrame], k: int = 3, limit_queries: int = 50
-) -> DataFrame:
-    """Brute-force kNN join, BLAS tier: identical semantics (and oracle) to
-    knn_self_join, but the scoring runs as one numpy matmul per Arrow batch
-    inside mapInPandas instead of per-row `zip_with`/`aggregate` exprs.
-
-    Why this exists: Spark's higher-order array functions are interpreted
-    (not whole-stage-codegen'd), so N·Q·d scalar ops dominate the exact
-    tier. A normalized `V @ Qᵀ` hits vectorized BLAS — orders of magnitude
-    more FLOPs/s — and each batch emits only its local top-k per query, so
-    the shuffle into the final per-query window carries O(batches·Q·k)
-    rows, never N·Q. At 100 TB this is the exact-search workhorse; the
-    query block (the broadcast side) just grows to a tile loop.
-
-    Per-batch pruning orders by (rounded sim desc, vec_id asc) — the same
-    total order as the final window — so pruning can never change the
-    result."""
-    import numpy as np
-    import pandas as pd
-
-    emb = t["embeddings"]
-    q_rows = (
-        emb.filter(F.col("vec_id") < limit_queries)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    q_ids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
-    qn = np.array([r.embedding for r in q_rows], dtype=np.float64)
-    qn /= np.linalg.norm(qn, axis=1, keepdims=True)
-    bq = emb.sparkSession.sparkContext.broadcast((q_ids, qn))
-
-    def _score(batches):
-        ids, qmat = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vecs = np.array(list(pdf["embedding"]), dtype=np.float64)
-            vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-            sims = np.round(vecs @ qmat.T, 3) + 0.0  # (n, q)
-            vec_ids = pdf["vec_id"].to_numpy()
-            parts = []
-            for j in range(sims.shape[1]):
-                mask = vec_ids != ids[j]
-                cand_v, cand_s = vec_ids[mask], sims[mask, j]
-                keep = np.lexsort((cand_v, -cand_s))[:k]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(keep), ids[j], dtype=np.int64),
-                            "vec_id": cand_v[keep],
-                            "cos_sim": cand_s[keep],
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
-    from ..tables import widen_scan
-
-    partial = widen_scan(emb).mapInPandas(
-        _score, "query_id long, vec_id long, cos_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return partial.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
-
-
 def union_store_results(t: dict[str, DataFrame], query_id: int = 0, k: int = 5) -> DataFrame:
     """U2: result concatenation across fan-out store searches
     (vs_retriever.py:240-242 extends one hit list per searched table).
@@ -822,14 +810,19 @@ def ann_recall(
     any corpus scale; the cost is the two kNN plans themselves (the exact
     side is the one that doesn't survive 100 TB, which is the point of
     measuring on a sample)."""
-    exact = knn_self_join(t, k=k, limit_queries=n_queries).select(
-        "query_id", "vec_id"
-    )
+    exact = knn_self_join(t, k=k, limit_queries=n_queries)
     approx = ivf_knn_join(
         t, n_queries=n_queries, k=k, n_centroids=n_centroids, n_probe=n_probe
-    ).select("query_id", "vec_id", F.lit(1).alias("hit"))
+    )
+    return _recall_at_k(exact, approx, k)
+
+
+def _recall_at_k(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
+    """Per-query recall@k of the `approx` kNN rows against the `exact` ones."""
+    hits = approx.select("query_id", "vec_id", F.lit(1).alias("hit"))
     return (
-        exact.join(approx, ["query_id", "vec_id"], "left")
+        exact.select("query_id", "vec_id")
+        .join(hits, ["query_id", "vec_id"], "left")
         .groupBy("query_id")
         .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long").alias("n_hits"))
         .select(
@@ -994,25 +987,21 @@ def _ivfpq_model(
     n_codes: int,
     dims: int,
 ):
-    """Driver-side IVFPQ model fit, shared by the expression tier
-    (ivfpq_topk) and the numpy tier (ivfpq_topk_np): ONE bounded collect
-    (centroids + codebook seeds + query) → (C, books, probed, qd,
-    assigned). These are exactly the artifacts a FAISS index file holds;
-    fitting them is a write-path cost."""
+    """Driver-side IVFPQ model fit: ONE bounded collect (centroids +
+    codebook seeds + query) → (C, books, probed, qd, qe). These are
+    exactly the artifacts a FAISS index file holds; fitting them is a
+    write-path cost."""
+    n_seed = max(n_centroids, n_codes)
     model_rows = (
-        emb.filter((F.col("vec_id") < max(n_centroids, n_codes)) | (F.col("vec_id") == query_id))
+        emb.filter((F.col("vec_id") < n_seed) | (F.col("vec_id") == query_id))
         .select("vec_id", "embedding")
         .collect()
     )
-    by_id = {int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in model_rows}
+    by_id = {int(r["vec_id"]): r["embedding"] for r in model_rows}
+    # the seeds ARE the model: a NULL one is the degenerate-model error
+    _validate_centroid_rows([{"cid": c, "ce": by_id.get(c)} for c in range(n_seed)])
+    by_id = {i: [float(x) for x in e] for i, e in by_id.items()}
     C = [by_id[c] for c in range(n_centroids)]
-    assigned = _assign_cells(
-        emb,
-        emb.filter(F.col("vec_id") < n_centroids).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-        ),
-        rows=[{"cid": c, "ce": C[c]} for c in range(n_centroids)],
-    )
     d = dims // m
 
     def _d2(u, v):
@@ -1045,29 +1034,7 @@ def _ivfpq_model(
                 for s in range(m)
             ]
         )
-    return C, books, probed, qd, qe, assigned
-
-
-def _dlit(vals) -> str:
-    """Nested DOUBLE-array literal as one parseable SQL string. repr()
-    round-trips every finite double exactly, and Spark parses decimal /
-    scientific literals with correct rounding, so `F.expr(_dlit(v))`
-    builds the same literal tree as the nested-F.lit form at a tiny
-    fraction of the py4j round-trips (see ivfpq_topk)."""
-    if isinstance(vals, (list, tuple)):
-        return "array(" + ",".join(_dlit(v) for v in vals) + ")"
-    v = float(vals)
-    if v != v or v in (float("inf"), float("-inf")):
-        # repr() would emit 'nanD'/'infD', which fails at expression PARSE
-        # with a message pointing nowhere near the cause (ADVICE r10). A
-        # non-finite value here means a corrupt model-fit collect — fail
-        # loudly at the source instead.
-        raise ValueError(
-            f"_dlit: non-finite model scalar {v!r} — upstream model fit "
-            "produced NaN/Inf (corrupt embeddings?); refusing to build an "
-            "unparseable literal"
-        )
-    return repr(v) + "D"
+    return C, books, probed, qd, qe
 
 
 def ivfpq_topk(
@@ -1092,83 +1059,83 @@ def ivfpq_topk(
     materially better recall.
 
     Read-path plan shape — ZERO shuffles before the top-k: every model is
-    tiny and ships inside the plan (centroids n_centroids·dims floats,
-    codebooks m·n_codes·(dims/m) floats, ADC table n_probe·m·n_codes
-    doubles — the exact artifacts a FAISS index file holds), so cell
-    assignment, probe filter, code argmin, and the ADC sum are ONE fused
-    projection over the scan, followed by TakeOrderedAndProject for the
-    refine·k cut and a broadcast-semi-join exact re-rank. At 100 TB the
-    store is written clustered by cid with codes precomputed alongside
-    (write-path cost), making the probe filter partition pruning and the
-    projection a lookup instead of an argmin. The whole index — coarse
-    assignment, residual codebooks, ADC tables, refine — is hash-verified
-    against a full SQL re-derivation (exact at sf0.01/sf0.1); recall is
-    additionally unit-tested against brute force
-    (tests/test_similarity.py)."""
+    tiny (centroids n_centroids·dims floats, codebooks m·n_codes·(dims/m)
+    floats, ADC table n_probe·m·n_codes doubles — the exact artifacts a
+    FAISS index file holds) and ships in the scorer's closure. An Arrow-
+    batched mapInPandas kernel does cell argmin, code argmin, and the ADC
+    sum as numpy matrix ops — per batch of B vectors one (B×n_centroids)
+    distance matrix, m (B×n_codes) subspace matrices and a gather, no
+    per-element interpreter — followed by TakeOrderedAndProject for the
+    refine·k cut and a broadcast-semi-join exact re-rank. A NULL embedding
+    is missing, never a candidate. At 100 TB the store is written clustered
+    by cid with codes precomputed alongside (write-path cost), making the
+    probe filter partition pruning. The whole index — coarse assignment,
+    residual codebooks, ADC tables, refine — is hash-verified against a
+    full SQL re-derivation (exact at sf0.01/sf0.1); recall is additionally
+    unit-tested against brute force (tests/test_similarity.py)."""
+    import numpy as np
+    import pandas as pd
+
     emb = t["embeddings"]
-    C, books, probed, qd, qe, assigned = _ivfpq_model(
+    C, books, probed, qd, qe = _ivfpq_model(
         emb, query_id, n_centroids, n_probe, m, n_codes, dims
     )
     d = dims // m
+    Cnp = np.asarray(C, dtype=np.float64)                      # (nc, dims)
+    Bnp = np.asarray(books, dtype=np.float64)                  # (m, n_codes, d)
+    QD = np.asarray(qd, dtype=np.float64)                      # (n_probe, m, n_codes)
+    probed_arr = np.asarray(probed, dtype=np.int64)
+    probe_pos = {int(c): i for i, c in enumerate(probed)}
 
-    # --- map-only candidate scoring, inlined models ---
-    # Each model array is ONE JVM-parsed F.expr literal, not a py4j Column
-    # construction per scalar — the _rp_project driver-cost lesson
-    # (similarity.py finding-11): the per-scalar form spent ~2 s of DRIVER
-    # time per call building ~700 literal Columns for the same values
-    # (repr() round-trips doubles exactly, so the parsed literals are
-    # bit-identical to F.lit's).
-    ce_arr = F.expr(_dlit(C))
-    books_arr = F.expr(_dlit(books))
-    qd_arr = F.expr(_dlit(qd))
-    probe_arr = F.expr(
-        "array(" + ",".join(f"{int(c)}L" for c in probed) + ")"
-    )
-    resid = F.zip_with(
-        "embedding", F.element_at(ce_arr, F.col("cid").cast("int") + 1), lambda x, y: x - y
-    )
-    sub_d2 = lambda rs, cv: F.aggregate(  # noqa: E731
-        F.zip_with(rs, cv, lambda x, y: (x.cast("double") - y.cast("double")) ** 2),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    qd_cell = F.element_at(qd_arr, F.col("ppos").cast("int"))
-    approx = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.element_at(qd_cell, s.cast("int") + 1),
-            F.array_min(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(n_codes - 1)),
-                    lambda c: F.struct(
-                        sub_d2(
-                            F.slice(F.col("resid"), s.cast("int") * d + 1, d),
-                            F.element_at(
-                                F.element_at(books_arr, s.cast("int") + 1),
-                                c.cast("int") + 1,
-                            ),
-                        ).alias("dd"),
-                        c.alias("code"),
-                    ),
-                )
-            )["code"].cast("int")
-            + 1,
-        ),
+    def _score(batches):
+        for pdf in batches:
+            X = np.asarray(
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
+            )
+            if X.size == 0:
+                yield pd.DataFrame({"vec_id": [], "approx_d": []})
+                continue
+            # cell assignment: argmin over squared distance, cid tie-break
+            d2 = ((X[:, None, :] - Cnp[None, :, :]) ** 2).sum(axis=2)
+            cids = d2.argmin(axis=1)  # argmin returns FIRST min → cid asc tie-break
+            mask = np.isin(cids, probed_arr)
+            if not mask.any():
+                yield pd.DataFrame({"vec_id": [], "approx_d": []})
+                continue
+            Xs = X[mask]
+            cs = cids[mask]
+            resid = Xs - Cnp[cs]                               # (n, dims)
+            sub = resid.reshape(len(Xs), m, d)                 # (n, m, d)
+            # code argmin per subspace: (n, m, n_codes)
+            dd = ((sub[:, :, None, :] - Bnp[None, :, :, :]) ** 2).sum(axis=3)
+            codes = dd.argmin(axis=2)                          # (n, m)
+            ppos = np.asarray([probe_pos[int(c)] for c in cs])
+            # gather qd[ppos, s, codes] and sum over s; round-9 matches the
+            # oracle cut, so identical candidates tie exactly across engines.
+            # Residual half-mode caveat: np rounds half-to-even while
+            # Spark F.round / DuckDB ROUND round half-away — a sum landing
+            # EXACTLY on a 0.5e-9 boundary could still differ, but double
+            # sums of products land there with ~0 probability; the tie
+            # guarantee this buys is for IDENTICAL codes (equal sums),
+            # which round identically under any half mode.
+            approx = QD[ppos[:, None], np.arange(m)[None, :], codes].sum(
+                axis=1
+            ).round(9)
+            yield pd.DataFrame(
+                {"vec_id": pdf["vec_id"][mask].astype("int64"), "approx_d": approx}
+            )
+
+    scored = (
+        emb.filter(F.col("embedding").isNotNull())
+        .select("vec_id", "embedding")
+        .mapInPandas(_score, "vec_id long, approx_d double")
     )
     cands = (
-        assigned.withColumn("ppos", F.array_position(probe_arr, F.col("cid")))
-        .filter(F.col("ppos") > 0)
-        .withColumn("resid", resid)
-        .select("vec_id", F.round(approx, 9).alias("approx_d"))
-        .filter(F.col("vec_id") != query_id)
+        scored.filter(F.col("vec_id") != query_id)
         .orderBy(F.asc("approx_d"), F.asc("vec_id"))
         .limit(refine * k)
         .select("vec_id")
     )
-    # exact re-rank with the query inlined (it is already in the collected
-    # model — no extra scan job / crossJoin needed)
     sim = F.round(V.cosine_similarity("embedding", F.lit(qe)), 3) + F.lit(0.0)
     return (
         emb.join(F.broadcast(cands), "vec_id", "left_semi")
@@ -1281,16 +1248,19 @@ def ann_operating_curve(
     a deployment reads to pick its operating point (the recall/cost knee);
     v12 measures one point of it.
 
-    Plan shape: one exact-kNN side shared across the sweep (Spark caches
-    nothing here, but each side reduces to n_queries·k rows before any
-    comparison join, so the whole sweep costs |probes| IVF plans + one
-    exact plan on a sample — the measurement runs on samples by design."""
+    Plan shape: one exact-kNN frame is passed to every sweep point, so its
+    scorer is one subtree whose exchange Spark reuses across the union;
+    each side reduces to n_queries·k rows before any comparison join, so
+    the whole sweep costs |probes| IVF plans + one exact plan on a sample —
+    the measurement runs on samples by design."""
+    exact = knn_self_join(t, k=k, limit_queries=n_queries)
     out = None
     for p in probes:
+        approx = ivf_knn_join(
+            t, n_queries=n_queries, k=k, n_centroids=n_centroids, n_probe=p
+        )
         r = (
-            ann_recall(
-                t, n_queries=n_queries, k=k, n_centroids=n_centroids, n_probe=p
-            )
+            _recall_at_k(exact, approx, k)
             .agg(
                 F.round(F.avg("recall_at_k"), 3).alias("mean_recall"),
                 F.round(F.min("recall_at_k"), 3).alias("min_recall"),
@@ -1300,103 +1270,6 @@ def ann_operating_curve(
         )
         out = r if out is None else out.unionByName(r)
     return out
-
-
-def ivfpq_topk_np(
-    t: dict[str, DataFrame],
-    query_id: int = 0,
-    k: int = TOP_K,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    m: int = 8,
-    n_codes: int = 16,
-    dims: int = 64,
-    refine: int = 4,
-) -> DataFrame:
-    """V20: the BLAS tier of IVFPQ — same logical operator as ivfpq_topk,
-    different physical strategy for the candidate scoring: instead of the
-    interpreted higher-order-function expressions, an Arrow-batched
-    mapInPandas kernel does cell argmin, code argmin, and the ADC sum as
-    numpy matrix ops (the v10 pattern applied to the compressed domain).
-    All arithmetic is float64; numpy's pairwise summation can differ from
-    the expression fold by round-off ulps, but the refine·k cut has slack
-    and the final re-rank is exact cosine either way — the tiers produce
-    identical results on the fixtures (equality-tested in
-    tests/test_similarity.py).
-
-    At 100 TB this is the tier that serves: per Arrow batch of B vectors,
-    assignment is one (B×n_centroids) distance matrix, encoding m
-    (B×n_codes) subspace matrices, and the ADC sum a gather — all BLAS,
-    no per-element interpreter."""
-    import numpy as np
-    import pandas as pd
-
-    emb = t["embeddings"]
-    C, books, probed, qd, qe, _assigned = _ivfpq_model(
-        emb, query_id, n_centroids, n_probe, m, n_codes, dims
-    )
-    d = dims // m
-    Cnp = np.asarray(C, dtype=np.float64)                      # (nc, dims)
-    Bnp = np.asarray(books, dtype=np.float64)                  # (m, n_codes, d)
-    QD = np.asarray(qd, dtype=np.float64)                      # (n_probe, m, n_codes)
-    probed_arr = np.asarray(probed, dtype=np.int64)
-    probe_pos = {int(c): i for i, c in enumerate(probed)}
-
-    def _score(batches):
-        for pdf in batches:
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            if X.size == 0:
-                yield pd.DataFrame({"vec_id": [], "approx_d": []})
-                continue
-            # cell assignment: argmin over squared distance, cid tie-break
-            d2 = ((X[:, None, :] - Cnp[None, :, :]) ** 2).sum(axis=2)
-            cids = d2.argmin(axis=1)  # argmin returns FIRST min → cid asc tie-break
-            mask = np.isin(cids, probed_arr)
-            if not mask.any():
-                yield pd.DataFrame({"vec_id": [], "approx_d": []})
-                continue
-            Xs = X[mask]
-            cs = cids[mask]
-            resid = Xs - Cnp[cs]                               # (n, dims)
-            sub = resid.reshape(len(Xs), m, d)                 # (n, m, d)
-            # code argmin per subspace: (n, m, n_codes)
-            dd = ((sub[:, :, None, :] - Bnp[None, :, :, :]) ** 2).sum(axis=3)
-            codes = dd.argmin(axis=2)                          # (n, m)
-            ppos = np.asarray([probe_pos[int(c)] for c in cs])
-            # gather qd[ppos, s, codes] and sum over s
-            # round-9 matches the expression tier and the oracle cut (see
-            # ivfpq_topk): identical candidates tie exactly across engines.
-            # Residual half-mode caveat: np rounds half-to-even while
-            # Spark F.round / DuckDB ROUND round half-away — a sum landing
-            # EXACTLY on a 0.5e-9 boundary could still differ, but double
-            # sums of products land there with ~0 probability; the tie
-            # guarantee this buys is for IDENTICAL codes (equal sums),
-            # which round identically under any half mode.
-            approx = QD[ppos[:, None], np.arange(m)[None, :], codes].sum(
-                axis=1
-            ).round(9)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"][mask].astype("int64"), "approx_d": approx}
-            )
-
-    scored = emb.select("vec_id", "embedding").mapInPandas(
-        _score, "vec_id long, approx_d double"
-    )
-    cands = (
-        scored.filter(F.col("vec_id") != query_id)
-        .orderBy(F.asc("approx_d"), F.asc("vec_id"))
-        .limit(refine * k)
-        .select("vec_id")
-    )
-    sim = F.round(V.cosine_similarity("embedding", F.lit(qe)), 3) + F.lit(0.0)
-    return (
-        emb.join(F.broadcast(cands), "vec_id", "left_semi")
-        .select("vec_id", "label", sim.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
-    )
 
 
 HIER_GROUP_SIZE = 4  # centroids per group (pilot = the group's min cid)

@@ -2694,11 +2694,11 @@ _register(
     """,
 )
 
-# v10: BLAS-tier exact kNN — identical result contract to v5, so it shares
-# the same oracle shape (same k/limit defaults, same rounding + tie-break).
+# v10: the name of the BLAS exact-kNN tier, kept for the bench series; v5
+# now runs the same kernel, so the two share one builder and one oracle.
 _register(
     "v10_matmul_knn",
-    S.matmul_knn_join,
+    S.knn_self_join,
     ORACLE_SQL["v5_knn_self_join"],
 )
 
@@ -3089,10 +3089,9 @@ LIMIT 8
 
 _register("v17_ivfpq_topk", S.ivfpq_topk, _IVFPQ_ORACLE)
 
-# v20: the BLAS tier of v17 (numpy mapInPandas candidate scoring) —
-# identical results, ~2.5x faster; same oracle (equality with v17 is also
-# unit-tested).
-_register("v20_ivfpq_topk_np", S.ivfpq_topk_np, _IVFPQ_ORACLE)
+# v20: the name of IVFPQ's numpy tier, kept for the bench series; v17 now
+# runs the same kernel, so the two share one builder and one oracle.
+_register("v20_ivfpq_topk_np", S.ivfpq_topk, _IVFPQ_ORACLE)
 
 _register(
     "u3_changed_concat",

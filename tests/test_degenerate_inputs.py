@@ -6,6 +6,7 @@ Spark 4 expression that assumes non-null would throw mid-scan)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from ai_optimizer_spark.operators import dedup as D
 from ai_optimizer_spark.operators import sampling as SMP
@@ -227,11 +228,29 @@ def degenerate_emb(spark):
     )
 
 
-def test_similarity_family_survives_degenerate_embeddings(spark, degenerate_emb):
+@pytest.fixture(scope="module")
+def degenerate_ivfpq_emb(spark):
+    """40 random 64-dim vectors (IVFPQ's default dims) with a NULL
+    embedding at vec_id 20 and a zero vector at vec_id 30 — both outside
+    the model seeds (vec_id < 16) and away from the query (vec_id 0)."""
+    import numpy as np
+
+    X = np.random.default_rng(7).standard_normal((40, 64)).astype(np.float32)
+    rows = [
+        (i, None if i == 20 else [0.0] * 64 if i == 30 else X[i].tolist(), i % 4)
+        for i in range(40)
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+
+
+def test_similarity_family_survives_degenerate_embeddings(
+    spark, monkeypatch, degenerate_emb, degenerate_ivfpq_emb
+):
     """Zero-norm and NULL embeddings must flow through the cosine paths
     without ANSI divide-by-zero errors; the zero vector scores 0.0
     ('similar to nothing'), the NULL row scores NULL (missing) — neither
     ever surfaces as a near-duplicate or a top hit."""
+    from ai_optimizer_spark import registry
     from ai_optimizer_spark.operators import dedup as DD
     from ai_optimizer_spark.operators import similarity as S
 
@@ -243,6 +262,43 @@ def test_similarity_family_survives_degenerate_embeddings(spark, degenerate_emb)
     assert 1 not in flat and 2 not in flat  # degenerate rows never pair
     sem = DD.semdedup(t, n_centroids=2).collect()
     assert {r.vec_id for r in sem} >= {0, 1, 3, 4, 5}
+
+    def run(name, tables):
+        # a registered query over the in-memory fixture, not a parquet dir
+        monkeypatch.setattr(registry, "load_tables", lambda _spark, _sf: tables)
+        return [tuple(r) for r in registry.QUERIES[name](spark, "").collect()]
+
+    # exact kNN keeps the V.cosine_similarity policy: the zero-norm query
+    # scores 0.0, the NULL query and NULL candidate score NULL and rank
+    # last — the rows the zip_with expression kernel returned
+    for name in ("v5_knn_self_join", "v10_matmul_knn"):
+        assert sorted(run(name, t)) == [
+            (0, 3, 0.997, 1), (0, 4, 0.195, 2), (0, 5, 0.195, 3),
+            (1, 0, 0.0, 1), (1, 3, 0.0, 2), (1, 4, 0.0, 3),
+            (2, 0, None, 1), (2, 1, None, 2), (2, 3, None, 3),
+            (3, 0, 0.997, 1), (3, 4, 0.266, 2), (3, 5, 0.266, 3),
+            (4, 0, 0.195, 3), (4, 3, 0.266, 2), (4, 5, 1.0, 1),
+            (5, 0, 0.195, 3), (5, 3, 0.266, 2), (5, 4, 1.0, 1),
+        ], name
+
+    # IVFPQ: a NULL or zero vector outside the model changes nothing — the
+    # top-k equals the inlined-expression scorer's, and the NULL-free run's
+    emb = degenerate_ivfpq_emb
+    no_null = {"embeddings": emb.filter("vec_id != 20")}
+    for name in ("v17_ivfpq_topk", "v20_ivfpq_topk_np"):
+        pq = run(name, {"embeddings": emb})
+        assert pq == [
+            (25, 1, 0.328), (17, 1, 0.235), (26, 2, 0.192), (39, 3, 0.183),
+            (38, 2, 0.162), (32, 0, 0.13), (12, 0, 0.125), (18, 2, 0.119),
+        ], name
+        assert pq == run(name, no_null), name
+
+    # a NULL model seed is a broken model: the clear centroid-model error
+    seed_null = emb.filter("vec_id != 20").withColumn(
+        "embedding", F.when(F.col("vec_id") == 5, None).otherwise(F.col("embedding"))
+    )
+    with pytest.raises(ValueError, match="degenerate centroid model"):
+        S.ivfpq_topk({"embeddings": seed_null})
 
 
 def test_qcls_row_scorer_matches_batch_on_degenerate_text(spark, degenerate_t):

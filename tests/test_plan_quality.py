@@ -108,14 +108,13 @@ def test_tfidf_broadcasts_vocab_and_scalar(spark):
     assert "BroadcastNestedLoopJoin" in plan  # the 1-row scalar N crossJoin
 
 
-def test_matmul_knn_shuffles_only_pruned_candidates(spark):
-    plan = plan_of(spark, "v10_matmul_knn")
+@pytest.mark.parametrize("name", ["v5_knn_self_join", "v10_matmul_knn"])
+def test_matmul_knn_shuffles_only_pruned_candidates(spark, name):
+    plan = plan_of(spark, name)
     # one Python stage (the matmul scorer), one exchange into the final
     # per-query window — the full N x Q score matrix never shuffles
     assert "MapInPandas" in plan
-    # tree-node occurrences: widen_scan round-robin + the window hash —
-    # the full N x Q score matrix never shuffles
-    assert plan.count("Exchange (") <= 2
+    assert plan.count("Exchange (") <= 1
     # Spark additionally prunes to a per-partition partial top-k before the
     # exchange (WindowGroupLimit Partial) — keep that guaranteed
     assert "Partial" in plan and "WindowGroupLimit" in plan
@@ -315,11 +314,12 @@ def test_training_export_has_no_global_sort(spark):
     assert "hashpartitioning(bucket" in p
 
 
-def test_ivfpq_np_tier_is_arrow_batched_map(spark):
-    """v20: candidate scoring must be one ArrowEvalPython-free mapInPandas
+@pytest.mark.parametrize("name", ["v17_ivfpq_topk", "v20_ivfpq_topk_np"])
+def test_ivfpq_np_tier_is_arrow_batched_map(spark, name):
+    """IVFPQ: candidate scoring must be one ArrowEvalPython-free mapInPandas
     pass (MapInPandas node) feeding TakeOrderedAndProject — no shuffle
     between the scan and the refine cut."""
-    p = plan_of(spark, "v20_ivfpq_topk_np")
+    p = plan_of(spark, name)
     assert "MapInPandas" in p
     assert "TakeOrderedAndProject" in p
     assert "SortMergeJoin" not in p

@@ -70,16 +70,6 @@ def test_kmeans_refined_ivf_recall(spark, sf_small):
     assert len(partial & exact) >= 2
 
 
-def test_matmul_knn_matches_expression_knn(spark, sf_medium):
-    """The BLAS tier and the zip_with tier are two physical plans for one
-    logical operator: identical rows, bit-for-bit after the shared 3-decimal
-    rounding contract."""
-    t = load_tables(spark, sf_medium)
-    expr_rows = {tuple(r) for r in S.knn_self_join(t).collect()}
-    blas_rows = {tuple(r) for r in S.matmul_knn_join(t).collect()}
-    assert expr_rows == blas_rows
-
-
 def test_pq_recall_and_full_refine_exactness(spark, sf_small):
     """PQ with a generous refine budget must recover the exact top-k (the
     re-rank is exact cosine, so recall failures can only come from the ADC
@@ -192,19 +182,6 @@ def test_ivfpq_recall_and_full_budget_exactness(spark, sf_small):
     assert generous == exact
     default = {r.vec_id for r in ivfpq_topk(t, query_id=0, k=8).collect()}
     assert len(default & exact) >= 4
-
-
-def test_ivfpq_np_tier_matches_expression_tier(spark, sf_small):
-    """v20 (numpy mapInPandas scoring) and v17 (inlined-expression scoring)
-    are two physical strategies for one logical operator: identical rows
-    in identical order on the fixture corpus."""
-    from ai_optimizer_spark.operators.similarity import ivfpq_topk, ivfpq_topk_np
-    from ai_optimizer_spark.tables import load_tables
-
-    t = load_tables(spark, sf_small)
-    a = [tuple(r) for r in ivfpq_topk(t, query_id=0, k=8).collect()]
-    b = [tuple(r) for r in ivfpq_topk_np(t, query_id=0, k=8).collect()]
-    assert a == b
 
 
 def test_hier_assignment_exact_when_fully_probed_and_agrees_when_pruned(
@@ -908,37 +885,3 @@ def test_auto_tier_topk_plan_keeps_pruned_serve(spark):
     assert plan.count("Exchange") - plan.count("BroadcastExchange") <= plan.count(
         "ReusedExchange"
     )
-
-
-def test_dlit_expr_literals_match_f_lit_exactly(spark):
-    """r10 driver-cost fix: ivfpq_topk's model arrays build as ONE parsed
-    F.expr literal instead of ~700 py4j F.lit constructions. repr() must
-    round-trip every double through the SQL parser bit-exactly, including
-    scientific notation, negatives, and extreme magnitudes."""
-    from pyspark.sql import functions as F
-
-    tricky = [
-        0.0,
-        -0.0,
-        1.0,
-        -1.5,
-        1e-17,
-        -3.141592653589793,
-        5e-324,          # min subnormal
-        1.7976931348623157e308,  # max double
-        2.2250738585072014e-308,  # min normal
-        0.1 + 0.2,       # classic repr case (0.30000000000000004)
-        1 / 3,
-    ]
-    lit_arr = F.array(*[F.lit(float(x)) for x in tricky])
-    expr_arr = F.expr(S._dlit(tricky))
-    row = spark.range(1).select(lit_arr.alias("a"), expr_arr.alias("b")).collect()[0]
-    import struct
-
-    assert [struct.pack("d", v) for v in row["a"]] == [
-        struct.pack("d", v) for v in row["b"]
-    ]
-    # nested shape parses too
-    nested = S._dlit([[1.0, 2.0], [3.5e-10, -4.25]])
-    r2 = spark.range(1).select(F.expr(nested).alias("n")).collect()[0]
-    assert r2["n"] == [[1.0, 2.0], [3.5e-10, -4.25]]

@@ -11,7 +11,7 @@ quantized serving tier —
   * v29b — random-projection prefilter store, swept over coarse_c
 
 Ground truth: exact cosine top-10 per query in ONE BLAS pass (the
-matmul_knn_join shape: per-Arrow-batch `V @ Qᵀ` + local top-k, merged by
+knn_self_join kernel: per-Arrow-batch `V @ Qᵀ` + local top-k, merged by
 a per-query window), same round-3 + vec_id-asc total order the tiers use.
 
 recall@10  = |served ∩ exact| / 10, averaged over NQ queries.
@@ -32,7 +32,6 @@ import sys
 import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -47,57 +46,16 @@ COARSE = (50, 100, 200, 400)
 
 
 def exact_topk(spark, tile: str, q_ids: list[int], k: int = K):
-    """One-pass BLAS exact top-k for the query batch (matmul_knn_join
-    shape) → {query_id: [(vec_id, cos) ...k]} ground truth."""
-    from pyspark.sql import Window
-
-    from ai_optimizer_spark.tables import widen_scan
+    """One-pass BLAS exact top-k for the query batch (the knn_self_join
+    kernel) → {query_id: [(vec_id, cos) ...k]} ground truth."""
+    from ai_optimizer_spark.operators.similarity import _matmul_topk
 
     emb = spark.read.parquet(f"{tile}/embeddings.parquet")
     q_rows = emb.filter(F.col("vec_id").isin(q_ids)).select(
         "vec_id", "embedding"
     ).collect()
     assert len(q_rows) == len(q_ids), (len(q_rows), len(q_ids))
-    ids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
-    qn = np.array([r.embedding for r in q_rows], dtype=np.float64)
-    qn /= np.linalg.norm(qn, axis=1, keepdims=True)
-    bq = spark.sparkContext.broadcast((ids, qn))
-
-    def _score(batches):
-        qids, qmat = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vecs = np.array(list(pdf["embedding"]), dtype=np.float64)
-            vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-            sims = np.round(vecs @ qmat.T, 3) + 0.0
-            vec_ids = pdf["vec_id"].to_numpy()
-            parts = []
-            for j in range(sims.shape[1]):
-                mask = vec_ids != qids[j]
-                cv, cs = vec_ids[mask], sims[mask, j]
-                keep = np.lexsort((cv, -cs))[:k]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(keep), qids[j], np.int64),
-                            "vec_id": cv[keep],
-                            "cos_sim": cs[keep],
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
-    partial = widen_scan(emb).mapInPandas(
-        _score, "query_id long, vec_id long, cos_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    rows = (
-        partial.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .collect()
-    )
+    rows = _matmul_topk(emb, q_rows, k).collect()
     gt: dict[int, list[tuple[int, float]]] = {}
     for r in sorted(rows, key=lambda r: (r.query_id, -r.cos_sim, r.vec_id)):
         gt.setdefault(int(r.query_id), []).append((int(r.vec_id), float(r.cos_sim)))
