@@ -81,18 +81,6 @@ MINHASH_B = (12345, 67891, 24681, 13579, 97531, 86421, 75319, 64207)
 MINHASH_EMPTY = 2**62
 
 
-def minhash_terms(base: Column, n_hashes: int) -> list[Column]:
-    """The n universal-hash values of one shingle's base hash60. MIN() over
-    these per doc = the minhash signature — expressed as aggregates over
-    exploded shingle rows so Catalyst runs partial (map-side) min before
-    the shuffle."""
-    rem = base % F.lit(MINHASH_P)
-    return [
-        ((F.lit(MINHASH_A[s]) * rem + F.lit(MINHASH_B[s])) % F.lit(MINHASH_P)).alias(f"h{s}")
-        for s in range(n_hashes)
-    ]
-
-
 def chunk_starts(n_chars, chunk_size: int, overlap: int) -> Column:
     """Start offsets of the reference chunker: 0, step, 2·step, … where
     step = size - overlap; offset i>0 is emitted only while the previous

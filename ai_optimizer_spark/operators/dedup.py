@@ -17,6 +17,14 @@ Scale design (the whole point of these):
   * embedding near-dup — cosine over ARRAY<FLOAT>; at scale pre-bucket with
     functions.vector.sign_bucket so only same-bucket pairs are compared.
 
+MinHash and SimHash read ONE signature kernel, `doc_signatures`: a
+stateless Arrow-batched mapInPandas pass that shingles each document,
+md5-hashes every shingle once, and emits (doc_id, n_sh, mh0..mh7,
+simhash). Batch and stream sides share it, and a composed plan with two
+signature consumers computes the frame once and passes it on (the
+"signatures" entry of the `t` dict). Exact-Jaccard verification stays on
+the shingle strings of `_shingle_sets`.
+
 All hashing uses the portable md5-based hash60 so every operator is
 verifiable bit-for-bit against the DuckDB oracle (functions/text.py).
 Reference anchors: exact dedup embed/vector_store.py:112-118 (first-wins);
@@ -209,11 +217,12 @@ def minhash_lsh_pairs(
     bands); docs sharing any band bucket become candidates; candidates are
     verified with exact Jaccard before being reported.
 
-    Scale shape: one md5 per shingle (the universal-hash family derives the
-    k functions arithmetically); signatures come from partial-aggregable
-    MINs over the exploded shingle index, which is cached and reused for
-    verification; the band bucket join touches only colliding docs — this
-    is the 100 TB dedup plan, end to end.
+    Scale shape: signatures come from the map-only `doc_signatures` kernel
+    (one md5 per shingle; the universal-hash family derives the k
+    functions arithmetically), so no shuffle precedes the band join, and
+    the band bucket join touches only colliding docs — this is the 100 TB
+    dedup plan, end to end. A caller that already computed the signature
+    frame passes it as t["signatures"].
 
     `max_bucket_size` is the skew guard for real corpora: a band key shared
     by B docs emits O(B²) candidates, and boilerplate-heavy corpora produce
@@ -229,7 +238,13 @@ def minhash_lsh_pairs(
     path's threshold or rounding changes, change BOTH and re-run
     tests/test_text_dedup.py::
     test_lsh_recall_intersection_equals_verified_lsh_pairs."""
-    sh, sig, candidates = _lsh_candidate_pairs(t, max_bucket_size)
+    sig = t.get("signatures")
+    if sig is None:  # a caller that shares the frame has persisted it
+        # persisted: feeds the band rows and the verifier's set sizes
+        sig = doc_signatures(t["documents"]).transform(shared_persist)
+    candidates = _lsh_candidate_pairs(sig, max_bucket_size)
+    # persisted: both verification probes below read the shingle index
+    sh = _shingle_sets(t["documents"]).transform(shared_persist)
 
     # verify candidates with exact jaccard on the (cached) shingle index:
     # the candidate set is tiny by construction (band collisions only), so
@@ -263,62 +278,114 @@ def minhash_lsh_pairs(
     )
 
 
-def _lsh_signatures(docs: DataFrame) -> DataFrame:
-    """THE MinHash signature aggregation — (doc_id, n_sh, mh0..mh7), one
-    pass over the shingle index (md5 once per shingle; the per-doc set
-    size rides along in the same partial aggregate for free).
+def doc_signatures(docs: DataFrame) -> DataFrame:
+    """THE signature kernel: (doc_id, n_sh, mh0..mh7, simhash) for every
+    document with at least SHINGLE_N tokens, from one Arrow-batched
+    mapInPandas pass. Every MinHash-LSH and SimHash consumer reads it.
 
-    Defined ONCE (r11) so every batch consumer — `_lsh_candidate_pairs`
-    (d3/d6/d21/cascades) and `minhash_band_keys` (d17 profile, d22 sweep,
-    d24 incremental, st12 static side) — instantiates the IDENTICAL
-    logical subtree: when any one of them is persisted (`shared_persist`),
-    Catalyst substitutes that InMemoryRelation into all the others, so a
-    composed plan like e2e_auto_curation (d17 profile + LSH stage) runs
-    the signature pass once instead of once per consumer."""
-    sh = _shingle_sets(docs)
-    hashed = sh.withColumn("base", T.hash60(F.col("shingle")))
-    return hashed.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_sh"),
+    Per document, bit-identical to the expression definitions and the
+    DuckDB oracle:
+      * tokens = `T.words`: trim spaces only (U+0020), then split on ASCII
+        `\\s+`. Like Spark's split, Python's keeps a leading and a trailing
+        empty token ("a b c\\t" → a, b, c, ""), and NBSP/U+3000 stay
+        inside tokens. NULL text yields no row;
+      * shingles = the distinct n-word joins (`T.word_shingles`), n_sh
+        their count;
+      * one md5 per shingle gives its hash60 (`T.hash60`);
+      * mh_s = MIN over shingles of (A_s·(h mod P) + B_s) mod P, the
+        universal-hash family of T.MINHASH_*;
+      * simhash bit i is set iff more than half the shingle hashes set it.
+
+    Scale shape: map-only and stateless per row, so it is legal on a
+    stream side; no shuffle and no keyed state. Each batch hashes in
+    Python and folds in numpy (`reduceat` over the per-doc runs). The
+    scan is not widened (cf. `widen_scan`): each Python task has a fixed
+    cost that outweighs the cores it buys — on 4 cores this kernel took
+    0.9 s on the one-partition sf0.1 scan against 1.9 s widened to 16
+    (0.4 s against 1.35 s at sf0.01)."""
+    import hashlib
+    import re
+
+    import numpy as np
+    import pandas as pd
+
+    n, bits, p = SHINGLE_N, SIMHASH_BITS, T.MINHASH_P
+    mh_cols = [f"mh{s}" for s in range(MINHASH_HASHES)]
+    a = np.array(T.MINHASH_A[:MINHASH_HASHES], dtype=np.int64)[:, None]
+    b = np.array(T.MINHASH_B[:MINHASH_HASHES], dtype=np.int64)[:, None]
+    split = re.compile(r"\s+", re.ASCII).split
+
+    def _sign(batches):
+        for pdf in batches:
+            ids, ends, hashes = [], [], []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                if text is None:
+                    continue
+                w = split(text.strip(" "))
+                if len(w) < n:
+                    continue
+                shingles = {" ".join(w[i : i + n]) for i in range(len(w) - n + 1)}
+                hashes.extend(
+                    int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+                    for s in shingles
+                )
+                ids.append(doc_id)
+                ends.append(len(hashes))
+            if not ids:
+                continue
+            h = np.array(hashes, dtype=np.int64)
+            n_sh = np.diff(ends, prepend=0)
+            starts = np.array(ends) - n_sh
+            mh = np.minimum.reduceat((a * (h % p) + b) % p, starts, axis=1)
+            votes = np.stack(
+                [np.add.reduceat((h >> i) & 1, starts) for i in range(bits)],
+                axis=1,
+            )
+            simhash = (
+                (2 * votes > n_sh[:, None]) << np.arange(bits, dtype=np.int64)
+            ).sum(axis=1)
+            out = pd.DataFrame(mh.T, columns=mh_cols)
+            out.insert(0, "doc_id", np.array(ids, dtype=np.int64))
+            out.insert(1, "n_sh", n_sh)
+            out["simhash"] = simhash
+            yield out
+
+    schema = ", ".join(f"{c} long" for c in ["doc_id", "n_sh", *mh_cols, "simhash"])
+    return docs.select("doc_id", "text").mapInPandas(_sign, schema)
+
+
+def _band_rows(sig: DataFrame) -> DataFrame:
+    """(doc_id, band, key) LSH band rows of a signature frame: one row per
+    band, keyed by that band's LSH_BAND_ROWS min-hashes joined with ':'."""
+    bands = F.array(
         *[
-            F.min(term).alias(f"mh{s}")
-            for s, term in enumerate(T.minhash_terms(F.col("base"), MINHASH_HASHES))
-        ],
+            F.struct(
+                F.lit(band).alias("band"),
+                F.concat_ws(
+                    ":",
+                    *[
+                        F.col(f"mh{band * LSH_BAND_ROWS + r}").cast("string")
+                        for r in range(LSH_BAND_ROWS)
+                    ],
+                ).alias("key"),
+            )
+            for band in range(MINHASH_HASHES // LSH_BAND_ROWS)
+        ]
+    )
+    return sig.select("doc_id", F.explode(bands).alias("bk")).select(
+        "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
 
 
 def _lsh_candidate_pairs(
-    t: dict[str, DataFrame], max_bucket_size: int | None = None
-):
-    """(shingle index, signatures, candidate pairs) — the banded-LSH
-    candidate machinery shared by minhash_lsh_pairs (which verifies the
-    candidates against exact Jaccard) and lsh_recall (which intersects
-    them with the exact pair set it has already computed)."""
-    docs = t["documents"]
-    sh = _shingle_sets(docs).transform(shared_persist)
-    sig = _lsh_signatures(docs).transform(shared_persist)
-
-    n_bands = MINHASH_HASHES // LSH_BAND_ROWS
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band"),
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col(f"mh{band * LSH_BAND_ROWS + r}")
-                                for r in range(LSH_BAND_ROWS)
-                            ],
-                        ).alias("key"),
-                    )
-                    for band in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-
+    sig: DataFrame, max_bucket_size: int | None = None
+) -> DataFrame:
+    """Candidate pairs (doc_a < doc_b) of a signature frame: docs sharing a
+    band bucket, buckets above `max_bucket_size` dropped. Shared by
+    minhash_lsh_pairs (which verifies the candidates against exact
+    Jaccard) and lsh_recall (which intersects them with the exact pair set
+    it has already computed)."""
+    bands = _band_rows(sig)
     if max_bucket_size is not None:
         bucket_sizes = bands.groupBy("band", "key").agg(
             F.count(F.lit(1)).alias("bucket_n")
@@ -335,7 +402,7 @@ def _lsh_candidate_pairs(
     # lsh_recall semi-joins it; without the persist the band self-join +
     # distinct replays once per broadcast. The rows are the near-dup
     # candidate pairs only — tiny by construction at any corpus size.
-    candidates = (
+    return (
         ba.join(
             bb,
             (F.col("ba.band") == F.col("bb.band"))
@@ -346,51 +413,13 @@ def _lsh_candidate_pairs(
         .distinct()
         .transform(shared_persist)
     )
-    return sh, sig, candidates
 
 
-def simhash_signatures(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
-    """Per-doc SimHash over shingle hash60s: bit i is the majority of bit i
-    across the set's hashes (ties → 0).
-
-    Computed as ONE higher-order-function fold over the shingle array — a
-    pure projection fused into the scan, zero shuffle (the earlier
-    explode+groupBy form shuffled a (doc_id, 32 partial sums) exchange;
-    measured at sf0.1 the fold is ~1.8× faster AND removes the exchange
-    entirely, so at 100 TB signatures are a map-only pass). Each shingle is
-    md5-hashed exactly once; the inner `transform` accumulates the 32 bit
-    counts in an array, then the majority vote packs the signature long.
-    Docs with no shingles (< n words) are dropped, matching the explode
-    form, where they vanish with the empty array."""
-    docs = widen_scan(docs)
-    hashes = F.transform(T.word_shingles("text", SHINGLE_N), lambda s: T.hash60(s))
-    fold = f"""
-      aggregate(
-        zip_with(
-          aggregate(
-            __h__,
-            array_repeat(CAST(0 AS BIGINT), {bits}),
-            (acc, h) -> transform(acc, (c, i) -> c + ((h >> i) & 1))
-          ),
-          sequence(0, {bits - 1}),
-          (s, i) -> IF(s * 2 > size(__h__),
-                       shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))
-        ),
-        CAST(0 AS BIGINT), (a, x) -> a + x)
-    """
-    # the no-shingle filter tests the cheap word count, NOT size(__h__):
-    # a pushed-down filter on the hash array would re-evaluate the whole
-    # shingle-hashing transform once in the Filter and again in the Project
-    # (word_shingles yields non-empty iff the doc has ≥ n words, so the
-    # predicates are equivalent)
-    return (
-        docs.filter(F.size(T.words("text")) >= SHINGLE_N)
-        .withColumn("__h__", hashes)
-        .select(
-            "doc_id",
-            F.expr(fold.replace("__h__", "`__h__`")).alias("simhash"),
-        )
-    )
+def simhash_signatures(docs: DataFrame) -> DataFrame:
+    """Per-doc 60-bit SimHash over shingle hash60s (bit i = majority of bit
+    i across the set's hashes, ties → 0): the `doc_signatures` kernel's
+    simhash column. Docs with fewer than SHINGLE_N words have no row."""
+    return doc_signatures(docs).select("doc_id", "simhash")
 
 
 def simhash_pairs(
@@ -399,8 +428,8 @@ def simhash_pairs(
     """SimHash near-dup pairs: hamming(sig_a, sig_b) ≤ d. The signature is
     ONE long per doc, so the pair scan is a compact self-join; at scale,
     block on a signature prefix so only same-prefix pairs are compared."""
-    # same materialization barrier as simhash_pairs_blocked: without it the
-    # signature fold re-evaluates per candidate pair inside the join
+    # same materialization barrier as simhash_pairs_blocked: both join
+    # sides read the checkpointed rows instead of each running the kernel
     sig = simhash_signatures(t["documents"]).localCheckpoint(eager=False)
     a, b = sig.alias("a"), sig.alias("b")
     ham = F.bit_count(
@@ -486,7 +515,7 @@ def dedup_clusters(t: dict[str, DataFrame], max_iters: int = 15) -> DataFrame:
     round so the loop's plan doesn't snowball. The driver loop only runs
     the convergence probe; all data work is distributed.
     """
-    labels, edges = _propagate_labels(t, max_iters)
+    labels = _propagate_labels(t, max_iters)
     # Nodes outside every LSH pair never receive a message: they keep their
     # own id as label. Skip them in the loop entirely (the iterated joins
     # touch only the near-dup subgraph — a vanishing fraction of a deduped
@@ -557,11 +586,14 @@ def corpus_dup_profile(t: dict[str, DataFrame]) -> DataFrame:
     BEFORE committing to pairwise verification (and the skew probe that
     sizes minhash_lsh_pairs' max_bucket_size cap).
 
-    Scale shape: strictly cheaper than any dedup op — one narrow shuffle of
-    (band, key) digests for the bucket count, then a 4-group partial agg.
-    No doc bodies move; nothing quadratic exists anywhere in the plan.
+    Scale shape: strictly cheaper than any dedup op — the map-only
+    signature kernel, one narrow shuffle of (band, key) digests for the
+    bucket count, then a 4-group partial agg. No doc bodies move; nothing
+    quadratic exists anywhere in the plan. A caller that already computed
+    the signature frame passes it as t["signatures"].
     """
-    bands = minhash_band_keys(t["documents"])
+    sig = t.get("signatures")
+    bands = _band_rows(doc_signatures(t["documents"]) if sig is None else sig)
     buckets = bands.groupBy("band", "key").agg(F.count(F.lit(1)).alias("n"))
     colliding = F.col("n") >= 2
     # n·(n−1) is even, so integer DIV is exact (double division would lose
@@ -606,7 +638,7 @@ def dedup_losers(
     subgraph: never materializes a full-corpus label table.
     `max_bucket_size` is the LSH skew guard (production paths pass
     LSH_MAX_BUCKET_DEFAULT)."""
-    labels, _edges = _propagate_labels(t, max_iters, max_bucket_size)
+    labels = _propagate_labels(t, max_iters, max_bucket_size)
     return labels.filter(F.col("cluster_id") != F.col("doc_id")).select("doc_id")
 
 
@@ -619,9 +651,9 @@ def dedup_losers(
 DRIVER_COMPONENT_EDGE_CAP = 2_000_000
 
 
-def _unionfind_labels(pairs: DataFrame):
-    """Collect the (tiny) pair list and label components with union-find +
-    path compression; canonical = component min. One job, zero iterations."""
+def _unionfind_labels(spark, pairs) -> DataFrame:
+    """Label components of the (tiny) collected pair rows with union-find +
+    path compression; canonical = component min. Zero iterations."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -632,7 +664,7 @@ def _unionfind_labels(pairs: DataFrame):
             parent[x], x = root, parent[x]
         return root
 
-    for r in pairs.collect():
+    for r in pairs:
         a, b = r.doc_a, r.doc_b
         parent.setdefault(a, a)
         parent.setdefault(b, b)
@@ -642,50 +674,40 @@ def _unionfind_labels(pairs: DataFrame):
             lo, hi = min(ra, rb), max(ra, rb)
             parent[hi] = lo
     rows = [(x, find(x)) for x in parent]
-    return pairs.sparkSession.createDataFrame(
-        rows, "doc_id long, cluster_id long"
-    )
+    return spark.createDataFrame(rows, "doc_id long, cluster_id long")
 
 
 def _propagate_labels(
     t: dict[str, DataFrame], max_iters: int, max_bucket_size: int | None = None
-):
-    """Connected components over the LSH-pair subgraph only. Returns
-    (labels, edges) — labels covers exactly the edge-endpoint nodes. The
-    edge list STAYS persisted deliberately: it is the LSH pair set, tiny by
-    construction (near-dup pairs only), and a curation session reuses it
-    across losers/clusters/stats calls — re-deriving it re-runs the whole
-    MinHash+verification cascade.
+) -> DataFrame:
+    """Connected components over the LSH-pair subgraph only: (doc_id,
+    cluster_id) for exactly the pair-endpoint nodes.
 
-    Adaptive strategy: the subgraph's edge list is counted first (it is
-    already persisted for the loop); below DRIVER_COMPONENT_EDGE_CAP the
-    components come from one collect + union-find — the iterated joins are
-    pure scheduling overhead at that size. Above the cap, distributed
-    min-label propagation runs as before."""
-    pairs = minhash_lsh_pairs(t, max_bucket_size=max_bucket_size).select(
-        "doc_a", "doc_b"
-    )
-    # both edge directions from ONE pass over the pair plan: a self-union
-    # would duplicate the whole LSH subtree in the logical plan and compute
-    # MinHash+verification twice (exchange reuse is not guaranteed);
-    # explode(array(fwd, rev)) is a narrow 1→2 map over a single computation
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
-                    F.struct(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")),
-                )
-            ).alias("e")
-        )
-        .select("e.a", "e.b")
+    Adaptive strategy: ONE bounded collect of at most
+    DRIVER_COMPONENT_EDGE_CAP + 1 pairs both picks the branch and fetches
+    the edges. Up to the cap the components come from union-find on the
+    driver — the iterated joins are pure scheduling overhead at that size.
+    Above it, distributed min-label propagation runs over the persisted
+    pair list."""
+    # persisted: the distributed branch reads the pairs every round, which
+    # must not re-run the LSH plan the bounded collect already ran
+    pairs = (
+        minhash_lsh_pairs(t, max_bucket_size=max_bucket_size)
+        .select("doc_a", "doc_b")
         .transform(shared_persist)
     )
-    if edges.count() <= 2 * DRIVER_COMPONENT_EDGE_CAP:  # edges = both directions
-        small = edges.filter(F.col("a") < F.col("b")).select(
-            F.col("a").alias("doc_a"), F.col("b").alias("doc_b")
-        )  # reads the persisted edge list — the LSH plan does not recompute
-        return _unionfind_labels(small), edges
+    rows = pairs.limit(DRIVER_COMPONENT_EDGE_CAP + 1).collect()
+    if len(rows) <= DRIVER_COMPONENT_EDGE_CAP:
+        return _unionfind_labels(pairs.sparkSession, rows)
+    # both edge directions as a narrow 1→2 map over the cached pairs
+    edges = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
+                F.struct(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")),
+            )
+        ).alias("e")
+    ).select("e.a", "e.b")
     labels = (
         edges.select(F.col("a").alias("doc_id"))
         .distinct()
@@ -711,7 +733,7 @@ def _propagate_labels(
         if new_sum == label_sum:
             break
         label_sum = new_sum
-    return labels, edges
+    return labels
 
 
 def simhash_pairs_blocked(
@@ -760,12 +782,9 @@ def simhash_pairs_blocked(
             f"pigeonhole violated: need n_blocks - match_blocks >= max_hamming, "
             f"got {n_blocks} - {match_blocks} < {max_hamming}"
         )
-    # Materialize signatures ONCE before the self-join. The fold form of
-    # simhash_signatures is a pure projection with no exchange below it, so
-    # without a barrier codegen defers the (expensive, shingle-hashing)
-    # fold into the join and re-evaluates it per CANDIDATE PAIR — measured
-    # 93 s vs 1.4 s at sf0.1. localCheckpoint pins the computed
-    # (doc_id, simhash) rows (16 bytes/doc) so both join sides read them.
+    # Materialize signatures ONCE before the self-join: localCheckpoint pins
+    # the computed (doc_id, simhash) rows (16 bytes/doc) so both join sides
+    # read them instead of each running the signature kernel over the text.
     # At 100 TB this is the "signatures are a write-path artifact" story:
     # compute once, store, self-join the stored table.
     sig = simhash_signatures(t["documents"]).localCheckpoint(eager=False)
@@ -1080,109 +1099,11 @@ def topic_clusters(t: dict[str, DataFrame], k: int = 12) -> DataFrame:
 
 
 def minhash_band_keys(docs: DataFrame) -> DataFrame:
-    """Batch (doc_id, band, key) LSH band index rows: per-doc minhash
-    signatures via the explode + groupBy min-aggregate (exactly
-    minhash_lsh_pairs' signature step — md5 once per shingle, whole-stage
-    codegen end to end), then one row per band. The (doc_id) exchange is
-    narrow: a doc's exploded shingles never span input partitions, so the
-    map-side partial aggregate collapses to ONE 8-min row per doc before
-    anything shuffles.
-
-    Bit-identical keys to the stateless fold twin (minhash_band_keys_fold,
-    parity-tested) — the fold serves STREAM sides where a keyed aggregation
-    would need shuffle state; it evaluates interpreted (HOFs sit outside
-    codegen), measured ~3× slower per row than this form, so every batch
-    path uses this one (the d17 scale probe caught the difference: 9.9 s →
-    2.5 s at sf0.1).
-
-    r11: the signature aggregate is `_lsh_signatures` — the SAME logical
-    subtree `_lsh_candidate_pairs` uses — so a composed plan that persists
-    either one (e2e_auto_curation, d22) computes the signature pass once
-    for profile + candidate consumers via Catalyst cache substitution.
-    The extra `n_sh` column it carries is one count riding an aggregate
-    that already exists; the returned schema and every (doc_id, band,
-    key) value are unchanged."""
-    sig = _lsh_signatures(docs)
-    n_bands = MINHASH_HASHES // LSH_BAND_ROWS
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    ":",
-                    *[
-                        F.col(f"mh{b * LSH_BAND_ROWS + r}").cast("string")
-                        for r in range(LSH_BAND_ROWS)
-                    ],
-                ).alias("key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return (
-        sig.select("doc_id", F.explode(bands).alias("bk"))
-        .select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    )
-
-
-def minhash_band_keys_fold(docs: DataFrame) -> DataFrame:
-    """STATELESS (doc_id, band, key) band index: the per-doc minhash
-    signature computed as ONE aggregate fold over the shingle array — an
-    8-element running-min accumulator updated per shingle — then one row per
-    band. Bit-identical values to minhash_band_keys (same universal-hash
-    family); being a pure per-row projection is what lets the same
-    expression run on a STREAM side (st12) — a per-doc aggregation would
-    need keyed shuffle state, a fold needs none.
-
-    The single-accumulator shape is a measured 2× win over the previous
-    8-separate-`array_min(transform(...))` form: higher-order-function
-    subtrees are NOT subexpression-eliminated (HOFs evaluate interpreted,
-    outside codegen CSE), so each of the 8 folds re-ran the whole
-    md5→hash60→mod chain over every shingle. Here md5 runs exactly once per
-    shingle and the signature array is materialized in its own projection —
-    CollapseProject keeps it separate because the (expensive) array is
-    referenced by all 8 band-key reads."""
-    arr_a = F.array(*[F.lit(a).cast("long") for a in T.MINHASH_A[:MINHASH_HASHES]])
-    arr_b = F.array(*[F.lit(b).cast("long") for b in T.MINHASH_B[:MINHASH_HASHES]])
-    p = F.lit(T.MINHASH_P).cast("long")
-    base = F.transform(T.word_shingles("text", SHINGLE_N), lambda s: T.hash60(s))
-    rem = F.transform(base, lambda h: h % p)
-    # init with P: every (a·r+b) mod P lies in [0, P), so P never survives a min
-    sig = F.aggregate(
-        rem,
-        F.array_repeat(p, MINHASH_HASHES),
-        lambda acc, r: F.transform(
-            acc,
-            lambda m, i: F.least(
-                m,
-                (F.element_at(arr_a, i + F.lit(1)) * r
-                 + F.element_at(arr_b, i + F.lit(1))) % p,
-            ),
-        ),
-    )
-    n_bands = MINHASH_HASHES // LSH_BAND_ROWS
-    sigd = docs.filter(F.size(T.words("text")) >= SHINGLE_N).select(
-        "doc_id", sig.alias("mh")
-    )
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    ":",
-                    *[
-                        F.element_at("mh", b * LSH_BAND_ROWS + r + 1).cast("string")
-                        for r in range(LSH_BAND_ROWS)
-                    ],
-                ).alias("key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return (
-        sigd.select("doc_id", F.explode(bands).alias("bk"))
-        .select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    )
+    """(doc_id, band, key) LSH band index rows of `docs`: the band rows of
+    the `doc_signatures` kernel. The kernel is a stateless map, so the same
+    call serves batch sides (the st12 index and its batch twin) and STREAM
+    sides (st12's arriving documents) — no keyed state, no shuffle."""
+    return _band_rows(doc_signatures(docs))
 
 
 def streaming_neardup_candidates_batch(t: dict[str, DataFrame]) -> DataFrame:
@@ -1565,11 +1486,10 @@ def lsh_recall(
     n_common, recall_vs_exact, precision_vs_exact)."""
     if max_bucket_size is None:
         max_bucket_size = LSH_MAX_BUCKET_DEFAULT
+    docs = t["documents"]
     if sample_mod > 1:
-        t = dict(t)
-        t["documents"] = t["documents"].filter(
-            F.col("doc_id") % sample_mod == 0
-        )
+        docs = docs.filter(F.col("doc_id") % sample_mod == 0)
+    t = {"documents": docs}
     # persisted: the exact pair set feeds BOTH the recall denominator and
     # the semi-join that verifies the LSH candidates — without the persist
     # the grid-salted exact-Jaccard subtree (the expensive side of this
@@ -1586,7 +1506,7 @@ def lsh_recall(
     # exact-Jaccard ≥ τ test), the verified LSH pair set IS
     # candidates ∩ exact: one semi-join of two id-only pair tables
     # replaces the whole verification subtree. Result-identical.
-    _, _, cands = _lsh_candidate_pairs(t, max_bucket_size=max_bucket_size)
+    cands = _lsh_candidate_pairs(doc_signatures(docs), max_bucket_size)
     lsh = cands.join(
         exact_pairs.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_semi"
     ).select("doc_a", "doc_b", F.lit(1).alias("il"))
@@ -1651,23 +1571,11 @@ def lsh_cap_recall_sweep(
     docs = t["documents"]
     if sample_mod > 1:
         docs = docs.filter(F.col("doc_id") % sample_mod == 0)
-    ts = {"documents": docs}
-
-    # r10: the profile collect, the uncapped band join, and the exact
-    # side below all shingle the same corpus — register the shingle index
-    # in the cache first so every pass reads ONE materialization (the
-    # e2e_auto_curation move; result-identical, persist only)
-    _shingle_sets(docs).transform(shared_persist)
-
-    # r11: register the band index in the cache BEFORE the profile
-    # collect — corpus_dup_profile's plan contains the identical
-    # minhash_band_keys(docs) subtree, so Catalyst substitutes this
-    # InMemoryRelation into the profile pass and the signature
-    # aggregation over the shingle index runs ONCE for profile + sweep
-    # (previously the profile collect computed its own signature pass,
-    # then the sweep's `bands` cache recomputed it). Result-identical:
-    # persist + ordering only.
-    bands = minhash_band_keys(docs).transform(shared_persist)
+    # the signature frame feeds the profile collect AND the band join
+    # below: computed once, persisted, and passed to the profile
+    sig = doc_signatures(docs).transform(shared_persist)
+    ts = {"documents": docs, "signatures": sig}
+    bands = _band_rows(sig)
 
     # ladder from the band profile (driver-side: n_bands rows)
     prof = [
@@ -1688,11 +1596,8 @@ def lsh_cap_recall_sweep(
 
     # per-pair MIN colliding-bucket size, one bucket join (uncapped by
     # design: the sweep must see the pairs every cap would drop).
-    # r10: both tables persist — `bands` (registered above, before the
-    # profile collect) feeds the sized join AND the bucket-size
-    # aggregate, `sized` feeds BOTH aliases of the pair self-join;
-    # without the persists the minhash aggregation replays per consumer
-    # (the cached rows are (doc_id, band, key[, bn]) digests)
+    # `sized` persists: it feeds BOTH aliases of the pair self-join (the
+    # cached rows are (doc_id, band, key, bn) digests)
     sized = bands.join(
         bands.groupBy("band", "key").agg(F.count(F.lit(1)).alias("bn")),
         ["band", "key"],
@@ -1837,17 +1742,14 @@ def incremental_lsh_dedup(
     delta_docs = docs.filter(is_delta)
     corpus_docs = docs.filter(~is_delta)
 
-    # r10 (guide §2.4): each half used to be shingled TWICE — once inside
-    # minhash_band_keys (signatures) and once for the exact-Jaccard
-    # verification probes below. Registering both shingle indexes in the
-    # cache makes Catalyst substitute the one materialization into every
-    # identical subtree: one text pass per half instead of two.
-    # Result-identical (persist only).
-    sh_delta = _shingle_sets(delta_docs).transform(shared_persist)
-    sh_corpus = _shingle_sets(corpus_docs).transform(shared_persist)
+    # ONE signature pass feeds both halves' band rows and set sizes
+    sig = doc_signatures(docs).transform(shared_persist)
+    sig_delta, sig_corpus = sig.filter(is_delta), sig.filter(~is_delta)
+    sh_delta = _shingle_sets(delta_docs)
+    sh_corpus = _shingle_sets(corpus_docs)
 
     # production: spark.table("lsh_band_index"); simulation: derive it
-    corpus_bands = minhash_band_keys(corpus_docs)
+    corpus_bands = _band_rows(sig_corpus)
     bucket_sizes = corpus_bands.groupBy("band", "key").agg(
         F.count(F.lit(1)).alias("bucket_n")
     )
@@ -1856,13 +1758,13 @@ def incremental_lsh_dedup(
         .filter(F.col("bucket_n") <= max_bucket_size)
         .drop("bucket_n")
     )
-    delta_bands = minhash_band_keys(delta_docs)
+    delta_bands = _band_rows(sig_delta)
 
     # persisted (r11): the candidate table feeds TWO broadcast consumers
     # (its distinct kept_doc side and the verification probe) — without
-    # the persist the delta×corpus band join AND both halves' signature
-    # aggregations replay once per broadcast. Candidate rows are the band
-    # collisions only — delta-bounded, tiny at any corpus size.
+    # the persist the delta×corpus band join replays once per broadcast.
+    # Candidate rows are the band collisions only — delta-bounded, tiny at
+    # any corpus size.
     candidates = (
         delta_bands.alias("db")
         .join(
@@ -1878,8 +1780,8 @@ def incremental_lsh_dedup(
         .transform(shared_persist)
     )
 
-    sizes_d = sh_delta.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_a"))
-    sizes_c = sh_corpus.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_b"))
+    sizes_d = sig_delta.select("doc_id", F.col("n_sh").alias("n_a"))
+    sizes_c = sig_corpus.select("doc_id", F.col("n_sh").alias("n_b"))
     cand_kept = candidates.select("kept_doc").distinct()
     b = sh_corpus.join(
         F.broadcast(cand_kept),

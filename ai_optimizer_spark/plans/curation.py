@@ -348,26 +348,16 @@ def auto_curation(t: dict[str, DataFrame]) -> DataFrame:
     fixed server-side defaults (src/server/app/vectorstore settings) with
     data-derived values."""
     from ..operators.dedup import (
-        _lsh_signatures,
-        _shingle_sets,
         choose_lsh_bucket_cap,
         choose_semdedup_k,
         corpus_dup_profile,
+        doc_signatures,
     )
 
-    # r10: the d17 profile pass and the cascade's LSH stage both hash the
-    # whole shingle universe (one md5 per shingle — the dominant map cost).
-    # Registering the shingle index in the cache BEFORE the profile collect
-    # lets Catalyst substitute the same InMemoryRelation into both, so the
-    # corpus is shingled once per call instead of twice (plan-equality
-    # cache sharing, the same mechanism d21's exact/LSH sides already use).
-    _shingle_sets(t["documents"]).transform(shared_persist)
-    # r11: one level up the same ladder — the profile's band keys and the
-    # cascade's candidate bands now build on the IDENTICAL `_lsh_signatures`
-    # subtree, so registering it here means the signature aggregation (the
-    # min-hash shuffle over the shingle index) also runs ONCE for
-    # profile + LSH stage instead of once each (the d22 sweep move).
-    _lsh_signatures(t["documents"]).transform(shared_persist)
+    # the d17 profile and the cascade's LSH stage both read the signature
+    # frame: computed once here, persisted, and passed to both in `t`
+    sig = doc_signatures(t["documents"]).transform(shared_persist)
+    t = {**t, "signatures": sig}
     cap = choose_lsh_bucket_cap(corpus_dup_profile(t))
     n_vecs = t["embeddings"].count()
     k = choose_semdedup_k(n_vecs)

@@ -407,19 +407,19 @@ def run_segment_purchases_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def streaming_neardup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST12: streaming near-dup candidate feed — arriving documents' LSH
-    band keys (computed STATELESSLY per row via the array-min fold in
-    minhash_band_keys; a per-doc aggregation would need keyed state, a
-    fold needs none) joined against the STATIC corpus band index — a
+    band keys joined against the STATIC corpus band index — a
     stream-static equi-join, the always-on ingest form of d3's offline
-    candidate generation. Aggregated to (new_doc, index_doc, n_band_hits)
-    in complete mode; exact-Jaccard verification consumes this tiny feed
-    downstream. Same plan as the batch twin
+    candidate generation. Both sides call minhash_band_keys: its
+    signature kernel is a stateless per-row map (mapInPandas), so the
+    stream side needs no keyed state. Aggregated to (new_doc, index_doc,
+    n_band_hits) in complete mode; exact-Jaccard verification consumes
+    this tiny feed downstream. Same plan as the batch twin
     (operators/dedup.streaming_neardup_candidates_batch) → same oracle."""
-    from ..operators.dedup import minhash_band_keys, minhash_band_keys_fold
+    from ..operators.dedup import minhash_band_keys
 
     docs = documents_stream(spark, sf_dir)
-    stream_bands = minhash_band_keys_fold(docs)  # stateless: stream-legal
-    static_index = minhash_band_keys(  # batch side: codegen agg form
+    stream_bands = minhash_band_keys(docs)
+    static_index = minhash_band_keys(
         load_tables(spark, sf_dir)["documents"]
     ).select(F.col("doc_id").alias("index_doc"), "band", "key")
     plan = (

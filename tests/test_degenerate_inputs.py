@@ -24,6 +24,15 @@ def degenerate_t(spark):
             (3, "   ", "s", "en", 3),
             (4, "one two three four five six", "s", "en", 27),
             (5, "one two three four five six", "s", "en", 27),
+            # tokenizer edges: trim strips U+0020 only and the ASCII \s+
+            # split keeps leading/trailing empty tokens; NBSP and U+3000
+            # are not ASCII whitespace, so they stay inside tokens
+            (6, "\tone two three four", "s", "en", 19),
+            (7, "one two three four\t", "s", "en", 19),
+            (8, "alpha beta gamma\n\n", "s", "en", 18),
+            (9, "one\u00a0two three\u3000four five", "s", "en", 23),
+            (10, "red green blue", "s", "en", 14),  # exactly SHINGLE_N
+            (11, "just two", "s", "en", 8),  # under SHINGLE_N: no signature
         ],
         "doc_id long, text string, source string, lang string, n_chars long",
     )
@@ -71,10 +80,10 @@ def test_text_family_survives_degenerate_docs(degenerate_t, fn):
 def test_degenerate_semantics(degenerate_t):
     # chunker: only docs with content produce chunks
     chunks = TX.chunk_documents(degenerate_t).collect()
-    assert {r.doc_id for r in chunks} == {3, 4, 5}
+    assert {r.doc_id for r in chunks} == set(range(3, 12))
     # signatures exist only for docs with >= SHINGLE_N words
-    sigs = D.simhash_signatures(degenerate_t["documents"]).collect()
-    assert {r.doc_id for r in sigs} == {4, 5}
+    sigs = D.doc_signatures(degenerate_t["documents"]).collect()
+    assert {r.doc_id for r in sigs} == {4, 5, 6, 7, 8, 9, 10}
     # identical docs are an exact-dup pair and a hamming-0 simhash pair
     kept = {r.doc_id for r in D.exact_dedup(degenerate_t).collect()}
     assert 4 in kept and 5 not in kept
@@ -83,6 +92,41 @@ def test_degenerate_semantics(degenerate_t):
         for r in D.simhash_pairs_blocked(degenerate_t).collect()
     }
     assert (4, 5, 0) in pairs
+
+
+# (doc_id, n_sh, mh0..mh7, simhash) of the degenerate docs, recorded from
+# the explode + min-aggregate MinHash and the higher-order-function SimHash
+# fold over T.word_shingles that the signature kernel replaced.
+EXPRESSION_SIGNATURES = {
+    (4, 4, 795006730, 545101820, 873166946, 609733282, 319478468, 662223819,
+     910398582, 332068585, 126116198042584462),
+    (5, 4, 795006730, 545101820, 873166946, 609733282, 319478468, 662223819,
+     910398582, 332068585, 126116198042584462),
+    (6, 3, 872527471, 545101820, 950921209, 1315031771, 725531170, 662223819,
+     1140029490, 332068585, 396420128850985182),
+    (7, 3, 635330013, 545101820, 1309607313, 31045657, 725531170, 662223819,
+     1161860529, 332068585, 992742596878020060),
+    (8, 2, 1579100879, 83043568, 540742366, 721206392, 228507077, 361020250,
+     70433648, 803632405, 828721979983195240),
+    (9, 1, 168474580, 181720541, 1531313476, 85959802, 1986212312, 669227037,
+     1494072382, 1641901242, 634744655235355014),
+    (10, 1, 1565888131, 1303998701, 1462615222, 845941989, 119818762,
+     1153222535, 1071754936, 2028356781, 78494914453938931),
+}
+
+
+def test_signature_kernel_matches_expression_forms(degenerate_t):
+    """The mapInPandas signature kernel must tokenize exactly like
+    T.words/T.word_shingles on the edges a Python port gets wrong: a
+    leading tab is a leading empty token (shingle ' one two'), a trailing
+    tab or newline run is a trailing one, NBSP/U+3000 do not split, and
+    docs under SHINGLE_N tokens (or NULL/blank) have no row."""
+    cols = ["doc_id", "n_sh", *[f"mh{s}" for s in range(D.MINHASH_HASHES)], "simhash"]
+    got = {
+        tuple(r)
+        for r in D.doc_signatures(degenerate_t["documents"]).select(*cols).collect()
+    }
+    assert got == EXPRESSION_SIGNATURES
 
 
 def test_incremental_rollup_empty_delta_and_empty_history(spark, sf_small):
@@ -329,7 +373,7 @@ def test_qcls_row_scorer_matches_batch_on_degenerate_text(spark, degenerate_t):
             (p >= 0.5).alias("keep"),
         ).collect()
     }
-    assert rowwise == batch and len(batch) == 5
+    assert rowwise == batch and len(batch) == docs.count()
 
 
 def test_dedup_cascade_empty_corpus(spark):

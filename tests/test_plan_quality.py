@@ -241,9 +241,9 @@ def test_sequence_packing_avoids_global_sort(spark):
 
 def test_simhash_signatures_fuse_into_scan(spark):
     plan = plan_of(spark, "d4_simhash_pairs")
-    # signatures are a pure projection now (array fold in a Project): the
-    # old explode+groupBy form showed 32 sum(shiftright(h, i)) aggregates
-    # and a doc_id exchange before the block join — both must stay gone.
+    # signatures come from the map-only signature kernel: the old
+    # explode+groupBy form showed 32 sum(shiftright(h, i)) aggregates and
+    # a doc_id exchange before the block join — both must stay gone.
     # Remaining Generate nodes are the 1->7 block explode (narrow map) and
     # remaining HashAggregates belong to the output distinct only.
     assert "sum(shiftright" not in plan
@@ -482,16 +482,17 @@ def test_important_part_values_q11_global_threshold(spark):
 
 
 def test_corpus_dup_profile_digest_only_shuffles(spark):
-    """d17 must never join or sort: scan → band explode → two narrow
-    digest shuffles ((band,key) then band), both with map-side combine.
-    This op's whole value is being strictly cheaper than any dedup run."""
+    """d17 must never join or sort: scan → map-only signature kernel →
+    band explode → two narrow digest shuffles ((band,key) then band), both
+    with map-side combine. This op's whole value is being strictly cheaper
+    than any dedup run."""
     plan = plan_of(spark, "d17_corpus_dup_profile")
     assert "Join" not in plan
     assert "Sort" not in plan
+    assert "MapInPandas" in plan  # signatures: one map pass, no aggregate
     assert "partial_count" in plan  # map-side combine before each exchange
-    assert "partial_min" in plan  # signature mins collapse to 1 row/doc pre-shuffle
-    # three narrow exchanges: (doc_id) signature agg, (band,key) buckets, (band)
-    assert plan.count("hashpartitioning") == 3
+    # two narrow exchanges: (band,key) buckets, (band) — no (doc_id) one
+    assert plan.count("hashpartitioning") == 2
     assert "SinglePartition" not in plan  # per-band folds, no driver funnel
 
 

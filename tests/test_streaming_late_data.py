@@ -198,14 +198,11 @@ def test_streaming_dedup_drops_watermark_late_first_occurrences(spark, tmp_path)
 @pytest.mark.slow
 def test_neardup_feed_is_arrival_order_invariant(spark, sf_small, tmp_path):
     """st12 semantics: the near-dup candidate feed is STATELESS per row
-    (band keys are a fold, the index side is static), so arrival order —
+    (band keys are a per-row map, the index side is static), so arrival order —
     including 'late' arrivals, which have no meaning without event time —
     cannot change the output. Feed the same docs in forward and reverse
     file order and assert identical candidate sets."""
-    from ai_optimizer_spark.operators.dedup import (
-        minhash_band_keys,
-        minhash_band_keys_fold,
-    )
+    from ai_optimizer_spark.operators.dedup import minhash_band_keys
     from ai_optimizer_spark.tables import load_tables
 
     docs = load_tables(spark, sf_small)["documents"].limit(60)
@@ -231,7 +228,7 @@ def test_neardup_feed_is_arrival_order_invariant(spark, sf_small, tmp_path):
             "maxFilesPerTrigger", 1
         ).parquet(feed)
         plan = (
-            minhash_band_keys_fold(stream)  # stream side must stay stateless
+            minhash_band_keys(stream)  # stream side must stay stateless
             .join(static_index, ["band", "key"])
             .filter(F.col("doc_id") != F.col("index_doc"))
             .groupBy(F.col("doc_id").alias("new_doc"), "index_doc")

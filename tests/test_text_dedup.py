@@ -421,16 +421,6 @@ def test_choose_lsh_bucket_cap_from_profile(spark, sf_medium):
     assert D.choose_lsh_bucket_cap(empty) == 2
 
 
-def test_band_key_fold_matches_agg_form(spark, sf_medium):
-    """The stateless fold (stream side) and the codegen explode+groupBy
-    aggregate (batch side) are two evaluations of one signature definition:
-    identical (doc_id, band, key) sets."""
-    docs = load_tables(spark, sf_medium)["documents"]
-    agg = {(r.doc_id, r.band, r.key) for r in D.minhash_band_keys(docs).collect()}
-    fold = {(r.doc_id, r.band, r.key) for r in D.minhash_band_keys_fold(docs).collect()}
-    assert agg == fold and agg
-
-
 def test_semdedup_auto_k_matches_oracle_floor():
     """d18's oracle pins the 16-cell layout (vec_id < 16); the registered
     query auto-sizes k from the corpus count, so the auto rule MUST stay
@@ -506,7 +496,7 @@ def test_lsh_recall_intersection_equals_verified_lsh_pairs(spark, sf_medium):
     exact = {
         (r.doc_a, r.doc_b) for r in D.ngram_jaccard_pairs(t).collect()
     }
-    _, _, cands_df = D._lsh_candidate_pairs(t, max_bucket_size=cap)
+    cands_df = D._lsh_candidate_pairs(D.doc_signatures(t["documents"]), cap)
     cands = {(r.doc_a, r.doc_b) for r in cands_df.collect()}
     assert verified == cands & exact
     row = D.lsh_recall(t, max_bucket_size=cap).collect()[0]
