@@ -689,18 +689,18 @@ def _propagate_labels(
     driver — the iterated joins are pure scheduling overhead at that size.
     Above it, distributed min-label propagation runs over the persisted
     pair list."""
-    # persisted: the distributed branch reads the pairs every round, which
-    # must not re-run the LSH plan the bounded collect already ran
-    pairs = (
-        minhash_lsh_pairs(t, max_bucket_size=max_bucket_size)
-        .select("doc_a", "doc_b")
-        .transform(shared_persist)
+    pairs = minhash_lsh_pairs(t, max_bucket_size=max_bucket_size).select(
+        "doc_a", "doc_b"
     )
+    # the collect reads the unpersisted plan: a cached pair list keeps its
+    # uncoalesced shuffle partitions, which the bounded take scans in
+    # growing waves (one job more)
     rows = pairs.limit(DRIVER_COMPONENT_EDGE_CAP + 1).collect()
     if len(rows) <= DRIVER_COMPONENT_EDGE_CAP:
         return _unionfind_labels(pairs.sparkSession, rows)
-    # both edge directions as a narrow 1→2 map over the cached pairs
-    edges = pairs.select(
+    # persisted only here: the distributed branch re-reads the pairs every
+    # round. Both edge directions as a narrow 1→2 map over the cached pairs
+    edges = shared_persist(pairs).select(
         F.explode(
             F.array(
                 F.struct(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
@@ -741,8 +741,9 @@ def simhash_pairs_blocked(
     max_hamming: int = SIMHASH_MAX_HAMMING,
     n_blocks: int | None = None,
     match_blocks: int | None = None,
+    n_docs: int | None = None,
 ) -> DataFrame:
-    """SimHash pairs via pigeonhole blocking — the 100 TB form of
+    """d4: SimHash pairs via pigeonhole blocking — the 100 TB form of
     simhash_pairs with the IDENTICAL result set (same oracle).
 
     Generalized Manku-style combination blocking: split the signature into
@@ -759,11 +760,19 @@ def simhash_pairs_blocked(
     small constant that the 16× scale probe surfaced (9.4× time at 16×
     data, SCALE.md). With B blocks matched m at a time the key widens to
     ~m·60/B bits: candidates scale by C(B,m)/2^(m·60/B) — orders of
-    magnitude fewer — at the linear cost of C(B,m) keys per doc. The
-    default stays (B=d+1, m=1): measured fastest through 320k docs, where
-    the explode/shuffle term still dominates the candidate term (SCALE.md
-    finding 5); `choose_simhash_blocking(n_docs)` picks wider combos once
-    the n² term bites (multi-million-doc corpora).
+    magnitude fewer — at the linear cost of C(B,m) keys per doc.
+
+    When `n_blocks` is None the blocking is sized to the corpus by
+    `choose_simhash_blocking(n_docs)`: below the measured ~320k-doc
+    crossover (SCALE.md finding 5) it lands on (B=d+1, m=1), where the
+    explode/shuffle term still dominates; above it the n² candidate term
+    pushes onto wider combination keys. The result set is identical for
+    every valid (B, m) (pigeonhole-exact, test-enforced + the d4 oracle
+    hash), so the choice is purely physical. `n_docs` is a hint for
+    pipelines that already know the corpus size; when absent, one
+    count() scan pays for a plan that can be orders of magnitude cheaper
+    at the 100 TB end (where the count comes from parquet row-group
+    metadata, not a data read).
 
     The distinct() dedups pairs colliding in several combos; its exchange
     carries ONLY verified pairs (post-hamming survivors — output-sized, not
@@ -774,7 +783,9 @@ def simhash_pairs_blocked(
     from itertools import combinations
 
     if n_blocks is None:
-        n_blocks = max_hamming + 1  # (d+1, 1): measured fastest ≤320k docs
+        if n_docs is None:
+            n_docs = t["documents"].count()
+        n_blocks, _ = choose_simhash_blocking(n_docs, max_hamming)
     if match_blocks is None:
         match_blocks = n_blocks - max_hamming
     if n_blocks - match_blocks < max_hamming:
@@ -831,34 +842,6 @@ def simhash_pairs_blocked(
         )
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
-    )
-
-
-def simhash_pairs_auto(
-    t: dict[str, DataFrame],
-    max_hamming: int = SIMHASH_MAX_HAMMING,
-    n_docs: int | None = None,
-) -> DataFrame:
-    """d4 production entry point: size the pigeonhole blocking to the
-    corpus via `choose_simhash_blocking` before building the plan.
-
-    Below the measured ~320k-doc crossover (SCALE.md finding 5) the cost
-    model lands on the (d+1, 1) single-block default; above it the n²
-    candidate term pushes onto wider combination keys — this wrapper makes
-    that decision automatic instead of a hand-tuned constant. The result
-    set is IDENTICAL for every valid (B, m) (pigeonhole-exact,
-    test-enforced + the d4 oracle hash), so the choice is purely physical.
-
-    `n_docs` is a hint for pipelines that already know the corpus size
-    (e.g. from catalog stats); when absent, one count() scan pays for a
-    plan that can be orders of magnitude cheaper at the 100 TB end — at
-    that scale the count comes from parquet row-group metadata, not a
-    data read."""
-    if n_docs is None:
-        n_docs = t["documents"].count()
-    n_blocks, match_blocks = choose_simhash_blocking(n_docs, max_hamming)
-    return simhash_pairs_blocked(
-        t, max_hamming, n_blocks=n_blocks, match_blocks=match_blocks
     )
 
 
@@ -1041,14 +1024,14 @@ def decontamination(
 def topic_clusters(t: dict[str, DataFrame], k: int = 12) -> DataFrame:
     """D13: corpus topic clustering for domain balancing — assign every
     embedding to its nearest of `k` deterministic seed centroids (the same
-    map-only inlined-centroid assignment the IVF tier uses) and report the
+    map-only `_assign_cells` kernel the IVF tier uses) and report the
     per-topic profile a curation pipeline reads before mixing domains:
     cluster size, dominant label with its share, and mean distance to the
     centroid (cohesion). The label-agreement column is the quick "do
     clusters track labels" diagnostic run before trusting a cluster-based
     sampling weight.
 
-    Scale shape: assignment fuses into the scan (zero shuffles); the two
+    Scale shape: assignment is map-only (zero shuffles); the two
     aggregates are partial+final over k·|labels| then k groups. One
     corpus-sized shuffle of (cid,label) pairs — no embeddings move."""
     from .similarity import _ivf_assign
@@ -1201,11 +1184,12 @@ def semdedup(
     code). Emits every vector with its cell, centroid similarity, and
     keep/drop verdict.
 
-    Scale shape: assignment is the map-only inlined-centroid projection
+    Scale shape: assignment is the map-only numpy argmin
     (`_assign_cells` — zero shuffles, the FAISS coarse-quantizer shape);
-    the scored base (cid, cos_c) is computed ONCE and checkpointed before
-    the self-join (the HOF-fold lesson: without the barrier codegen
-    re-evaluates the centroid fold per candidate pair); pair volume is
+    the scored base (cid, cos_c, ne) is computed ONCE and checkpointed
+    before the self-join, so both join sides read the pinned rows instead
+    of each re-running the assignment kernel, the centroid join and the
+    normalization over the corpus; pair volume is
     bounded by cell occupancy, and k SCALES WITH THE CORPUS
     (`choose_semdedup_k`, occupancy ≈ SEMDEDUP_CELL_TARGET) so that bound
     is linear in n, never n² — the fixed-k probe run measured the
@@ -1223,7 +1207,6 @@ def semdedup(
         # n_centroids explicitly to skip this extra pass
         n_vecs = emb.count()
         if n_vecs == 0:
-            # an empty centroid literal types as VOID and breaks analysis;
             # an empty corpus trivially has no duplicates
             return emb.sparkSession.createDataFrame(
                 [], "vec_id long, cid long, cos_c double, is_kept boolean"
@@ -1401,9 +1384,10 @@ def semantic_decontamination(
     flagged vectors with hit count and max cosine.
 
     Scale shape: d18's machinery, cross-set instead of self-join —
-    assignment is the map-only inlined-centroid projection over BOTH
-    partitions at once; vectors are normalized ONCE and checkpointed (the
-    HOF-fold barrier lesson), the per-pair cosine is a single dot fold;
+    assignment is the map-only `_assign_cells` kernel over BOTH
+    partitions at once; vectors are normalized ONCE and checkpointed (both
+    join sides read the pinned rows), the per-pair cosine is a single dot
+    fold;
     the bench side is a vanishing fraction of the table (and at 100 TB
     the eval suite is fixed-size while the corpus grows), so AQE
     broadcasts it and the join never shuffles the corpus. k scales with

@@ -212,15 +212,15 @@ def _centroid_model(emb: DataFrame, n_centroids: int):
 
 
 def _cell_aggregate(part: DataFrame, cents, cent_rows, *aggs) -> DataFrame:
-    """Shared t11/t12 scaffold: map-only inlined-centroid assignment +
+    """Shared t11/t12 scaffold: map-only cell assignment (`_assign_cells`) +
     per-cell aggregation over the centroid distance, which is ROUNDED to
     3 decimals BEFORE any aggregate — the v16 dist contract both oracles
     assert; keep the rounding here, in ONE place, so the two ops can
     never drift apart. Aggregates reference the distance as `dc`."""
     from ..functions import vector as V
-    from .similarity import assign_cells_auto
+    from .similarity import _assign_cells
 
-    assigned = assign_cells_auto(part, cents, rows=cent_rows)
+    assigned = _assign_cells(part, cents, rows=cent_rows)
     dist = F.round(V.euclidean_distance("embedding", "ce"), 3) + F.lit(0.0)
     return (
         assigned.join(F.broadcast(cents), "cid")
@@ -246,8 +246,8 @@ def cell_stats_refresh(
     update never rescans history:
 
       1. assign ONLY the delta vectors to the fixed coarse quantizer
-         (map-only argmin over the broadcast centroid model, the same
-         `_assign_cells` codepath the read tiers use),
+         (map-only numpy argmin over the collected centroid model, the
+         same `_assign_cells` kernel the read tiers use),
       2. aggregate the delta per cell,
       3. merge with the stored stats: counts add, radii take greatest —
          a full-outer join on cid, n_centroids-sized on both sides.
@@ -312,7 +312,7 @@ def drift_monitor(
     rebuild the cell's PQ codebook (v17) before recall quietly degrades —
     the monitoring loop every production vector store runs.
 
-    Scale shape: identical to t11 — map-only inlined-centroid assignment
+    Scale shape: identical to t11 — map-only `_assign_cells` assignment
     on both populations, per-cell algebraic aggregates (count, avg), an
     n_centroids-sized full-outer merge, scalar totals broadcast back.
     O(corpus) scan cost, O(n_centroids) state; at steady state the stored

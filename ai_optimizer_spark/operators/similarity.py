@@ -224,89 +224,35 @@ def knn_self_join(t: dict[str, DataFrame], k: int = 3, limit_queries: int = 50) 
 
 def _validate_centroid_rows(rows) -> None:
     """Reject a degenerate centroid MODEL (NULL vector or a NULL element
-    inside one) identically in every assignment tier. Without this the
-    flat tier silently degrades via NULL-distance struct ordering while
-    the np tier crashes building its float64 matrix — auto-routing would
-    change failure behavior at k>64 (ADVICE r6). Degenerate EMBEDDINGS
-    remain handled (min-cid fallthrough, tier-equality-tested); NaN
-    centroid elements are also fine (NaN distance sorts greatest in both
-    tiers). A broken model is a caller bug, so it raises."""
+    inside one) with a clear error instead of a TypeError from the float64
+    matrix build. Degenerate EMBEDDINGS remain handled (min-cid
+    fallthrough); NaN centroid elements are also fine (a NaN distance is
+    never the minimum). A broken model is a caller bug, so it raises."""
     for r in rows:
         ce = r["ce"]
         if ce is None or any(x is None for x in ce):
             raise ValueError(
                 f"degenerate centroid model: centroid cid={r['cid']} has "
-                "a NULL vector or NULL element; fix the centroid source "
-                "(all assignment tiers reject this identically)"
+                "a NULL vector or NULL element; fix the centroid source"
             )
 
 
 def _assign_cells(emb: DataFrame, cents: DataFrame, rows=None) -> DataFrame:
-    """Cell assignment, map-only: the centroid set is a tiny model, so it is
-    collected once and inlined as an array-of-structs expression; every
-    vector computes argmin(dist, cid) inside a single projection
-    (`array_min` over (dist, cid) structs — lexicographic struct ordering
-    gives the same dist-then-cid tie-break as the aggregate form).
+    """Cell assignment, map-only: nearest centroid by euclidean distance,
+    ties broken by MIN cid. The centroid set is a tiny model, collected
+    once and shipped in the task closure; each Arrow batch runs one
+    (batch x k) numpy distance matrix and an argmin inside mapInPandas —
+    zero shuffles, the FAISS coarse-quantizer shape, and no k-sized term
+    in the plan, so it scales to corpus-sized k (linear in k up to
+    k=2560, SCALE.md). `rows` lets a caller that already collected the
+    centroid model skip the duplicate collect job.
 
-    This replaces the previous crossJoin + groupBy(vec_id) formulation whose
-    exchange carried the full corpus WITH embedding arrays. Now assignment
-    fuses into the scan — zero shuffles — which is the correct 100 TB shape:
-    centroids ship to workers as part of the plan (exactly how FAISS-style
-    IVF distributes its coarse quantizer), and the write path clusters the
-    store by the resulting cid. `rows` lets a caller that already collected
-    the centroid model skip the duplicate collect job."""
-    if rows is None:
-        rows = cents.collect()
-    _validate_centroid_rows(rows)
-    if not rows:
-        # an empty centroid literal types as VOID and fails analysis; with
-        # no cells there is nothing to assign — empty result, right schema
-        return emb.limit(0).select(
-            "vec_id", "label", "embedding", F.lit(0).cast("long").alias("cid")
-        )
-    # one array literal per centroid (not one scalar literal per dim) keeps
-    # the expression tree small — codegen compiles in milliseconds even at
-    # high dim, and the literal ships once inside the serialized plan
-    cent_arr = F.array(
-        *[
-            F.struct(
-                F.lit(int(r["cid"])).cast("long").alias("cid"),
-                F.lit([float(x) for x in r["ce"]]).alias("ce"),
-            )
-            for r in rows
-        ]
-    )
-    dcs = F.transform(
-        cent_arr,
-        lambda c: F.struct(
-            V.euclidean_distance(F.col("embedding"), c["ce"]).alias("dist"),
-            c["cid"].alias("cid"),
-        ),
-    )
-    return emb.select(
-        "vec_id", "label", "embedding", F.array_min(dcs)["cid"].alias("cid")
-    )
-
-
-def _assign_cells_np(emb: DataFrame, cents: DataFrame, rows=None) -> DataFrame:
-    """The Arrow/BLAS tier of cell assignment (VERDICT r5 task 6 — v20's
-    pattern applied to the WRITE path): same logical operator as
-    `_assign_cells`, but the argmin runs as one (batch x k) numpy distance
-    matrix per Arrow batch instead of a k-literal expression tree.
-    Identical output contract: nearest centroid by euclidean distance,
-    ties broken by MIN cid (centroids are sorted cid-ascending and
-    `argmin` returns the first minimum; squared distance has the same
-    argmin as the root). Like v20, all arithmetic is float64 — numpy's
-    pairwise summation can differ from the expression fold by round-off
-    ulps on near-equidistant centroids; the tiers are equality-tested on
-    the fixtures (tests/test_similarity.py).
-
-    Scale rationale: the flat expression form pays an interpreted-HOF
-    evaluation per (vector, centroid) AND a codegen/analysis cost that
-    grows with the k-struct literal; this tier ships the centroid matrix
-    once per task closure and stays O(n·k) in BLAS flops with no
-    expression-size term — the shape that survives corpus-scaled k
-    (tools/assign_bench.py measures the tiers side by side)."""
+    Centroids are sorted cid-ascending and `argmin` returns the first
+    minimum, which gives the min-cid tie-break (squared distance has the
+    same argmin as the root). All arithmetic is float64. A NULL or
+    wrong-dim embedding has no distance and lands on the min cid; a NaN
+    distance never wins unless every distance is NaN (then: min cid).
+    An empty model gives a typed empty result."""
     import numpy as np
 
     from pyspark.sql.types import LongType, StructField, StructType
@@ -334,10 +280,7 @@ def _assign_cells_np(emb: DataFrame, cents: DataFrame, rows=None) -> DataFrame:
             ok = np.asarray(
                 [v is not None and len(v) == dim for v in vecs], dtype=bool
             )
-            # NULL (or wrong-dim) embedding: every distance is NULL, and
-            # the flat tier's struct ordering then falls through to the
-            # MIN cid — reproduce that here so the tiers stay bit-equal
-            # on the degenerate gauntlet
+            # NULL (or wrong-dim) embedding: no distance, min cid
             out = np.full(len(vecs), cids[0], dtype=np.int64)
             if ok.any():
                 X = np.asarray(
@@ -350,10 +293,8 @@ def _assign_cells_np(emb: DataFrame, cents: DataFrame, rows=None) -> DataFrame:
                     - 2.0 * (X @ C.T)
                     + (C * C).sum(axis=1)[None, :]
                 )
-                # NaN sorts GREATEST in Spark's ordering (the flat tier only
-                # picks a NaN-distance cell when every distance is NaN, and
-                # then ties break to min cid) — +inf gives argmin the same
-                # semantics, with the all-inf row landing on index 0 = min cid
+                # NaN distances rank last, like Spark's NaN ordering; an
+                # all-NaN row lands on index 0 = min cid
                 d2 = np.where(np.isnan(d2), np.inf, d2)
                 out[ok] = cids[d2.argmin(axis=1)]
             yield pdf.assign(cid=out)
@@ -361,46 +302,13 @@ def _assign_cells_np(emb: DataFrame, cents: DataFrame, rows=None) -> DataFrame:
     return base.mapInPandas(_assign, schema)
 
 
-# Above this centroid count the flat inlined-literal argmin loses to the
-# Arrow tier (VERDICT r5 task 1 measurements, tools/assign_bench.py at the
-# 64x tile / 128k vectors: flat 27.1 s vs np 3.7 s at k=256; at corpus-
-# scaled k the flat expression ALSO pays a per-session analysis/codegen
-# cost that grows with the k-struct literal — the k=640 micro-bench that
-# timed out in r5). At or below the threshold the flat form wins: it fuses
-# into the scan with zero Python, and every driver fixture (k=16) stays on
-# the oracle-pinned flat plan.
-ASSIGN_FLAT_MAX_K = 64
-
-
-def choose_assignment_tier(k: int) -> str:
-    """Assignment tier for a k-centroid coarse quantizer: 'flat' (inlined
-    JVM expression, zero Python) below ASSIGN_FLAT_MAX_K, else 'np' (the
-    Arrow/BLAS mapInPandas kernel). Tested bit-equal on the fixtures; the
-    routing is what lets auto-k consumers (semdedup, semantic decon, the
-    IVF family) survive corpus-scaled k without a per-op tier choice."""
-    return "flat" if k <= ASSIGN_FLAT_MAX_K else "np"
-
-
-def assign_cells_auto(emb: DataFrame, cents: DataFrame, rows=None) -> DataFrame:
-    """`_assign_cells` with automatic tier selection (VERDICT r5 task 1).
-    Same output contract as both tiers: nearest centroid, euclidean,
-    min-cid tie-break."""
-    if rows is None:
-        rows = cents.collect()
-    if choose_assignment_tier(len(rows)) == "flat":
-        return _assign_cells(emb, cents, rows=rows)
-    return _assign_cells_np(emb, cents, rows=rows)
-
-
 def _ivf_assign(emb: DataFrame, n_centroids: int):
     """(centroids, cell assignment) for IVF: centroids seed from a fixed
-    corpus subset (deterministic k-means init). Assignment tier is chosen
-    by k (assign_cells_auto) so auto-k callers scale past the flat
-    expression form's limit."""
+    corpus subset (deterministic k-means init)."""
     cents = emb.filter(F.col("vec_id") < n_centroids).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
     )
-    return cents, assign_cells_auto(emb, cents)
+    return cents, _assign_cells(emb, cents)
 
 
 def _lloyd_update(assigned: DataFrame) -> DataFrame:
@@ -442,7 +350,7 @@ def ivf_kmeans_topk(
     cents, assigned = _ivf_assign(emb, n_centroids)
     for _ in range(iterations):
         cents = _lloyd_update(assigned)
-        assigned = assign_cells_auto(emb, cents)
+        assigned = _assign_cells(emb, cents)
     q = _query_vectors(t, [query_id])
     return _probe_and_search(cents, assigned, q, query_id, k, n_probe)
 
@@ -493,16 +401,8 @@ def ivf_topk(
     partition pruning and the scan reads n_probe/n_centroids of the data.
     Recall is traded against `n_probe` exactly as in FAISS-style IVF-Flat.
     """
-    from ..tables import widen_scan
-
     emb = t["embeddings"]
-    # r11 (guide 2.2): widen the assignment input - the per-row argmin fold
-    # over the inlined centroid model is the dominant map cost, and the
-    # single-row-group fixture scan ran it on one core. Round-robin only
-    # (the map-only guard forbids a vec_id hash exchange); no-op on real
-    # multi-row-group tables; per-row arithmetic and the top-k total order
-    # are partitioning-independent.
-    cents, assigned = _ivf_assign(widen_scan(emb), n_centroids)
+    cents, assigned = _ivf_assign(emb, n_centroids)
     q = _query_vectors(t, [query_id])
     return _probe_and_search(cents, assigned, q, query_id, k, n_probe)
 
@@ -521,12 +421,8 @@ def ivf_knn_join(
     is a tiny broadcast, and the per-query window parallelizes on query_id.
     At scale with the store partitioned by `cid`, each query reads
     n_probe/n_centroids of the data — same plan, pruned scan."""
-    from ..tables import widen_scan
-
     emb = t["embeddings"]
-    # r11: same widen-the-assignment-input move as ivf_topk (guide 2.2);
-    # the query side stays on the narrow scan (it broadcasts).
-    cents, assigned = _ivf_assign(widen_scan(emb), n_centroids)
+    cents, assigned = _ivf_assign(emb, n_centroids)
     q = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -952,14 +848,8 @@ def range_search(
     (proven in tests/test_similarity.py on constructed clusters); on
     uniformly random vectors distance concentration leaves little to prune,
     which is a property of the data, not the plan."""
-    from ..tables import widen_scan
-
     emb = t["embeddings"]
-    # r11: widen the assignment input (guide 2.2) - BOTH consumers (the
-    # radii aggregate and the pruned scan) re-run the argmin fold, and the
-    # fixture scan put each on one core. No-op at real scale; the stored
-    # twin (v16b) reads radii off the store and never recomputes.
-    cents, assigned = _ivf_assign(widen_scan(emb), n_centroids)
+    cents, assigned = _ivf_assign(emb, n_centroids)
     cell_r = (
         assigned.join(F.broadcast(cents), "cid")
         .select("cid", V.euclidean_distance("embedding", "ce").alias("dc"))
@@ -1292,8 +1182,8 @@ def _assign_cells_hier(
     risk); level 2 runs the exact argmin over only the g_probe nearest
     groups' members. Per-vector work drops from k to G + g_probe·(k/G)
     (≈2√k at the optimum); with g_probe == n_groups the result is EXACTLY
-    the flat argmin. Everything stays one inlined JVM projection — zero
-    shuffles, same as the flat form."""
+    the exact argmin (`_assign_cells`). Everything stays one inlined JVM
+    projection — zero shuffles."""
     pilots = F.array(
         *[
             F.struct(
@@ -1327,8 +1217,8 @@ def _assign_cells_hier(
 
     # LET-BINDING, load-bearing: referencing `chosen_gids` directly inside
     # the member filter re-evaluates the whole level-1 sort PER MEMBER
-    # (the hof-projection re-evaluation trap, measured 15x SLOWER than the
-    # flat argmin at k=256). transform over a 1-element array binds the
+    # (the hof-projection re-evaluation trap, measured 15x SLOWER than a
+    # flat expression argmin at k=256). transform over a 1-element array binds the
     # chosen-group list once per row; the lambdas below reference the
     # bound variable, not the expression.
     def argmin_within(cg):
@@ -1472,7 +1362,7 @@ def sq8_cell_stats(emb: DataFrame, cents: DataFrame, rows=None) -> DataFrame:
     aggregate is order-free (count/max/min — no float sums), which is
     both the streaming-correctness argument and the algebraic-merge
     argument (partial maxes merge to the exact global max)."""
-    quantized = sq8_project(assign_cells_auto(emb, cents, rows=rows)).select(
+    quantized = sq8_project(_assign_cells(emb, cents, rows=rows)).select(
         "vec_id", "cid", "embedding", "scale", "codes"
     )
     qerr = F.when(

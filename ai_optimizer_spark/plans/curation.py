@@ -288,8 +288,8 @@ def decon_report(t: dict[str, DataFrame]) -> DataFrame:
     scale — wall-clock is max, not sum), each already measured in
     SCALE.md (d12 broadcast eval index; d19 fixed 2^20-bit table,
     sublinear to 64×; d20 auto-k cells, the assignment term closed by the
-    np tier). Flags attach by id-only left joins (broadcast under AQE);
-    the profile is ONE aggregate. Completes the decon lifecycle: tiers
+    numpy assignment kernel). Flags attach by id-only left joins
+    (broadcast under AQE); the profile is ONE aggregate. Completes the decon lifecycle: tiers
     (d12/d19/d20), ingest twins (st16/st18), index maintenance (t13),
     and now the corpus-level audit a release publishes."""
     from ..functions.text import token_count

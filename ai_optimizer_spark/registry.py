@@ -523,11 +523,11 @@ _register("j9_mmr_rerank", S.mmr_rerank, _MMR_ORACLE)
 _register("d1_exact_dedup", D.exact_dedup_hashkey, OD.EXACT_DEDUP)
 _register("d2_ngram_jaccard_pairs", D.ngram_jaccard_pairs, OD.NGRAM_JACCARD)
 _register("d3_minhash_lsh_pairs", D.minhash_lsh_pairs, OD.MINHASH_LSH)
-# d4 routes through simhash_pairs_auto: choose_simhash_blocking(n_docs)
-# sizes the (B, m) pigeonhole config to the corpus (single-block below the
-# measured 320k-doc crossover, wider combos above); identical result set
-# for every valid config, so the oracle hash is the invariant.
-_register("d4_simhash_pairs", D.simhash_pairs_auto, OD.SIMHASH_PAIRS)
+# d4: choose_simhash_blocking(n_docs) sizes the (B, m) pigeonhole config to
+# the corpus (single-block below the measured 320k-doc crossover, wider
+# combos above); identical result set for every valid config, so the
+# oracle hash is the invariant.
+_register("d4_simhash_pairs", D.simhash_pairs_blocked, OD.SIMHASH_PAIRS)
 
 # ---------------------------------------------------------------------------
 # text analysis family + reference-parity chunker

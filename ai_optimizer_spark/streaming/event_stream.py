@@ -540,21 +540,21 @@ def streaming_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST13: streaming ANN index ingestion — arriving embeddings assigned
     to the EXISTING IVF coarse quantizer and rolled up per cell. The
-    assignment is the same map-only inlined-centroid argmin the batch
-    tier uses (_assign_cells), which is what makes it streamable: the
-    model ships inside the plan, so assignment is STATELESS — only the
+    assignment is the same map-only numpy argmin the batch tier uses
+    (_assign_cells), which is what makes it streamable: the model ships
+    in the task closure, so assignment is STATELESS — only the
     per-cell counters are state (n_centroids rows, bounded). This is the
     write path an always-on vector store runs: route each new vector to
     its cell/partition, keep per-cell occupancy current (the signal for
     when to re-train centroids or split cells)."""
-    from ..operators.similarity import assign_cells_auto
+    from ..operators.similarity import _assign_cells
 
     static = load_tables(spark, sf_dir)["embeddings"]
     cents = static.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
     )
     stream = embeddings_stream(spark, sf_dir)
-    assigned = assign_cells_auto(stream, cents)
+    assigned = _assign_cells(stream, cents)
     plan = assigned.groupBy("cid").agg(
         F.count(F.lit(1)).alias("n_vecs"),
         F.min("vec_id").alias("min_vec_id"),
@@ -638,7 +638,7 @@ def streaming_semantic_decontamination(spark: SparkSession, sf_dir: str) -> Data
     path, completing the decon family's ingest story (st16 probes the
     Bloom bit set; st18 probes the benchmark's embedding cells). Arriving
     vectors are assigned to the STORED coarse quantizer statelessly
-    (st13's inlined-centroid argmin), unit-normalized map-side, and
+    (st13's numpy argmin, `_assign_cells`), unit-normalized map-side, and
     joined per cell against the broadcast normalized benchmark partition;
     the cosine filter is stateless, leaving exactly ONE streaming
     aggregation (per-vector hit count + max cosine). Verdicts equal the
@@ -646,8 +646,9 @@ def streaming_semantic_decontamination(spark: SparkSession, sf_dir: str) -> Data
     safe_unit normalization, same rounded dot fold.
 
     At 100 TB the broadcast is the eval suite's vectors — fixed-size
-    while ingest volume grows — and the quantizer is a plan literal, so
-    the stream shuffles nothing but the final per-vector digests."""
+    while ingest volume grows — and the quantizer ships in the task
+    closure, so the stream shuffles nothing but the final per-vector
+    digests."""
     import uuid
 
     from ..operators.dedup import (
@@ -656,7 +657,7 @@ def streaming_semantic_decontamination(spark: SparkSession, sf_dir: str) -> Data
         choose_semdedup_k,
     )
     from ..functions import vector as V
-    from ..operators.similarity import assign_cells_auto
+    from ..operators.similarity import _assign_cells
 
     emb = load_tables(spark, sf_dir)["embeddings"]
     n_centroids = choose_semdedup_k(emb.count())
@@ -676,7 +677,7 @@ def streaming_semantic_decontamination(spark: SparkSession, sf_dir: str) -> Data
         )
 
     bench = (
-        normed(assign_cells_auto(emb, cents, rows=cent_rows))
+        normed(_assign_cells(emb, cents, rows=cent_rows))
         .filter(F.col("vec_id") % DECON_BENCH_MOD == 0)
         .select(
             F.col("vec_id").alias("vb"),
@@ -687,7 +688,7 @@ def streaming_semantic_decontamination(spark: SparkSession, sf_dir: str) -> Data
     )
 
     stream = embeddings_stream(spark, sf_dir)
-    arriving = normed(assign_cells_auto(stream, cents, rows=cent_rows)).filter(
+    arriving = normed(_assign_cells(stream, cents, rows=cent_rows)).filter(
         F.col("vec_id") % DECON_BENCH_MOD != 0
     )
     cos = F.round(V.dot("ne", "nb"), 3) + F.lit(0.0)

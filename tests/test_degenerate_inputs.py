@@ -53,7 +53,6 @@ def degenerate_t(spark):
         D.ngram_jaccard_pairs,
         D.minhash_lsh_pairs,
         D.simhash_pairs_blocked,
-        D.simhash_pairs_auto,
         D.repeated_substring_stats,
         D.cluster_survivors,
         D.corpus_dup_profile,

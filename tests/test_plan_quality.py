@@ -21,7 +21,7 @@ def plan_of(spark, name: str) -> str:
     # would otherwise substitute an InMemoryRelation into this query's
     # identical subtrees and change exchange/scan counts — exactly the
     # sharing the persists exist for, but not what these guards pin.
-    # bench.py isolates queries the same way (clearCache between queries).
+    # bench.py isolates queries the same way (clearCache before every pass).
     spark.catalog.clearCache()
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -152,9 +152,13 @@ def test_idle_rich_customers_antijoin_pruned(spark):
 
 def test_ivf_assignment_is_map_only(spark):
     plan = plan_of(spark, "v7_ivf_topk")
-    # centroid model is inlined: assignment must not shuffle the corpus on
-    # vec_id (the old crossJoin+groupBy form exchanged every embedding)
+    # the centroid model ships in the numpy kernel's closure: assignment
+    # must not shuffle the corpus on vec_id (the old crossJoin+groupBy form
+    # exchanged every embedding), and its input is not widened by a
+    # round-robin exchange (a per-batch Python kernel gains nothing from it)
     assert "hashpartitioning(vec_id" not in plan
+    assert "MapInPandas" in plan
+    assert "RoundRobinPartitioning" not in plan
 
 
 def test_ann_recall_joins_tiny_sides(spark):
@@ -810,13 +814,14 @@ def test_quantized_clustered_topk_prunes_partitions_no_exchange(spark):
     assert "codes" in plan
 
 
-def test_sq8_refresh_merges_without_python_stage(spark):
-    """t14 at fixture k=16 must stay on the oracle-pinned flat assignment
-    (no Python stage anywhere) and finish with the full-outer
+def test_sq8_refresh_merges_after_one_assignment_per_side(spark):
+    """t14: each side (stored, delta) runs the numpy assignment kernel
+    once and no per-row Python UDF, then the full-outer
     n_centroids x n_centroids stats merge — no corpus-sized exchange
     after the two per-cell aggregates."""
     plan = plan_of(spark, "t14_sq8_store_refresh")
-    assert "MapInPandas" not in plan  # k=16 -> flat tier, zero Python
+    assert plan.count("MapInPandas (") == 2
+    assert "EvalPython" not in plan
     assert "FullOuter" in plan
     assert plan.count("HashAggregate") >= 4  # partial+final per side
 
@@ -897,8 +902,8 @@ def test_quantized_knn_join_dpp_single_store_scan(spark):
 
 
 def test_cell_split_repair_broadcast_models_no_python(spark):
-    """t15: the repair must stay on the oracle-pinned flat assignment at
-    fixture k (no Python stage), join ONLY against broadcast model tables
+    """t15: the repair reads its assignment from a checkpoint (no Python
+    stage in the plan), joins ONLY against broadcast model tables
     (hot set <= k rows, seeds <= 2k rows — never a shuffle join), and
     derive everything from ONE checkpointed assignment pass."""
     plan = plan_of(spark, "t15_cell_split_repair")
@@ -923,8 +928,8 @@ def test_residual_sq8_topk_all_broadcast_single_fold(spark):
 
 def test_store_delete_repair_broadcast_affected_only(spark):
     """t16: the delete list and both model tables must BROADCAST (erasure
-    batches are tiny — a sort-merge join would reshuffle the corpus), the
-    fixture k=16 stays on the flat assignment tier (no Python stage), and
+    batches are tiny — a sort-merge join would reshuffle the corpus), no
+    Python stage appears, and
     the only keyed exchanges are cell-bounded aggregates (the affected-set
     distinct + the per-cell stats), never a corpus-keyed repartition."""
     plan = plan_of(spark, "t16_store_delete_repair")

@@ -242,52 +242,41 @@ def test_hier_assignment_exact_when_fully_probed_and_agrees_when_pruned(
     assert len(v22 & exact) >= 7, (sorted(v22), sorted(exact))
 
 
+# sha256 of the sorted "vec_id:cid" lines of the (vec_id -> cid) map the
+# flat inlined-literal argmin (the assignment kernel before the numpy one
+# replaced it) produced on the sf0.001 fixture, centroids = vec_id < k
+FLAT_ASSIGNMENT_DIGESTS = {
+    16: "1977b49aee52d392f87d5c1b4ea7f332d9820e7cdd3f8929c95082f5ed7513b1",
+    65: "3b754d996dd067f0051f0682f6a6bf6b166194ae665c54bf5a2d1ef9b7882730",
+}
+
+
 def test_np_assignment_tier_matches_flat_on_fixture(spark, sf_small):
-    """The Arrow/BLAS write-path tier (`_assign_cells_np`) and the flat
-    inlined-literal argmin are two physical strategies for ONE logical
-    operator: identical (vec_id -> cid) on the fixture corpus, both at
-    the oracle-pinned k=16 and above the routing threshold (k=65, where
-    `assign_cells_auto` switches to the np tier)."""
+    """The numpy assignment kernel reproduces the retired flat expression
+    argmin exactly: same (vec_id -> cid) map on the fixture corpus, at the
+    oracle-pinned k=16 and at k=65, checked against the recorded digests."""
+    import hashlib
+
     from pyspark.sql import functions as F
 
-    from ai_optimizer_spark.operators.similarity import (
-        ASSIGN_FLAT_MAX_K,
-        _assign_cells,
-        _assign_cells_np,
-        assign_cells_auto,
-    )
+    from ai_optimizer_spark.operators.similarity import _assign_cells
 
     emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
-    for k in (16, ASSIGN_FLAT_MAX_K + 1):
+    for k, digest in FLAT_ASSIGNMENT_DIGESTS.items():
         cents = emb.filter(F.col("vec_id") < k).select(
             F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
         )
-        rows = cents.collect()
-        flat = {
-            r.vec_id: r.cid
-            for r in _assign_cells(emb, cents, rows=rows).collect()
-        }
-        np_ = {
-            r.vec_id: r.cid
-            for r in _assign_cells_np(emb, cents, rows=rows).collect()
-        }
-        assert np_ == flat, k
-        auto = {
-            r.vec_id: r.cid
-            for r in assign_cells_auto(emb, cents, rows=rows).collect()
-        }
-        assert auto == flat, k
+        got = sorted((r.vec_id, r.cid) for r in _assign_cells(emb, cents).collect())
+        assert len(got) == 500 and len({c for _, c in got}) == k, k
+        lines = "\n".join(f"{v}:{c}" for v, c in got)
+        assert hashlib.sha256(lines.encode()).hexdigest() == digest, k
 
 
 def test_np_assignment_tie_breaks_min_cid(spark):
     """Exact-tie contract: a vector equidistant to two centroids assigns
-    to the MIN cid in both tiers, regardless of centroid row order (the
-    np tier sorts cid-ascending before argmin; the flat tier gets it from
-    lexicographic struct ordering)."""
-    from ai_optimizer_spark.operators.similarity import (
-        _assign_cells,
-        _assign_cells_np,
-    )
+    to the MIN cid, regardless of centroid row order (the kernel sorts
+    cid-ascending before argmin)."""
+    from ai_optimizer_spark.operators.similarity import _assign_cells
 
     emb = spark.createDataFrame(
         [(0, "a", [1.0, 0.0]), (1, "b", [3.0, 4.0])],
@@ -299,27 +288,13 @@ def test_np_assignment_tie_breaks_min_cid(spark):
         [(7, [2.0, 0.0]), (2, [0.0, 0.0]), (9, [100.0, 100.0])],
         "cid long, ce array<double>",
     )
-    for fn in (_assign_cells, _assign_cells_np):
-        got = {r.vec_id: r.cid for r in fn(emb, cents).collect()}
-        assert got[0] == 2, (fn.__name__, got)
-        assert got[1] == 7, (fn.__name__, got)
+    got = {r.vec_id: r.cid for r in _assign_cells(emb, cents).collect()}
+    assert got == {0: 2, 1: 7}, got
 
 
-def test_assignment_tier_routing_and_empty_model(spark):
-    """`choose_assignment_tier` boundary + the empty-centroid guard: zero
-    cells -> typed empty result (no VOID-literal analysis crash) through
-    every entry point."""
-    from ai_optimizer_spark.operators.similarity import (
-        ASSIGN_FLAT_MAX_K,
-        _assign_cells,
-        _assign_cells_np,
-        assign_cells_auto,
-        choose_assignment_tier,
-    )
-
-    assert choose_assignment_tier(1) == "flat"
-    assert choose_assignment_tier(ASSIGN_FLAT_MAX_K) == "flat"
-    assert choose_assignment_tier(ASSIGN_FLAT_MAX_K + 1) == "np"
+def test_assignment_empty_model_is_typed_empty(spark):
+    """The empty-centroid guard: zero cells -> typed empty result."""
+    from ai_optimizer_spark.operators.similarity import _assign_cells
 
     emb = spark.createDataFrame(
         [(0, "a", [1.0, 0.0])],
@@ -328,20 +303,16 @@ def test_assignment_tier_routing_and_empty_model(spark):
     cents = emb.sparkSession.createDataFrame(
         [], "cid long, ce array<double>"
     )
-    for fn in (_assign_cells, _assign_cells_np, assign_cells_auto):
-        out = fn(emb, cents)
-        assert out.collect() == []
-        assert out.columns == ["vec_id", "label", "embedding", "cid"]
+    out = _assign_cells(emb, cents)
+    assert out.collect() == []
+    assert out.columns == ["vec_id", "label", "embedding", "cid"]
 
 
 def test_np_assignment_matches_flat_on_degenerate_embeddings(spark):
-    """NULL / zero / NaN / wrong-dim embeddings must produce the SAME cid
-    in both tiers (the flat tier's NULL distances fall through struct
-    ordering to the min cid; NaN sorts greatest)."""
-    from ai_optimizer_spark.operators.similarity import (
-        _assign_cells,
-        _assign_cells_np,
-    )
+    """NULL / zero / NaN / wrong-dim embeddings get the cids the retired
+    flat expression argmin gave them (recorded literals): NULL distances
+    fall through to the min cid, NaN sorts greatest."""
+    from ai_optimizer_spark.operators.similarity import _assign_cells
 
     emb = spark.createDataFrame(
         [
@@ -356,9 +327,8 @@ def test_np_assignment_matches_flat_on_degenerate_embeddings(spark):
     cents = spark.createDataFrame(
         [(3, [0.0, 0.0]), (8, [4.0, 0.0])], "cid long, ce array<double>"
     )
-    flat = {r.vec_id: r.cid for r in _assign_cells(emb, cents).collect()}
-    np_ = {r.vec_id: r.cid for r in _assign_cells_np(emb, cents).collect()}
-    assert np_ == flat, (flat, np_)
+    got = {r.vec_id: r.cid for r in _assign_cells(emb, cents).collect()}
+    assert got == {0: 3, 1: 3, 2: 3, 3: 3, 4: 8}, got
 
 
 def test_sq8_quantization_contract_and_recall(spark, sf_small):
@@ -421,19 +391,13 @@ def test_quantized_clustered_topk_matches_probed_sq8(spark, sf_small):
 
 
 def test_assignment_tiers_reject_degenerate_centroids_identically(spark):
-    """ADVICE r6: a degenerate centroid MODEL (NULL vector, or a NULL
-    element inside one) must raise the same clear error in BOTH tiers —
-    previously the flat tier silently degraded via NULL-distance struct
-    ordering while the np tier crashed with a TypeError, so auto-routing
-    changed failure behavior at k>64. NaN centroid elements stay legal
-    (NaN distance sorts greatest in both tiers)."""
+    """A degenerate centroid MODEL (NULL vector, or a NULL element inside
+    one) raises one clear ValueError, not a TypeError from the float64
+    matrix build. NaN centroid elements stay legal (a NaN distance is
+    never picked unless every distance is NaN)."""
     import pytest
 
-    from ai_optimizer_spark.operators.similarity import (
-        _assign_cells,
-        _assign_cells_np,
-        assign_cells_auto,
-    )
+    from ai_optimizer_spark.operators.similarity import _assign_cells
 
     emb = spark.createDataFrame(
         [(0, "a", [1.0, 0.0])],
@@ -444,17 +408,15 @@ def test_assignment_tiers_reject_degenerate_centroids_identically(spark):
         [(1, [1.0, None]), (2, [0.0, 0.0])],    # NULL element
     ):
         cents = spark.createDataFrame(bad, "cid long, ce array<double>")
-        for fn in (_assign_cells, _assign_cells_np, assign_cells_auto):
-            with pytest.raises(ValueError, match="degenerate centroid"):
-                fn(emb, cents).collect()
+        with pytest.raises(ValueError, match="degenerate centroid"):
+            _assign_cells(emb, cents).collect()
 
-    # NaN centroid element: both tiers agree (never picked unless forced)
+    # NaN centroid element: never picked (recorded from the flat argmin)
     cents = spark.createDataFrame(
         [(1, [float("nan"), 0.0]), (2, [0.0, 0.0])], "cid long, ce array<double>"
     )
-    flat = {r.vec_id: r.cid for r in _assign_cells(emb, cents).collect()}
-    nptier = {r.vec_id: r.cid for r in _assign_cells_np(emb, cents).collect()}
-    assert flat == nptier == {0: 2}
+    got = {r.vec_id: r.cid for r in _assign_cells(emb, cents).collect()}
+    assert got == {0: 2}
 
 
 def test_quantized_range_search_recall_and_pruning_consistency(spark, sf_small):

@@ -312,9 +312,10 @@ def test_stream_stream_join_drops_late_matches(spark, tmp_path):
 def test_streaming_ivf_assign_occupancy_under_late_arrivals(spark, sf_small, tmp_path):
     """st13 semantics (VERDICT r4 task 7): the streaming ANN ingest has NO
     event-time watermark by design — cell assignment is stateless (the
-    coarse quantizer ships inside the plan) and the only state is the
-    per-cell occupancy counters, which are commutative. Documented
-    consequences, asserted here: (a) a 'late' vector (arriving many
+    coarse quantizer ships in the task closure of the mapInPandas kernel)
+    and the only state is the per-cell occupancy counters, which are
+    commutative. Documented consequences, asserted here at the fixture
+    k=16 and at a corpus-scaled k=70: (a) a 'late' vector (arriving many
     batches after its neighbors) is never dropped — occupancy is
     arrival-order INVARIANT and converges to the batch ground truth in any
     order; (b) per-cell counts are monotone non-decreasing across
@@ -323,109 +324,67 @@ def test_streaming_ivf_assign_occupancy_under_late_arrivals(spark, sf_small, tmp
 
     emb = (
         spark.read.parquet(f"{sf_small}/embeddings.parquet")
-        .filter(F.col("vec_id") < 60)
+        .filter(F.col("vec_id") < 200)
         .localCheckpoint(eager=False)
     )
-    cents = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    truth = {
-        (r.cid, r.n_vecs, r.min_vec_id, r.max_vec_id)
-        for r in _assign_cells(emb, cents)
-        .groupBy("cid")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.min("vec_id").alias("min_vec_id"),
-            F.max("vec_id").alias("max_vec_id"),
-        )
-        .collect()
-    }
-
     # batch 1 = the bulk; batch 2 = stragglers (every 7th vector) that in a
     # watermarked op would be candidates for dropping — here they must land
-    late_ids = {i for i in range(60) if i % 7 == 0}
-    splits = {
-        "fwd": [
-            emb.filter(~F.col("vec_id").isin(*late_ids)),
-            emb.filter(F.col("vec_id").isin(*late_ids)),
-        ],
-    }
-    splits["rev"] = list(reversed(splits["fwd"]))
+    late_ids = {i for i in range(200) if i % 7 == 0}
+    fwd = [
+        emb.filter(~F.col("vec_id").isin(*late_ids)),
+        emb.filter(F.col("vec_id").isin(*late_ids)),
+    ]
+    for k in (16, 70):
+        cents = emb.filter(F.col("vec_id") < k).select(
+            F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
+        )
 
-    finals = {}
-    for order_name, batches in splits.items():
-        feed = str(tmp_path / f"ivf_{order_name}")
-        os.makedirs(feed)
-        for i, bdf in enumerate(batches):
-            stage = str(tmp_path / f"ivf_{order_name}_s{i}")
-            bdf.coalesce(1).write.parquet(stage)
-            part = glob.glob(stage + "/part-*.parquet")[0]
-            dst = os.path.join(feed, f"b{i}.parquet")
-            shutil.copy(part, dst)
-            os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        plan = _assign_cells(stream, cents).groupBy("cid").agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.min("vec_id").alias("min_vec_id"),
-            F.max("vec_id").alias("max_vec_id"),
-        )
-        snapshots = []
-        q = (
-            plan.writeStream.outputMode("complete")
-            .foreachBatch(
-                lambda bdf, bid: snapshots.append(
-                    {r.cid: r.n_vecs for r in bdf.collect()}
-                )
+        def occupancy(df):
+            return _assign_cells(df, cents).groupBy("cid").agg(
+                F.count(F.lit(1)).alias("n_vecs"),
+                F.min("vec_id").alias("min_vec_id"),
+                F.max("vec_id").alias("max_vec_id"),
             )
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180)
-        # monotone occupancy: no cell's count ever decreases between batches
-        for prev, cur in zip(snapshots, snapshots[1:]):
-            for cid, n in prev.items():
-                assert cur.get(cid, 0) >= n, (order_name, cid, prev, cur)
-        finals[order_name] = snapshots[-1]
 
-    assert finals["fwd"] == finals["rev"]  # arrival order cannot matter
+        truth = {tuple(r) for r in occupancy(emb).collect()}
+        finals = {}
+        for order_name, batches in (("fwd", fwd), ("rev", fwd[::-1])):
+            feed = str(tmp_path / f"ivf_k{k}_{order_name}")
+            os.makedirs(feed)
+            for i, bdf in enumerate(batches):
+                stage = str(tmp_path / f"ivf_k{k}_{order_name}_s{i}")
+                bdf.coalesce(1).write.parquet(stage)
+                part = glob.glob(stage + "/part-*.parquet")[0]
+                dst = os.path.join(feed, f"b{i}.parquet")
+                shutil.copy(part, dst)
+                os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
+            stream = (
+                spark.readStream.schema(emb.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(feed)
+            )
+            snapshots = []
+            q = (
+                occupancy(stream)
+                .writeStream.outputMode("complete")
+                .foreachBatch(
+                    lambda bdf, bid: snapshots.append({tuple(r) for r in bdf.collect()})
+                )
+                .trigger(availableNow=True)
+                .start()
+            )
+            assert q.awaitTermination(180)
+            assert len(snapshots) >= 2, (k, order_name)
+            # monotone occupancy: no cell's count ever decreases between batches
+            counts = [{r[0]: r[1] for r in snap} for snap in snapshots]
+            for prev, cur in zip(counts, counts[1:]):
+                for cid, n in prev.items():
+                    assert cur.get(cid, 0) >= n, (k, order_name, cid, prev, cur)
+            finals[order_name] = snapshots[-1]
 
-    # and the converged occupancy (+ id bounds) equals the batch ground truth
-    feed = str(tmp_path / "ivf_full")
-    os.makedirs(feed)
-    for i, bdf in enumerate(splits["fwd"]):
-        stage = str(tmp_path / f"ivf_full_s{i}")
-        bdf.coalesce(1).write.parquet(stage)
-        part = glob.glob(stage + "/part-*.parquet")[0]
-        dst = os.path.join(feed, f"b{i}.parquet")
-        shutil.copy(part, dst)
-        os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    plan = _assign_cells(stream, cents).groupBy("cid").agg(
-        F.count(F.lit(1)).alias("n_vecs"),
-        F.min("vec_id").alias("min_vec_id"),
-        F.max("vec_id").alias("max_vec_id"),
-    )
-    q = (
-        plan.writeStream.format("memory")
-        .queryName("st13_late_full")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180)
-    got = {
-        (r.cid, r.n_vecs, r.min_vec_id, r.max_vec_id)
-        for r in spark.table("st13_late_full").collect()
-    }
-    assert got == truth
+        # arrival order cannot matter, and the converged occupancy (+ id
+        # bounds) equals the batch ground truth
+        assert finals["fwd"] == finals["rev"] == truth, k
 
 
 def test_span_novelty_is_arrival_order_invariant(spark, sf_small, tmp_path):
@@ -713,10 +672,7 @@ def test_streaming_sq8_ingest_multibatch_equals_batch_stats(
     float sums), so the per-cell health stats must equal the batch
     computation bit-for-bit regardless of micro-batch split or arrival
     order."""
-    from ai_optimizer_spark.operators.similarity import (
-        assign_cells_auto,
-        sq8_project,
-    )
+    from ai_optimizer_spark.operators.similarity import _assign_cells, sq8_project
 
     emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
     cents = emb.filter(F.col("vec_id") < 16).select(
@@ -724,7 +680,7 @@ def test_streaming_sq8_ingest_multibatch_equals_batch_stats(
     )
 
     def stats(df):
-        quantized = sq8_project(assign_cells_auto(df, cents)).select(
+        quantized = sq8_project(_assign_cells(df, cents)).select(
             "vec_id", "cid", "embedding", "scale", "codes"
         )
         qerr = F.when(
@@ -830,77 +786,6 @@ def test_streaming_fertility_multibatch_equals_batch_table(
             ES.documents_stream = orig
         results[order_name] = {tuple(r) for r in table.collect()}
     assert results["fwd"] == results["rev"] == truth
-
-
-def test_streaming_ivf_assign_np_tier_late_arrivals(spark, sf_small, tmp_path):
-    """st13 at corpus-scaled k (VERDICT r6 task 7 follow-through): above
-    ASSIGN_FLAT_MAX_K the auto router swaps the streaming plan's
-    assignment stage to the Arrow/BLAS mapInPandas tier — this pins that
-    the np tier works INSIDE a Structured Streaming micro-batch with
-    straggler arrivals: same monotone-absorb semantics, converging to the
-    batch ground truth, arrival order irrelevant. (Every other streaming
-    test runs fixture k=16 = the flat tier, so the np-tier streaming path
-    was otherwise untested.)"""
-    from ai_optimizer_spark.operators.similarity import (
-        ASSIGN_FLAT_MAX_K,
-        assign_cells_auto,
-    )
-
-    n_cents = ASSIGN_FLAT_MAX_K + 6  # forces the np tier
-    emb = (
-        spark.read.parquet(f"{sf_small}/embeddings.parquet")
-        .filter(F.col("vec_id") < 200)
-        .localCheckpoint(eager=False)
-    )
-    cents = emb.filter(F.col("vec_id") < n_cents).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    truth = {
-        (r.cid, r.n_vecs)
-        for r in assign_cells_auto(emb, cents)
-        .groupBy("cid")
-        .agg(F.count(F.lit(1)).alias("n_vecs"))
-        .collect()
-    }
-
-    late_ids = {i for i in range(200) if i % 9 == 0}
-    batches = [
-        emb.filter(~F.col("vec_id").isin(*late_ids)),
-        emb.filter(F.col("vec_id").isin(*late_ids)),
-    ]
-    feed = str(tmp_path / "ivf_np")
-    os.makedirs(feed)
-    for i, bdf in enumerate(batches):
-        stage = str(tmp_path / f"ivf_np_s{i}")
-        bdf.coalesce(1).write.parquet(stage)
-        part = glob.glob(stage + "/part-*.parquet")[0]
-        dst = os.path.join(feed, f"b{i}.parquet")
-        shutil.copy(part, dst)
-        os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    plan = assign_cells_auto(stream, cents).groupBy("cid").agg(
-        F.count(F.lit(1)).alias("n_vecs")
-    )
-    snapshots = []
-    q = (
-        plan.writeStream.outputMode("complete")
-        .foreachBatch(
-            lambda bdf, bid: snapshots.append(
-                {r.cid: r.n_vecs for r in bdf.collect()}
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180)
-    for prev, cur in zip(snapshots, snapshots[1:]):
-        for cid, n in prev.items():
-            assert cur.get(cid, 0) >= n  # stragglers absorb, never evict
-    assert {(c, n) for c, n in snapshots[-1].items()} == truth
 
 
 def test_streaming_knn_serving_multibatch_equals_batch(spark, sf_small, tmp_path):

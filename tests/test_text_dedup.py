@@ -276,8 +276,8 @@ def test_choose_simhash_blocking_scales_with_corpus():
 
 @pytest.mark.slow
 def test_simhash_auto_blocking_end_to_end_on_16x_tile(spark, sf_medium):
-    """VERDICT r4 task 6: the d4 production entry point (simhash_pairs_auto
-    → choose_simhash_blocking) exercised end-to-end on a 16× tiled corpus
+    """VERDICT r4 task 6: the d4 production entry point (simhash_pairs_blocked
+    sized by choose_simhash_blocking) exercised end-to-end on a 16× tiled corpus
     (scale_probe's tiling: shifted doc_ids + per-tile marker tokens so
     cross-tile similarity collapses), with the exact all-pairs d4x baseline
     as the invariant. Covers BOTH regimes: the corpus-sized choice (below
@@ -306,7 +306,7 @@ def test_simhash_auto_blocking_end_to_end_on_16x_tile(spark, sf_medium):
     assert baseline  # each tile keeps the fixture's planted near-dups
 
     # regime 1: config chosen from the real tile size (below crossover)
-    auto = {(r.doc_a, r.doc_b, r.hamming) for r in D.simhash_pairs_auto(t).collect()}
+    auto = {(r.doc_a, r.doc_b, r.hamming) for r in D.simhash_pairs_blocked(t).collect()}
     assert auto == baseline
 
     # regime 2: web-scale hint → wide combination keys, same result set
@@ -314,7 +314,7 @@ def test_simhash_auto_blocking_end_to_end_on_16x_tile(spark, sf_medium):
     assert m_wide > 1
     wide = {
         (r.doc_a, r.doc_b, r.hamming)
-        for r in D.simhash_pairs_auto(t, n_docs=50_000_000).collect()
+        for r in D.simhash_pairs_blocked(t, n_docs=50_000_000).collect()
     }
     assert wide == baseline
 

@@ -1,20 +1,21 @@
 """Million-vector write-path proof (VERDICT r6 task 2).
 
-tools/assign_bench.py proved the np assignment tier linear in k to k=2560
-in isolation; this probe COMPOSES it: the full write → maintain → serve
-loop of the quantized clustered store at the scale where the flat
-expression tier is known to die (corpus-scaled auto-k ≫ ASSIGN_FLAT_MAX_K).
+The numpy cell-assignment kernel (`_assign_cells`) measured linear in k
+to k=2560 in isolation (SCALE.md, "assignment tiers at corpus-scaled k");
+this probe COMPOSES it: the full write → maintain → serve loop of the
+quantized clustered store at corpus-scaled auto-k, where the retired flat
+expression argmin died.
 
 Corpus: the sf0.1 embeddings table (2k vectors, d=64) tiled TILES=512×
 with shifted ids and a per-tile dim-0 perturbation → 1,024,000 vectors,
 written once to /tmp (never touching /root/testdata). Auto-k follows the
 same occupancy rule every auto-k consumer uses (choose_semdedup_k:
-~500 vectors/cell) → k = 2048 at 1M — the regime where the flat tier's
-O(k) driver literal build plus interpreted-HOF evaluation would be in the
-tens of minutes (SCALE.md finding 11).
+~500 vectors/cell) → k = 2048 at 1M — the regime where a flat expression
+argmin's O(k) driver literal build plus interpreted-HOF evaluation would
+be in the tens of minutes (SCALE.md finding 11).
 
 Timed phases (the lifecycle v24's docstring promises):
-  1. store_build   — ensure_sq8_clustered_store at auto-k: np-tier GEMM
+  1. store_build   — ensure_sq8_clustered_store at auto-k: numpy GEMM
                      assignment + SQ8 quantization + one repartition(cid)
                      shuffle + partitioned write (one file per cell), and
                      the per-cell radii statistic off the SAME persisted
@@ -107,7 +108,7 @@ def main() -> None:
     res: dict[str, float | int] = {"n_vecs": n_total, "auto_k": k}
     print(f"tile={tile} n_vecs={n_total} auto_k={k}", flush=True)
 
-    # 1. store build (np-tier assignment + quantize + clustered write)
+    # 1. store build (numpy assignment + quantize + clustered write)
     t0 = time.monotonic()
     name = ensure_sq8_clustered_store(spark, tile, n_centroids=k)
     res["store_build_sec"] = round(time.monotonic() - t0, 1)
