@@ -24,6 +24,7 @@ Pieces:
 from __future__ import annotations
 
 import os
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -225,6 +226,7 @@ class ProgressRecorder(StreamingQueryListener):
         self.progress: list[dict] = []
         self.started: list[str] = []
         self.terminated: list[str] = []
+        self._terminated = threading.Event()
 
     def onQueryStarted(self, event) -> None:
         self.started.append(event.id)
@@ -238,6 +240,14 @@ class ProgressRecorder(StreamingQueryListener):
 
     def onQueryTerminated(self, event) -> None:
         self.terminated.append(event.id)
+        self._terminated.set()
+
+    def await_terminated(self, timeout_sec: float = 60.0) -> bool:
+        """Block until a terminated event has been delivered. Listener
+        events reach Python asynchronously, after `awaitTermination` has
+        returned; the bus delivers them in order, so once the terminated
+        event is in, every started and progress event of that query is too."""
+        return self._terminated.wait(timeout_sec)
 
 
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

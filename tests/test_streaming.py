@@ -24,6 +24,7 @@ def test_streaming_matches_batch(spark, sf_small):
         g = {tuple(r) for r in got.collect()}
         w = {tuple(r) for r in want.collect()}
         assert g == w and len(g) > 0
+        assert listener.await_terminated(60)
     finally:
         spark.streams.removeListener(listener)
     assert len(listener.started) >= 1

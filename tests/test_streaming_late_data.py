@@ -309,17 +309,12 @@ def test_stream_stream_join_drops_late_matches(spark, tmp_path):
     assert (10, 22) in batch_pairs
 
 
-def test_streaming_ivf_assign_occupancy_under_late_arrivals(spark, sf_small, tmp_path):
-    """st13 semantics (VERDICT r4 task 7): the streaming ANN ingest has NO
-    event-time watermark by design — cell assignment is stateless (the
-    coarse quantizer ships in the task closure of the mapInPandas kernel)
-    and the only state is the per-cell occupancy counters, which are
-    commutative. Documented consequences, asserted here at the fixture
-    k=16 and at a corpus-scaled k=70: (a) a 'late' vector (arriving many
-    batches after its neighbors) is never dropped — occupancy is
-    arrival-order INVARIANT and converges to the batch ground truth in any
-    order; (b) per-cell counts are monotone non-decreasing across
-    micro-batches (counters only absorb, never evict)."""
+def _assert_streaming_occupancy_converges(spark, sf_small, tmp_path, k, late_mod):
+    """Feed the first 200 embeddings to a streaming per-cell occupancy
+    rollup over `_assign_cells` with k centroids, as two files (the bulk,
+    then the stragglers with vec_id % late_mod == 0), in both arrival
+    orders. Per-cell counts must never decrease between micro-batches and
+    must converge, in either order, to the batch occupancy (+ id bounds)."""
     from ai_optimizer_spark.operators.similarity import _assign_cells
 
     emb = (
@@ -327,64 +322,86 @@ def test_streaming_ivf_assign_occupancy_under_late_arrivals(spark, sf_small, tmp
         .filter(F.col("vec_id") < 200)
         .localCheckpoint(eager=False)
     )
-    # batch 1 = the bulk; batch 2 = stragglers (every 7th vector) that in a
-    # watermarked op would be candidates for dropping — here they must land
-    late_ids = {i for i in range(200) if i % 7 == 0}
+    cents = emb.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
+    )
+
+    def occupancy(df):
+        return _assign_cells(df, cents).groupBy("cid").agg(
+            F.count(F.lit(1)).alias("n_vecs"),
+            F.min("vec_id").alias("min_vec_id"),
+            F.max("vec_id").alias("max_vec_id"),
+        )
+
+    truth = {tuple(r) for r in occupancy(emb).collect()}
+    # batch 1 = the bulk; batch 2 = stragglers that in a watermarked op
+    # would be candidates for dropping — here they must land
+    late_ids = {i for i in range(200) if i % late_mod == 0}
     fwd = [
         emb.filter(~F.col("vec_id").isin(*late_ids)),
         emb.filter(F.col("vec_id").isin(*late_ids)),
     ]
-    for k in (16, 70):
-        cents = emb.filter(F.col("vec_id") < k).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
+    finals = {}
+    for order_name, batches in (("fwd", fwd), ("rev", fwd[::-1])):
+        feed = str(tmp_path / f"ivf_k{k}_{order_name}")
+        os.makedirs(feed)
+        for i, bdf in enumerate(batches):
+            stage = str(tmp_path / f"ivf_k{k}_{order_name}_s{i}")
+            bdf.coalesce(1).write.parquet(stage)
+            part = glob.glob(stage + "/part-*.parquet")[0]
+            dst = os.path.join(feed, f"b{i}.parquet")
+            shutil.copy(part, dst)
+            os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
+        stream = (
+            spark.readStream.schema(emb.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
         )
-
-        def occupancy(df):
-            return _assign_cells(df, cents).groupBy("cid").agg(
-                F.count(F.lit(1)).alias("n_vecs"),
-                F.min("vec_id").alias("min_vec_id"),
-                F.max("vec_id").alias("max_vec_id"),
+        snapshots = []
+        q = (
+            occupancy(stream)
+            .writeStream.outputMode("complete")
+            .foreachBatch(
+                lambda bdf, bid: snapshots.append({tuple(r) for r in bdf.collect()})
             )
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(180)
+        assert len(snapshots) >= 2, (k, order_name)
+        # monotone occupancy: no cell's count ever decreases between batches
+        counts = [{r[0]: r[1] for r in snap} for snap in snapshots]
+        for prev, cur in zip(counts, counts[1:]):
+            for cid, n in prev.items():
+                assert cur.get(cid, 0) >= n, (k, order_name, cid, prev, cur)
+        finals[order_name] = snapshots[-1]
 
-        truth = {tuple(r) for r in occupancy(emb).collect()}
-        finals = {}
-        for order_name, batches in (("fwd", fwd), ("rev", fwd[::-1])):
-            feed = str(tmp_path / f"ivf_k{k}_{order_name}")
-            os.makedirs(feed)
-            for i, bdf in enumerate(batches):
-                stage = str(tmp_path / f"ivf_k{k}_{order_name}_s{i}")
-                bdf.coalesce(1).write.parquet(stage)
-                part = glob.glob(stage + "/part-*.parquet")[0]
-                dst = os.path.join(feed, f"b{i}.parquet")
-                shutil.copy(part, dst)
-                os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
-            stream = (
-                spark.readStream.schema(emb.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(feed)
-            )
-            snapshots = []
-            q = (
-                occupancy(stream)
-                .writeStream.outputMode("complete")
-                .foreachBatch(
-                    lambda bdf, bid: snapshots.append({tuple(r) for r in bdf.collect()})
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            assert q.awaitTermination(180)
-            assert len(snapshots) >= 2, (k, order_name)
-            # monotone occupancy: no cell's count ever decreases between batches
-            counts = [{r[0]: r[1] for r in snap} for snap in snapshots]
-            for prev, cur in zip(counts, counts[1:]):
-                for cid, n in prev.items():
-                    assert cur.get(cid, 0) >= n, (k, order_name, cid, prev, cur)
-            finals[order_name] = snapshots[-1]
+    # arrival order cannot matter, and the converged occupancy (+ id
+    # bounds) equals the batch ground truth
+    assert finals["fwd"] == finals["rev"] == truth, k
 
-        # arrival order cannot matter, and the converged occupancy (+ id
-        # bounds) equals the batch ground truth
-        assert finals["fwd"] == finals["rev"] == truth, k
+
+def test_streaming_ivf_assign_occupancy_under_late_arrivals(spark, sf_small, tmp_path):
+    """st13 semantics (VERDICT r4 task 7): the streaming ANN ingest has NO
+    event-time watermark by design — cell assignment is stateless (the
+    coarse quantizer ships in the task closure of the mapInPandas kernel)
+    and the only state is the per-cell occupancy counters, which are
+    commutative. Documented consequences, asserted here at the fixture
+    k=16: (a) a 'late' vector (arriving many batches after its neighbors)
+    is never dropped — occupancy is arrival-order INVARIANT and converges
+    to the batch ground truth in any order; (b) per-cell counts are
+    monotone non-decreasing across micro-batches (counters only absorb,
+    never evict)."""
+    _assert_streaming_occupancy_converges(spark, sf_small, tmp_path, k=16, late_mod=7)
+
+
+def test_streaming_ivf_assign_np_tier_late_arrivals(spark, sf_small, tmp_path):
+    """st13 at a corpus-scaled k=70: the numpy assignment kernel (one
+    GEMM + argmin per Arrow batch) inside a Structured Streaming
+    micro-batch with straggler arrivals keeps the same monotone-absorb
+    semantics and converges to the batch ground truth in either arrival
+    order."""
+    _assert_streaming_occupancy_converges(spark, sf_small, tmp_path, k=70, late_mod=9)
 
 
 def test_span_novelty_is_arrival_order_invariant(spark, sf_small, tmp_path):
