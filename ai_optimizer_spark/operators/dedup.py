@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 from ..functions import text as T
 from ..cache import shared_persist
 from ..functions import vector as V
-from ..tables import widen_scan
 
 SHINGLE_N = 3
 JACCARD_THRESHOLD = 0.8
@@ -89,10 +88,7 @@ def exact_dedup_hashkey(t: dict[str, DataFrame]) -> DataFrame:
 
 
 def _shingle_sets(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle) exploded inverted index + per-doc set size.
-    The scan is widened first: one md5 per shingle is the dominant map cost
-    and must fan out across cores (no-op on real multi-row-group tables)."""
-    docs = widen_scan(docs)
+    """(doc_id, shingle) exploded inverted index + per-doc set size."""
     return docs.select(
         "doc_id", F.explode(T.word_shingles("text", SHINGLE_N)).alias("shingle")
     )
@@ -298,11 +294,7 @@ def doc_signatures(docs: DataFrame) -> DataFrame:
 
     Scale shape: map-only and stateless per row, so it is legal on a
     stream side; no shuffle and no keyed state. Each batch hashes in
-    Python and folds in numpy (`reduceat` over the per-doc runs). The
-    scan is not widened (cf. `widen_scan`): each Python task has a fixed
-    cost that outweighs the cores it buys — on 4 cores this kernel took
-    0.9 s on the one-partition sf0.1 scan against 1.9 s widened to 16
-    (0.4 s against 1.35 s at sf0.01)."""
+    Python and folds in numpy (`reduceat` over the per-doc runs)."""
     import hashlib
     import re
 
@@ -863,10 +855,7 @@ def span_fingerprints(docs: DataFrame, window: int = REPEAT_WINDOW) -> DataFrame
             lambda i: F.concat_ws(" ", F.slice(w, i, window)),
         ),
     ).otherwise(F.array())
-    # one md5 per span position is the dominant map cost — widen the
-    # single-row-group test scan so it fans out across cores, exactly as
-    # _shingle_sets does (r10: t10/d15/st14 ran this map on ONE task)
-    return widen_scan(docs).select("doc_id", F.explode(spans).alias("win")).select(
+    return docs.select("doc_id", F.explode(spans).alias("win")).select(
         "doc_id", T.hash60(F.col("win")).alias("wh")
     )
 
@@ -1197,7 +1186,6 @@ def semdedup(
     store is written clustered by cid so the self-join is partition-local,
     and the removal set joins back as an id-only anti pattern.
     """
-    from ..tables import widen_scan
     from .similarity import _ivf_assign
 
     emb = t["embeddings"]
@@ -1239,16 +1227,11 @@ def semdedup(
         )
         .localCheckpoint(eager=True)
     )
-    # widen the probe side: the checkpoint inherits the narrow scan's
-    # partition count, which would run the pair phase on a handful of cores
-    a = widen_scan(
-        scored.select(
-            F.col("vec_id").alias("va"),
-            F.col("cid").alias("ca"),
-            F.col("ne").alias("na"),
-            F.col("cos_c").alias("cca"),
-        ),
-        min_parts=32,
+    a = scored.select(
+        F.col("vec_id").alias("va"),
+        F.col("cid").alias("ca"),
+        F.col("ne").alias("na"),
+        F.col("cos_c").alias("cca"),
     )
     b = scored.select(
         F.col("vec_id").alias("vb"),
@@ -1393,7 +1376,6 @@ def semantic_decontamination(
     broadcasts it and the join never shuffles the corpus. k scales with
     the corpus via choose_semdedup_k so cell occupancy — and with it the
     per-vector candidate count — stays constant."""
-    from ..tables import widen_scan
     from .similarity import _ivf_assign
 
     emb = t["embeddings"]
@@ -1419,11 +1401,8 @@ def semantic_decontamination(
         )
         .localCheckpoint(eager=True)
     )
-    corpus = widen_scan(
-        normed.filter(F.col("vec_id") % bench_mod != 0).select(
-            F.col("vec_id").alias("vc"), F.col("cid").alias("cc"), F.col("ne").alias("nc")
-        ),
-        min_parts=32,
+    corpus = normed.filter(F.col("vec_id") % bench_mod != 0).select(
+        F.col("vec_id").alias("vc"), F.col("cid").alias("cc"), F.col("ne").alias("nc")
     )
     bench = normed.filter(F.col("vec_id") % bench_mod == 0).select(
         F.col("vec_id").alias("vb"), F.col("cid").alias("cb"), F.col("ne").alias("nb")
@@ -1841,10 +1820,6 @@ def winnow_fingerprints(
 
     Returns distinct (doc_id, fp) where fp is the selected 40-bit k-gram
     hash."""
-    # one md5 per k-gram position is the dominant map cost — widen the
-    # single-row-group test scan so it fans out across cores (the
-    # _shingle_sets convention; no-op on real multi-row-group tables)
-    docs = widen_scan(docs)
     words = T.words(F.col("text"))
     grams = F.when(
         F.size(words) >= k,

@@ -402,13 +402,9 @@ def kmv_distinct_shingles(t: dict[str, DataFrame], k: int = KMV_K) -> DataFrame:
     is exact-deterministic for a fixed corpus, so the oracle pins the full
     computation, and the unit test bounds the error."""
     from ..functions import text as T
-    from ..tables import widen_scan
 
-    # shingle md5s are the dominant map cost — widen the single-row-group
-    # test scan across cores (the _shingle_sets convention; no-op on real
-    # multi-row-group tables)
     shingles = (
-        widen_scan(t["documents"])
+        t["documents"]
         .select(F.explode(T.word_shingles(F.col("text"))).alias("sh"))
         .distinct()
     )
@@ -527,12 +523,8 @@ def cms_heavy_hitters(
     drops it (the a26/d21 move).
     """
     from ..functions import text as T
-    from ..tables import widen_scan
 
-    # seeded-hash60 ×4 per token dominates the map — widen the test scan
-    tok = widen_scan(t["documents"]).select(
-        F.explode(T.words("text")).alias("term")
-    )
+    tok = t["documents"].select(F.explode(T.words("text")).alias("term"))
     sketch = (
         tok.select(_cms_cells(F.col("term"), seeds, w).alias("sb"))
         .select("sb.seed", "sb.bucket")
@@ -608,15 +600,12 @@ def kmv_source_overlap(
 
     pair_df = spark.createDataFrame(list(pairs), "src_a string, src_b string")
 
-    # distinct (source, shingle-hash) — hash once, reuse for sketch + exact
-    from ..tables import widen_scan
-
-    # persisted: the distinct hash set feeds BOTH the k-row sketches and
-    # the exact error reference — without it each side replays the
-    # shingle explode + md5 over the whole corpus (guide §2.4)
+    # distinct (source, shingle-hash), persisted: the hash set feeds BOTH
+    # the k-row sketches and the exact error reference — without it each
+    # side replays the shingle explode + md5 over the whole corpus
+    # (guide §2.4)
     sh = (
-        widen_scan(docs)
-        .select(
+        docs.select(
             "source", F.explode(T.word_shingles(F.col("text"))).alias("sh")
         )
         .select("source", T.hash60(F.col("sh")).alias("h"))

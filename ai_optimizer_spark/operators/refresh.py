@@ -1016,7 +1016,6 @@ def kmv_sketch_refresh(t: dict[str, DataFrame], k: int = 64, cutoff: int = 250) 
     top-k, then a 2k-row merge. The exact distinct count rides along as
     the harness's error reference (production drops it)."""
     from ..functions import text as T
-    from ..tables import widen_scan
 
     docs = t["documents"]
 
@@ -1029,8 +1028,7 @@ def kmv_sketch_refresh(t: dict[str, DataFrame], k: int = 64, cutoff: int = 250) 
     # feeds all three consumers; the exact count is one more distinct
     # over the (small) persisted set, not over the corpus.
     hs = (
-        widen_scan(docs)
-        .select(
+        docs.select(
             (F.col("doc_id") >= F.lit(cutoff)).alias("is_delta"),
             F.explode(T.word_shingles(F.col("text"))).alias("sh"),
         )
@@ -1092,7 +1090,6 @@ def cms_sketch_refresh(t: dict[str, DataFrame], cutoff: int = 250) -> DataFrame:
     pass + a 2048-row sum — O(delta + R·W), never a corpus rescan. The
     probe's exact top-N rides along as the harness's error reference."""
     from ..functions import text as T
-    from ..tables import widen_scan
     from .misc import CMS_SEEDS, CMS_W, _cms_cells, cms_probe_finisher
 
     docs = t["documents"]
@@ -1105,8 +1102,7 @@ def cms_sketch_refresh(t: dict[str, DataFrame], cutoff: int = 250) -> DataFrame:
     # materialized half-sketches merged by cell-wise addition) is
     # unchanged, only the redundant second text scan is gone.
     halves = (
-        widen_scan(docs)
-        .select(
+        docs.select(
             (F.col("doc_id") >= F.lit(cutoff)).alias("is_delta"),
             F.explode(T.words("text")).alias("term"),
         )
@@ -1116,5 +1112,5 @@ def cms_sketch_refresh(t: dict[str, DataFrame], cutoff: int = 250) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     merged = halves.groupBy("seed", "bucket").agg(F.sum("cnt").alias("cnt"))
-    tok = widen_scan(docs).select(F.explode(T.words("text")).alias("term"))
+    tok = docs.select(F.explode(T.words("text")).alias("term"))
     return cms_probe_finisher(merged, tok)

@@ -483,18 +483,12 @@ def dsir_select(
     pool, not the full pool, defines raw/target distributions and the
     selection quartile, exactly as before."""
     from ..functions.text import words
-    from ..tables import widen_scan
 
     keys = ["doc_id", "source", *extra_keys]
     # eager barrier: three consumer subtrees below — without it Catalyst
-    # re-scans the corpus and replays the explode for each; widen_scan
-    # first, so the per-token hashing doesn't run on the narrow scan's
-    # single partition at fixture scale (the tx16/d18 convention)
+    # re-scans the corpus and replays the explode for each
     pre = (
-        widen_scan(docs).select(
-            *keys,
-            F.explode(words("text")).alias("term"),
-        )
+        docs.select(*keys, F.explode(words("text")).alias("term"))
         .select(
             *keys,
             (_bucket(F.col("term"), "dsir", DSIR_BUCKETS)).alias("b"),

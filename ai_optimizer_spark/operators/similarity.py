@@ -163,11 +163,7 @@ def _matmul_topk(emb: DataFrame, q_rows, k: int) -> DataFrame:
     top-k per query, so the shuffle into the final window carries
     O(batches·Q·k) rows, never N·Q. Per-batch pruning orders by (rounded
     sim desc NULLs last, vec_id asc) — the same total order as the final
-    window — so pruning can never change the result. The scan is not
-    widened (cf. `widen_scan`): per-row BLAS work is so cheap that the
-    round-robin shuffle and extra Python tasks cost more than the cores
-    buy — measured on 4 cores, v5 ran 2.4 s widened vs 1.1 s not on a
-    16x-tiled sf0.1 corpus (4 scan partitions)."""
+    window — so pruning can never change the result."""
     import numpy as np
     import pandas as pd
 
@@ -840,8 +836,10 @@ def range_search(
     ivf_topk this trades nothing: pruning is conservative, recall is 1.0 by
     construction.
 
-    Scale shape: per-cell radii are one partial-aggregable groupBy over the
-    assignment (a write-path statistic, stored with the clustered layout);
+    Scale shape: the assignment kernel runs once, into a local checkpoint
+    that both the radii aggregate and the pruned scan read; per-cell radii
+    are one partial-aggregable groupBy over it (a write-path statistic,
+    stored with the clustered layout);
     the probe list is cells-sized and broadcasts; the big side is scanned
     only for surviving cells — with the store partitioned by cid that is
     partition pruning, same as v13. On clustered corpora most cells prune
@@ -850,6 +848,9 @@ def range_search(
     which is a property of the data, not the plan."""
     emb = t["embeddings"]
     cents, assigned = _ivf_assign(emb, n_centroids)
+    assigned = assigned.select("vec_id", "label", "cid", "embedding").localCheckpoint(
+        eager=False
+    )  # feeds the radii aggregate AND the pruned scan — one assignment pass
     cell_r = (
         assigned.join(F.broadcast(cents), "cid")
         .select("cid", V.euclidean_distance("embedding", "ce").alias("dc"))
@@ -1735,23 +1736,16 @@ def random_projection_topk(
     was CHOSEN by measurement, not assumed: recall vs the exact top-8 is
     1.0 at sf0.01 and sf0.1 on the fixture corpora (8/16-dim projections
     lose the ordering: the synthetic embeddings' cosine gaps are tiny);
-    the unit test pins a recall floor.
-
-    r11 (guide §2.2): the candidate side is widened — the 24 depth-64
-    projection chains per row are the dominant map cost and the
-    single-row-group fixture scan ran them all on ONE core (profiled: 2
-    tasks, 1.9 s of exec). No-op on real multi-row-group tables; per-row
-    arithmetic and both TakeOrdered total orders are partitioning-
-    independent, so the served rows are bit-identical."""
-    from ..tables import widen_scan
-
+    the unit test pins a recall floor. Per-row arithmetic and both
+    TakeOrdered total orders are partitioning-independent, so the served
+    rows do not depend on how the scan is split."""
     emb = t["embeddings"]
     q = _query_vectors(t, [query_id])
     qp = q.select(
         "query_vec", _rp_project("query_vec").alias("qv")
     )
     coarse = (
-        widen_scan(emb).crossJoin(F.broadcast(qp))
+        emb.crossJoin(F.broadcast(qp))
         .filter(F.col("vec_id") != query_id)
         .select(
             "vec_id",

@@ -134,9 +134,7 @@ def top_terms(t: dict[str, DataFrame], k: int = 20) -> DataFrame:
     explode → count — one partial-aggregable shuffle on the term; the final
     top-k is TakeOrderedAndProject, so only k rows reach the driver side of
     the sort. Total order (df desc, term asc) makes the LIMIT deterministic."""
-    from ..tables import widen_scan
-
-    docs = widen_scan(t["documents"])
+    docs = t["documents"]
     terms = docs.select(F.explode(F.array_distinct(T.words("text"))).alias("term"))
     return (
         terms.groupBy("term")
@@ -153,9 +151,7 @@ def tfidf_top_terms(t: dict[str, DataFrame], k: int = 3) -> DataFrame:
     window top-k. Both shuffles are partial-aggregated and keyed on terms
     (uniform, no skew); the df table is vocabulary-sized so the scoring
     join broadcasts at any corpus scale."""
-    from ..tables import widen_scan
-
-    docs = widen_scan(t["documents"])
+    docs = t["documents"]
     toks = docs.select("doc_id", F.explode(T.words("text")).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_counts = (
@@ -208,9 +204,7 @@ def surprisal_score(t: dict[str, DataFrame]) -> DataFrame:
     documents score high, boilerplate scores low). Two partial-agg shuffles
     build the model (term counts); scoring joins the vocabulary-sized model
     broadcast onto the token stream — no full-corpus shuffle carries text."""
-    from ..tables import widen_scan
-
-    docs = widen_scan(t["documents"])
+    docs = t["documents"]
     toks = docs.select("doc_id", F.explode(T.words("text")).alias("term"))
     model = toks.groupBy("term").agg(F.count(F.lit(1)).alias("ctf"))
     total = model.select(F.sum("ctf").alias("total_tokens"))
@@ -241,11 +235,8 @@ def repetition_stats(t: dict[str, DataFrame]) -> DataFrame:
     formulation exploded to (doc_id, word) rows and paid two shuffles plus
     a join back; per-doc token arrays are small enough that the O(n log n)
     in-row sort beats moving the pairs across the wire — and at 100 TB the
-    entire operator rides the scan (widen_scan is the single-row-group
-    test-file concession, a no-op on real tables)."""
-    from ..tables import widen_scan
-
-    docs = widen_scan(t["documents"])
+    entire operator rides the scan."""
+    docs = t["documents"]
     w = T.words("text")
     n = F.size(w)
     bigrams = F.zip_with(
@@ -630,9 +621,7 @@ def ngram_perplexity(t: dict[str, DataFrame]) -> DataFrame:
     is one window per language over doc-level rows. Rounding before the
     NTILE order key keeps the tertile boundaries engine-portable.
     """
-    from ..tables import widen_scan
-
-    docs = widen_scan(t["documents"])
+    docs = t["documents"]
     w = T.words("text")
     base = docs.select("doc_id", "lang", w.alias("w")).where(F.size("w") >= 2)
     bigrams = base.select(

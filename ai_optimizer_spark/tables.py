@@ -30,28 +30,6 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def widen_scan(df: DataFrame, min_parts: int = 16) -> DataFrame:
-    """Restore scan parallelism for single-row-group test files ahead of
-    CPU-heavy map work (per-shingle hashing, chunk explosion).
-
-    The driver's small-SF parquet has ONE row group per table, so the scan
-    yields one partition and expensive map-side expressions run on one core
-    out of 32. A real 100 TB table scans as thousands of row groups and
-    needs no help — so this fires only when the scan is narrower than the
-    target (the explicit partition count is exempt from AQE coalescing).
-    Deliberately NOT applied wholesale in load_tables: for cheap scans the
-    extra shuffle costs more than the parallelism buys.
-    """
-    if df.isStreaming:
-        # .rdd is illegal on a streaming frame, and micro-batch sources
-        # already split arrivals across tasks — widening is a batch-scan
-        # concern only (st14 shares span_fingerprints with the batch ops)
-        return df
-    if df.rdd.getNumPartitions() < min_parts:
-        return df.repartition(min_parts)
-    return df
-
-
 # DataFrame-handle memo, keyed per live session (weak: a stopped session's
 # entries vanish with it) then per sf_dir. This is METADATA reuse, not
 # result caching: each `spark.read.parquet` costs a driver-side footer

@@ -6,6 +6,7 @@ fail CI, not the benchmark."""
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
 import pytest
@@ -199,9 +200,7 @@ def test_grouping_sets_single_scan(spark):
 
 
 def test_repetition_stats_has_no_key_shuffle(spark):
-    """tx11 is pure array math: no hashpartitioning exchange anywhere (the
-    only allowed exchange is widen_scan's round-robin fan-out for
-    single-row-group test files)."""
+    """tx11 is pure array math: no hashpartitioning exchange anywhere."""
     plan = plan_of(spark, "tx11_repetition_stats")
     assert "hashpartitioning" not in plan
     assert "Join" not in plan
@@ -1113,3 +1112,41 @@ def test_mwu_weights_partial_aggregate_and_broadcasts(spark):
     # parquet: every consumer derives from the checkpointed k-row table
     assert plan.count("Location: InMemoryFileIndex") == 0
     assert "Scan ExistingRDD" in plan  # the checkpointed |domains| rows
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "d2_ngram_jaccard_pairs",
+        "d3_minhash_lsh_pairs",
+        "d18_semdedup",
+        "d20_semantic_decontamination",
+        "d25_winnow_pairs",
+        "a26_kmv_distinct_shingles",
+        "a27_cms_heavy_hitters",
+        "t21_cms_sketch_refresh",
+        "tx8_top_terms",
+        "tx11_repetition_stats",
+        "tx16_ngram_perplexity",
+        "v29_random_projection_topk",
+        "e2e_dedup_manifest",
+    ],
+)
+def test_text_and_vector_ops_read_input_as_partitioned(spark, name):
+    """Scan parallelism comes from the input's layout: no operator adds a
+    round-robin repartition in front of its map work, whatever the
+    partition count of the scan or checkpoint it reads."""
+    plan = plan_of(spark, name)
+    assert "RoundRobinPartitioning" not in plan
+
+
+def test_range_search_assigns_cells_once(spark):
+    """v16: the per-cell radii aggregate and the pruned scan both read ONE
+    checkpointed assignment, so the numpy kernel runs once per query
+    instead of once per consumer."""
+    plan = plan_of(spark, "v16_range_search_pruned")
+    assert "MapInPandas" not in plan
+    tree = plan.split("\n\n", 1)[0]
+    assert tree.count("Scan ExistingRDD") == 2  # radii aggregate + pruned scan
+    # both scans read the same checkpoint RDD
+    assert len(set(re.findall(r"(\w+RDD\[\d+\]) at localCheckpoint", plan))) == 1
