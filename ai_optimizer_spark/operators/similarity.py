@@ -21,6 +21,9 @@ fetch_k=20, lambda_mult=0.5 (core/schemas.py:52-55).
 
 from __future__ import annotations
 
+import weakref
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -307,6 +310,29 @@ def _ivf_assign(emb: DataFrame, n_centroids: int):
     return cents, _assign_cells(emb, cents)
 
 
+# IVF model memo for ivf_topk: embeddings handle (weak) -> n_centroids ->
+# (cents, assigned). A request then reuses the cell assignment instead of
+# re-collecting the centroids and re-running the kernel over the corpus.
+# The assignment is held through shared_persist, so clearCache() and
+# release_shared_caches() drop it; a dropped entry is rebuilt, never
+# served stale. A rewritten input gets a fresh handle from load_tables
+# (keyed by the table files' stamps), hence a fresh entry.
+_IVF_MEMO: "weakref.WeakKeyDictionary[DataFrame, dict[int, tuple[DataFrame, DataFrame]]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _ivf_model(emb: DataFrame, n_centroids: int) -> tuple[DataFrame, DataFrame]:
+    """`_ivf_assign(emb, n_centroids)`, built once per embeddings handle
+    while its persisted assignment lives."""
+    per_handle = _IVF_MEMO.setdefault(emb, {})
+    model = per_handle.get(n_centroids)
+    if model is None or model[1].storageLevel == StorageLevel.NONE:
+        cents, assigned = _ivf_assign(emb, n_centroids)
+        model = per_handle[n_centroids] = (cents, shared_persist(assigned))
+    return model
+
+
 def _lloyd_update(assigned: DataFrame) -> DataFrame:
     """One Lloyd iteration as pure DataFrame ops: new centroid = per-dim
     mean of its cell's vectors. posexplode → two partial-agg shuffles →
@@ -396,9 +422,11 @@ def ivf_topk(
     written clustered/partitioned by `cid`, so the probe semi-join becomes
     partition pruning and the scan reads n_probe/n_centroids of the data.
     Recall is traded against `n_probe` exactly as in FAISS-style IVF-Flat.
+
+    The assignment is built once per embeddings handle and session
+    (`_ivf_model`): a repeated request only probes and scores.
     """
-    emb = t["embeddings"]
-    cents, assigned = _ivf_assign(emb, n_centroids)
+    cents, assigned = _ivf_model(t["embeddings"], n_centroids)
     q = _query_vectors(t, [query_id])
     return _probe_and_search(cents, assigned, q, query_id, k, n_probe)
 

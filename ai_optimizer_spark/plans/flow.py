@@ -66,11 +66,16 @@ def rephrase_question(question: str, history: list[str]) -> str:
     return question if "\n" in candidate else candidate
 
 
-def route_stores(catalog: VectorStoreCatalog, question: str) -> list[str]:
+def route_stores(
+    catalog: VectorStoreCatalog, question: str, metas: list[dict] | None = None
+) -> list[str]:
     """D5 double: pick ≤3 stores whose name shares a token with the
     question; validated against the catalog with fallback to the first
-    store (vs_retriever.py:53-127 contract)."""
-    names = sorted(c["name"] for c in catalog.discover())
+    store (vs_retriever.py:53-127 contract). `metas` is the catalog
+    entries when the caller has already read them."""
+    if metas is None:
+        metas = catalog.discover()
+    names = sorted(c["name"] for c in metas)
     if not names:
         return []
     q_tokens = {t.lower() for t in question.split()}
@@ -118,15 +123,16 @@ class VecsearchFlow:
             def execute(q: str, hist: list[str]) -> DataFrame:
                 if s.enable_rephrase:
                     q = rephrase_question(q, hist)
+                # one catalog read per request, shared by routing and search
+                metas = self.catalog.discover()
                 if s.enable_routing:
-                    stores = route_stores(self.catalog, q)
+                    stores = route_stores(self.catalog, q, metas)
                 else:
-                    stores = sorted(c["name"] for c in self.catalog.discover())[
-                        :MAX_STORES
-                    ]
+                    stores = sorted(c["name"] for c in metas)[:MAX_STORES]
                 hits = multi_store_search(
                     self.spark, self.catalog, stores, q,
                     top_k=s.top_k, score_threshold=s.score_threshold,
+                    metas=metas,
                 )
                 if s.enable_grading:
                     hits = grade_and_blank(hits, s.grade_terms)

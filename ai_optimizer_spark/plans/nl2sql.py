@@ -144,24 +144,21 @@ _TEMPLATES: list[tuple[tuple[str, ...], str]] = [
 ]
 
 _FALLBACK = "SELECT COUNT(*) AS n_rows FROM orders"
+_TABLE_REF = re.compile(r"(?:FROM|JOIN)\s+(\w+)", re.IGNORECASE)
 
 
 def generate_sql(spark: SparkSession, question: str) -> str:
     """Keyword→template generation, validated against the live catalog:
     every table a template references must exist (the agent's
     schema_information consultation). Unknown questions get the safe
-    fallback — mirroring the classifier's default-on-failure posture."""
+    fallback — mirroring the classifier's default-on-failure posture.
+    Each table is checked with `tableExists`, a catalog lookup that starts
+    no Spark job (collecting `listTables()` ran several per call)."""
     q = question.lower()
-    known = {t.name.lower() for t in spark.catalog.listTables()}
     for keywords, sql in _TEMPLATES:
         if all(w in q for w in keywords):
-            import re as _re
-
-            tables = set(
-                m.group(1).lower()
-                for m in _re.finditer(r"(?:FROM|JOIN)\s+(\w+)", sql, _re.IGNORECASE)
-            )
-            if tables <= known:
+            tables = {m.group(1) for m in _TABLE_REF.finditer(sql)}
+            if all(spark.catalog.tableExists(t) for t in tables):
                 return sql
     return _FALLBACK
 

@@ -57,6 +57,7 @@ from __future__ import annotations
 import os
 import re
 import uuid
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,6 +71,13 @@ _GEOM_RE = re.compile(r"^gen-(\d{6})\.parquet$")
 # published-store cell-file schema (cid lives in the MANIFEST, not the
 # file: files are written via partitionBy so the column is stripped)
 _CELL_SCHEMA = "vec_id long, label int, scale double, codes array<tinyint>"
+# committed snapshot (geometry file) schema
+_GEOM_SCHEMA = "cid long, seed_vec_id long, r_cell double, n_vecs long, path string"
+
+# Snapshot rows memo, weak per session: (root, epoch) -> (file stamp,
+# rows). Committed epochs are write-once, so a hit is exact; the stamp
+# (mtime, length) still guards against a root rebuilt in place.
+_SNAPSHOT_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
 def _pub_root(spark: SparkSession, sf_dir: str, n_centroids: int) -> str:
@@ -129,8 +137,10 @@ def resolve_snapshot(
     epoch: int | None = None,
 ) -> tuple[int, list]:
     """(epoch, rows) where rows = [(cid, seed_vec_id, r_cell, n_vecs,
-    path)] — the k-row model state a reader needs, collected once.
-    `epoch=None` resolves CURRENT. Raises if nothing is published."""
+    path)] — the k-row model state a reader needs, collected once per
+    session and epoch (a repeated resolve lists geoms/ and stats one file,
+    no Spark job). `epoch=None` resolves CURRENT. Raises if nothing is
+    published."""
     eps = published_epochs(spark, sf_dir, n_centroids)
     if not eps:
         raise LookupError(
@@ -140,12 +150,19 @@ def resolve_snapshot(
     if ep not in eps:
         raise LookupError(f"epoch {ep} is not committed (have {eps})")
     root = _pub_root(spark, sf_dir, n_centroids)
-    geom = spark.read.parquet(os.path.join(root, "geoms", f"gen-{ep:06d}.parquet"))
-    rows = [
-        (int(r.cid), int(r.seed_vec_id), float(r.r_cell), int(r.n_vecs), str(r.path))
-        for r in geom.collect()
-    ]
-    return ep, sorted(rows)
+    path = os.path.join(root, "geoms", f"gen-{ep:06d}.parquet")
+    fs, jvm = _fs(spark, path)
+    st = fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(path))
+    stamp = (st.getModificationTime(), st.getLen())
+    memo = _SNAPSHOT_MEMO.setdefault(spark, {})
+    held = memo.get((root, ep))
+    if held is None or held[0] != stamp:
+        rows = sorted(
+            (int(r.cid), int(r.seed_vec_id), float(r.r_cell), int(r.n_vecs), str(r.path))
+            for r in spark.read.schema(_GEOM_SCHEMA).parquet(path).collect()
+        )
+        held = memo[(root, ep)] = (stamp, tuple(rows))
+    return ep, list(held[1])
 
 
 def _commit_snapshot(
@@ -154,10 +171,7 @@ def _commit_snapshot(
     """Write the k-row snapshot to a staging dir, then atomically rename
     the single data file into geoms/gen-<epoch>.parquet. The rename IS
     the commit — everything before it is invisible to readers."""
-    df = spark.createDataFrame(
-        sorted(rows),
-        "cid long, seed_vec_id long, r_cell double, n_vecs long, path string",
-    )
+    df = spark.createDataFrame(sorted(rows), _GEOM_SCHEMA)
     stage = os.path.join(root, f"stage-geom-{uuid.uuid4().hex[:8]}")
     df.coalesce(1).write.mode("overwrite").parquet(stage)
     part = [f for f in _listdir(spark, stage) if f.endswith(".parquet")]

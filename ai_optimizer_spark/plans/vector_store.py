@@ -25,8 +25,10 @@ import json
 import os
 import shutil
 import uuid
+import weakref
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..embedding import embed_column
@@ -34,6 +36,22 @@ from ..functions import text as T
 from .nl2sql import validate_identifier
 
 STORE_SCHEMA = "id string, text string, metadata map<string,string>, embedding array<float>"
+
+
+def read_store(spark: SparkSession, path: str) -> DataFrame:
+    """Read a store directory with its declared schema. Spark still
+    discovers the `fbucket`/`bucket` partition column from the directory
+    names, but no read starts a schema-inference job (a footer-reading
+    Spark job per read without it), and a directory with no data files
+    reads as an empty store instead of raising UNABLE_TO_INFER_SCHEMA."""
+    return spark.read.schema(STORE_SCHEMA).parquet(path)
+
+
+def _store_meta(metas: list[dict], name: str) -> dict:
+    meta = next((c for c in metas if c["name"] == name), None)
+    if meta is None:
+        raise KeyError(f"unknown vector store: {name!r} (not in catalog)")
+    return meta
 
 
 def _file_bucket(col, n_buckets: int):
@@ -171,7 +189,7 @@ def populate_store(
     data_path = catalog.data_path(name)
     _recover_swaps(data_path)
     if os.path.exists(data_path):
-        existing = spark.read.parquet(data_path).select(
+        existing = read_store(spark, data_path).select(
             "id", "text", "metadata", "embedding"
         )
         to_embed = deduped.join(existing.select("id"), "id", "left_anti")
@@ -224,7 +242,7 @@ def populate_store(
             "file_buckets": int(file_buckets) if file_buckets else None,
         },
     )
-    return spark.read.parquet(data_path)
+    return read_store(spark, data_path)
 
 
 def _swap_partitions(data_path: str, tmp_path: str, parts: list[str]) -> None:
@@ -358,7 +376,7 @@ def delete_stale_chunks(
     repairs — the accepted O(delta) tradeoff vs an O(store) rewrite)."""
     data_path = catalog.data_path(name)
     _recover_swaps(data_path)
-    existing = spark.read.parquet(data_path)
+    existing = read_store(spark, data_path)
     if isinstance(stale, (list, tuple)):
         stale = spark.createDataFrame([(f,) for f in stale], "filename string")
     stale = stale.select(F.col(stale.columns[0]).alias("filename")).distinct()
@@ -388,7 +406,7 @@ def delete_stale_chunks(
         tmp_path = f"{data_path}__tmp_{uuid.uuid4().hex[:8]}"
         kept.write.mode("overwrite").parquet(tmp_path)
         _publish_dir(data_path, tmp_path)
-    return spark.read.parquet(data_path)
+    return read_store(spark, data_path)
 
 
 def refresh_diff(current: DataFrame, held: DataFrame) -> DataFrame:
@@ -444,7 +462,7 @@ def refresh_store(
     data_path = catalog.data_path(name)
     if os.path.exists(data_path):
         held = (
-            spark.read.parquet(data_path)
+            read_store(spark, data_path)
             .select(
                 F.col("metadata")["filename"].alias("filename"),
                 F.col("metadata")["fingerprint"].alias("old_fp"),
@@ -466,10 +484,10 @@ def refresh_store(
             )
             stale = stale.unionByName(missing)
         if stale.isEmpty():
-            return spark.read.parquet(data_path)
+            return read_store(spark, data_path)
         delete_stale_chunks(spark, catalog, name, stale)
         if changed.isEmpty():
-            return spark.read.parquet(data_path)
+            return read_store(spark, data_path)
         to_embed = current_docs.join(
             changed.select("doc_id"), "doc_id", "left_semi"
         )
@@ -494,6 +512,35 @@ def refresh_store(
     return populate_store(spark, catalog, name, chunks)
 
 
+# Similarity Column per live SparkContext and metric, over the store's
+# `embedding` and a `_q` query-vector column. Building the higher-order
+# expression is ~50 py4j calls, ~50 ms of Python plus JVM CPU per store
+# per request on a 4-core box; the per-request query vector rides in
+# `_q`, which Catalyst collapses back into one literal. A Column is an
+# immutable unresolved expression handle (the `similarity._rp_project`
+# precedent); keyed on the SparkContext, so a stopped JVM's handle is
+# never reused.
+_SIM_MEMO: "weakref.WeakKeyDictionary[SparkContext, dict[str, Column]]" = weakref.WeakKeyDictionary()
+
+
+def _similarity(spark: SparkSession, metric: str) -> Column:
+    """round(score, 3) for a registered distance metric (COSINE, DOT or
+    EUCLIDEAN), scaled like the retriever's hit list."""
+    from ..functions import vector as V
+
+    per_sc = _SIM_MEMO.setdefault(spark.sparkContext, {})
+    if metric not in per_sc:
+        emb, q = F.col("embedding"), F.col("_q")
+        if "COSINE" in metric:
+            sim = F.lit(1.0) - (F.lit(1.0) - V.cosine_similarity(emb, q)) / F.lit(2.0)
+        elif "DOT" in metric:
+            sim = V.dot(emb, q)
+        else:
+            sim = F.lit(1.0) / (F.lit(1.0) + V.euclidean_distance(emb, q))
+        per_sc[metric] = F.round(sim, 3) + F.lit(0.0)
+    return per_sc[metric]
+
+
 def search_store(
     spark: SparkSession,
     catalog: VectorStoreCatalog,
@@ -501,19 +548,25 @@ def search_store(
     query_text: str,
     top_k: int = 8,
     score_threshold: float = 0.0,
+    meta: dict | None = None,
 ) -> DataFrame:
     """J1 read path over a built store: embed query (driver-side, D4) →
     broadcast → distance expr by the store's registered metric → threshold
-    → top-k. Returns (id, text, similarity) like the retriever's hit list."""
-    from ..embedding import HashEmbedder
-    from ..functions import vector as V
+    → top-k. Returns (id, text, similarity) like the retriever's hit list.
 
-    meta = next((c for c in catalog.discover() if c["name"] == name), None)
+    Building the plan starts no Spark job: the store is read with its
+    declared schema, the query vector is one array literal and the score
+    expression is built once per session. A caller that already read the
+    catalog passes the store's entry as `meta`."""
+    import numpy as np
+
+    from ..embedding import HashEmbedder
+
     if meta is None:
-        raise KeyError(f"unknown vector store: {name!r} (not in catalog)")
-    store = spark.read.parquet(catalog.data_path(name))
+        meta = _store_meta(catalog.discover(), name)
+    store = read_store(spark, catalog.data_path(name))
     q_emb = HashEmbedder().embed_query(query_text)
-    qvec = F.array(*[F.lit(float(x)) for x in q_emb])
+    qvec = F.lit(np.asarray(q_emb, dtype=np.float64))
     if meta.get("clustered"):
         # bucket is a Hive partition column → this predicate prunes
         # directories before any row is read (the ANN scale path)
@@ -521,15 +574,8 @@ def search_store(
         # python mirror of functions.vector.sign_bucket (first `bits` dims)
         q_bucket = sum((1 << i) for i in range(bits) if q_emb[i] >= 0)
         store = store.filter(F.col("bucket") == q_bucket)
-    metric = meta.get("distance_metric", "COSINE").upper()
-    if "COSINE" in metric:
-        sim = F.lit(1.0) - (F.lit(1.0) - V.cosine_similarity(F.col("embedding"), qvec)) / F.lit(2.0)
-    elif "DOT" in metric:
-        sim = V.dot(F.col("embedding"), qvec)
-    else:
-        sim = F.lit(1.0) / (F.lit(1.0) + V.euclidean_distance(F.col("embedding"), qvec))
-    sim = F.round(sim, 3) + F.lit(0.0)
-    out = store.select("id", "text", sim.alias("similarity"))
+    sim = _similarity(spark, meta.get("distance_metric", "COSINE").upper())
+    out = store.withColumn("_q", qvec).select("id", "text", sim.alias("similarity"))
     if score_threshold > 0:
         out = out.filter(F.col("similarity") >= score_threshold)
     return out.orderBy(F.desc("similarity"), F.asc("id")).limit(top_k)
@@ -542,20 +588,25 @@ def multi_store_search(
     query_text: str,
     top_k: int = 8,
     score_threshold: float = 0.0,
+    metas: list[dict] | None = None,
 ) -> DataFrame:
     """The §3.1 retrieval sub-plan: fan out over ≤3 stores (the reference
     caps LLM table selection at 3, vs_retriever.py:34), union the hits,
     keep-max dedup on text (W3: first wins on ties — replace only on
     strictly higher score, vs_retriever.py:130-151), global re-sort, top-k
-    (W1). One declarative plan; per-store scans run in parallel."""
+    (W1). One declarative plan; per-store scans run in parallel. The
+    catalog is read once (or not at all when the caller passes `metas`)."""
     from functools import reduce
 
     from pyspark.sql import Window
 
+    if metas is None:
+        metas = catalog.discover()
     per_store = [
-        search_store(spark, catalog, n, query_text, top_k, score_threshold).withColumn(
-            "searched_table", F.lit(n)
-        )
+        search_store(
+            spark, catalog, n, query_text, top_k, score_threshold,
+            meta=_store_meta(metas, n),
+        ).withColumn("searched_table", F.lit(n))
         for n in names[:3]
     ]
     merged = reduce(DataFrame.unionByName, per_store)

@@ -31,16 +31,29 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 # DataFrame-handle memo, keyed per live session (weak: a stopped session's
-# entries vanish with it) then per sf_dir. This is METADATA reuse, not
-# result caching: each `spark.read.parquet` costs a driver-side footer
-# read + a 1-task schema job, and the engine's query functions call
-# load_tables per invocation — measured r11, a 125-query bench session
-# paid ~10 such jobs per query (~0.3-0.8 s each call) re-deriving
-# identical scan plans. The memoized DataFrame is an UNEXECUTED plan:
-# every materialization still scans the parquet files; nothing about
-# results or data is retained. A production session holds table handles
-# in exactly this way (catalog/metastore lookup once per table).
-_TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, dict[str, DataFrame]]]" = None  # type: ignore[assignment]
+# entries vanish with it), then per sf_dir, then per table with the table
+# path's stamp. This is METADATA reuse, not result caching: each
+# `spark.read.parquet` costs a driver-side footer read + a 1-task schema
+# job, and the engine's query functions call load_tables per invocation —
+# measured r11, a 125-query bench session paid ~10 such jobs per query
+# (~0.3-0.8 s each call) re-deriving identical scan plans. The memoized
+# DataFrame is an UNEXECUTED plan: every materialization still scans the
+# parquet files; nothing about results or data is retained. A production
+# session holds table handles in exactly this way (catalog/metastore
+# lookup once per table). A table rewritten since its handle was made
+# (another mtime or size) gets a fresh handle, so a memo keyed by handles
+# (similarity._IVF_MEMO) never serves state built from the old files.
+_TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, dict[str, tuple]]]" = None  # type: ignore[assignment]
+
+
+def _stamp(path: str) -> tuple[int, int] | None:
+    """(mtime ns, size) of a local table path; None when it cannot be
+    stat'ed (a remote URI, or a missing table the read then reports)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -48,26 +61,28 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
     Plain `spark.read.parquet` — schema comes from parquet footers (no
     inference pass), filters/projections push down to the scan. Handles
-    are memoized per (session, sf_dir); callers get a fresh shallow copy
-    of the dict, so overwriting an entry (the sample_mod pattern) never
-    leaks into other callers.
+    are memoized per (session, sf_dir, table stamp); callers get a fresh
+    dict, so overwriting an entry (the sample_mod pattern) never leaks
+    into other callers.
     """
     global _TABLE_MEMO
     if _TABLE_MEMO is None:
         import weakref
 
         _TABLE_MEMO = weakref.WeakKeyDictionary()
-    per_session = _TABLE_MEMO.setdefault(spark, {})
-    key = os.path.abspath(sf_dir)
-    tables = per_session.get(key)
-    if tables is None:
-        tables = {
-            name: spark.read.parquet(f"{sf_dir}/{name}.parquet")
-            for name in TABLE_NAMES
-        }
-        tables["events"] = normalize_event_ts(tables["events"])
-        per_session[key] = tables
-    return dict(tables)
+    per_dir = _TABLE_MEMO.setdefault(spark, {}).setdefault(os.path.abspath(sf_dir), {})
+    tables = {}
+    for name in TABLE_NAMES:
+        path = f"{sf_dir}/{name}.parquet"
+        stamp = _stamp(path)
+        held = per_dir.get(name)
+        if held is None or held[0] != stamp:
+            df = spark.read.parquet(path)
+            if name == "events":
+                df = normalize_event_ts(df)
+            held = per_dir[name] = (stamp, df)
+        tables[name] = held[1]
+    return tables
 
 
 def normalize_event_ts(ev: DataFrame) -> DataFrame:

@@ -1,0 +1,252 @@
+"""Serving requests without metadata jobs, and the state they reuse.
+
+A request reads only what it needs: a store is read with its declared
+schema, the NL2SQL catalog check is a lookup, a committed snapshot's rows
+and the IVF cell assignment are built once per session. Each guard counts
+the Spark jobs a call starts through a job group and `statusTracker`. The
+freshness tests pin the other half: reused state is never served stale
+after a refresh, a cache clear, a new epoch or a rewritten input table.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+import uuid
+from contextlib import contextmanager
+
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+
+import ai_optimizer_spark.operators.similarity as S
+import ai_optimizer_spark.plans.published as P
+from ai_optimizer_spark.cache import release_shared_caches
+from ai_optimizer_spark.plans import nl2sql
+from ai_optimizer_spark.plans.flow import VecsearchFlow, VecsearchSettings
+from ai_optimizer_spark.plans.vector_store import (
+    VectorStoreCatalog,
+    chunks_from_documents,
+    populate_store,
+    refresh_store,
+    search_store,
+)
+from ai_optimizer_spark.tables import TABLE_NAMES, load_tables, register_views
+
+K = 16
+
+
+@contextmanager
+def jobs_started(spark):
+    """Yields a list that holds, on exit, the number of Spark jobs the
+    block started."""
+    sc = spark.sparkContext
+    group = f"guard-{uuid.uuid4().hex[:8]}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    out: list[int] = []
+    try:
+        yield out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+def _docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string, source string")
+
+
+DOCS = [
+    (1, "spark joins shuffle the larger side of a table", "a"),
+    (2, "broadcast a small table to every executor", "a"),
+    (3, "window functions rank rows inside each partition", "b"),
+    (4, "streaming queries keep state between micro batches", "b"),
+]
+
+
+# ---------------------------------------------------------------------------
+# job guards
+# ---------------------------------------------------------------------------
+
+
+def test_search_store_build_starts_no_job(spark, tmp_path):
+    catalog = VectorStoreCatalog(str(tmp_path / "stores"))
+    populate_store(spark, catalog, "kb", chunks_from_documents(_docs(spark, DOCS)),
+                   file_buckets=4)
+    with jobs_started(spark) as n:
+        hits = search_store(spark, catalog, "kb", "broadcast a small table", top_k=3)
+    assert n == [0]
+    assert hits.first().id == "2_1"
+
+
+def test_generate_sql_starts_no_job(spark, sf_small):
+    register_views(spark, sf_small)
+    questions = ["revenue by nation", "count orders by priority",
+                 "top customers", "something else"]
+    with jobs_started(spark) as n:
+        sqls = [nl2sql.generate_sql(spark, q) for q in questions]
+    assert n == [0]
+    assert [s == nl2sql._FALLBACK for s in sqls] == [False, False, False, True]
+
+
+@pytest.fixture()
+def pub_root(tmp_path, monkeypatch):
+    root = str(tmp_path / "pub")
+    monkeypatch.setattr(P, "_pub_root", lambda *_a, **_k: root)
+    return root
+
+
+def test_second_snapshot_resolve_starts_no_job(spark, sf_small, pub_root):
+    P.publish_init(spark, sf_small, K)
+    ep, rows = P.resolve_snapshot(spark, sf_small, K, epoch=1)
+    with jobs_started(spark) as n:
+        again = P.resolve_snapshot(spark, sf_small, K, epoch=1)
+    assert n == [0]
+    assert again == (ep, rows) and len(rows) == K
+
+
+def _cached_and_loaded(spark, df) -> bool:
+    """`df` is cached and every partition of it is in the block manager."""
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    if not cached.isDefined():
+        return False
+    return cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+
+
+@pytest.fixture()
+def assign_calls(monkeypatch):
+    calls = []
+    orig = S._ivf_assign
+
+    def counting(emb, n_centroids):
+        calls.append(n_centroids)
+        return orig(emb, n_centroids)
+
+    monkeypatch.setattr(S, "_ivf_assign", counting)
+    return calls
+
+
+def _ivf_rows(t, query_id=3):
+    return [tuple(r) for r in S.ivf_topk(t, query_id=query_id).collect()]
+
+
+def test_second_ivf_topk_runs_no_assignment(spark, sf_small, assign_calls):
+    spark.catalog.clearCache()  # start from no held assignment
+    t = load_tables(spark, sf_small)
+    first = _ivf_rows(t)
+    assert assign_calls == [K]
+    _cents, assigned = S._IVF_MEMO[t["embeddings"]][K]
+    # every partition of the assignment is in the block manager, so the
+    # next request reads it instead of running the MapInPandas kernel
+    assert _cached_and_loaded(spark, assigned)
+    with jobs_started(spark) as n:
+        df = S.ivf_topk(load_tables(spark, sf_small), query_id=3)
+    assert n == [0]  # no centroid collect at build
+    assert [tuple(r) for r in df.collect()] == first
+    assert assign_calls == [K]
+    assert S._IVF_MEMO[t["embeddings"]][K][1] is assigned
+
+
+# ---------------------------------------------------------------------------
+# freshness
+# ---------------------------------------------------------------------------
+
+
+def test_refresh_between_flow_requests_serves_new_rows(spark, tmp_path):
+    catalog = VectorStoreCatalog(str(tmp_path / "stores"))
+    refresh_store(spark, catalog, "table_docs", _docs(spark, DOCS))
+    flow = VecsearchFlow(spark, catalog)
+    s = VecsearchSettings(enable_rephrase=False, enable_grading=False)
+    removed_text = DOCS[1][1]
+    assert flow.run("c", removed_text, s).first().id == "2_1"
+
+    new_text = "table quokka narwhal axolotl pangolin marmot"
+    current = [(1, new_text, "a"), DOCS[2], DOCS[3]]  # doc 1 edited, doc 2 gone
+    refresh_store(spark, catalog, "table_docs", _docs(spark, current),
+                  remove_missing=True)
+    hits = flow.run("c", new_text, s).collect()
+    assert flow.cache.builds == 1  # the compiled flow was reused
+    assert hits[0].id == "1_1" and hits[0].text == new_text
+    again = flow.run("c", removed_text, s).collect()
+    assert again and not any(h.id.startswith("2_") for h in hits + again)
+
+
+def test_ivf_memo_rebuilds_after_cache_drops(spark, sf_small, assign_calls):
+    spark.catalog.clearCache()
+    t = load_tables(spark, sf_small)
+    want = _ivf_rows(t, query_id=5)
+    spark.catalog.clearCache()
+    assert _ivf_rows(t, query_id=5) == want
+    release_shared_caches()
+    assert _ivf_rows(t, query_id=5) == want
+    assert assign_calls == [K] * 3  # built, then rebuilt after each drop
+    _cents, assigned = S._IVF_MEMO[t["embeddings"]][K]
+    assert _cached_and_loaded(spark, assigned)
+
+
+def test_new_epoch_is_served_from_its_own_rows(spark, sf_small, pub_root):
+    P.publish_init(spark, sf_small, K)
+    _ep, rows = P.resolve_snapshot(spark, sf_small, K)
+    served = P.published_served_topk(spark, sf_small, query_id=0, n_centroids=K).collect()
+    dropped = int(served[0].cid)
+    # epoch 2 publishes the same cells minus the cell epoch 1 ranked first
+    P._commit_snapshot(spark, pub_root, 2, [r for r in rows if r[0] != dropped])
+    ep2, rows2 = P.resolve_snapshot(spark, sf_small, K)
+    assert ep2 == 2 and len(rows2) == K - 1 and dropped not in {r[0] for r in rows2}
+    assert P.resolve_snapshot(spark, sf_small, K, epoch=1)[1] == rows
+    new = P.published_served_topk(spark, sf_small, query_id=0, n_centroids=K).collect()
+    assert new and dropped not in {int(r.cid) for r in new}
+    pinned = P.published_served_topk(spark, sf_small, query_id=0, n_centroids=K, epoch=1)
+    assert pinned.collect() == served
+
+
+def test_rewritten_table_gets_fresh_handle(spark, sf_small, tmp_path):
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for name in TABLE_NAMES:
+        src = f"{sf_small}/{name}.parquet"
+        if name == "embeddings":
+            shutil.copyfile(src, sf / f"{name}.parquet")
+            os.chmod(sf / f"{name}.parquet", 0o644)
+        else:
+            os.symlink(src, sf / f"{name}.parquet")
+    t1 = load_tables(spark, str(sf))
+    before = _ivf_rows(t1)
+
+    # same vectors (so the same centroids and cells), labels moved by 100
+    path = str(sf / "embeddings.parquet")
+    tbl = pq.read_table(path)
+    i = tbl.schema.get_field_index("label")
+    pq.write_table(tbl.set_column(i, "label", pc.add(tbl.column("label"), 100)), path)
+
+    t2 = load_tables(spark, str(sf))
+    assert t2["embeddings"] is not t1["embeddings"]
+    assert t2["orders"] is t1["orders"]
+    after = _ivf_rows(t2)
+    assert [(v, lab + 100, c, s) for v, lab, c, s in before] == after
+
+
+def test_empty_store_reads_as_empty(spark, tmp_path):
+    catalog = VectorStoreCatalog(str(tmp_path / "stores"))
+    catalog.register("empty", {"distance_metric": "COSINE"})
+    os.makedirs(catalog.data_path("empty"))
+    assert search_store(spark, catalog, "empty", "any question").collect() == []
+
+
+def test_flow_request_reads_catalog_once(spark, tmp_path, monkeypatch):
+    catalog = VectorStoreCatalog(str(tmp_path / "stores"))
+    for j, name in enumerate(("table_docs", "stream_docs", "join_docs")):
+        populate_store(spark, catalog, name,
+                       chunks_from_documents(_docs(spark, [DOCS[j]])))
+    reads = []
+    orig = VectorStoreCatalog.discover
+
+    def counting(self):
+        reads.append(1)
+        return orig(self)
+
+    monkeypatch.setattr(VectorStoreCatalog, "discover", counting)
+    flow = VecsearchFlow(spark, catalog)
+    hits = flow.run("c", "table stream join", VecsearchSettings(enable_grading=False))
+    assert len(reads) == 1
+    assert {r.searched_table for r in hits.collect()} == {
+        "table_docs", "stream_docs", "join_docs"}
