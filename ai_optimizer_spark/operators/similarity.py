@@ -21,6 +21,7 @@ fetch_k=20, lambda_mult=0.5 (core/schemas.py:52-55).
 
 from __future__ import annotations
 
+import math
 import weakref
 
 from pyspark import StorageLevel
@@ -310,27 +311,121 @@ def _ivf_assign(emb: DataFrame, n_centroids: int):
     return cents, _assign_cells(emb, cents)
 
 
-# IVF model memo for ivf_topk: embeddings handle (weak) -> n_centroids ->
-# (cents, assigned). A request then reuses the cell assignment instead of
-# re-collecting the centroids and re-running the kernel over the corpus.
-# The assignment is held through shared_persist, so clearCache() and
-# release_shared_caches() drop it; a dropped entry is rebuilt, never
-# served stale. A rewritten input gets a fresh handle from load_tables
-# (keyed by the table files' stamps), hence a fresh entry.
-_IVF_MEMO: "weakref.WeakKeyDictionary[DataFrame, dict[int, tuple[DataFrame, DataFrame]]]" = (
-    weakref.WeakKeyDictionary()
-)
+# IVF model memo, weak per embeddings handle: n_centroids -> the held
+# cell assignment of ivf_topk, and seed map -> cell model. A request then
+# probes and scores instead of re-collecting centroids or re-running the
+# kernel over the corpus. The assignment is held through shared_persist,
+# so clearCache() and release_shared_caches() drop it; a dropped entry is
+# rebuilt, never served stale. A cell model is plain driver data keyed by
+# its content: a rewritten input gets a fresh handle from load_tables
+# (keyed by the table files' stamps), and a split or a new epoch gives a
+# new seed map, so neither is ever served stale.
+_IVF_MEMO: "weakref.WeakKeyDictionary[DataFrame, dict]" = weakref.WeakKeyDictionary()
 
 
-def _ivf_model(emb: DataFrame, n_centroids: int) -> tuple[DataFrame, DataFrame]:
-    """`_ivf_assign(emb, n_centroids)`, built once per embeddings handle
-    while its persisted assignment lives."""
+def _ivf_model(emb: DataFrame, n_centroids: int) -> DataFrame:
+    """The cell assignment of `_ivf_assign(emb, n_centroids)`, built once
+    per embeddings handle while its persisted blocks live."""
     per_handle = _IVF_MEMO.setdefault(emb, {})
-    model = per_handle.get(n_centroids)
-    if model is None or model[1].storageLevel == StorageLevel.NONE:
-        cents, assigned = _ivf_assign(emb, n_centroids)
-        model = per_handle[n_centroids] = (cents, shared_persist(assigned))
-    return model
+    assigned = per_handle.get(n_centroids)
+    if assigned is None or assigned.storageLevel == StorageLevel.NONE:
+        assigned = per_handle[n_centroids] = shared_persist(
+            _ivf_assign(emb, n_centroids)[1]
+        )
+    return assigned
+
+
+def build_seeds(n_centroids: int) -> tuple[tuple[int, int], ...]:
+    """The seed map of a build-time store: cell c is seeded by vector c."""
+    return tuple((c, c) for c in range(n_centroids))
+
+
+def cell_model(emb: DataFrame, seeds) -> tuple:
+    """The k-row IVF cell model ((cid, centroid floats), ...) for a seed
+    map ((cid, seed_vec_id), ...): cell cid's centroid is `emb`'s vector
+    at seed_vec_id (None when that embedding is NULL; a cell whose seed
+    is not in `emb` is left out, as the seed join did). A miss runs one
+    collect of the seed rows; the model is then held in `_IVF_MEMO`."""
+    seeds = tuple(sorted((int(c), int(s)) for c, s in seeds))
+    per_handle = _IVF_MEMO.setdefault(emb, {})
+    if seeds not in per_handle:
+        vec_of = {
+            int(r.vec_id): r.embedding
+            for r in emb.filter(F.col("vec_id").isin(sorted({s for _, s in seeds})))
+            .select("vec_id", "embedding")
+            .collect()
+        }
+        per_handle[seeds] = tuple(
+            (c, None if vec_of[s] is None else tuple(vec_of[s]))
+            for c, s in seeds
+            if s in vec_of
+        )
+    return per_handle[seeds]
+
+
+def probe_cells(model, qvec, n_probe: int) -> list[int]:
+    """The n_probe cells of `model` nearest to `qvec`, ranked on the driver
+    exactly as `orderBy(asc(euclidean_distance(ce, q)), asc(cid))` ranks
+    them: (x-y)*(x-y) summed in double left to right from 0.0, then the
+    root (an explicit loop: `sum` may compensate, and `np.sum` pairs, and
+    either can flip a near-tie). A NULL vector, a NULL element or a length
+    mismatch gives a NULL distance, which sorts first; NaN sorts last; the
+    min cid wins a tie."""
+
+    def rank(cell):
+        cid, ce = cell
+        if (ce is None or qvec is None or len(ce) != len(qvec)
+                or None in ce or None in qvec):
+            return (0, 0.0, cid)
+        acc = 0.0
+        for x, y in zip(ce, qvec):
+            acc += (x - y) * (x - y)
+        d = math.sqrt(acc)
+        return (2, 0.0, cid) if math.isnan(d) else (1, d, cid)
+
+    return [cid for cid, _ in sorted(model, key=rank)[:n_probe]]
+
+
+def probe_query(emb: DataFrame, seeds, query_id: int, n_probe: int):
+    """(qvec, probed cids): the query's embedding, read with one collect,
+    and the n_probe cells of the held cell model for `seeds` nearest to
+    it. qvec is None when `query_id` is not in `emb`; a NULL embedding
+    reads as [None], against which every distance and cosine is NULL, as
+    against NULL."""
+    rows = emb.filter(F.col("vec_id") == query_id).select("embedding").collect()
+    vec = rows[0].embedding if rows else None
+    qvec = None if not rows else [None] if vec is None else list(vec)
+    return qvec, probe_cells(cell_model(emb, seeds), qvec, n_probe)
+
+
+def _topk_cells(
+    frame: DataFrame, vec_col: str, qvec, query_id: int, k: int
+) -> DataFrame:
+    """The shared ANN tail over probed cells: round-3 cosine of `vec_col`
+    against the query vector, passed as one array literal (no query
+    broadcast), the query itself excluded, `cid` as long, top-k by
+    (cos_sim desc, vec_id asc). A None `qvec` (the query id is absent)
+    gives an empty frame of the same schema."""
+    import numpy as np
+
+    if qvec is None:
+        frame = frame.filter(F.lit(False))
+    if qvec is None or None in qvec:
+        q = F.lit(None).cast("array<double>")
+    else:
+        q = F.lit(np.asarray(qvec, dtype=np.float64))
+    sim = F.round(V.cosine_similarity(vec_col, q), 3) + F.lit(0.0)
+    return (
+        frame.filter(F.col("vec_id") != query_id)
+        .select(
+            "vec_id",
+            "label",
+            F.col("cid").cast("long").alias("cid"),
+            sim.alias("cos_sim"),
+        )
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+        .limit(k)
+    )
 
 
 def _lloyd_update(assigned: DataFrame) -> DataFrame:
@@ -423,12 +518,16 @@ def ivf_topk(
     partition pruning and the scan reads n_probe/n_centroids of the data.
     Recall is traded against `n_probe` exactly as in FAISS-style IVF-Flat.
 
-    The assignment is built once per embeddings handle and session
-    (`_ivf_model`): a repeated request only probes and scores.
+    The assignment (`_ivf_model`) and the cell model (`cell_model`) are
+    built once per embeddings handle: a repeated request reads the query
+    vector, ranks cells on the driver and scans the probed cells.
     """
-    cents, assigned = _ivf_model(t["embeddings"], n_centroids)
-    q = _query_vectors(t, [query_id])
-    return _probe_and_search(cents, assigned, q, query_id, k, n_probe)
+    emb = t["embeddings"]
+    qvec, probe = probe_query(emb, build_seeds(n_centroids), query_id, n_probe)
+    return _topk_cells(
+        _ivf_model(emb, n_centroids).filter(F.col("cid").isin(probe)),
+        "embedding", qvec, query_id, k,
+    )
 
 
 def ivf_knn_join(
@@ -1497,33 +1596,16 @@ def residual_sq8_topk(
     compressed-at-rest, cell-centred layout."""
     emb = t["embeddings"]
     cents, assigned = _ivf_assign(emb, n_centroids)
-    store = residual_sq8_project(assigned, cents).select(
-        "vec_id", "label", "cid", "ce", "rscale", "rcodes"
+    recon = residual_sq8_project(assigned, cents).select(
+        "vec_id",
+        "label",
+        "cid",
+        F.zip_with(
+            "ce", "rcodes", lambda c, rc: c + rc * F.col("rscale")
+        ).alias("embedding"),
     )
     q = _query_vectors(t, [query_id])
-    probe = (
-        cents.crossJoin(F.broadcast(q))
-        .select("cid", V.euclidean_distance("ce", "query_vec").alias("qdist"))
-        .orderBy(F.asc("qdist"), F.asc("cid"))
-        .limit(n_probe)
-        .select("cid")
-    )
-    recon = store.join(F.broadcast(probe), "cid", "left_semi").withColumn(
-        "recon", F.zip_with("ce", "rcodes", lambda c, rc: c + rc * F.col("rscale"))
-    )
-    sim = F.round(V.cosine_similarity("recon", "query_vec"), 3) + F.lit(0.0)
-    return (
-        recon.filter(F.col("vec_id") != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            F.col("cid").cast("long").alias("cid"),
-            sim.alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _probe_and_search(cents, recon, q, query_id, k, n_probe)
 
 
 def quantization_error_curve(

@@ -190,40 +190,19 @@ def clustered_ivf_topk(
     n_probe/n_centroids of the data — PartitionFilters in the plan, no
     shuffle Exchange anywhere (asserted in test_plan_quality.py). Result is
     bit-identical to v7_ivf_topk (same oracle): layout changed, semantics
-    didn't."""
-    from ..functions import vector as V
-    from ..operators.similarity import _query_vectors
+    didn't. The probe ranks the held cell model of the build seeds
+    (similarity.cell_model), so a request reads the query vector and the
+    probed cells, nothing else."""
+    from ..operators.similarity import _topk_cells, build_seeds, probe_query
 
-    name = ensure_clustered_store(spark, sf_dir)
-    store = spark.table(name)
-    tables = load_tables(spark, sf_dir)
-    q = _query_vectors(tables, [query_id])
-
-    # centroid model = the same deterministic seed subset used at write
-    # time; tiny (n_centroids rows) → driver-resolved probe list
-    cents = store.filter(F.col("vec_id") < IVF_N_CENTROIDS).select(
-        F.col("vec_id").alias("cid2"), F.col("embedding").alias("ce")
+    store = spark.table(ensure_clustered_store(spark, sf_dir))
+    qvec, probe = probe_query(
+        load_tables(spark, sf_dir)["embeddings"],
+        build_seeds(IVF_N_CENTROIDS), query_id, n_probe,
     )
-    probe_rows = (
-        cents.crossJoin(F.broadcast(q))
-        .select("cid2", V.euclidean_distance("ce", "query_vec").alias("qdist"))
-        .orderBy(F.asc("qdist"), F.asc("cid2"))
-        .limit(n_probe)
-        .collect()
-    )
-    probe_cids = [int(r.cid2) for r in probe_rows]
-
-    sim = F.round(V.cosine_similarity("embedding", "query_vec"), 3) + F.lit(0.0)
-    return (
-        store.filter(F.col("cid").isin(probe_cids))  # partition pruning
-        .filter(F.col("vec_id") != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id", "label", F.col("cid").cast("long").alias("cid"),
-            sim.alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
+    return _topk_cells(
+        store.filter(F.col("cid").isin(probe)),  # partition pruning
+        "embedding", qvec, query_id, k,
     )
 
 
@@ -438,42 +417,20 @@ def quantized_clustered_topk(
     4-8× compressed store. This is the end state every ANN docstring in
     this engine points at: layout does the pruning, quantization does the
     bandwidth, the plan is a filtered scan + a top-k."""
-    from ..functions import vector as V
-    from ..operators.similarity import _query_vectors
+    from ..operators.similarity import _topk_cells, build_seeds, probe_query
 
     name = ensure_sq8_clustered_store(spark, sf_dir, n_centroids)
     # int8 at rest; double in flight (bit-identical scoring vs v23)
     store = spark.table(name).withColumn(
         "codes", F.col("codes").cast("array<double>")
     )
-    tables = load_tables(spark, sf_dir)
-    q = _query_vectors(tables, [query_id])
-
-    cents = tables["embeddings"].filter(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid2"), F.col("embedding").alias("ce")
+    qvec, probe = probe_query(
+        load_tables(spark, sf_dir)["embeddings"],
+        build_seeds(n_centroids), query_id, n_probe,
     )
-    probe_rows = (
-        cents.crossJoin(F.broadcast(q))
-        .select("cid2", V.euclidean_distance("ce", "query_vec").alias("qdist"))
-        .orderBy(F.asc("qdist"), F.asc("cid2"))
-        .limit(n_probe)
-        .collect()
-    )
-    probe_cids = [int(r.cid2) for r in probe_rows]
-
-    sim = F.round(V.cosine_similarity("codes", "query_vec"), 3) + F.lit(0.0)
-    return (
-        store.filter(F.col("cid").isin(probe_cids))  # partition pruning
-        .filter(F.col("vec_id") != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            F.col("cid").cast("long").alias("cid"),
-            sim.alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
+    return _topk_cells(
+        store.filter(F.col("cid").isin(probe)),  # partition pruning
+        "codes", qvec, query_id, k,
     )
 
 
@@ -752,53 +709,40 @@ def residual_clustered_topk(
     v7/v13 pattern applied to the residual tier): the probe list resolves
     driver-side and pushes as a literal partition filter over the
     residual-quantized store; candidates reconstruct x̂ = ce + rcodes·
-    rscale against the BROADCAST centroid model and score exactly like
-    v27, so the served set is identical and the oracle is shared.
+    rscale against the held cell model (the probed cells' centroids as
+    one literal map) and score exactly like v27, so the served set is
+    identical and the oracle is shared.
 
-    Plan shape (guarded): PartitionFilters on cid, no hash exchange, one
-    broadcast join for the model, TakeOrderedAndProject — v24's read
-    bandwidth with the residual grid's reconstruction quality."""
-    from ..functions import vector as V
-    from ..operators.similarity import _query_vectors
+    Plan shape (guarded): PartitionFilters on cid, no hash exchange, no
+    join, TakeOrderedAndProject — v24's read bandwidth with the residual
+    grid's reconstruction quality."""
+    import numpy as np
+
+    from ..operators.similarity import (
+        _topk_cells,
+        build_seeds,
+        cell_model,
+        probe_query,
+    )
 
     name = ensure_residual_sq8_store(spark, sf_dir, n_centroids)
-    store = spark.table(name).select(
-        "vec_id",
-        "label",
-        "rscale",
-        F.col("rcodes").cast("array<double>").alias("rcodes"),
-        F.col("cid").cast("long").alias("cid"),
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    seeds = build_seeds(n_centroids)
+    qvec, probe = probe_query(emb, seeds, query_id, n_probe)
+    ce_of = dict(cell_model(emb, seeds))
+    # the probed cells' centroids as one literal map, looked up by cid
+    cents = F.create_map(*(
+        x
+        for c in probe
+        for x in (F.lit(c), F.lit(np.asarray(ce_of[c], dtype=np.float64)))
+    ))
+    recon = F.zip_with(
+        cents[F.col("cid").cast("long")],
+        F.col("rcodes").cast("array<double>"),
+        lambda c, rc: c + rc * F.col("rscale"),
     )
-    tables = load_tables(spark, sf_dir)
-    q = _query_vectors(tables, [query_id])
-    cents = tables["embeddings"].filter(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid2"), F.col("embedding").alias("ce")
-    )
-    probe_rows = (
-        cents.crossJoin(F.broadcast(q))
-        .select("cid2", V.euclidean_distance("ce", "query_vec").alias("qdist"))
-        .orderBy(F.asc("qdist"), F.asc("cid2"))
-        .limit(n_probe)
-        .collect()
-    )
-    probe_cids = [int(r.cid2) for r in probe_rows]
-
-    recon = (
-        store.filter(F.col("cid").isin(probe_cids))  # partition pruning
-        .filter(F.col("vec_id") != query_id)
-        .join(F.broadcast(cents), F.col("cid") == F.col("cid2"))
-        .withColumn(
-            "recon",
-            F.zip_with("ce", "rcodes", lambda c, rc: c + rc * F.col("rscale")),
-        )
-    )
-    sim = F.round(V.cosine_similarity("recon", "query_vec"), 3) + F.lit(0.0)
-    return (
-        recon.crossJoin(F.broadcast(q))
-        .select("vec_id", "label", "cid", sim.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
-    )
+    store = spark.table(name).filter(F.col("cid").isin(probe))  # partition pruning
+    return _topk_cells(store.withColumn("recon", recon), "recon", qvec, query_id, k)
 
 
 def ensure_rp_store(spark: SparkSession, sf_dir: str) -> str:

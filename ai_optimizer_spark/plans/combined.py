@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.llm_doubles import SQL_HINTS, VEC_HINTS
@@ -68,10 +69,13 @@ def combined_route(
     )
 
     # collect the two branches concurrently — Spark schedules jobs from
-    # separate threads in parallel, the asyncio.gather analog
+    # separate threads in parallel, the asyncio.gather analog; each branch
+    # inherits the caller's local properties (job group, description) and tags
+    @inheritable_thread_target(spark)
     def _sql_head():
         return sql_df.limit(3).collect() if sql_df is not None else None
 
+    @inheritable_thread_target(spark)
     def _hit_head():
         return hits.limit(3).collect() if hits is not None else None
 

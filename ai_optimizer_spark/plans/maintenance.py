@@ -28,8 +28,9 @@ maintained store carries an explicit GEOMETRY table
 table's vector at `seed_vec_id`, and r_cell is the cell radius (max
 member distance to that seed). The geometry table is k-row — KB-sized at
 any corpus scale — and is the only model state a reader needs:
-`geom_served_topk` resolves its probe list from it (broadcast-joined to
-the source for the seed vectors), then reads exactly n_probe partitions.
+`geom_served_topk` ranks the held cell model of its seeds on the driver
+(similarity.cell_model / probe_cells), then reads exactly n_probe
+partitions.
 
 Scale shape per repair at 100 TB: occupancy is a k-row aggregate over the
 store's partition column (metadata-cheap: cid + vec_id only); member
@@ -721,45 +722,26 @@ def geom_served_topk(
     n_centroids: int = IVF_N_CENTROIDS,
     gen: str | None = None,
 ) -> DataFrame:
-    """v24's read against the MAINTAINED store: the probe list resolves
-    from the geometry table (seed vectors fetched from the source by
-    seed_vec_id — a k-row broadcast join, collected driver-side like
-    v24's centroid probe) instead of the build-time `vec_id < k`
-    convention, so reads stay correct across splits/merges/erasures.
-    Same plan shape as v24: literal partition filter, no shuffle,
-    TakeOrderedAndProject over int8 codes."""
-    from ..functions import vector as V
-    from ..operators.similarity import _query_vectors
+    """v24's read against the MAINTAINED store: the probe list ranks the
+    held cell model of the geometry table's seeds (similarity.cell_model)
+    instead of the build-time `vec_id < k` convention, so reads stay
+    correct across splits/merges/erasures. Same plan shape as v24:
+    literal partition filter, no shuffle, TakeOrderedAndProject over int8
+    codes."""
+    from ..operators.similarity import _topk_cells, probe_query
 
     store_name, geom_name = ensure_maintained_store(spark, sf_dir, n_centroids, gen)
     store = spark.table(store_name).withColumn(
         "codes", F.col("codes").cast("array<double>")
     )
-    tables = load_tables(spark, sf_dir)
-    emb = tables["embeddings"]
-    q = _query_vectors(tables, [query_id])
-    seeds = _seed_vectors(emb, spark.table(geom_name))
-    probe_rows = (
-        seeds.crossJoin(F.broadcast(q))
-        .select("cid", V.euclidean_distance("ce", "query_vec").alias("qdist"))
-        .orderBy(F.asc("qdist"), F.asc("cid"))
-        .limit(n_probe)
-        .collect()
+    qvec, probe = probe_query(
+        load_tables(spark, sf_dir)["embeddings"],
+        [(cid, seed) for cid, seed, _r in _geom_rows(spark, geom_name)],
+        query_id, n_probe,
     )
-    probe_cids = [int(r.cid) for r in probe_rows]
-    sim = F.round(V.cosine_similarity("codes", "query_vec"), 3) + F.lit(0.0)
-    return (
-        store.filter(F.col("cid").isin(probe_cids))  # partition pruning
-        .filter(F.col("vec_id") != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            F.col("cid").cast("long").alias("cid"),
-            sim.alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
+    return _topk_cells(
+        store.filter(F.col("cid").isin(probe)),  # partition pruning
+        "codes", qvec, query_id, k,
     )
 
 

@@ -37,7 +37,9 @@ publish-by-pointer idea is rebuilt Spark-first at CELL granularity:
     orphans by age.
 
 Scale shape at 100 TB: a snapshot is k rows (MBs at k = 50k cells); a
-serve resolves one k-row manifest read + exactly n_probe data files
+serve ranks the cells of a session-held model (the manifest rows and the
+seed vectors are each read once per epoch, see resolve_snapshot and
+similarity.cell_model) on the driver and reads exactly n_probe data files
 (file-level pruning — stronger than partition pruning, the scan list is
 explicit); a repair touches affected cells only; a commit is one rename;
 the sweeper lists two small directories. No catalog state at all — the
@@ -64,7 +66,7 @@ from pyspark.sql import functions as F
 
 from ..tables import load_tables
 from .bucketing import IVF_N_CENTROIDS, ensure_sq8_clustered_store
-from .maintenance import _decision_table, _seed_vectors
+from .maintenance import _decision_table
 
 _GEOM_RE = re.compile(r"^gen-(\d{6})\.parquet$")
 
@@ -223,20 +225,16 @@ def _read_cells(
     spark: SparkSession, root: str, cid_paths: list[tuple[int, str]]
 ) -> DataFrame:
     """One scan over an explicit file list with the manifest's cid
-    attached by basename (cell-file basenames are globally unique). The
-    join side is k-row → broadcast; the scan is file-pruned to exactly
-    the requested cells."""
+    attached by basename (cell-file basenames are globally unique) through
+    one literal map lookup; the scan is file-pruned to exactly the
+    requested cells."""
     paths = [os.path.join(root, p) for _, p in cid_paths]
-    name_map = F.broadcast(
-        spark.createDataFrame(
-            [(int(c), p.rsplit("/", 1)[-1]) for c, p in cid_paths],
-            "cid long, fname string",
-        )
-    )
+    cid_of = F.create_map(*(
+        x for c, p in cid_paths for x in (F.lit(p.rsplit("/", 1)[-1]), F.lit(int(c)))
+    ))
+    fname = F.element_at(F.split(F.input_file_name(), "/"), -1)
     df = spark.read.schema(_CELL_SCHEMA).parquet(*paths)
-    return df.withColumn(
-        "fname", F.element_at(F.split(F.input_file_name(), "/"), -1)
-    ).join(name_map, "fname").drop("fname")
+    return df.withColumn("cid", cid_of[fname].cast("long"))
 
 
 def publish_init(
@@ -279,57 +277,26 @@ def published_served_topk(
     n_centroids: int = IVF_N_CENTROIDS,
     epoch: int | None = None,
 ) -> DataFrame:
-    """geom_served_topk against a published SNAPSHOT: probe list from the
-    k-row manifest (seed vectors fetched from the source), then ONE scan
-    over exactly the n_probe probed cells' files. Identical output
-    contract to v24/t18/t24 (vec_id, label, cid, cos_sim round-3).
-    Readers pass `epoch` to pin a snapshot across a whole session —
-    repairs committing meanwhile are invisible by construction."""
-    from ..functions import vector as V
-    from ..operators.similarity import _query_vectors
+    """geom_served_topk against a published SNAPSHOT: the probe ranks the
+    held cell model of the k-row manifest's seeds, then ONE scan over
+    exactly the n_probe probed cells' files. Identical output contract to
+    v24/t18/t24 (vec_id, label, cid, cos_sim round-3). Readers pass
+    `epoch` to pin a snapshot across a whole session — repairs committing
+    meanwhile are invisible by construction."""
+    from ..operators.similarity import _topk_cells, probe_query
 
-    ep, rows = resolve_snapshot(spark, sf_dir, n_centroids, epoch)
-    root = _pub_root(spark, sf_dir, n_centroids)
-    tables = load_tables(spark, sf_dir)
-    emb = tables["embeddings"]
-    q = _query_vectors(tables, [query_id])
-
-    seed_of = {cid: seed for cid, seed, _r, _n, _p in rows}
-    seeds = (
-        spark.createDataFrame(
-            [(c, s) for c, s in seed_of.items()], "cid long, seed_vec_id long"
-        )
-        .join(
-            emb.select(F.col("vec_id").alias("seed_vec_id"), "embedding"),
-            "seed_vec_id",
-        )
-        .select("cid", F.col("embedding").alias("ce"))
+    _ep, rows = resolve_snapshot(spark, sf_dir, n_centroids, epoch)
+    qvec, probe = probe_query(
+        load_tables(spark, sf_dir)["embeddings"],
+        [(cid, seed) for cid, seed, _r, _n, _p in rows],
+        query_id, n_probe,
     )
-    probe_rows = (
-        seeds.crossJoin(F.broadcast(q))
-        .select("cid", V.euclidean_distance("ce", "query_vec").alias("qdist"))
-        .orderBy(F.asc("qdist"), F.asc("cid"))
-        .limit(n_probe)
-        .collect()
-    )
-    probe = {int(r.cid) for r in probe_rows}
-    cid_paths = [(cid, p) for cid, _s, _r, _n, p in rows if cid in probe]
-    store = _read_cells(spark, root, cid_paths).withColumn(
-        "codes", F.col("codes").cast("array<double>")
-    )
-    sim = F.round(V.cosine_similarity("codes", "query_vec"), 3) + F.lit(0.0)
-    return (
-        store.filter(F.col("vec_id") != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            F.col("cid").cast("long").alias("cid"),
-            sim.alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
-    )
+    store = _read_cells(
+        spark,
+        _pub_root(spark, sf_dir, n_centroids),
+        [(cid, p) for cid, _s, _r, _n, p in rows if cid in probe],
+    ).withColumn("codes", F.col("codes").cast("array<double>"))
+    return _topk_cells(store, "codes", qvec, query_id, k)
 
 
 def publish_repair(

@@ -444,3 +444,58 @@ def test_r6_e2e_ops_survive_empty_corpus(spark):
     assert all(r.docs_remaining == 0 for r in rows)
 
     assert tokenizer_fertility(t).collect() == []
+
+
+# the schema every IVF reader returned before the shared tail, NULL-able
+# columns included
+ANN_TOPK_SCHEMA = [
+    ("vec_id", "bigint", True),
+    ("label", "int", True),
+    ("cid", "bigint", True),
+    ("cos_sim", "double", True),
+]
+
+
+@pytest.mark.parametrize(
+    "reader",
+    [
+        "ivf_topk",
+        "clustered_ivf_topk",
+        "quantized_clustered_topk",
+        "residual_clustered_topk",
+        "geom_served_topk",
+        "published_served_topk",
+    ],
+)
+def test_ann_reader_absent_query_is_empty(spark, sf_small, tmp_path, monkeypatch, reader):
+    """A query id that is not in the table has no query vector: each
+    reader returns an empty frame with its usual schema."""
+    from ai_optimizer_spark.operators import similarity as S
+    from ai_optimizer_spark.plans import bucketing as B
+    from ai_optimizer_spark.plans import maintenance as M
+    from ai_optimizer_spark.plans import published as P
+    from ai_optimizer_spark.tables import load_tables
+
+    absent = 10**9
+    if reader == "ivf_topk":
+        df = S.ivf_topk(load_tables(spark, sf_small), query_id=absent)
+    elif reader == "geom_served_topk":
+        df = M.geom_served_topk(spark, sf_small, query_id=absent)
+    elif reader == "published_served_topk":
+        monkeypatch.setattr(P, "_pub_root", lambda *_a, **_k: str(tmp_path / "pub"))
+        P.publish_init(spark, sf_small, 16)
+        df = P.published_served_topk(spark, sf_small, query_id=absent, n_centroids=16)
+    else:
+        df = getattr(B, reader)(spark, sf_small, query_id=absent)
+    assert df.collect() == []
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in df.schema] == ANN_TOPK_SCHEMA
+
+
+def test_ivf_topk_null_query_vector_scores_null(spark, degenerate_emb):
+    """A query whose embedding is NULL has a NULL distance to every cell
+    (the min cids are probed) and a NULL cosine to every candidate."""
+    from ai_optimizer_spark.operators import similarity as S
+
+    rows = S.ivf_topk({"embeddings": degenerate_emb}, query_id=2, n_centroids=2).collect()
+    assert [(r.vec_id, r.cos_sim) for r in rows] == [
+        (0, None), (1, None), (3, None), (4, None), (5, None)]

@@ -15,6 +15,7 @@ import shutil
 import uuid
 from contextlib import contextmanager
 
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
@@ -23,6 +24,7 @@ import ai_optimizer_spark.operators.similarity as S
 import ai_optimizer_spark.plans.published as P
 from ai_optimizer_spark.cache import release_shared_caches
 from ai_optimizer_spark.plans import nl2sql
+from ai_optimizer_spark.plans.bucketing import clustered_ivf_topk
 from ai_optimizer_spark.plans.flow import VecsearchFlow, VecsearchSettings
 from ai_optimizer_spark.plans.vector_store import (
     VectorStoreCatalog,
@@ -134,16 +136,52 @@ def test_second_ivf_topk_runs_no_assignment(spark, sf_small, assign_calls):
     t = load_tables(spark, sf_small)
     first = _ivf_rows(t)
     assert assign_calls == [K]
-    _cents, assigned = S._IVF_MEMO[t["embeddings"]][K]
+    assigned = S._IVF_MEMO[t["embeddings"]][K]
     # every partition of the assignment is in the block manager, so the
     # next request reads it instead of running the MapInPandas kernel
     assert _cached_and_loaded(spark, assigned)
     with jobs_started(spark) as n:
         df = S.ivf_topk(load_tables(spark, sf_small), query_id=3)
-    assert n == [0]  # no centroid collect at build
+    assert n == [1]  # the query-vector read: no centroid or model collect
     assert [tuple(r) for r in df.collect()] == first
     assert assign_calls == [K]
-    assert S._IVF_MEMO[t["embeddings"]][K][1] is assigned
+    assert S._IVF_MEMO[t["embeddings"]][K] is assigned
+
+
+def _serve(spark, sf, reader, query_id=3, n_probe=4):
+    """One request of an ANN reader over `sf`."""
+    if reader == "ivf_topk":
+        return S.ivf_topk(load_tables(spark, sf), query_id=query_id, n_probe=n_probe)
+    if reader == "clustered_ivf_topk":
+        return clustered_ivf_topk(spark, sf, query_id=query_id, n_probe=n_probe)
+    return P.published_served_topk(spark, sf, query_id=query_id, n_probe=n_probe,
+                                   n_centroids=K)
+
+
+def _rows(df):
+    return [tuple(r) for r in df.collect()]
+
+
+@pytest.mark.parametrize("reader", ["ivf_topk", "clustered_ivf_topk",
+                                    "published_served_topk"])
+def test_second_ann_request_starts_two_jobs(spark, sf_small, pub_root, reader):
+    P.publish_init(spark, sf_small, K)
+    first = _rows(_serve(spark, sf_small, reader))  # builds the held state
+    with jobs_started(spark) as built:
+        df = _serve(spark, sf_small, reader)
+    with jobs_started(spark) as ran:
+        again = _rows(df)
+    assert built == [1]  # the query-vector read: no model collect
+    assert built[0] + ran[0] <= 2
+    assert again == first
+
+
+def test_published_plan_attaches_cid_without_join(spark, sf_small, pub_root):
+    P.publish_init(spark, sf_small, K)
+    df = _serve(spark, sf_small, "published_served_topk")
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan and "fname" not in plan
+    assert "input_file_name" in plan
 
 
 # ---------------------------------------------------------------------------
@@ -179,7 +217,7 @@ def test_ivf_memo_rebuilds_after_cache_drops(spark, sf_small, assign_calls):
     release_shared_caches()
     assert _ivf_rows(t, query_id=5) == want
     assert assign_calls == [K] * 3  # built, then rebuilt after each drop
-    _cents, assigned = S._IVF_MEMO[t["embeddings"]][K]
+    assigned = S._IVF_MEMO[t["embeddings"]][K]
     assert _cached_and_loaded(spark, assigned)
 
 
@@ -223,6 +261,64 @@ def test_rewritten_table_gets_fresh_handle(spark, sf_small, tmp_path):
     assert t2["orders"] is t1["orders"]
     after = _ivf_rows(t2)
     assert [(v, lab + 100, c, s) for v, lab, c, s in before] == after
+
+
+def test_cell_model_follows_a_committed_split(spark, sf_small, pub_root):
+    def serve(session, epoch=None):
+        # k covers every member of the probed cells, so rows show the probe;
+        # query 3 probes cell 5 at epoch 1 and the new cell 16 at epoch 2
+        return _rows(P.published_served_topk(session, sf_small, query_id=3, k=500,
+                                             n_centroids=K, epoch=epoch))
+
+    P.publish_init(spark, sf_small, K)
+    before = serve(spark)  # epoch 1 model held
+    rep = P.publish_repair(spark, sf_small, K, 11, 10, 0, 1, balanced=False)
+    assert rep["epoch"] == 2 and rep["plan"]["split"] > 0
+    after = serve(spark)
+    assert {r[2] for r in before} == {3, 0, 9, 5}
+    assert {r[2] for r in after} == {3, 0, 9, 16}
+    assert after == serve(spark.newSession())  # a cold session agrees
+    assert serve(spark, epoch=1) == before
+
+
+def test_cell_model_follows_rewritten_vectors(spark, sf_small, tmp_path):
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for name in TABLE_NAMES:
+        os.symlink(f"{sf_small}/{name}.parquet", sf / f"{name}.parquet")
+    before = _rows(_serve(spark, str(sf), "ivf_topk"))  # models held
+    old_emb = load_tables(spark, str(sf))["embeddings"]
+
+    # new vectors (each moved by 1.0 along its first axis), so new
+    # centroids, cells and cosines
+    path = str(sf / "embeddings.parquet")
+    tbl = pq.read_table(path)
+    os.unlink(path)
+    i = tbl.schema.get_field_index("embedding")
+    moved = [None if v is None else [v[0] + 1.0] + v[1:]
+             for v in tbl.column("embedding").to_pylist()]
+    col = pa.array(moved, type=tbl.schema.field(i).type)
+    pq.write_table(tbl.set_column(i, tbl.schema.field(i), col), path)
+
+    after = _rows(_serve(spark, str(sf), "ivf_topk"))
+    assert after != before
+    assert after == _rows(_serve(spark.newSession(), str(sf), "ivf_topk"))
+    seeds = S.build_seeds(K)
+    old_model = S.cell_model(old_emb, seeds)
+    new_model = S.cell_model(load_tables(spark, str(sf))["embeddings"], seeds)
+    assert new_model[0][1][0] == pytest.approx(old_model[0][1][0] + 1.0)
+
+
+@pytest.mark.parametrize("reader", ["ivf_topk", "clustered_ivf_topk",
+                                    "published_served_topk"])
+def test_ann_rows_survive_cache_drops_and_new_session(spark, sf_small, pub_root, reader):
+    P.publish_init(spark, sf_small, K)
+    want = _rows(_serve(spark, sf_small, reader))
+    spark.catalog.clearCache()
+    assert _rows(_serve(spark, sf_small, reader)) == want
+    release_shared_caches()
+    assert _rows(_serve(spark, sf_small, reader)) == want
+    assert _rows(_serve(spark.newSession(), sf_small, reader)) == want
 
 
 def test_empty_store_reads_as_empty(spark, tmp_path):

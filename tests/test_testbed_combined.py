@@ -84,3 +84,26 @@ def test_combined_route_synthesis_and_fallback(spark, flow):
 
     sql_only = combined_route(spark, flow, "c3", "sum of totals grouped", sql=sql)
     assert sql_only.route == "nl2sql" and sql_only.search_hits is None
+
+
+def test_combined_branches_carry_the_caller_job_group(spark, flow):
+    """The two branch collects run on pool threads; their jobs must carry
+    the caller's job group, or a traced or cancellable request loses
+    them."""
+    import uuid
+
+    register_views(spark, SF)
+    sc = spark.sparkContext
+    group = f"combined-{uuid.uuid4().hex[:8]}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        ans = combined_route(
+            spark, flow, "c4", "count the similar table rows",
+            sql="SELECT COUNT(*) AS n FROM orders",
+            settings=VecsearchSettings(grade_terms=("table",)),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert ans.route == "both" and " || vs:" in ans.answer
+    # building both branches starts no job: every job is a branch collect
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
