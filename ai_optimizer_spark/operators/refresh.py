@@ -559,8 +559,8 @@ def cell_split_repair(
 def split_member_assign(members: DataFrame) -> DataFrame:
     """t15's deterministic 2-seed split at MEMBER granularity — ONE home
     for the seed/reassignment math so the analysis form (cell_split_repair,
-    above) and the applied store mutation (plans/maintenance.py
-    apply_cell_splits) can never drift. Input: (vec_id, cid, embedding)
+    above) and the applied store mutation (plans/published.py
+    publish_repair) can never drift. Input: (vec_id, cid, embedding)
     rows of the hot cells. Output one row per member:
     (cid, vec_id, a_vec, b_vec, seed_vec_id, d_sub) where seed A = the
     cell's min-vec_id member, seed B = the member farthest from A (ties →
@@ -593,14 +593,14 @@ def split_member_assign_balanced(members: DataFrame) -> DataFrame:
     back into its sibling, re-creating the hot cell: a split↔merge
     ping-pong). With the median cut each half is ~n/2, so with the
     hot >= 2x cold hysteresis no split output can enter the cold band and
-    the repair loop provably converges (see live_repair_plan). Same
+    the repair loop provably converges (see published_repair_plan). Same
     output schema; deterministic and SQL-replayable (ROW_NUMBER + count).
     """
     scored = _split_scored(members)
     # Seed B must land in the B-half even when > floor(n/2) members tie at
     # the max distance (duplicate embeddings): rank B LAST within its
     # dist_a tie group (False < True, so the b_vec flag sorts it after its
-    # peers → rank n → B-half), otherwise apply_cell_splits would write a
+    # peers → rank n → B-half), otherwise publish_repair would write a
     # B-cell whose geometry seed is not a member. The a_vec != b_vec guard
     # keeps the degenerate all-identical cell (where seed B resolves to
     # seed A) on the legacy ordering so seed A still ranks 1.
@@ -912,7 +912,7 @@ def repair_plan(
 ) -> DataFrame:
     """T19: the maintenance DECISION table — closing the loop between the
     detector (t14's health stats) and the executors (t15 split / t17
-    merge / plans/maintenance.py apply_*): one row per cell with the
+    merge / plans/published.py publish_repair): one row per cell with the
     action a maintainer should take this cycle.
 
         action = 'split'  if occupancy > hot_num/hot_den x average

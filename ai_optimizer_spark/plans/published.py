@@ -1,15 +1,11 @@
-"""PUBLISHED store — snapshot-isolated serving for the maintained
-vector store (verdict r9 task 1: the last 100 TB semantic gap).
+"""PUBLISHED store — the maintained IVF/SQ8 vector store as a sequence
+of immutable snapshots, with one commit protocol for every write.
 
-The maintained store (plans/maintenance.py) mutates serving partitions
-IN PLACE under a one-writer contract; a concurrent reader that resolved
-its probe list from the old geometry can scan a cell mid-rewrite. This
-module closes that window with the lakehouse snapshot pattern — the
-reference promotes finished embeddings by temp-table → validate → swap
-(src/server/app/embed/vector_store.py:122-156,250-264); here the same
-publish-by-pointer idea is rebuilt Spark-first at CELL granularity:
+The reference promotes finished embeddings by temp-table → validate →
+swap (src/server/app/embed/vector_store.py:122-156,250-264); here the
+same publish-by-pointer idea is rebuilt Spark-first at CELL granularity:
 
-  <warehouse>/sq8_pub_<tag>_k<k>/
+  <warehouse>/sq8_pub_<tag>_k<k>[_<label>]/
     cells/c<cid>-e<epoch>-<nonce>.parquet   immutable per-cell data files
                                             (vec_id, label, scale, codes)
     geoms/gen-<epoch:06d>.parquet           one k-row SNAPSHOT per epoch:
@@ -26,32 +22,28 @@ publish-by-pointer idea is rebuilt Spark-first at CELL granularity:
     a reader can observe a partial snapshot: either gen-E.parquet exists
     (complete by construction — the rename happens after the write
     finishes) or it does not.
-  * A repair writes NEW files for affected cells only (the same
-    partition-bounded cost as the in-place layer), carries untouched
-    cells' manifest rows — and their data files — forward by reference,
-    then commits the next epoch. Readers pinned to epoch E keep serving
-    E's files; new readers resolve E+1. Old epochs stay fully servable
-    until swept.
+  * Every write verb — publish_repair (plan-driven split/merge),
+    publish_delete (erasure wave), publish_ingest (new vectors) — ends in
+    the same tail (`_publish`): write NEW files for the affected cells
+    only, carry untouched cells' manifest rows and data files forward by
+    reference, commit the next epoch. Readers pinned to epoch E keep
+    serving E's files; new readers resolve E+1. Old epochs stay fully
+    servable until swept.
   * A crash anywhere before the commit leaves orphan cell files and no
     new epoch: readers are unaffected; sweep_published removes the
     orphans by age.
+  * A root LABEL names a private store (a recipe's, a test's, a probe's)
+    beside the shared unlabeled one; `recipe_root` builds a deterministic
+    recipe once and re-serves its committed final epoch afterwards.
 
 Scale shape at 100 TB: a snapshot is k rows (MBs at k = 50k cells); a
 serve ranks the cells of a session-held model (the manifest rows and the
 seed vectors are each read once per epoch, see resolve_snapshot and
 similarity.cell_model) on the driver and reads exactly n_probe data files
-(file-level pruning — stronger than partition pruning, the scan list is
-explicit); a repair touches affected cells only; a commit is one rename;
-the sweeper lists two small directories. No catalog state at all — the
-layout is self-describing on any Hadoop FileSystem scheme, so it
-survives process death without the in-memory-catalog caveats the table
-layer carries.
-
-Decision policy: publish_repair feeds manifest occupancy into the SAME
-`_decision_table` core live_repair_plan uses (fixed-target thresholds,
-nearest-KEEP merge routing) and executes splits with the same
-`split_member_assign*` math — the published and in-place layers cannot
-drift (tests/test_published.py pins store-level equality between them).
+(file-level pruning, the scan list is explicit); a write touches affected
+cells only; a commit is one rename; the sweeper lists two small
+directories. No catalog state at all — the layout is self-describing on
+any Hadoop FileSystem scheme, so it survives process death.
 """
 
 from __future__ import annotations
@@ -61,12 +53,11 @@ import re
 import uuid
 import weakref
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..tables import load_tables
 from .bucketing import IVF_N_CENTROIDS, ensure_sq8_clustered_store
-from .maintenance import _decision_table
 
 _GEOM_RE = re.compile(r"^gen-(\d{6})\.parquet$")
 
@@ -82,11 +73,14 @@ _GEOM_SCHEMA = "cid long, seed_vec_id long, r_cell double, n_vecs long, path str
 _SNAPSHOT_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
-def _pub_root(spark: SparkSession, sf_dir: str, n_centroids: int) -> str:
+def _pub_root(
+    spark: SparkSession, sf_dir: str, n_centroids: int, label: str | None = None
+) -> str:
     wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
     wh = wh.replace("file:", "")
     tag = re.sub(r"\W", "_", sf_dir.strip("/").rsplit("/", 1)[-1])
-    return os.path.join(os.path.abspath(wh), f"sq8_pub_{tag}_k{n_centroids}")
+    sfx = f"_{re.sub(r'[^0-9A-Za-z]', '_', label)}" if label else ""
+    return os.path.join(os.path.abspath(wh), f"sq8_pub_{tag}_k{n_centroids}{sfx}")
 
 
 def _fs(spark: SparkSession, path: str):
@@ -126,9 +120,12 @@ def _delete(spark: SparkSession, path: str, recursive: bool = False) -> None:
     fs.delete(jvm.org.apache.hadoop.fs.Path(path), recursive)
 
 
-def published_epochs(spark: SparkSession, sf_dir: str, n_centroids: int) -> list[int]:
+def published_epochs(
+    spark: SparkSession, sf_dir: str, n_centroids: int, *, label: str | None = None
+) -> list[int]:
     """Committed epochs, ascending. CURRENT = the max (None if empty)."""
-    geoms = _listdir(spark, os.path.join(_pub_root(spark, sf_dir, n_centroids), "geoms"))
+    root = _pub_root(spark, sf_dir, n_centroids, label)
+    geoms = _listdir(spark, os.path.join(root, "geoms"))
     return sorted(int(m.group(1)) for f in geoms if (m := _GEOM_RE.match(f)))
 
 
@@ -137,21 +134,21 @@ def resolve_snapshot(
     sf_dir: str,
     n_centroids: int = IVF_N_CENTROIDS,
     epoch: int | None = None,
+    *,
+    label: str | None = None,
 ) -> tuple[int, list]:
     """(epoch, rows) where rows = [(cid, seed_vec_id, r_cell, n_vecs,
     path)] — the k-row model state a reader needs, collected once per
     session and epoch (a repeated resolve lists geoms/ and stats one file,
     no Spark job). `epoch=None` resolves CURRENT. Raises if nothing is
     published."""
-    eps = published_epochs(spark, sf_dir, n_centroids)
+    root = _pub_root(spark, sf_dir, n_centroids, label)
+    eps = published_epochs(spark, sf_dir, n_centroids, label=label)
     if not eps:
-        raise LookupError(
-            f"no published snapshot under {_pub_root(spark, sf_dir, n_centroids)}"
-        )
+        raise LookupError(f"no published snapshot under {root}")
     ep = max(eps) if epoch is None else int(epoch)
     if ep not in eps:
         raise LookupError(f"epoch {ep} is not committed (have {eps})")
-    root = _pub_root(spark, sf_dir, n_centroids)
     path = os.path.join(root, "geoms", f"gen-{ep:06d}.parquet")
     fs, jvm = _fs(spark, path)
     st = fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(path))
@@ -196,7 +193,13 @@ def _stage_cell_files(
     are metadata operations."""
     stage = os.path.join(root, f"stage-cells-{uuid.uuid4().hex[:8]}")
     (
-        rows.select("vec_id", "label", "scale", "codes", "cid")
+        rows.select(
+            F.col("vec_id").cast("long"),
+            F.col("label").cast("int"),
+            F.col("scale").cast("double"),
+            F.col("codes").cast("array<tinyint>"),
+            F.col("cid").cast("long"),
+        )
         .repartition("cid")
         .write.partitionBy("cid")
         .mode("overwrite")
@@ -221,34 +224,170 @@ def _stage_cell_files(
     return out
 
 
-def _read_cells(
-    spark: SparkSession, root: str, cid_paths: list[tuple[int, str]]
+def _publish(
+    spark: SparkSession,
+    root: str,
+    epoch: int,
+    manifest: dict[int, tuple[int, float, int]],
+    path_of: dict[int, str],
+    new_cells: DataFrame | None,
+) -> int:
+    """The stage-and-commit tail every write verb shares: stage one file
+    per cell of `new_cells`, carry every other cell of `manifest`
+    ({cid: (seed_vec_id, r_cell, n_vecs)}) forward by its `path_of` file,
+    commit epoch + 1 and return it."""
+    new_paths = {} if new_cells is None else _stage_cell_files(
+        spark, root, epoch + 1, new_cells
+    )
+    rows = [
+        (cid, seed, r_cell, n_vecs, new_paths.get(cid, path_of.get(cid)))
+        for cid, (seed, r_cell, n_vecs) in manifest.items()
+    ]
+    assert all(p is not None for *_x, p in rows), "manifest path hole"
+    _commit_snapshot(spark, root, epoch + 1, rows)
+    return epoch + 1
+
+
+def _read_cells(spark: SparkSession, root: str, paths: list[str]) -> DataFrame:
+    """One scan over an explicit list of cell files (paths relative to
+    `root`) with each row's cid attached from its file name: a cell file
+    is named c<cid>-e<epoch>-<nonce>.parquet when it is staged, and a
+    manifest row only ever points its cid at such a file. The scan is
+    file-pruned to exactly the requested cells."""
+    fname = F.substring_index(F.input_file_name(), "/", -1)
+    cid = F.substring_index(fname, "-", 1).substr(2, 19).cast("long")
+    return spark.read.schema(_CELL_SCHEMA).parquet(
+        *(os.path.join(root, p) for p in paths)
+    ).withColumn("cid", cid)
+
+
+def _id_frame(spark: SparkSession, names: tuple[str, str], pairs) -> DataFrame:
+    """A k-row frame of bigint pairs, as an inline VALUES table: it plans
+    as a local relation, so reading it runs no Python worker (a
+    createDataFrame of Python rows scans as an RDD of pickled rows, once
+    per use in a plan)."""
+    values = ", ".join(f"({int(a)}L, {int(b)}L)" for a, b in sorted(pairs))
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({names[0]}, {names[1]})")
+
+
+def _seed_frame(spark: SparkSession, emb: DataFrame, seed_of: dict[int, int]) -> DataFrame:
+    """(cid, ce): each cell's centroid, the source vector at its seed.
+    k rows; the join broadcasts and the source scan is id-filtered."""
+    return F.broadcast(
+        _id_frame(spark, ("cid", "seed_vec_id"), seed_of.items())
+    ).join(
+        emb.select(F.col("vec_id").alias("seed_vec_id"), "embedding"),
+        "seed_vec_id",
+    ).select("cid", F.col("embedding").alias("ce"))
+
+
+def _cell_stats(
+    emb: DataFrame, members: DataFrame, seeds: DataFrame
+) -> dict[int, tuple[float, int]]:
+    """{cid: (r_cell, n_vecs)} of the cells in `members` (vec_id, cid):
+    the max member distance to the cell's seed vector in `seeds`
+    (cid, ce), rounded to 9 digits like the build's radii, and the member
+    count. One pass over the given cells' members."""
+    from ..functions import vector as V
+
+    return {
+        int(r.cid): (float(r.r), int(r.n))
+        for r in members.select("vec_id", "cid")
+        .join(emb.select("vec_id", "embedding"), "vec_id")
+        .join(F.broadcast(seeds.withColumnRenamed("cid", "scid")),
+              F.col("cid") == F.col("scid"))
+        .groupBy("cid")
+        .agg(
+            (F.round(F.max(V.euclidean_distance("embedding", "ce")), 9)
+             + F.lit(0.0)).alias("r"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .collect()
+    }
+
+
+def _decision_table(
+    occ: DataFrame,
+    seeds: DataFrame,
+    hot_num: int,
+    hot_den: int,
+    cold_num: int,
+    cold_den: int,
+    k_base: int,
 ) -> DataFrame:
-    """One scan over an explicit file list with the manifest's cid
-    attached by basename (cell-file basenames are globally unique) through
-    one literal map lookup; the scan is file-pruned to exactly the
-    requested cells."""
-    paths = [os.path.join(root, p) for _, p in cid_paths]
-    cid_of = F.create_map(*(
-        x for c, p in cid_paths for x in (F.lit(p.rsplit("/", 1)[-1]), F.lit(int(c)))
-    ))
-    fname = F.element_at(F.split(F.input_file_name(), "/"), -1)
-    df = spark.read.schema(_CELL_SCHEMA).parquet(*paths)
-    return df.withColumn("cid", cid_of[fname].cast("long"))
+    """The repair policy: exact integer threshold predicates against the
+    FIXED target n_total / k_base, nearest-KEEP merge targets (ties → min
+    cid). Inputs: occ(cid, n_vecs) — k rows; seeds(cid, ce) — k rows.
+    See published_repair_plan for the policy's rationale."""
+    from ..functions import vector as V
+
+    tot = occ.agg(F.sum("n_vecs").alias("n_total"))
+    flagged = occ.crossJoin(F.broadcast(tot)).select(
+        "cid",
+        "n_vecs",
+        "n_total",
+        (
+            F.col("n_vecs") * hot_den * k_base > F.lit(hot_num) * F.col("n_total")
+        ).alias("is_hot"),
+        (
+            F.col("n_vecs") * cold_den * k_base < F.lit(cold_num) * F.col("n_total")
+        ).alias("is_cold"),
+    )
+    keep = (
+        flagged.filter(~F.col("is_hot") & ~F.col("is_cold"))
+        .select(F.col("cid").alias("tcid"))
+        .join(
+            F.broadcast(
+                seeds.select(F.col("cid").alias("tcid"), F.col("ce").alias("tce"))
+            ),
+            "tcid",
+        )
+    )
+    w_t = Window.partitionBy("cid").orderBy(F.asc("cdist"), F.asc("tcid"))
+    targets = (
+        flagged.filter(F.col("is_cold"))
+        .join(F.broadcast(seeds.withColumnRenamed("cid", "scid")),
+              F.col("cid") == F.col("scid"))
+        .crossJoin(F.broadcast(keep))
+        .select("cid", "tcid", V.euclidean_distance("ce", "tce").alias("cdist"))
+        .withColumn("rn", F.row_number().over(w_t))
+        .filter(F.col("rn") == 1)
+        .select(F.col("cid").alias("m_cid"), F.col("tcid").alias("tgt"))
+    )
+    return (
+        flagged.join(F.broadcast(targets), F.col("cid") == F.col("m_cid"), "left")
+        .select(
+            F.col("cid").cast("long").alias("cid"),
+            F.col("n_vecs").cast("long").alias("n_vecs"),
+            (
+                F.round(F.col("n_vecs") * k_base / F.col("n_total"), 4)
+                + F.lit(0.0)
+            ).alias("occupancy_ratio"),
+            F.when(F.col("is_hot"), F.lit("split"))
+            .when(F.col("is_cold"), F.lit("merge"))
+            .otherwise(F.lit("keep"))
+            .alias("action"),
+            F.coalesce(F.col("tgt"), F.lit(-1)).cast("long").alias("tgt_cid"),
+        )
+        .orderBy("cid")
+    )
 
 
 def publish_init(
-    spark: SparkSession, sf_dir: str, n_centroids: int = IVF_N_CENTROIDS
+    spark: SparkSession,
+    sf_dir: str,
+    n_centroids: int = IVF_N_CENTROIDS,
+    *,
+    label: str | None = None,
 ) -> int:
     """Publish epoch 1 from the build (ensure_sq8_clustered_store + its
     fused radii), idempotently: any already-committed epoch short-circuits
     — committed snapshots are immutable and complete BY CONSTRUCTION, so
-    unlike the table-layer generations a prior process's published root
-    is trustworthy (nothing half-applied can ever be committed)."""
-    eps = published_epochs(spark, sf_dir, n_centroids)
+    a prior process's published root is trustworthy (nothing half-applied
+    can ever be committed)."""
+    eps = published_epochs(spark, sf_dir, n_centroids, label=label)
     if eps:
         return max(eps)
-    root = _pub_root(spark, sf_dir, n_centroids)
     base = ensure_sq8_clustered_store(spark, sf_dir, n_centroids)
     tag = re.sub(r"\W", "_", sf_dir.strip("/").rsplit("/", 1)[-1])
     radii = {
@@ -260,12 +399,10 @@ def publish_init(
         int(r.cid): int(r.n)
         for r in store.groupBy("cid").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    paths = _stage_cell_files(spark, root, 1, store)
-    rows = [
-        (cid, cid, radii.get(cid, 0.0), counts[cid], paths[cid]) for cid in paths
-    ]
-    _commit_snapshot(spark, root, 1, rows)
-    return 1
+    manifest = {cid: (cid, radii.get(cid, 0.0), n) for cid, n in counts.items()}
+    return _publish(
+        spark, _pub_root(spark, sf_dir, n_centroids, label), 0, manifest, {}, store
+    )
 
 
 def published_served_topk(
@@ -276,16 +413,18 @@ def published_served_topk(
     n_probe: int = 4,
     n_centroids: int = IVF_N_CENTROIDS,
     epoch: int | None = None,
+    *,
+    label: str | None = None,
 ) -> DataFrame:
-    """geom_served_topk against a published SNAPSHOT: the probe ranks the
-    held cell model of the k-row manifest's seeds, then ONE scan over
-    exactly the n_probe probed cells' files. Identical output contract to
-    v24/t18/t24 (vec_id, label, cid, cos_sim round-3). Readers pass
-    `epoch` to pin a snapshot across a whole session — repairs committing
-    meanwhile are invisible by construction."""
+    """The maintained store's read against a published SNAPSHOT: the
+    probe ranks the held cell model of the k-row manifest's seeds, then
+    ONE scan over exactly the n_probe probed cells' files. Identical
+    output contract to v24 (vec_id, label, cid, cos_sim round-3). Readers
+    pass `epoch` to pin a snapshot across a whole session — writes
+    committing meanwhile are invisible by construction."""
     from ..operators.similarity import _topk_cells, probe_query
 
-    _ep, rows = resolve_snapshot(spark, sf_dir, n_centroids, epoch)
+    _ep, rows = resolve_snapshot(spark, sf_dir, n_centroids, epoch, label=label)
     qvec, probe = probe_query(
         load_tables(spark, sf_dir)["embeddings"],
         [(cid, seed) for cid, seed, _r, _n, _p in rows],
@@ -293,10 +432,67 @@ def published_served_topk(
     )
     store = _read_cells(
         spark,
-        _pub_root(spark, sf_dir, n_centroids),
-        [(cid, p) for cid, _s, _r, _n, p in rows if cid in probe],
+        _pub_root(spark, sf_dir, n_centroids, label),
+        [p for cid, _s, _r, _n, p in rows if cid in probe],
     ).withColumn("codes", F.col("codes").cast("array<double>"))
     return _topk_cells(store, "codes", qvec, query_id, k)
+
+
+def published_repair_plan(
+    spark: SparkSession,
+    sf_dir: str,
+    n_centroids: int = IVF_N_CENTROIDS,
+    hot_num: int = 2,
+    hot_den: int = 1,
+    cold_num: int = 2,
+    cold_den: int = 5,
+    *,
+    epoch: int | None = None,
+    label: str | None = None,
+) -> DataFrame:
+    """t19's decision table computed off a snapshot's MANIFEST: occupancy
+    and seeds are already in the k-row manifest, so deciding reads zero
+    store bytes and stays meaningful after any sequence of writes.
+
+    Thresholds compare against a FIXED target occupancy
+    target = n_total / n_centroids (the BUILD k), not the live average:
+
+        action = 'split' if n_vecs > hot_num/hot_den x target
+                 'merge' if n_vecs < cold_num/cold_den x target
+                         (tgt_cid = nearest KEEP cell by seed euclidean,
+                          ties -> min cid; -1 when no keep cell exists)
+                 'keep'  otherwise (tgt_cid = -1)
+
+    The fixed target is what makes the loop CONVERGE. Against the live
+    average, every split lowers the average and so lowers the hot bar,
+    ratcheting previously-fine cells over it — measured at sf0.001 the
+    1.1x-of-average policy split 1, then 2, then 3 cells on consecutive
+    cycles. Against a fixed target the bars never move, so each split
+    strictly reduces the mass above the hot bar and the policy reaches
+    all-keep. The fixed target is also the 100 TB semantics: a cell's
+    file should hold roughly a target number of rows (file-size driven),
+    regardless of how many cells currently exist.
+
+    Merge targets are restricted to KEEP cells (t19's analysis form
+    allows any non-cold target): in an applied cycle a hot target would
+    be mutated twice in one cycle (split then receive a merge), which
+    makes the executed state diverge from what the plan was computed on.
+
+    HYSTERESIS: defaults are hot = 2.0x target and cold = 0.4x target,
+    NOT t19's 1.1x/0.9x detection bands. A split halves a just-over-hot
+    cell to ~hot/2 x target, so halves stay out of the cold band only
+    when hot_num/hot_den >= 2 x cold_num/cold_den. publish_repair warns
+    when a caller's thresholds do not."""
+    _ep, rows = resolve_snapshot(spark, sf_dir, n_centroids, epoch, label=label)
+    occ = _id_frame(spark, ("cid", "n_vecs"), [(cid, n) for cid, _s, _r, n, _p in rows])
+    seeds = _seed_frame(
+        spark,
+        load_tables(spark, sf_dir)["embeddings"],
+        {cid: s for cid, s, _r, _n, _p in rows},
+    )
+    return _decision_table(
+        occ, seeds, hot_num, hot_den, cold_num, cold_den, n_centroids
+    )
 
 
 def publish_repair(
@@ -309,38 +505,39 @@ def publish_repair(
     cold_den: int = 5,
     *,
     balanced: bool = True,
+    label: str | None = None,
 ) -> dict:
     """ONE plan-driven maintenance cycle as a SNAPSHOT TRANSITION:
-    decide off the current manifest (occupancy is already in it — the
-    decide step reads ZERO store bytes), write new files for affected
-    cells only, carry untouched cells forward by reference, commit the
-    next epoch. Readers of the old epoch are isolated by construction.
-
-    Same policy arithmetic as apply_repair_plan (shared _decision_table,
-    fixed-target thresholds, balanced median-cut splits by default,
-    nearest-KEEP merges) — test_published.py pins store-level equality
-    between the two layers. Returns {"plan": ..., "epoch": new or
-    current epoch (unchanged when the plan is all-keep), ...}."""
+    decide off the current manifest (published_repair_plan), execute
+    exactly its rows — splits on the 'split' cids (balanced median cut by
+    default, nearest-seed with balanced=False: t15's rule), merges of
+    each 'merge' cid into its tgt_cid — and publish the next epoch.
+    Splits allocate new cids above the current max, in cid order; a
+    degenerate all-identical cell (seed B == seed A) is left alone; merge
+    rows without a keep target (tgt_cid -1) are skipped and reported.
+    Returns {"plan": {action: count}, "epoch": new or current epoch
+    (unchanged when nothing executes), "skipped_merges", "split",
+    "merge"}."""
     from ..operators.refresh import (
         split_member_assign,
         split_member_assign_balanced,
     )
 
-    root = _pub_root(spark, sf_dir, n_centroids)
-    ep, rows = resolve_snapshot(spark, sf_dir, n_centroids)
-    emb = load_tables(spark, sf_dir)["embeddings"]
+    if hot_num * cold_den < 2 * cold_num * hot_den:
+        import warnings
 
-    occ = spark.createDataFrame(
-        [(cid, n) for cid, _s, _r, n, _p in rows], "cid long, n_vecs long"
-    )
-    seeds = spark.createDataFrame(
-        [(cid, s) for cid, s, _r, _n, _p in rows], "cid long, seed_vec_id long"
-    ).join(
-        emb.select(F.col("vec_id").alias("seed_vec_id"), "embedding"),
-        "seed_vec_id",
-    ).select("cid", F.col("embedding").alias("ce"))
-    plan_rows = _decision_table(
-        occ, seeds, hot_num, hot_den, cold_num, cold_den, n_centroids
+        warnings.warn(
+            "publish_repair thresholds lack split/merge hysteresis "
+            f"(hot {hot_num}/{hot_den} < 2 x cold {cold_num}/{cold_den}): "
+            "a split cell's halves may be merged straight back next cycle",
+            stacklevel=2,
+        )
+    root = _pub_root(spark, sf_dir, n_centroids, label)
+    ep, rows = resolve_snapshot(spark, sf_dir, n_centroids, label=label)
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    plan_rows = published_repair_plan(
+        spark, sf_dir, n_centroids, hot_num, hot_den, cold_num, cold_den,
+        epoch=ep, label=label,
     ).collect()
     split_cids = sorted(int(r.cid) for r in plan_rows if r.action == "split")
     moves = {
@@ -363,20 +560,13 @@ def publish_repair(
 
     path_of = {cid: p for cid, _s, _r, _n, p in rows}
     seed_of = {cid: s for cid, s, _r, _n, _p in rows}
-    r_of = {cid: r for cid, _s, r, _n, _p in rows}
-    n_of = {cid: n for cid, _s, _r, n, _p in rows}
-    new_epoch = ep + 1
-
+    manifest = {cid: (s, r, n) for cid, s, r, n, _p in rows}
     new_cells_rows: list[DataFrame] = []
-    manifest: dict[int, tuple[int, float, int]] = {
-        cid: (seed_of[cid], r_of[cid], n_of[cid]) for cid in path_of
-    }
-    new_paths: dict[int, str] = {}
 
     # ---- splits ---------------------------------------------------------
     if split_cids:
         members = (
-            _read_cells(spark, root, [(c, path_of[c]) for c in split_cids])
+            _read_cells(spark, root, [path_of[c] for c in split_cids])
             .select("vec_id", "cid")
             .join(emb.select("vec_id", "embedding"), "vec_id")
         )
@@ -386,7 +576,6 @@ def publish_repair(
             int(r.cid): (int(r.a_vec), int(r.b_vec))
             for r in sub.select("cid", "a_vec", "b_vec").distinct().collect()
         }
-        # degenerate all-identical cells (seed B == seed A) cannot split
         split_cids = [c for c in split_cids if seeds_ab[c][0] != seeds_ab[c][1]]
         if split_cids:
             sub = sub.filter(F.col("cid").isin(split_cids))
@@ -394,7 +583,6 @@ def publish_repair(
             new_cid_of = {c: next_cid + i for i, c in enumerate(split_cids)}
             routed = sub.select(
                 "vec_id",
-                "cid",
                 F.when(F.col("seed_vec_id") == F.col("a_vec"), F.col("cid"))
                 .otherwise(
                     F.coalesce(
@@ -406,16 +594,12 @@ def publish_repair(
                 )
                 .alias("to_cid"),
             )
-            repl = (
-                _read_cells(spark, root, [(c, path_of[c]) for c in split_cids])
+            new_cells_rows.append(
+                _read_cells(spark, root, [path_of[c] for c in split_cids])
                 .drop("cid")
-                .join(F.broadcast(routed.drop("cid")), "vec_id")
-                .select(
-                    "vec_id", "label", "scale", "codes",
-                    F.col("to_cid").alias("cid"),
-                )
+                .join(F.broadcast(routed), "vec_id")
+                .withColumnRenamed("to_cid", "cid")
             )
-            new_cells_rows.append(repl)
             stats = {
                 (int(r.cid), int(r.seed_vec_id)): (float(r.r_sub), int(r.n_sub))
                 for r in sub.groupBy("cid", "seed_vec_id")
@@ -427,10 +611,8 @@ def publish_repair(
             }
             for c in split_cids:
                 a_vec, b_vec = seeds_ab[c]
-                ra, na = stats.get((c, a_vec), (0.0, 0))
-                rb, nb = stats.get((c, b_vec), (0.0, 0))
-                manifest[c] = (a_vec, ra, na)
-                manifest[new_cid_of[c]] = (b_vec, rb, nb)
+                manifest[c] = (a_vec, *stats.get((c, a_vec), (0.0, 0)))
+                manifest[new_cid_of[c]] = (b_vec, *stats.get((c, b_vec), (0.0, 0)))
             out["split"] = {
                 "hot_cells": len(split_cids),
                 "new_cids": sorted(new_cid_of.values()),
@@ -438,56 +620,22 @@ def publish_repair(
 
     # ---- merges ---------------------------------------------------------
     if moves:
-        from ..functions import vector as V
-
         cold_cids = sorted(moves)
         tgt_cids = sorted(set(moves.values()))
-        remap = F.broadcast(
-            spark.createDataFrame(
-                [(c, t) for c, t in moves.items()], "from_cid long, to_cid long"
-            )
-        )
-        moved = (
-            _read_cells(spark, root, [(c, path_of[c]) for c in cold_cids])
-            .join(remap, F.col("cid") == F.col("from_cid"))
-            .select(
-                "vec_id", "label", "scale", "codes", F.col("to_cid").alias("cid")
-            )
-        )
-        kept = _read_cells(spark, root, [(c, path_of[c]) for c in tgt_cids]).select(
-            "vec_id", "label", "scale", "codes", "cid"
-        )
-        merged = kept.unionByName(moved)
+        remap = F.create_map(*(
+            F.lit(x).cast("long") for c, t in sorted(moves.items()) for x in (c, t)
+        ))
+        merged = _read_cells(
+            spark, root, [path_of[c] for c in cold_cids + tgt_cids]
+        ).withColumn("cid", F.coalesce(remap[F.col("cid")], F.col("cid")))
         new_cells_rows.append(merged)
-        # re-tighten target radii off the merged membership
-        tgt_seeds = spark.createDataFrame(
-            [(t, seed_of[t]) for t in tgt_cids], "cid long, seed_vec_id long"
-        ).join(
-            emb.select(F.col("vec_id").alias("seed_vec_id"), "embedding"),
-            "seed_vec_id",
-        ).select(F.col("cid").alias("scid"), F.col("embedding").alias("se"))
-        tstats = {
-            int(r.cid): (float(r.r_new), int(r.n_new))
-            for r in merged.select("vec_id", "cid")
-            .join(emb.select("vec_id", "embedding"), "vec_id")
-            .join(F.broadcast(tgt_seeds), F.col("cid") == F.col("scid"))
-            .groupBy("cid")
-            .agg(
-                (
-                    F.round(
-                        F.max(V.euclidean_distance("embedding", "se")), 9
-                    )
-                    + F.lit(0.0)
-                ).alias("r_new"),
-                F.count(F.lit(1)).alias("n_new"),
-            )
-            .collect()
-        }
+        tstats = _cell_stats(
+            emb, merged, _seed_frame(spark, emb, {t: seed_of[t] for t in tgt_cids})
+        )
         for c in cold_cids:
             del manifest[c]
         for t in tgt_cids:
-            r_new, n_new = tstats[t]
-            manifest[t] = (seed_of[t], r_new, n_new)
+            manifest[t] = (seed_of[t], *tstats[t])
         out["merge"] = {"cold_cells": len(cold_cids), "targets": tgt_cids}
 
     if not new_cells_rows:
@@ -496,17 +644,223 @@ def publish_repair(
     all_new = new_cells_rows[0]
     for extra in new_cells_rows[1:]:
         all_new = all_new.unionByName(extra)
-    new_paths = _stage_cell_files(spark, root, new_epoch, all_new)
-
-    snap_rows = []
-    for cid, (seed, r_cell, n_vecs) in manifest.items():
-        snap_rows.append(
-            (cid, seed, r_cell, n_vecs, new_paths.get(cid, path_of.get(cid)))
-        )
-    assert all(p is not None for *_x, p in snap_rows), "manifest path hole"
-    _commit_snapshot(spark, root, new_epoch, snap_rows)
-    out["epoch"] = new_epoch
+    out["epoch"] = _publish(spark, root, ep, manifest, path_of, all_new)
     return out
+
+
+def publish_delete(
+    spark: SparkSession,
+    sf_dir: str,
+    n_centroids: int = IVF_N_CENTROIDS,
+    del_mod: int = 41,
+    del_rem: int = 5,
+    *,
+    label: str | None = None,
+) -> dict:
+    """t16b's erasure wave as a snapshot transition: rows with
+    vec_id % del_mod == del_rem leave the store. Only the cells the wave
+    hits get new files (their survivors); a cell the wave empties leaves
+    the manifest; the hit cells' radii re-tighten over their survivors.
+
+    SEED-AWARE: when the wave erases a cell's seed_vec_id, the cell is
+    re-seeded with its minimum surviving vec_id (t15's A-seed convention)
+    and its radius re-tightens against the NEW seed, so every manifest
+    seed stays a live member of its own cell (published_invariants'
+    seeds_are_members). A wave that hits nothing commits nothing.
+
+    Erasure CONTRACT: the wave erases the id from the DERIVED store
+    (codes + manifest references). Completing a right-to-be-forgotten
+    request additionally requires deleting the raw vector from the
+    SOURCE embeddings table — that table is owned by the ingest layer
+    (reference cascade semantics: database/objects.py:69-71), and this
+    function never writes to source tables. Callers sequence: source
+    delete → delete wave → invariant audit."""
+    root = _pub_root(spark, sf_dir, n_centroids, label)
+    ep, rows = resolve_snapshot(spark, sf_dir, n_centroids, label=label)
+    path_of = {cid: p for cid, _s, _r, _n, p in rows}
+    manifest = {cid: (s, r, n) for cid, s, r, n, _p in rows}
+    is_del = F.col("vec_id") % del_mod == del_rem
+    n_del_of = {
+        int(r.cid): int(r.n)
+        for r in _read_cells(spark, root, list(path_of.values()))
+        .filter(is_del)
+        .groupBy("cid")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    if not n_del_of:
+        return {"affected_cells": 0, "deleted": 0, "epoch": ep}
+    affected = sorted(n_del_of)
+    emptied = [c for c in affected if manifest[c][2] == n_del_of[c]]
+    nonempty = [c for c in affected if c not in emptied]
+    for c in emptied:
+        del manifest[c]
+    survivors = None
+    new_seed_of: dict[int, int] = {}
+    if nonempty:
+        survivors = _read_cells(
+            spark, root, [path_of[c] for c in nonempty]
+        ).filter(~is_del)
+        hit = [c for c in nonempty if manifest[c][0] % del_mod == del_rem]
+        if hit:
+            new_seed_of = {
+                int(r.cid): int(r.s)
+                for r in survivors.filter(F.col("cid").isin(hit))
+                .groupBy("cid")
+                .agg(F.min("vec_id").alias("s"))
+                .collect()
+            }
+        emb = load_tables(spark, sf_dir)["embeddings"]
+        seed_of = {c: new_seed_of.get(c, manifest[c][0]) for c in nonempty}
+        stats = _cell_stats(emb, survivors, _seed_frame(spark, emb, seed_of))
+        for c in nonempty:
+            manifest[c] = (seed_of[c], *stats[c])
+    return {
+        "affected_cells": len(affected),
+        "deleted": sum(n_del_of.values()),
+        "emptied_cells": emptied,
+        "reseeded_cells": sorted(new_seed_of),
+        "epoch": _publish(spark, root, ep, manifest, path_of, survivors),
+    }
+
+
+def publish_ingest(
+    spark: SparkSession,
+    sf_dir: str,
+    n_centroids: int = IVF_N_CENTROIDS,
+    *,
+    batch: DataFrame,
+    label: str | None = None,
+) -> dict:
+    """INGEST as a snapshot transition. New vectors (vec_id, label,
+    embedding; ids must be new — ENFORCED by a semi-join against the
+    store, overlap raises) are
+
+      1. assigned to the nearest CURRENT seed (euclidean, ties → min
+         cid) — the live model, so ingest stays correct across
+         splits/merges/erasures;
+      2. SQ8-encoded with the same per-vector projection the builder uses
+         (sq8_project — codes are cell-independent, stored int8);
+      3. appended to exactly their cells: each affected cell gets a new
+         file holding its old rows plus its new ones;
+      4. folded into the manifest radii as r := max(r_old, round9(max
+         batch-member distance)) — max is monotone under round9, so no
+         survivor rescan is ever needed.
+
+    An empty batch commits nothing. Cost: O(batch × k) assignment
+    (broadcast expression tier — right for micro-batches) + a rewrite of
+    the affected cells only.
+
+    ROUND-TRIP property (t24 hash-verifies it): erase-wave → re-ingest of
+    the same rows reproduces the original store EXACTLY — same assignment
+    rule as the build when seeds are untouched, per-vector codes, and the
+    radii max re-extends to the original round-9 value."""
+    from ..functions import vector as V
+    from ..operators.similarity import sq8_project
+
+    root = _pub_root(spark, sf_dir, n_centroids, label)
+    ep, rows = resolve_snapshot(spark, sf_dir, n_centroids, label=label)
+    path_of = {cid: p for cid, _s, _r, _n, p in rows}
+    manifest = {cid: (s, r, n) for cid, s, r, n, _p in rows}
+    seeds = _seed_frame(
+        spark,
+        load_tables(spark, sf_dir)["embeddings"],
+        {cid: s for cid, (s, _r, _n) in manifest.items()},
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.asc("d"), F.asc("cid"))
+    assigned = (
+        batch.crossJoin(F.broadcast(seeds))
+        .select(
+            "vec_id",
+            "label",
+            "embedding",
+            "cid",
+            V.euclidean_distance("embedding", "ce").alias("d"),
+        )
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .localCheckpoint(eager=True)  # one assignment pass feeds 3 reads
+    )
+    per_cell = {
+        int(r.cid): (float(r.dm), int(r.n))
+        for r in assigned.groupBy("cid")
+        .agg(
+            (F.round(F.max("d"), 9) + F.lit(0.0)).alias("dm"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .collect()
+    }
+    if not per_cell:
+        return {"ingested": 0, "affected_cells": [], "epoch": ep}
+    # 'ids must be new' is a CONTRACT, not a hope: a batch reusing a live
+    # vec_id would silently append a duplicate id (possibly into a
+    # different cell than the existing row), breaking the served-read /
+    # round-trip guarantees without tripping any invariant
+    dup_ids = [
+        int(r.vec_id)
+        for r in assigned.join(
+            _read_cells(spark, root, list(path_of.values())).select("vec_id"),
+            "vec_id",
+            "left_semi",
+        )
+        .select("vec_id")
+        .limit(8)
+        .collect()
+    ]
+    if dup_ids:
+        raise ValueError(
+            f"publish_ingest: batch vec_ids already live in {root} "
+            f"(sample {dup_ids}); erase them first (publish_delete) or "
+            "dedupe the batch"
+        )
+    affected = sorted(per_cell)
+    enc = sq8_project(assigned).select(
+        "vec_id",
+        "label",
+        "scale",
+        F.col("codes").cast("array<tinyint>").alias("codes"),
+        "cid",
+    )
+    existing = _read_cells(spark, root, [path_of[c] for c in affected])
+    for c, (dm, n_new) in per_cell.items():
+        seed, r_cell, n_vecs = manifest[c]
+        manifest[c] = (seed, max(r_cell, dm), n_vecs + n_new)
+    return {
+        "ingested": sum(n for _dm, n in per_cell.values()),
+        "affected_cells": affected,
+        "epoch": _publish(
+            spark, root, ep, manifest, path_of,
+            existing.unionByName(enc),
+        ),
+    }
+
+
+def recipe_root(
+    spark: SparkSession,
+    sf_dir: str,
+    n_centroids: int,
+    label: str,
+    final_epoch: int,
+    build,
+) -> int:
+    """Build-once-serve-many for a deterministic recipe on its own root:
+    reused when `final_epoch` is committed (committed snapshots are
+    complete by construction, whichever process wrote them); otherwise
+    the root is cleared, epoch 1 published, and `build()` runs the
+    recipe's writes. A write that changed nothing commits no epoch, so
+    the recipe's last snapshot is carried forward up to `final_epoch`:
+    the reuse test stays one listing. Returns `final_epoch`."""
+    if final_epoch in published_epochs(spark, sf_dir, n_centroids, label=label):
+        return final_epoch
+    root = _pub_root(spark, sf_dir, n_centroids, label)
+    _delete(spark, root, recursive=True)
+    publish_init(spark, sf_dir, n_centroids, label=label)
+    build()
+    ep, rows = resolve_snapshot(spark, sf_dir, n_centroids, label=label)
+    assert ep <= final_epoch, (label, ep, final_epoch)
+    for e in range(ep + 1, final_epoch + 1):
+        _commit_snapshot(spark, root, e, rows)
+    return final_epoch
 
 
 def published_invariants(
@@ -514,63 +868,53 @@ def published_invariants(
     sf_dir: str,
     n_centroids: int = IVF_N_CENTROIDS,
     epoch: int | None = None,
+    *,
+    label: str | None = None,
 ) -> dict:
-    """store_invariants' published twin, audited against a SNAPSHOT:
-    manifest counts match the files, radii are tight (recomputed from
-    source), seeds are members, every manifest path exists, one file per
-    cell by construction. Audit-tool cost (reads every referenced file);
-    never on a serving path."""
-    from ..functions import vector as V
+    """The invariants a published snapshot must satisfy after ANY
+    sequence of writes, audited against the files it references:
 
-    ep, rows = resolve_snapshot(spark, sf_dir, n_centroids, epoch)
-    root = _pub_root(spark, sf_dir, n_centroids)
+      paths_exist       — every manifest path exists
+      counts_match      — the files hold exactly the manifest's n_vecs
+      no_empty_cells    — every manifest cell has ≥1 stored member
+      seeds_are_members — every seed_vec_id is a live member of its own
+                          cell (a dangling seed means an erased or
+                          mis-moved id is still load-bearing model state)
+      radii_tight       — r_cell == max member distance to the cell's
+                          seed (recomputed from the source, round-9)
+
+    One file per cell holds by construction (a manifest row names one
+    file). Audit-tool cost (reads every referenced file); never on a
+    serving path."""
+    ep, rows = resolve_snapshot(spark, sf_dir, n_centroids, epoch, label=label)
+    root = _pub_root(spark, sf_dir, n_centroids, label)
     emb = load_tables(spark, sf_dir)["embeddings"]
     fs, jvm = _fs(spark, root)
     paths_exist = all(
         fs.exists(jvm.org.apache.hadoop.fs.Path(os.path.join(root, p)))
         for _c, _s, _r, _n, p in rows
     )
-    store = _read_cells(spark, root, [(c, p) for c, _s, _r, _n, p in rows])
+    store = _read_cells(spark, root, [p for *_x, p in rows])
+    seed_of = {c: s for c, s, _r, _n, _p in rows}
+    dangling = (
+        _id_frame(spark, ("cid", "vec_id"), seed_of.items())
+        .join(store.select("cid", "vec_id"), ["cid", "vec_id"], "left_anti")
+        .count()
+    )
     occ = {
         int(r.cid): int(r.n)
         for r in store.groupBy("cid").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    counts_match = occ == {c: n for c, _s, _r, n, _p in rows}
-    seeds = spark.createDataFrame(
-        [(c, s) for c, s, _r, _n, _p in rows], "cid long, seed_vec_id long"
-    )
-    dangling = (
-        seeds.withColumnRenamed("seed_vec_id", "vec_id")
-        .join(store.select("cid", "vec_id"), ["cid", "vec_id"], "left_anti")
-        .count()
-    )
-    seed_emb = seeds.join(
-        emb.select(F.col("vec_id").alias("seed_vec_id"), "embedding"),
-        "seed_vec_id",
-    ).select(F.col("cid").alias("scid"), F.col("embedding").alias("se"))
-    actual_r = {
-        int(r.cid): float(r.r)
-        for r in store.select("vec_id", "cid")
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(seed_emb), F.col("cid") == F.col("scid"))
-        .groupBy("cid")
-        .agg(
-            (
-                F.round(F.max(V.euclidean_distance("embedding", "se")), 9)
-                + F.lit(0.0)
-            ).alias("r")
-        )
-        .collect()
-    }
-    radii_tight = all(
-        abs(actual_r.get(c, -1.0) - r) < 1e-9 for c, _s, r, _n, _p in rows
-    )
+    stats = _cell_stats(emb, store, _seed_frame(spark, emb, seed_of))
     return {
         "epoch": ep,
         "paths_exist": paths_exist,
-        "counts_match": counts_match,
+        "counts_match": occ == {c: n for c, _s, _r, n, _p in rows},
+        "no_empty_cells": all(occ.get(c, 0) > 0 for c in seed_of),
         "seeds_are_members": dangling == 0,
-        "radii_tight": radii_tight,
+        "radii_tight": all(
+            abs(stats.get(c, (-1.0, 0))[0] - r) < 1e-9 for c, _s, r, _n, _p in rows
+        ),
         "n_cells": len(rows),
         "n_rows": sum(occ.values()),
     }
@@ -582,8 +926,10 @@ def sweep_published(
     n_centroids: int = IVF_N_CENTROIDS,
     keep_epochs: int = 2,
     min_age_sec: float = 6 * 3600,
+    *,
+    label: str | None = None,
 ) -> dict:
-    """Garbage-collect the published root: drop snapshots older than the
+    """Garbage-collect a published root: drop snapshots older than the
     newest `keep_epochs`, then delete cell files referenced by NO
     retained snapshot and stage dirs abandoned by crashes — both only
     when older than `min_age_sec` (readers may still be streaming a
@@ -592,8 +938,8 @@ def sweep_published(
     resolve stays fully servable."""
     import time as _time
 
-    root = _pub_root(spark, sf_dir, n_centroids)
-    eps = published_epochs(spark, sf_dir, n_centroids)
+    root = _pub_root(spark, sf_dir, n_centroids, label)
+    eps = published_epochs(spark, sf_dir, n_centroids, label=label)
     if not eps:
         return {"dropped_epochs": [], "deleted_files": 0, "deleted_stages": 0}
     retained = set(eps[-keep_epochs:]) if keep_epochs > 0 else set()
@@ -606,7 +952,7 @@ def sweep_published(
             dropped.append(ep)
     referenced: set[str] = set()
     for ep in retained:
-        _e, rows = resolve_snapshot(spark, sf_dir, n_centroids, ep)
+        _e, rows = resolve_snapshot(spark, sf_dir, n_centroids, ep, label=label)
         referenced |= {p.rsplit("/", 1)[-1] for _c, _s, _r, _n, p in rows}
     now = _time.time()
     fs, jvm = _fs(spark, root)

@@ -541,6 +541,40 @@ def _similarity(spark: SparkSession, metric: str) -> Column:
     return per_sc[metric]
 
 
+def _scored_store(
+    spark: SparkSession,
+    catalog: VectorStoreCatalog,
+    name: str,
+    query_text: str,
+    score_threshold: float,
+    meta: dict,
+) -> DataFrame:
+    """(id, text, similarity) of every row of store `name` a search may
+    return: the query vector is one array literal in a `_q` column, a
+    clustered store is pruned to the query's bucket directory, the score
+    is `_similarity`'s expression for the store's metric, and rows under
+    `score_threshold` are dropped."""
+    import numpy as np
+
+    from ..embedding import HashEmbedder
+
+    store = read_store(spark, catalog.data_path(name))
+    q_emb = HashEmbedder().embed_query(query_text)
+    qvec = F.lit(np.asarray(q_emb, dtype=np.float64))
+    if meta.get("clustered"):
+        # bucket is a Hive partition column → this predicate prunes
+        # directories before any row is read (the ANN scale path)
+        bits = int(meta.get("bucket_bits") or 8)
+        # python mirror of functions.vector.sign_bucket (first `bits` dims)
+        q_bucket = sum((1 << i) for i in range(bits) if q_emb[i] >= 0)
+        store = store.filter(F.col("bucket") == q_bucket)
+    sim = _similarity(spark, meta.get("distance_metric", "COSINE").upper())
+    out = store.withColumn("_q", qvec).select("id", "text", sim.alias("similarity"))
+    if score_threshold > 0:
+        out = out.filter(F.col("similarity") >= score_threshold)
+    return out
+
+
 def search_store(
     spark: SparkSession,
     catalog: VectorStoreCatalog,
@@ -558,27 +592,11 @@ def search_store(
     declared schema, the query vector is one array literal and the score
     expression is built once per session. A caller that already read the
     catalog passes the store's entry as `meta`."""
-    import numpy as np
-
-    from ..embedding import HashEmbedder
-
     if meta is None:
         meta = _store_meta(catalog.discover(), name)
-    store = read_store(spark, catalog.data_path(name))
-    q_emb = HashEmbedder().embed_query(query_text)
-    qvec = F.lit(np.asarray(q_emb, dtype=np.float64))
-    if meta.get("clustered"):
-        # bucket is a Hive partition column → this predicate prunes
-        # directories before any row is read (the ANN scale path)
-        bits = int(meta.get("bucket_bits") or 8)
-        # python mirror of functions.vector.sign_bucket (first `bits` dims)
-        q_bucket = sum((1 << i) for i in range(bits) if q_emb[i] >= 0)
-        store = store.filter(F.col("bucket") == q_bucket)
-    sim = _similarity(spark, meta.get("distance_metric", "COSINE").upper())
-    out = store.withColumn("_q", qvec).select("id", "text", sim.alias("similarity"))
-    if score_threshold > 0:
-        out = out.filter(F.col("similarity") >= score_threshold)
-    return out.orderBy(F.desc("similarity"), F.asc("id")).limit(top_k)
+    return _scored_store(
+        spark, catalog, name, query_text, score_threshold, meta
+    ).orderBy(F.desc("similarity"), F.asc("id")).limit(top_k)
 
 
 def multi_store_search(
@@ -591,30 +609,42 @@ def multi_store_search(
     metas: list[dict] | None = None,
 ) -> DataFrame:
     """The §3.1 retrieval sub-plan: fan out over ≤3 stores (the reference
-    caps LLM table selection at 3, vs_retriever.py:34), union the hits,
-    keep-max dedup on text (W3: first wins on ties — replace only on
-    strictly higher score, vs_retriever.py:130-151), global re-sort, top-k
-    (W1). One declarative plan; per-store scans run in parallel. The
-    catalog is read once (or not at all when the caller passes `metas`)."""
-    from functools import reduce
+    caps LLM table selection at 3, vs_retriever.py:34), each store's top-k,
+    union the hits, keep-max dedup on text (W3: first wins on ties —
+    replace only on strictly higher score, vs_retriever.py:130-151; ties
+    go to the first store name, then the lower id), global re-sort,
+    top-k (W1). Returns (id, text, similarity, searched_table).
 
-    from pyspark.sql import Window
-
+    One declarative plan, analyzed once: the scored stores enter one SQL
+    statement as parameters, so the union, window and sorts cost one
+    analysis instead of one per chained DataFrame call. The catalog is
+    read once (or not at all when the caller passes `metas`)."""
     if metas is None:
         metas = catalog.discover()
-    per_store = [
-        search_store(
-            spark, catalog, n, query_text, top_k, score_threshold,
-            meta=_store_meta(metas, n),
-        ).withColumn("searched_table", F.lit(n))
-        for n in names[:3]
-    ]
-    merged = reduce(DataFrame.unionByName, per_store)
-    w = Window.partitionBy("text").orderBy(F.desc("similarity"), F.asc("searched_table"), F.asc("id"))
-    return (
-        merged.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-        .orderBy(F.desc("similarity"), F.asc("id"))
-        .limit(top_k)
+    stores = {
+        f"s{i}": _scored_store(
+            spark, catalog, n, query_text, score_threshold, _store_meta(metas, n)
+        )
+        for i, n in enumerate(names[:3])
+    }
+    hits = " UNION ALL ".join(
+        f"(SELECT id, text, similarity, :n{i} AS searched_table FROM {{s{i}}}"
+        f" ORDER BY similarity DESC, id ASC LIMIT {int(top_k)})"
+        for i in range(len(stores))
+    )
+    return spark.sql(
+        f"""
+        SELECT id, text, similarity, searched_table FROM (
+            SELECT *, ROW_NUMBER() OVER (
+                PARTITION BY text
+                ORDER BY similarity DESC, searched_table ASC, id ASC
+            ) AS rn
+            FROM ({hits})
+        )
+        WHERE rn = 1
+        ORDER BY similarity DESC, id ASC
+        LIMIT {int(top_k)}
+        """,
+        args={f"n{i}": n for i, n in enumerate(names[:3])},
+        **stores,
     )

@@ -6536,37 +6536,41 @@ _register(
 
 # ---------------------------------------------------------------------------
 # t18: APPLIED maintenance — the write side of the t15 repair, executed
-# against the store (partition rewrites + geometry update), then SERVED
-# through the geometry table (plans/maintenance.py). Every step is
+# against the published store as a snapshot transition (new files for the
+# split cells, the manifest's seeds and radii updated), then SERVED
+# through the new snapshot's geometry (plans/published.py). Every step is
 # deterministic (t15's split rule, rank-ordered new-cid allocation,
 # SQ8 codes, seed-distance probe), so the oracle replays the entire
 # split→route→serve pipeline in SQL and the served set hash-verifies WITH
 # the repair applied — the d3c/v22 "approximation inside the oracle" move
-# extended to a store MUTATION. Reference anchor: the rebuild-everything
+# extended to a store MUTATION. t18 and t26 serve the same epoch 2 of the
+# shared published root. Reference anchor: the rebuild-everything
 # refresh this replaces (src/server/app/embed/refresh.py:28-143).
 # ---------------------------------------------------------------------------
 
 
-def _t18_applied_split_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .plans.maintenance import (
-        geom_served_topk,
-        split_generation,
-        sweep_stale_generations,
+def _published_split_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .plans.published import (
+        publish_init,
+        publish_repair,
+        published_epochs,
+        published_served_topk,
     )
 
-    sweep_stale_generations(spark)  # reap prior processes' orphan gens
-    # ONE deterministic generation per (sf_dir, config), built on first
-    # call and re-served afterwards (verdict r8: the per-call uuid gen
-    # copied the entire base store every call — O(corpus) for a repair
-    # that is itself partition-bounded). The split is deterministic, so
-    # the cached generation is bit-identical to a fresh one.
-    gen = split_generation(spark, sf_dir, n_centroids=16, hot_num=11, hot_den=10)
-    return geom_served_topk(
-        spark, sf_dir, query_id=0, k=8, n_probe=4, n_centroids=16, gen=gen
+    publish_init(spark, sf_dir, n_centroids=16)
+    if max(published_epochs(spark, sf_dir, 16)) < 2:
+        # epoch 2 = deterministic nearest-seed split of the build (t15's
+        # rule at 1.1x); cold thresholds unreachable so no merges ride in
+        rep = publish_repair(
+            spark, sf_dir, 16, 11, 10, 0, 1, balanced=False
+        )
+        assert rep["epoch"] == 2, rep
+    return published_served_topk(
+        spark, sf_dir, query_id=0, k=8, n_probe=4, n_centroids=16, epoch=2
     )
 
 
-QUERIES["t18_applied_split_serve"] = _t18_applied_split_serve
+QUERIES["t18_applied_split_serve"] = _published_split_serve
 ORACLE_SQL["t18_applied_split_serve"] = f"""
     WITH e AS (
         SELECT vec_id, label, embedding::DOUBLE[] AS ee FROM embeddings
@@ -6610,7 +6614,7 @@ ORACLE_SQL["t18_applied_split_serve"] = f"""
         ) WHERE rn = 1
     ),
     -- degenerate guard (all-identical cell: seed B == seed A): such a
-    -- cell cannot split and stays as-is, matching apply_cell_splits
+    -- cell cannot split and stays as-is, matching publish_repair
     hot AS (
         SELECT a.cid, a.a_vec, b.b_vec
         FROM seed_a a JOIN seed_b_e b ON a.cid = b.cid
@@ -6675,8 +6679,8 @@ ORACLE_SQL["t18_applied_split_serve"] = f"""
     """
 
 
-# t19: the maintenance DECISION table — t14 detects, t19 decides, the
-# apply_* functions (plans/maintenance.py) execute. Exact integer
+# t19: the maintenance DECISION table — t14 detects, t19 decides,
+# publish_repair (plans/published.py) executes. Exact integer
 # thresholds + deterministic target choice ⇒ the whole policy is
 # hash-verified like any read query.
 _register(
@@ -6939,9 +6943,9 @@ ORACLE_SQL["t21_cms_sketch_refresh"] = ORACLE_SQL["a27_cms_heavy_hitters"]
 # ---------------------------------------------------------------------------
 # t22/t23: the maintenance loop DRIVEN BY the decision table (verdict r8
 # task 3 — "t19 decides but nothing consumes it"). Each runs ONE
-# plan-driven cycle (live_repair_plan -> apply_cell_splits/merges in
-# explicit cids/moves mode, plans/maintenance.apply_repair_plan) on a
-# cached deterministic generation, then returns the CONVERGENCE WITNESS:
+# plan-driven cycle on its own published root: the manifest plan of
+# epoch 1 (the build), one publish_repair (executing exactly the plan's
+# rows), and the manifest plan of epoch 2 — the CONVERGENCE WITNESS:
 # per-cycle action counts for the executed cycle 1 and the would-be
 # cycle 2. The DuckDB oracle replays the whole loop — assignment, fixed-
 # target thresholds, the BALANCED median-cut split (ROW_NUMBER <=
@@ -6959,16 +6963,17 @@ def _maintenance_cycle_counts(
 ) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from .plans.maintenance import (
-        live_repair_plan,
-        repair_generation,
-        sweep_stale_generations,
-    )
+    from .plans.published import publish_repair, published_repair_plan, recipe_root
 
-    sweep_stale_generations(spark)
-    pre = live_repair_plan(spark, sf_dir, 16, hn, hd, cn, cd, gen=None)
-    gen = repair_generation(spark, sf_dir, 16, hn, hd, cn, cd)
-    post = live_repair_plan(spark, sf_dir, 16, hn, hd, cn, cd, gen=gen)
+    label = f"cycle{hn}-{hd}-{cn}-{cd}"
+    recipe_root(
+        spark, sf_dir, 16, label, 2,
+        lambda: publish_repair(spark, sf_dir, 16, hn, hd, cn, cd, label=label),
+    )
+    pre, post = (
+        published_repair_plan(spark, sf_dir, 16, hn, hd, cn, cd, epoch=ep, label=label)
+        for ep in (1, 2)
+    )
     acts = spark.createDataFrame(
         [(c, a) for c in (1, 2) for a in ("split", "merge", "keep")],
         "cycle long, action string",
@@ -7130,29 +7135,45 @@ QUERIES["t23_merge_cycle"] = _t23_merge_cycle
 ORACLE_SQL["t23_merge_cycle"] = _cycle_oracle(3, 1, 2, 3)
 
 
-# t24: store ROUND TRIP — erase a seed-avoiding wave, re-ingest the same
-# rows through apply_ingest_batch (the maintained store's new INGEST verb:
-# assign to live geometry seeds, SQ8-encode, append to affected cells,
-# radii fold by monotone max), then serve. The round-tripped store must be
-# indistinguishable from the never-touched one, so the oracle is v24's
-# VERBATIM — the t20/t21 "incremental ≡ rebuilt" discipline applied to
-# the erase/ingest pair (right-to-be-forgotten, then the data returns).
-# Reference anchor: the delete-then-reembed refresh cycle
+# t24: store ROUND TRIP — erase a seed-avoiding wave (publish_delete),
+# re-ingest the same rows through publish_ingest (assign to the live
+# seeds, SQ8-encode, append to affected cells, radii fold by monotone
+# max), then serve. The round-tripped store must be indistinguishable
+# from the never-touched one, so the oracle is v24's VERBATIM — the
+# t20/t21 "incremental ≡ rebuilt" discipline applied to the erase/ingest
+# pair (right-to-be-forgotten, then the data returns). Reference anchor:
+# the delete-then-reembed refresh cycle
 # (src/server/app/embed/refresh.py:28-143) this replaces with two
-# partition-bounded repairs.
+# cell-bounded snapshot transitions.
 
 
 def _t24_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .plans.maintenance import (
-        geom_served_topk,
-        roundtrip_generation,
-        sweep_stale_generations,
+    from pyspark.sql import functions as F
+
+    from .plans.published import (
+        publish_delete,
+        publish_ingest,
+        published_served_topk,
+        recipe_root,
     )
 
-    sweep_stale_generations(spark)
-    gen = roundtrip_generation(spark, sf_dir, n_centroids=16, del_mod=41, del_rem=23)
-    return geom_served_topk(
-        spark, sf_dir, query_id=0, k=8, n_probe=4, n_centroids=16, gen=gen
+    label = "roundtrip41-23"
+
+    def _roundtrip() -> None:
+        rep = publish_delete(spark, sf_dir, 16, del_mod=41, del_rem=23, label=label)
+        assert not rep.get("reseeded_cells") and not rep.get("emptied_cells"), (
+            f"round-trip wave must avoid seeds and empty no cell: {rep}"
+        )
+        batch = load_tables(spark, sf_dir)["embeddings"].filter(
+            F.col("vec_id") % 41 == 23
+        ).select("vec_id", "label", "embedding")
+        ing = publish_ingest(spark, sf_dir, 16, batch=batch, label=label)
+        assert ing["ingested"] == rep["deleted"], (ing, rep)
+
+    ep = recipe_root(spark, sf_dir, 16, label, 3, _roundtrip)
+    return published_served_topk(
+        spark, sf_dir, query_id=0, k=8, n_probe=4, n_centroids=16, epoch=ep,
+        label=label,
     )
 
 
@@ -7165,11 +7186,9 @@ ORACLE_SQL["t24_store_roundtrip"] = ORACLE_SQL["v24_quantized_clustered_topk"]
 # an immutable snapshot: manifest + per-cell files, commit-by-rename), so
 # its oracle is v24's VERBATIM. t26 serves epoch 2 — the nearest-seed
 # hot-cell split (11/10, merges disabled) executed as a snapshot
-# TRANSITION instead of an in-place rewrite — so its oracle is t18's
-# VERBATIM: the same repair through two different write paths must be
-# indistinguishable to a reader. Epochs are PINNED (snapshots are
-# immutable), so later probes/repairs on the shared root can never
-# perturb these results. Reference anchor: the temp-table→validate→
+# TRANSITION — through t18's function, so its oracle is t18's VERBATIM.
+# Epochs are PINNED (snapshots are immutable), so later probes/repairs on
+# the shared root can never perturb these results. Reference anchor: the temp-table→validate→
 # promote publish pattern (src/server/app/embed/vector_store.py:122-156,
 # 250-264) rebuilt at cell granularity with atomic epoch commits.
 
@@ -7183,37 +7202,16 @@ def _t25_published_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _t26_published_split_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .plans.published import (
-        publish_init,
-        publish_repair,
-        published_epochs,
-        published_served_topk,
-    )
-
-    publish_init(spark, sf_dir, n_centroids=16)
-    if max(published_epochs(spark, sf_dir, 16)) < 2:
-        # epoch 2 = deterministic nearest-seed split of the build (t18's
-        # exact repair); cold thresholds unreachable so no merges ride in
-        rep = publish_repair(
-            spark, sf_dir, 16, 11, 10, 0, 1, balanced=False
-        )
-        assert rep["epoch"] == 2, rep
-    return published_served_topk(
-        spark, sf_dir, query_id=0, k=8, n_probe=4, n_centroids=16, epoch=2
-    )
-
-
 QUERIES["t25_published_serve"] = _t25_published_serve
 ORACLE_SQL["t25_published_serve"] = ORACLE_SQL["v24_quantized_clustered_topk"]
-QUERIES["t26_published_split_serve"] = _t26_published_split_serve
+QUERIES["t26_published_split_serve"] = _published_split_serve
 ORACLE_SQL["t26_published_split_serve"] = ORACLE_SQL["t18_applied_split_serve"]
 
 
 # st24: the streaming self-maintenance daemon (verdict r9 task 2) — t24's
 # erase→re-ingest round trip executed THROUGH the foreachBatch daemon
-# (3 micro-batches, plan-gated repair armed on every 2nd batch and
-# provably deciding all-keep), then served. Ingest is cell-append with
+# (3 micro-batches, one published epoch each, plan-gated repair armed on
+# every 2nd batch and provably deciding all-keep), then served. Ingest is cell-append with
 # max-fold radii — commutative across disjoint batches — so the replay
 # is bit-identical to the untouched store and v24's oracle verifies the
 # whole daemon end-to-end. The repair-FIRING daemon path is

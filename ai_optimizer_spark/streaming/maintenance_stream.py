@@ -1,27 +1,29 @@
 """ST24: the streaming self-maintenance daemon — the always-on twin of
-the r9 plan-driven maintenance loop (verdict r9 task 2).
+the plan-driven maintenance loop (verdict r9 task 2).
 
 st19 ingests into the BUILD-convention store (stateless SQ8 + fixed
-`vec_id < k` cells); this daemon ingests into the MAINTAINED store's
-LIVE geometry and keeps the store healthy while ingest runs:
+`vec_id < k` cells); this daemon ingests into a PUBLISHED store's live
+geometry (plans/published.py) and keeps the store healthy while ingest
+runs:
 
     foreachBatch micro-batch:
-        1. apply_ingest_batch  — assign to current seeds, SQ8-encode,
-           append to affected cells, fold radii by monotone max;
-        2. every `repair_every` batches: apply_repair_plan — the
-           fixed-target decision table decides off the live store and
-           executes exactly its rows (splits balanced, merges routed to
-           nearest KEEP cell). An all-keep plan executes nothing, so the
-           gate is free when the store is healthy.
+        1. publish_ingest — assign to current seeds, SQ8-encode, append to
+           affected cells, fold radii by monotone max, commit one epoch;
+        2. every `repair_every` batches: publish_repair — the fixed-target
+           decision table decides off the manifest and executes exactly
+           its rows (splits balanced, merges routed to the nearest KEEP
+           cell) as one more epoch. An all-keep plan commits nothing, so
+           the gate is free when the store is healthy.
 
 Everything the batch loop guarantees carries over per micro-batch: the
-ingest contract (new ids enforced), partition-bounded repairs, monotone
-radii, and the convergent fixed-target policy. State is the store
-itself — the stream holds NO Spark streaming state (each batch is a
-self-contained transactional mutation), so a daemon restart resumes
-from the checkpoint with nothing to rebuild.
+ingest contract (new ids enforced), cell-bounded writes, monotone radii,
+and the convergent fixed-target policy. State is the store itself — the
+stream holds NO Spark streaming state (each batch is a self-contained
+snapshot transition), so a daemon restart resumes from the checkpoint
+with nothing to rebuild, and a reader pinned to an epoch never sees a
+half-applied batch.
 
-The registered form (st24) runs the t24 round-trip THROUGH the daemon:
+The registered form (st24) runs the t24 round trip THROUGH the daemon:
 erase a seed-avoiding wave, re-ingest it as 3 micro-batches with the
 repair gate armed at unreachable thresholds (plan = all-keep every
 time, so the gate demonstrably runs without firing), and serve. Ingest
@@ -29,19 +31,20 @@ is cell-append with max-fold radii — commutative and associative across
 disjoint batches — so the multi-batch replay reproduces the untouched
 store bit-for-bit and the oracle is v24's VERBATIM (t24's discipline).
 The repair-FIRING path is pytest-verified (tight thresholds, invariants
-after every phase, post-stream convergence): with live repairs the
-final state depends on batch boundaries by design, so it belongs to the
+after the stream, post-stream convergence): with live repairs the final
+state depends on batch boundaries by design, so it belongs to the
 invariant gate, not a value-hash oracle.
 
 Reference anchor: the reference refreshes embeddings by full rebuild on
 a schedule (src/server/app/embed/refresh.py:28-143); this daemon is the
-same responsibility as a continuous, partition-bounded process.
+same responsibility as a continuous, cell-bounded process.
 
 Scale shape at 100 TB: per-batch cost is O(batch x k) assignment + a
 rewrite of the batch's affected cells; the repair gate adds one k-row
-decide per N batches; nothing is ever O(corpus). The wave-file source
-here stands in for Kafka/object-store arrivals — the daemon body is
-source-agnostic (foreachBatch sees only (vec_id, label, embedding))."""
+decide per N batches; nothing is ever O(corpus) but the new-id guard's
+id scan. The wave-file source here stands in for Kafka/object-store
+arrivals — the daemon body is source-agnostic (foreachBatch sees only
+(vec_id, label, embedding))."""
 
 from __future__ import annotations
 
@@ -52,13 +55,12 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.maintenance import (
-    _cached_generation,
-    apply_delete_wave,
-    apply_ingest_batch,
-    apply_repair_plan,
-    ensure_maintained_store,
-    geom_served_topk,
+from ..plans.published import (
+    publish_delete,
+    publish_ingest,
+    publish_repair,
+    published_served_topk,
+    recipe_root,
 )
 from ..tables import load_tables
 
@@ -105,7 +107,7 @@ def run_maintenance_daemon(
     sf_dir: str,
     n_centroids: int = 16,
     *,
-    gen: str,
+    label: str | None,
     stream_dir: str,
     repair_every: int = 2,
     hot_num: int = 100,
@@ -115,21 +117,19 @@ def run_maintenance_daemon(
     timeout_sec: int = 300,
 ) -> dict:
     """Drain `stream_dir` (one parquet file per micro-batch) through the
-    ingest + plan-gated-repair daemon against generation `gen`. Returns
-    {"batches", "ingested", "gate_checks", "repairs_fired"}."""
-    ensure_maintained_store(spark, sf_dir, n_centroids, gen)
+    ingest + plan-gated-repair daemon against the published root `label`
+    (which must hold a committed epoch). Returns {"batches", "ingested",
+    "gate_checks", "repairs_fired"}."""
     state = {"batches": 0, "ingested": 0, "gate_checks": 0, "repairs_fired": 0}
 
     def _each(batch_df: DataFrame, _batch_id: int) -> None:
         batch = batch_df.select("vec_id", "label", "embedding")
-        ing = apply_ingest_batch(
-            spark, sf_dir, n_centroids, gen=gen, batch=batch
-        )
+        ing = publish_ingest(spark, sf_dir, n_centroids, batch=batch, label=label)
         state["batches"] += 1
         state["ingested"] += ing["ingested"]
         if state["batches"] % repair_every == 0:
             state["gate_checks"] += 1
-            rep = apply_repair_plan(
+            rep = publish_repair(
                 spark,
                 sf_dir,
                 n_centroids,
@@ -137,8 +137,7 @@ def run_maintenance_daemon(
                 hot_den,
                 cold_num,
                 cold_den,
-                gen=gen,
-                audit=False,
+                label=label,
             )
             if rep["plan"]["split"] or rep["plan"]["merge"]:
                 state["repairs_fired"] += 1
@@ -166,23 +165,25 @@ def run_maintenance_daemon(
     return state
 
 
-def stream_roundtrip_generation(
+def streaming_maintained_serve(
     spark: SparkSession,
     sf_dir: str,
     n_centroids: int = 16,
     del_mod: int = 41,
     del_rem: int = 23,
     n_batches: int = 3,
-) -> str:
-    """Cached generation for st24: erase the wave, then re-ingest it
-    THROUGH the daemon (3 micro-batches, repair gate armed but
-    unreachable). The round-tripped store is bit-identical to the
-    untouched one (t24's property, batch-split commutativity), which
-    the v24 oracle then hash-verifies end-to-end."""
+) -> DataFrame:
+    """ST24 registered form: on its own published root, erase the wave,
+    re-ingest it THROUGH the daemon (`n_batches` micro-batches, one epoch
+    each, repair gate armed but unreachable), and serve the final epoch.
+    The round-tripped store is bit-identical to the untouched one (t24's
+    property, batch-split commutativity), which the v24 oracle then
+    hash-verifies end-to-end. The recipe is built once per root."""
+    label = f"streamrt{del_mod}-{del_rem}-{n_batches}"
 
-    def _apply(gen: str) -> None:
-        rep = apply_delete_wave(
-            spark, sf_dir, n_centroids, del_mod=del_mod, del_rem=del_rem, gen=gen
+    def _roundtrip() -> None:
+        rep = publish_delete(
+            spark, sf_dir, n_centroids, del_mod=del_mod, del_rem=del_rem, label=label
         )
         assert not rep.get("reseeded_cells"), rep
         assert not rep.get("emptied_cells"), rep
@@ -195,7 +196,7 @@ def stream_roundtrip_generation(
                 spark,
                 sf_dir,
                 n_centroids,
-                gen=gen,
+                label=label,
                 stream_dir=stream_dir,
                 repair_every=2,
             )
@@ -205,24 +206,8 @@ def stream_roundtrip_generation(
         finally:
             shutil.rmtree(stream_dir, ignore_errors=True)
 
-    return _cached_generation(
-        spark,
-        sf_dir,
-        n_centroids,
-        f"{sf_dir}|{n_centroids}|streamrt|{del_mod}/{del_rem}|{n_batches}",
-        _apply,
-    )
-
-
-def streaming_maintained_serve(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """ST24 registered form: serve the daemon-round-tripped store (v24's
-    oracle, verbatim)."""
-    from ..plans.maintenance import sweep_stale_generations
-
-    sweep_stale_generations(spark)
-    gen = stream_roundtrip_generation(spark, sf_dir)
-    return geom_served_topk(
-        spark, sf_dir, query_id=0, k=8, n_probe=4, n_centroids=16, gen=gen
+    ep = recipe_root(spark, sf_dir, n_centroids, label, 2 + n_batches, _roundtrip)
+    return published_served_topk(
+        spark, sf_dir, query_id=0, k=8, n_probe=4, n_centroids=n_centroids,
+        epoch=ep, label=label,
     )

@@ -463,7 +463,6 @@ ANN_TOPK_SCHEMA = [
         "clustered_ivf_topk",
         "quantized_clustered_topk",
         "residual_clustered_topk",
-        "geom_served_topk",
         "published_served_topk",
     ],
 )
@@ -472,15 +471,12 @@ def test_ann_reader_absent_query_is_empty(spark, sf_small, tmp_path, monkeypatch
     reader returns an empty frame with its usual schema."""
     from ai_optimizer_spark.operators import similarity as S
     from ai_optimizer_spark.plans import bucketing as B
-    from ai_optimizer_spark.plans import maintenance as M
     from ai_optimizer_spark.plans import published as P
     from ai_optimizer_spark.tables import load_tables
 
     absent = 10**9
     if reader == "ivf_topk":
         df = S.ivf_topk(load_tables(spark, sf_small), query_id=absent)
-    elif reader == "geom_served_topk":
-        df = M.geom_served_topk(spark, sf_small, query_id=absent)
     elif reader == "published_served_topk":
         monkeypatch.setattr(P, "_pub_root", lambda *_a, **_k: str(tmp_path / "pub"))
         P.publish_init(spark, sf_small, 16)

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 from ai_optimizer_spark.functions import vector as V
 from ai_optimizer_spark.operators import similarity as S
 from ai_optimizer_spark.plans import bucketing as B
-from ai_optimizer_spark.plans import maintenance as M
 from ai_optimizer_spark.plans import published as P
 from ai_optimizer_spark.tables import load_tables
 
@@ -107,7 +106,6 @@ FAMILY = {
     "ivf_topk": "raw",
     "clustered_ivf_topk": "raw",
     "quantized_clustered_topk": "sq8",
-    "geom_served_topk": "sq8",
     "published_served_topk": "sq8",
     "residual_clustered_topk": "residual",
 }
@@ -147,7 +145,7 @@ def serve(spark, tmp_path_factory):
 
     base = tmp_path_factory.mktemp("pub")
     with unittest.mock.patch.object(
-        P, "_pub_root", lambda _spark, sf_dir, _k: str(base / os.path.basename(sf_dir))
+        P, "_pub_root", lambda _spark, sf_dir, _k, _label=None: str(base / os.path.basename(sf_dir))
     ):
         readers = {
             "ivf_topk": lambda sf, q, n: S.ivf_topk(load_tables(spark, sf), q, 8, K, n),
@@ -156,7 +154,6 @@ def serve(spark, tmp_path_factory):
                 lambda sf, q, n: B.quantized_clustered_topk(spark, sf, q, 8, n)),
             "residual_clustered_topk": (
                 lambda sf, q, n: B.residual_clustered_topk(spark, sf, q, 8, n)),
-            "geom_served_topk": lambda sf, q, n: M.geom_served_topk(spark, sf, q, 8, n, K),
             "published_served_topk": (
                 lambda sf, q, n: (P.publish_init(spark, sf, K),
                                   P.published_served_topk(spark, sf, q, 8, n, K, epoch=1))[1]),

@@ -1,272 +1,203 @@
-"""Applied store maintenance (plans/maintenance.py): the full
-split→merge→erase cycle on a real partitioned store, with the store
-invariants asserted after every step and an INDEPENDENT numpy oracle for
-the geometry-served read (VERDICT r7 task 7).
+"""Applied store maintenance on the published store (plans/published.py):
+the split → merge → erase cycle as snapshot transitions, with the
+snapshot invariants asserted after every step and an INDEPENDENT numpy
+oracle for the served read (VERDICT r7 task 7).
 
 The t15/t17/t16b operators are analysis forms verified against DuckDB;
-these tests verify the APPLY side: partition rewrites, DROP PARTITIONs,
-geometry updates, and that serving stays correct across repairs.
+these tests verify the APPLY side: new cell files, cells leaving the
+manifest, seed and radius updates, and that serving stays correct across
+writes. Each test works on its own root under a tmp dir.
 """
 
 from __future__ import annotations
 
-import uuid
+import os
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from ai_optimizer_spark.plans.maintenance import (
-    apply_cell_merges,
-    apply_cell_splits,
-    apply_delete_wave,
-    ensure_maintained_store,
-    geom_served_topk,
-    store_invariants,
-)
+import ai_optimizer_spark.plans.published as P
+from ai_optimizer_spark.tables import load_tables
 
 SF = "/root/testdata/sf0.001"
 K = 16
 
 
+def _tmp_roots(monkeypatch, base):
+    monkeypatch.setattr(
+        P, "_pub_root", lambda _s, sf_dir, _k, label=None: os.path.join(
+            str(base), os.path.basename(sf_dir), label or "shared")
+    )
+
+
+@pytest.fixture()
+def roots(tmp_path, monkeypatch):
+    _tmp_roots(monkeypatch, tmp_path)
+
+
 @pytest.fixture(scope="module")
-def gen(spark):
-    """One maintenance generation shared by the module: the tests apply
-    the cycle IN ORDER (split → merge → erase) and each asserts the
+def chain(spark, tmp_path_factory):
+    """One root shared by the module's chain: the tests apply the cycle IN
+    ORDER (split → merge → erase → replay) and each asserts the
     invariants — order matters and pytest runs module tests in file
-    order. Teardown drops the gen tables so repeated test runs don't
-    accumulate store copies in the shared warehouse (review r8)."""
-    g = f"t{uuid.uuid4().hex[:8]}"
-    store_name, geom_name = ensure_maintained_store(spark, SF, K, gen=g)
-    yield g
-    for name in (store_name, geom_name):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    order."""
+    with pytest.MonkeyPatch.context() as mp:
+        _tmp_roots(mp, tmp_path_factory.mktemp("chain"))
+        P.publish_init(spark, SF, K, label="chain")
+        yield "chain"
 
 
-def _assert_invariants(spark, gen, stage: str):
-    inv = store_invariants(spark, SF, K, gen=gen)
-    for key in ("cells_match", "no_empty_cells", "radii_tight", "one_file_per_cell"):
-        assert inv[key], f"{stage}: invariant {key} violated: {inv}"
+def _assert_invariants(spark, label, stage: str):
+    inv = P.published_invariants(spark, SF, K, label=label)
+    for key, val in inv.items():
+        if isinstance(val, bool):
+            assert val, f"{stage}: invariant {key} violated: {inv}"
     return inv
 
 
-def _numpy_serve(spark, gen, query_id: int, k: int, n_probe: int):
-    """Independent oracle for geom_served_topk: numpy recomputation of the
-    probe list and the SQ8 top-k off the CURRENT store + geometry tables
-    (reads the same state, shares no Spark expression code)."""
-    from ai_optimizer_spark.plans.maintenance import _names
+def _store_rows(spark, label, epoch=None):
+    _ep, rows = P.resolve_snapshot(spark, SF, K, epoch, label=label)
+    root = P._pub_root(spark, SF, K, label)
+    return P._read_cells(spark, root, [p for *_x, p in rows])
 
-    store_name, geom_name = _names(SF, K, gen)
-    store = spark.table(store_name).toPandas()
-    geom = spark.table(geom_name).toPandas()
+
+def _canon_store(spark, label, epoch=None):
+    return sorted(
+        (int(r.vec_id), int(r.label), float(r.scale),
+         tuple(int(c) for c in r.codes), int(r.cid))
+        for r in _store_rows(spark, label, epoch).collect()
+    )
+
+
+def _canon_geom(spark, label, epoch=None):
+    _ep, rows = P.resolve_snapshot(spark, SF, K, epoch, label=label)
+    return sorted((c, s, r) for c, s, r, _n, _p in rows)
+
+
+def _serve(spark, label, query_id=0, k=8, n_probe=4):
+    return [
+        (int(r.vec_id), float(r.cos_sim))
+        for r in P.published_served_topk(
+            spark, SF, query_id, k, n_probe, K, label=label
+        ).collect()
+    ]
+
+
+def _numpy_serve(spark, label, query_id: int, k: int, n_probe: int):
+    """Independent oracle for published_served_topk: numpy recomputation
+    of the probe list and the SQ8 top-k off the CURRENT snapshot's files
+    and manifest (reads the same state, shares no Spark expression
+    code)."""
+    store = _store_rows(spark, label).toPandas()
+    _ep, rows = P.resolve_snapshot(spark, SF, K, label=label)
     emb = {
         int(r.vec_id): np.asarray(r.embedding, dtype=np.float64)
         for r in spark.read.parquet(f"{SF}/embeddings.parquet").collect()
     }
     qv = emb[query_id]
     # probe: n_probe nearest cells by euclidean distance to the seed vector
-    geom = geom.assign(
-        qdist=[np.linalg.norm(emb[int(s)] - qv) for s in geom["seed_vec_id"]]
-    ).sort_values(["qdist", "cid"])
-    probe = set(int(c) for c in geom["cid"].head(n_probe))
+    ranked = sorted(
+        (float(np.linalg.norm(emb[s] - qv)), c) for c, s, _r, _n, _p in rows
+    )
+    probe = {c for _d, c in ranked[:n_probe]}
     cand = store[store["cid"].astype(int).isin(probe)]
-    rows = []
+    out = []
     for r in cand.itertuples(index=False):
         if int(r.vec_id) == query_id:
             continue
         c = np.asarray(r.codes, dtype=np.float64)
         denom = np.linalg.norm(c) * np.linalg.norm(qv)
         sim = round(float(c @ qv / denom), 3) if denom > 0 else -1.0
-        rows.append((int(r.vec_id), sim))
-    rows.sort(key=lambda t: (-t[1], t[0]))
-    return rows[:k]
+        out.append((int(r.vec_id), sim))
+    out.sort(key=lambda t: (-t[1], t[0]))
+    return out[:k]
 
 
-def test_fresh_generation_invariants_and_serve(spark, gen):
-    inv = _assert_invariants(spark, gen, "fresh")
-    assert inv["n_cells"] == K
-    got = [
-        (int(r.vec_id), float(r.cos_sim))
-        for r in geom_served_topk(spark, SF, 0, 8, 4, K, gen=gen).collect()
-    ]
-    assert got == _numpy_serve(spark, gen, 0, 8, 4)
+def test_fresh_generation_invariants_and_serve(spark, chain):
+    inv = _assert_invariants(spark, chain, "fresh")
+    assert inv["n_cells"] == K and inv["epoch"] == 1
+    assert _serve(spark, chain) == _numpy_serve(spark, chain, 0, 8, 4)
 
 
 @pytest.mark.slow
-def test_apply_splits_preserves_invariants(spark, gen):
-    store_name, _ = ensure_maintained_store(spark, SF, K, gen=gen)
-    before = spark.table(store_name).count()
-    rep = apply_cell_splits(spark, SF, K, hot_num=11, hot_den=10, gen=gen)
-    assert rep["hot_cells"] > 0, "fixture must have hot cells at 1.1x avg"
-    inv = _assert_invariants(spark, gen, "after-split")
-    assert inv["n_cells"] == K + rep["new_cells"]
-    assert inv["n_rows"] == before  # splits move rows, never drop them
-    got = [
-        (int(r.vec_id), float(r.cos_sim))
-        for r in geom_served_topk(spark, SF, 0, 8, 4, K, gen=gen).collect()
-    ]
-    assert got == _numpy_serve(spark, gen, 0, 8, 4)
+def test_apply_splits_preserves_invariants(spark, chain):
+    before = _assert_invariants(spark, chain, "before-split")
+    rep = P.publish_repair(spark, SF, K, 11, 10, 0, 1, balanced=False, label=chain)
+    assert rep["split"]["hot_cells"] > 0, "fixture must have hot cells at 1.1x avg"
+    inv = _assert_invariants(spark, chain, "after-split")
+    assert inv["epoch"] == before["epoch"] + 1
+    assert inv["n_cells"] == K + len(rep["split"]["new_cids"])
+    assert inv["n_rows"] == before["n_rows"]  # splits move rows, never drop them
+    assert _serve(spark, chain) == _numpy_serve(spark, chain, 0, 8, 4)
 
 
 @pytest.mark.slow
-def test_apply_merges_preserves_invariants(spark, gen):
-    store_name, geom_name = ensure_maintained_store(spark, SF, K, gen=gen)
-    before = spark.table(store_name).count()
-    cells_before = spark.table(geom_name).count()
-    rep = apply_cell_merges(spark, SF, K, cold_num=9, cold_den=10, gen=gen)
-    assert rep["cold_cells"] > 0, "post-split store must have cold cells"
-    inv = _assert_invariants(spark, gen, "after-merge")
-    assert inv["n_cells"] == cells_before - rep["cold_cells"]
-    assert inv["n_rows"] == before  # merges move rows, never drop them
-    got = [
-        (int(r.vec_id), float(r.cos_sim))
-        for r in geom_served_topk(spark, SF, 0, 8, 4, K, gen=gen).collect()
-    ]
-    assert got == _numpy_serve(spark, gen, 0, 8, 4)
+def test_apply_merges_preserves_invariants(spark, chain):
+    before = _assert_invariants(spark, chain, "before-merge")
+    rep = P.publish_repair(spark, SF, K, 100, 1, 9, 10, label=chain)
+    assert rep["merge"]["cold_cells"] > 0, "post-split store must have cold cells"
+    inv = _assert_invariants(spark, chain, "after-merge")
+    assert inv["n_cells"] == before["n_cells"] - rep["merge"]["cold_cells"]
+    assert inv["n_rows"] == before["n_rows"]  # merges move rows, never drop them
+    assert _serve(spark, chain) == _numpy_serve(spark, chain, 0, 8, 4)
 
 
 @pytest.mark.slow
-def test_apply_delete_wave_preserves_invariants(spark, gen):
-    store_name, _ = ensure_maintained_store(spark, SF, K, gen=gen)
-    before = spark.table(store_name).count()
-    rep = apply_delete_wave(spark, SF, K, del_mod=41, del_rem=5, gen=gen)
+def test_apply_delete_wave_preserves_invariants(spark, chain):
+    before = _assert_invariants(spark, chain, "before-delete")
+    rep = P.publish_delete(spark, SF, K, del_mod=41, del_rem=5, label=chain)
     assert rep["deleted"] > 0
-    inv = _assert_invariants(spark, gen, "after-delete")
-    assert inv["n_rows"] == before - rep["deleted"]
+    inv = _assert_invariants(spark, chain, "after-delete")
+    assert inv["n_rows"] == before["n_rows"] - rep["deleted"]
     # the erased rows are really gone from the store
-    store = spark.table(store_name)
-    assert store.filter(F.col("vec_id") % 41 == 5).count() == 0
-    got = [
-        (int(r.vec_id), float(r.cos_sim))
-        for r in geom_served_topk(spark, SF, 0, 8, 4, K, gen=gen).collect()
-    ]
-    assert got == _numpy_serve(spark, gen, 0, 8, 4)
+    assert _store_rows(spark, chain).filter(F.col("vec_id") % 41 == 5).count() == 0
+    assert _serve(spark, chain) == _numpy_serve(spark, chain, 0, 8, 4)
 
 
 @pytest.mark.slow
-def test_delete_wave_idempotent(spark, gen):
+def test_delete_wave_idempotent(spark, chain):
     """Replaying the same erasure wave is a no-op: nothing left to delete,
-    no partitions rewritten, invariants intact.
+    no epoch committed, invariants intact.
 
-    slow: the replay leg of the gen-store mutation chain (splits → merges
-    → delete wave → THIS) — it asserts on state the preceding slow-marked
-    wave test creates, so the chain runs together in the slow tier."""
-    rep = apply_delete_wave(spark, SF, K, del_mod=41, del_rem=5, gen=gen)
-    assert rep == {"affected_cells": 0, "deleted": 0}
-    _assert_invariants(spark, gen, "after-replay")
+    slow: the replay leg of the chain (splits → merges → delete wave →
+    THIS) — it asserts on state the preceding slow-marked wave test
+    creates, so the chain runs together in the slow tier."""
+    eps = P.published_epochs(spark, SF, K, label=chain)
+    rep = P.publish_delete(spark, SF, K, del_mod=41, del_rem=5, label=chain)
+    assert rep == {"affected_cells": 0, "deleted": 0, "epoch": max(eps)}
+    assert P.published_epochs(spark, SF, K, label=chain) == eps
+    _assert_invariants(spark, chain, "after-replay")
 
 
-def test_geom_serve_plan_shape(spark, gen):
-    """The maintained-store read keeps v24's plan contract: literal
-    partition pruning on cid, no shuffle exchange, TakeOrderedAndProject."""
-    df = geom_served_topk(spark, SF, 0, 8, 4, K, gen=gen)
+def test_geom_serve_plan_shape(spark, chain):
+    """The published read keeps v24's plan contract: the scan lists
+    exactly the n_probe probed cells' files, no shuffle exchange,
+    TakeOrderedAndProject."""
+    df = P.published_served_topk(spark, SF, 0, 8, 4, K, label=chain)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
-    assert "PartitionFilters" in plan
-    assert "cid" in plan.split("PartitionFilters", 1)[1][:200]
     assert plan.count("Exchange") == plan.count("BroadcastExchange")
+    assert len([f for f in df.inputFiles() if "/cells/" in f]) == 4
 
 
 @pytest.mark.slow
-def test_split_generation_reused_across_calls(spark, monkeypatch):
-    """Two consecutive t18-style calls share ONE generation: the first
-    builds (one apply_cell_splits), the second re-serves the cached gen
-    without re-copying the store or re-applying the split (verdict r8:
-    the per-call uuid gen copied the whole base store every call)."""
-    import ai_optimizer_spark.plans.maintenance as M
-
-    # isolate the memo so earlier tests/sessions can't pre-satisfy it
-    monkeypatch.setattr(M, "_GEN_APPLIED", set())
-    calls = []
-    real_apply = M.apply_cell_splits
-    monkeypatch.setattr(
-        M,
-        "apply_cell_splits",
-        lambda *a, **kw: (calls.append(1), real_apply(*a, **kw))[1],
-    )
-    g1 = M.split_generation(spark, SF, K, hot_num=11, hot_den=10)
-    g2 = M.split_generation(spark, SF, K, hot_num=11, hot_den=10)
-    try:
-        assert g1 == g2  # deterministic config-keyed tag
-        assert calls == [1], "second call must re-serve, not re-split"
-        # the cached generation serves identically to a fresh one
-        got = [
-            (int(r.vec_id), float(r.cos_sim))
-            for r in geom_served_topk(spark, SF, 0, 8, 4, K, gen=g1).collect()
-        ]
-        assert got == _numpy_serve(spark, g1, 0, 8, 4)
-        # a different config gets its own generation
-        assert M.split_generation(spark, SF, K, hot_num=2, hot_den=1) != g1
-    finally:
-        for base in M._names(SF, K, g1) + M._names(
-            SF, K, M.split_generation(spark, SF, K, hot_num=2, hot_den=1)
-        ):
-            spark.sql(f"DROP TABLE IF EXISTS {base}")
-
-
-def test_sweep_stale_generations_guards(spark, tmp_path):
-    """The t18 generation reaper: removes only gen-suffixed orphan dirs
-    older than the age bar; live-session tables, young dirs, and the
-    shared base-store caches are never touched."""
-    import os
-    import time
-
-    from ai_optimizer_spark.plans.maintenance import sweep_stale_generations
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
-    os.makedirs(wh, exist_ok=True)
-    old = time.time() - 7 * 3600  # past the 6 h age bar
-    victims = ["embeddings_sq8_sfx_k16_gdeadbeef", "sq8_cell_geom_sfx_k16_gdeadbeef"]
-    keepers = [
-        "embeddings_sq8_sfx_k16",          # shared base cache: wrong pattern
-        "sq8_cell_radii_sfx_k16",          # radii cache: wrong prefix
-        "embeddings_sq8_sfx_k16_tdeadbee",  # test-gen prefix: wrong pattern
-    ]
-    young = "embeddings_sq8_sfx_k16_g12345678"
-    for d in victims + keepers + [young]:
-        os.makedirs(os.path.join(wh, d), exist_ok=True)
-        if d != young:
-            os.utime(os.path.join(wh, d), (old, old))
-    try:
-        removed = sweep_stale_generations(spark)
-        assert removed >= len(victims)
-        for d in victims:
-            assert not os.path.isdir(os.path.join(wh, d)), d
-        for d in keepers + [young]:
-            assert os.path.isdir(os.path.join(wh, d)), d
-    finally:
-        import shutil
-
-        for d in keepers + [young]:
-            shutil.rmtree(os.path.join(wh, d), ignore_errors=True)
-
-
-@pytest.mark.slow
-def test_repair_plan_cycle_converges(spark):
+def test_repair_plan_cycle_converges(spark, roots):
     """The plan-driven loop (verdict r8 task 3): cycle 1 executes the
     decision table's rows with BALANCED splits; cycle 2 must decide
     all-keep (fixed-target thresholds + median-cut halves — nearest-seed
     splits ping-ponged: 42 -> 38+4 -> merge-back -> 42). Invariants,
     including seeds_are_members, hold after the cycle."""
-    import uuid
-
-    import ai_optimizer_spark.plans.maintenance as M
-
-    g = f"t{uuid.uuid4().hex[:8]}"
-    M.ensure_maintained_store(spark, SF, K, g)
-    try:
-        c1 = M.apply_repair_plan(spark, SF, K, 13, 10, 1, 4, gen=g)
-        assert c1["plan"]["split"] >= 1, "fixture must flag a hot cell at 1.3x"
-        for key, val in c1["invariants"].items():
-            if isinstance(val, bool):
-                assert val, f"cycle-1 invariant {key} violated: {c1['invariants']}"
-        c2 = M.apply_repair_plan(spark, SF, K, 13, 10, 1, 4, gen=g)
-        assert c2["plan"]["split"] == 0 and c2["plan"]["merge"] == 0, (
-            f"cycle 2 must decide all-keep, got {c2['plan']}"
-        )
-    finally:
-        for t in M._names(SF, K, g):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    P.publish_init(spark, SF, K, label="cycle")
+    c1 = P.publish_repair(spark, SF, K, 13, 10, 1, 4, label="cycle")
+    assert c1["plan"]["split"] >= 1, "fixture must flag a hot cell at 1.3x"
+    assert c1["epoch"] == 2
+    _assert_invariants(spark, "cycle", "cycle-1")
+    c2 = P.publish_repair(spark, SF, K, 13, 10, 1, 4, label="cycle")
+    assert c2["plan"]["split"] == 0 and c2["plan"]["merge"] == 0, (
+        f"cycle 2 must decide all-keep, got {c2['plan']}"
+    )
+    assert c2["epoch"] == 2
 
 
 def test_balanced_split_halves_are_even(spark):
@@ -277,7 +208,6 @@ def test_balanced_split_halves_are_even(spark):
         split_member_assign,
         split_member_assign_balanced,
     )
-    from ai_optimizer_spark.tables import load_tables
 
     emb = load_tables(spark, SF)["embeddings"]
     members = emb.select(
@@ -300,172 +230,82 @@ def test_balanced_split_halves_are_even(spark):
 
 
 @pytest.mark.slow
-def test_delete_wave_reseeds_erased_seed(spark):
-    """Erasing a geometry seed re-seeds the cell with its min surviving
-    member: the geometry never references an erased id (verdict r8
+def test_delete_wave_reseeds_erased_seed(spark, roots):
+    """Erasing a manifest seed re-seeds the cell with its min surviving
+    member: the snapshot never references an erased id (verdict r8
     task 4 — the right-to-be-forgotten gap)."""
-    import uuid
-
-    import ai_optimizer_spark.plans.maintenance as M
-
-    g = f"t{uuid.uuid4().hex[:8]}"
-    store_name, geom_name = M.ensure_maintained_store(spark, SF, K, g)
-    try:
-        # pick a live seed and a modulus hitting exactly that id
-        seed = int(
-            spark.table(geom_name).orderBy("cid").limit(1).collect()[0].seed_vec_id
-        )
-        n_rows = spark.table(store_name).count()
-        mod = n_rows + 17  # > max vec_id: predicate hits exactly `seed`
-        rep = M.apply_delete_wave(spark, SF, K, del_mod=mod, del_rem=seed, gen=g)
-        assert rep["deleted"] == 1
-        assert rep["reseeded_cells"], "the erased id was a seed; must reseed"
-        live_seeds = {
-            int(r.seed_vec_id) for r in spark.table(geom_name).collect()
-        }
-        assert seed not in live_seeds
-        inv = M.store_invariants(spark, SF, K, gen=g)
-        for key, val in inv.items():
-            if isinstance(val, bool):
-                assert val, f"invariant {key} violated after seed erasure: {inv}"
-    finally:
-        for t in M._names(SF, K, g):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    P.publish_init(spark, SF, K, label="seed")
+    _ep, rows = P.resolve_snapshot(spark, SF, K, label="seed")
+    seed = rows[0][1]  # cid 0's seed
+    mod = sum(n for *_x, n, _p in rows) + 17  # > max vec_id: hits exactly `seed`
+    rep = P.publish_delete(spark, SF, K, del_mod=mod, del_rem=seed, label="seed")
+    assert rep["deleted"] == 1
+    assert rep["reseeded_cells"] == [rows[0][0]], "the erased id was a seed"
+    _ep, after = P.resolve_snapshot(spark, SF, K, label="seed")
+    assert seed not in {s for _c, s, *_x in after}
+    _assert_invariants(spark, "seed", "after seed erasure")
 
 
-def test_hadoop_fs_partition_listing(spark, gen):
-    """The one-file-per-cell audit goes through the Hadoop FS API: a
-    scheme-qualified URI (file:/...) lists correctly — os.listdir would
-    have required stripping the scheme and silently returns {} on any
-    non-local store (verdict r8 task 7)."""
-    from ai_optimizer_spark.plans.maintenance import (
-        _hadoop_partition_files,
-        _names,
-    )
-
-    store_name, _ = _names(SF, K, gen)
-    loc = (
-        spark.sql(f"DESCRIBE TABLE EXTENDED {store_name}")
-        .filter(F.col("col_name") == "Location")
-        .collect()[0]
-        .data_type
-    )
-    assert loc.startswith("file:"), loc  # the non-local (URI) branch is real
-    files = _hadoop_partition_files(spark, loc)
-    assert files and all(n == 1 for n in files.values())
-    assert _hadoop_partition_files(spark, loc + "__nonexistent__") == {}
-
-
-def test_live_repair_plan_broadcast_only(spark, gen):
-    """Plan guard: deciding is k-row work — occupancy agg plus broadcast
-    joins; no sort-merge join may appear in the decision table's plan."""
-    from ai_optimizer_spark.plans.maintenance import live_repair_plan
-
-    df = live_repair_plan(spark, SF, K, gen=gen)
+def test_live_repair_plan_broadcast_only(spark, chain):
+    """Plan guard: deciding is k-row work off the manifest — broadcast
+    joins only; no sort-merge join may appear in the decision table's
+    plan."""
+    df = P.published_repair_plan(spark, SF, K, label=chain)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan
 
 
 @pytest.mark.slow
-def test_ingest_roundtrip_store_equality(spark):
+def test_ingest_roundtrip_store_equality(spark, roots):
     """Erase-wave → re-ingest reproduces the ENTIRE store and geometry
-    bit-for-bit (not just the served top-k t24 hash-verifies): same
-    (vec_id, label, scale, codes, cid) multiset, same geometry rows."""
-    import uuid
-
-    import ai_optimizer_spark.plans.maintenance as M
-    from ai_optimizer_spark.tables import load_tables
-
-    ref = f"t{uuid.uuid4().hex[:8]}"
-    rt = f"t{uuid.uuid4().hex[:8]}"
-    ref_store, ref_geom = M.ensure_maintained_store(spark, SF, K, ref)
-    rt_store, rt_geom = M.ensure_maintained_store(spark, SF, K, rt)
-    try:
-        rep = M.apply_delete_wave(spark, SF, K, del_mod=41, del_rem=23, gen=rt)
-        assert rep["deleted"] > 0 and not rep.get("reseeded_cells")
-        emb = load_tables(spark, SF)["embeddings"]
-        batch = emb.filter(F.col("vec_id") % 41 == 23).select(
-            "vec_id", "label", "embedding"
-        )
-        ing = M.apply_ingest_batch(spark, SF, K, gen=rt, batch=batch)
-        assert ing["ingested"] == rep["deleted"]
-
-        def canon(name):
-            return sorted(
-                (int(r.vec_id), int(r.label), float(r.scale),
-                 tuple(int(c) for c in r.codes), int(r.cid))
-                for r in spark.table(name).collect()
-            )
-
-        assert canon(rt_store) == canon(ref_store)
-        assert sorted(
-            (int(r.cid), int(r.seed_vec_id), float(r.r_cell))
-            for r in spark.table(rt_geom).collect()
-        ) == sorted(
-            (int(r.cid), int(r.seed_vec_id), float(r.r_cell))
-            for r in spark.table(ref_geom).collect()
-        )
-        inv = M.store_invariants(spark, SF, K, gen=rt)
-        for key, val in inv.items():
-            if isinstance(val, bool):
-                assert val, f"invariant {key} violated after round trip: {inv}"
-    finally:
-        for t in M._names(SF, K, ref) + M._names(SF, K, rt):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    bit-for-bit (not just the served top-k t24 hash-verifies): the final
+    epoch's (vec_id, label, scale, codes, cid) multiset and manifest
+    geometry equal epoch 1's."""
+    P.publish_init(spark, SF, K, label="rt")
+    rep = P.publish_delete(spark, SF, K, del_mod=41, del_rem=23, label="rt")
+    assert rep["deleted"] > 0 and not rep.get("reseeded_cells")
+    emb = load_tables(spark, SF)["embeddings"]
+    batch = emb.filter(F.col("vec_id") % 41 == 23).select(
+        "vec_id", "label", "embedding"
+    )
+    ing = P.publish_ingest(spark, SF, K, batch=batch, label="rt")
+    assert ing["ingested"] == rep["deleted"] and ing["epoch"] == 3
+    assert _canon_store(spark, "rt") == _canon_store(spark, "rt", epoch=1)
+    assert _canon_geom(spark, "rt") == _canon_geom(spark, "rt", epoch=1)
+    _assert_invariants(spark, "rt", "after round trip")
 
 
 @pytest.mark.slow
-def test_ingest_into_repaired_geometry(spark):
+def test_ingest_into_repaired_geometry(spark, roots):
     """Ingest into a store whose geometry has DIVERGED from the build
     convention: erase a wave, split hot cells (new cells, new seeds),
     then re-ingest the erased rows — assignment must follow the LIVE
     seeds (an erased row can land in a post-split cell that did not
     exist when it was first built), radii extend monotonically, and the
-    full invariant suite (incl. radii_tight recomputed from source and
-    seeds_are_members) stays green. The ingest contract is asserted
-    implicitly: batch ids exist in the source table (the system of
-    record for raw vectors), which is what the radii audit joins on."""
-    import uuid
-
-    import ai_optimizer_spark.plans.maintenance as M
-    from ai_optimizer_spark.tables import load_tables
-
-    g = f"t{uuid.uuid4().hex[:8]}"
-    store_name, geom_name = M.ensure_maintained_store(spark, SF, K, g)
-    try:
-        rep = M.apply_delete_wave(spark, SF, K, del_mod=43, del_rem=7, gen=g)
-        assert rep["deleted"] > 0
-        M.apply_cell_splits(spark, SF, K, hot_num=11, hot_den=10, gen=g)
-        n0 = spark.table(store_name).count()
-        n_cells = spark.table(geom_name).count()
-        assert n_cells > K  # geometry really diverged from the build
-        emb = load_tables(spark, SF)["embeddings"]
-        batch = emb.filter(F.col("vec_id") % 43 == 7).select(
-            "vec_id", "label", "embedding"
-        )
-        ing = M.apply_ingest_batch(spark, SF, K, gen=g, batch=batch)
-        assert ing["ingested"] == rep["deleted"]
-        assert spark.table(store_name).count() == n0 + rep["deleted"]
-        inv = M.store_invariants(spark, SF, K, gen=g)
-        for key, val in inv.items():
-            if isinstance(val, bool):
-                assert val, f"invariant {key} violated after ingest: {inv}"
-        # served read still agrees with the independent numpy oracle
-        got = [
-            (int(r.vec_id), float(r.cos_sim))
-            for r in geom_served_topk(spark, SF, 0, 8, 4, K, gen=g).collect()
-        ]
-        assert got == _numpy_serve(spark, g, 0, 8, 4)
-    finally:
-        for t in M._names(SF, K, g):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    full invariant suite stays green."""
+    P.publish_init(spark, SF, K, label="grown")
+    rep = P.publish_delete(spark, SF, K, del_mod=43, del_rem=7, label="grown")
+    assert rep["deleted"] > 0
+    P.publish_repair(spark, SF, K, 11, 10, 0, 1, balanced=False, label="grown")
+    n0 = _assert_invariants(spark, "grown", "after split")
+    assert n0["n_cells"] > K  # geometry really diverged from the build
+    emb = load_tables(spark, SF)["embeddings"]
+    batch = emb.filter(F.col("vec_id") % 43 == 7).select(
+        "vec_id", "label", "embedding"
+    )
+    ing = P.publish_ingest(spark, SF, K, batch=batch, label="grown")
+    assert ing["ingested"] == rep["deleted"]
+    inv = _assert_invariants(spark, "grown", "after ingest")
+    assert inv["n_rows"] == n0["n_rows"] + rep["deleted"]
+    # served read still agrees with the independent numpy oracle
+    assert _serve(spark, "grown") == _numpy_serve(spark, "grown", 0, 8, 4)
 
 
 def test_balanced_split_seed_b_survives_max_distance_ties(spark):
     """ADVICE r9 (medium): when > floor(n/2) members tie at the max
     distance (duplicate embeddings), the median-cut window must still
-    rank seed B into the B-half — otherwise apply_cell_splits writes a
-    B-cell whose geometry seed is not a member. Cell fixture: vec 1 at
+    rank seed B into the B-half — otherwise publish_repair writes a
+    B-cell whose manifest seed is not a member. Cell fixture: vec 1 at
     the origin (seed A), vecs 2-6 all identical at distance 1 (seed B =
     vec 2, the min-id member of a 5-way tie spanning the cut)."""
     from ai_optimizer_spark.operators.refresh import split_member_assign_balanced
@@ -490,26 +330,15 @@ def test_balanced_split_seed_b_survives_max_distance_ties(spark):
     assert bal[a_vec][2] == a_vec
 
 
-def test_ingest_rejects_duplicate_ids(spark):
-    """ADVICE r9: apply_ingest_batch enforces the 'ids must be new'
-    contract — a batch reusing a live vec_id raises instead of silently
-    appending a duplicate id (possibly into a different cell)."""
-    import uuid
-
-    import ai_optimizer_spark.plans.maintenance as M
-    from ai_optimizer_spark.tables import load_tables
-
-    g = f"t{uuid.uuid4().hex[:8]}"
-    store_name, _ = M.ensure_maintained_store(spark, SF, K, g)
-    try:
-        emb = load_tables(spark, SF)["embeddings"]
-        batch = emb.filter(F.col("vec_id") % 41 == 23).select(
-            "vec_id", "label", "embedding"
-        )
-        n0 = spark.table(store_name).count()
-        with pytest.raises(ValueError, match="already live"):
-            M.apply_ingest_batch(spark, SF, K, gen=g, batch=batch)
-        assert spark.table(store_name).count() == n0  # nothing appended
-    finally:
-        for t in M._names(SF, K, g):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+def test_ingest_rejects_duplicate_ids(spark, roots):
+    """publish_ingest enforces the 'ids must be new' contract — a batch
+    reusing a live vec_id raises instead of silently appending a
+    duplicate id (possibly into a different cell), and commits nothing."""
+    P.publish_init(spark, SF, K, label="dup")
+    emb = load_tables(spark, SF)["embeddings"]
+    batch = emb.filter(F.col("vec_id") % 41 == 23).select(
+        "vec_id", "label", "embedding"
+    )
+    with pytest.raises(ValueError, match="already live"):
+        P.publish_ingest(spark, SF, K, batch=batch, label="dup")
+    assert P.published_epochs(spark, SF, K, label="dup") == [1]

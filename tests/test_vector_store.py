@@ -89,6 +89,32 @@ def test_multi_store_dedup_keeps_best(spark, sf_small, catalog):
     assert len(rows) == 8
 
 
+def test_multi_store_cross_store_tie_rows(spark, catalog):
+    """The same text scores the same in three stores: keep-max dedup
+    keeps the first store name (not the first store searched), and equal
+    scores across stores order by id. Rows recorded from the chained
+    DataFrame form of the search."""
+    def docs(rows):
+        return chunks_from_documents(
+            spark.createDataFrame(rows, "doc_id long, text string, source string")
+        )
+
+    same = "spark joins shuffle the larger side of a table"
+    populate_store(spark, catalog, "zeta", docs(
+        [(1, same, "z"), (3, "broadcast a small table to every executor", "z")]))
+    populate_store(spark, catalog, "mid", docs([(5, same, "m")]))
+    populate_store(spark, catalog, "alpha", docs(
+        [(2, same, "a"), (4, "window functions rank rows inside each partition", "a")]))
+    rows = multi_store_search(
+        spark, catalog, ["zeta", "mid", "alpha"], "join the larger table", top_k=8
+    ).collect()
+    assert [tuple(r) for r in rows] == [
+        ("2_1", same, 0.75, "alpha"),
+        ("3_1", "broadcast a small table to every executor", 0.594, "zeta"),
+        ("4_1", "window functions rank rows inside each partition", 0.594, "alpha"),
+    ]
+
+
 def test_catalog_discovery(spark, sf_small, catalog):
     chunks = chunks_from_documents(_docs(spark, sf_small))
     populate_store(spark, catalog, "alpha", chunks, distance_metric="DOT")
