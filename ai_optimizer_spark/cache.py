@@ -1,40 +1,44 @@
-"""Lifecycle registry for operator-internal ``persist()`` intermediates.
+"""The one owner of engine state, in two tiers with two lifetimes.
 
-Operators persist shared subtrees (shingle indexes, pair tables, sketch
-digests) so that ONE materialization feeds every consumer of the returned
-plan — Catalyst substitutes the cached InMemoryRelation into any identical
+**Query tier** — operator-internal ``persist()`` intermediates. Operators
+persist shared subtrees (shingle indexes, pair tables, sketch digests) so
+that ONE materialization feeds every consumer of the returned plan —
+Catalyst substitutes the cached InMemoryRelation into any identical
 subplan. That sharing happens when the CALLER materializes the returned
-DataFrame, so the operator cannot unpersist before returning: dropping the
-cache entry at operator exit would undo the substitution and replay the
-corpus-sized subtree once per consumer (VERDICT r10 confirmed the
-InMemoryRelations in the committed plans).
+DataFrame, so the operator cannot unpersist before returning (VERDICT r10
+confirmed the InMemoryRelations in the committed plans). Spark's
+CacheManager never evicts an entry on Python GC, so a long-lived session
+would accumulate corpus-scale cached blocks (VERDICT r10 "What's wrong"
+#2). Every such persist goes through :func:`shared_persist`, and lives
+until the session calls :func:`release_shared_caches` once it has consumed
+the results (between queries, end of request) or clears the whole cache
+(``spark.catalog.clearCache()``, as ``bench.py`` does between queries).
+Unpersisting removes only the cache entry; a later run recomputes.
 
-The cost of that contract (VERDICT r10 "What's wrong" #2) is that Spark's
-CacheManager never evicts an entry on Python GC: a long-lived session
-composing many operator calls accumulates corpus-scale cached blocks that
-squeeze executor storage at 100 TB. This registry closes the lifecycle:
-
-* every operator-internal ``persist()`` goes through :func:`shared_persist`,
-  which records the DataFrame;
-* a session calls :func:`release_shared_caches` once it has consumed the
-  results of the operator calls it made (between queries, end of request,
-  etc.) — each registered DataFrame is unpersisted and the registry
-  emptied. Results are unaffected: unpersist only removes the cache entry;
-  any later re-execution simply recomputes.
-
-``bench.py`` already isolates queries with ``spark.catalog.clearCache()``
-(a superset of this sweep); library callers that cannot blanket-clear the
-whole cache (because they cache their own tables) use this targeted
-release instead.
+**Session tier** — state a session reuses across requests: table handles,
+committed snapshot rows, IVF assignments and cell models, parsed Column
+expressions. :func:`held` keeps each entry under an owner (a
+``SparkSession``, a ``SparkContext`` or a DataFrame handle) until the
+owner is collected, or until the entry's stamp changes (a rewritten file).
+A held DataFrame that its build persisted keeps its blocks across
+:func:`release_shared_caches`; ``clearCache()`` drops them and the next
+lookup rebuilds the entry. A replaced entry, and every entry of a
+collected owner, is unpersisted, so no held block outlives its owner.
 """
 
 from __future__ import annotations
 
 import threading
-from typing import Any
+import weakref
+from typing import Any, Callable
 
-_LOCK = threading.Lock()
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame
+
+_LOCK = threading.RLock()
 _ACTIVE: list[Any] = []
+# owner -> {key: (stamp, value, persisted)}
+_HELD: "weakref.WeakKeyDictionary[Any, dict]" = weakref.WeakKeyDictionary()
 
 
 def shared_persist(df):
@@ -51,22 +55,58 @@ def release_shared_caches() -> int:
     """Unpersist every DataFrame registered since the last sweep; returns
     how many entries were released. Safe to call at any time — a registered
     DataFrame that was never materialized, or whose cache entry was already
-    cleared (``spark.catalog.clearCache()``), unpersists as a no-op."""
+    cleared (``spark.catalog.clearCache()``), unpersists as a no-op. Held
+    session state is not touched."""
     with _LOCK:
         dfs = list(_ACTIVE)
         _ACTIVE.clear()
-    n = 0
-    for df in dfs:
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            # a dead session/JVM cannot hold cached blocks anyway
-            pass
-    return n
+    return sum(_unpersist(df) for df in dfs)
 
 
 def active_shared_count() -> int:
     """Number of registered-but-unreleased entries (test/diagnostic hook)."""
     with _LOCK:
         return len(_ACTIVE)
+
+
+def held(owner, key, build: Callable[[], Any], stamp=None):
+    """The value `build()` made for (`owner`, `key`), built once and
+    rebuilt when `stamp` differs from the one it was built under. A build
+    that returns a persisted DataFrame hands its blocks to the entry: the
+    entry is rebuilt once ``clearCache()`` has dropped them, and
+    unpersisted when it is replaced or its owner is collected. Builds run
+    under the lock, so concurrent callers of one key build it once."""
+    with _LOCK:
+        entries = _HELD.get(owner)
+        if entries is None:
+            entries = _HELD[owner] = {}
+            # holds `entries`, not the owner; a dead JVM at exit holds no blocks
+            weakref.finalize(owner, _release_entries, entries).atexit = False
+        entry = entries.get(key)
+        if (entry is None or entry[0] != stamp
+                or (entry[2] and entry[1].storageLevel == StorageLevel.NONE)):
+            if entry is not None and entry[2]:
+                _unpersist(entry[1])  # first: a rebuilt plan may match it
+            value = build()
+            persisted = isinstance(value, DataFrame) and value.is_cached
+            entry = entries[key] = (stamp, value, persisted)
+        return entry[1]
+
+
+def _release_entries(entries: dict) -> None:
+    """Unpersist the held DataFrames of a collected owner. Runs from the
+    garbage collector, so it takes no lock: nothing else can reach an
+    entry map whose owner is gone."""
+    for _stamp, value, persisted in entries.values():
+        if persisted:
+            _unpersist(value)
+    entries.clear()
+
+
+def _unpersist(df) -> bool:
+    try:
+        df.unpersist()
+        return True
+    except Exception:
+        # a dead session/JVM cannot hold cached blocks anyway
+        return False

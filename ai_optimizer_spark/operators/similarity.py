@@ -22,13 +22,11 @@ fetch_k=20, lambda_mult=0.5 (core/schemas.py:52-55).
 from __future__ import annotations
 
 import math
-import weakref
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..cache import shared_persist
+from ..cache import held, shared_persist
 from ..functions import vector as V
 
 TOP_K = 8
@@ -311,28 +309,15 @@ def _ivf_assign(emb: DataFrame, n_centroids: int):
     return cents, _assign_cells(emb, cents)
 
 
-# IVF model memo, weak per embeddings handle: n_centroids -> the held
-# cell assignment of ivf_topk, and seed map -> cell model. A request then
-# probes and scores instead of re-collecting centroids or re-running the
-# kernel over the corpus. The assignment is held through shared_persist,
-# so clearCache() and release_shared_caches() drop it; a dropped entry is
-# rebuilt, never served stale. A cell model is plain driver data keyed by
-# its content: a rewritten input gets a fresh handle from load_tables
-# (keyed by the table files' stamps), and a split or a new epoch gives a
-# new seed map, so neither is ever served stale.
-_IVF_MEMO: "weakref.WeakKeyDictionary[DataFrame, dict]" = weakref.WeakKeyDictionary()
-
-
 def _ivf_model(emb: DataFrame, n_centroids: int) -> DataFrame:
-    """The cell assignment of `_ivf_assign(emb, n_centroids)`, built once
-    per embeddings handle while its persisted blocks live."""
-    per_handle = _IVF_MEMO.setdefault(emb, {})
-    assigned = per_handle.get(n_centroids)
-    if assigned is None or assigned.storageLevel == StorageLevel.NONE:
-        assigned = per_handle[n_centroids] = shared_persist(
-            _ivf_assign(emb, n_centroids)[1]
-        )
-    return assigned
+    """The cell assignment of `_ivf_assign(emb, n_centroids)`, held
+    persisted per embeddings handle (`cache.held`): a request then probes
+    and scores instead of re-running the kernel over the corpus.
+    `release_shared_caches()` leaves it; after `clearCache()` the next call
+    rebuilds it; a rewritten table gets a fresh handle from load_tables,
+    and the old handle's assignment is unpersisted once it is collected."""
+    return held(emb, ("ivf_assign", n_centroids),
+                lambda: _ivf_assign(emb, n_centroids)[1].persist())
 
 
 def build_seeds(n_centroids: int) -> tuple[tuple[int, int], ...]:
@@ -345,22 +330,25 @@ def cell_model(emb: DataFrame, seeds) -> tuple:
     map ((cid, seed_vec_id), ...): cell cid's centroid is `emb`'s vector
     at seed_vec_id (None when that embedding is NULL; a cell whose seed
     is not in `emb` is left out, as the seed join did). A miss runs one
-    collect of the seed rows; the model is then held in `_IVF_MEMO`."""
+    collect of the seed rows; the model is then held per handle, keyed by
+    its content: a split or a new epoch gives a new seed map, and a
+    rewritten table a new handle, so a model is never served stale."""
     seeds = tuple(sorted((int(c), int(s)) for c, s in seeds))
-    per_handle = _IVF_MEMO.setdefault(emb, {})
-    if seeds not in per_handle:
+
+    def build():
         vec_of = {
             int(r.vec_id): r.embedding
             for r in emb.filter(F.col("vec_id").isin(sorted({s for _, s in seeds})))
             .select("vec_id", "embedding")
             .collect()
         }
-        per_handle[seeds] = tuple(
+        return tuple(
             (c, None if vec_of[s] is None else tuple(vec_of[s]))
             for c, s in seeds
             if s in vec_of
         )
-    return per_handle[seeds]
+
+    return held(emb, ("cell_model", seeds), build)
 
 
 def probe_cells(model, qvec, n_probe: int) -> list[int]:
@@ -1739,9 +1727,6 @@ RP_SIGNS: tuple[tuple[float, ...], ...] = tuple(
     tuple(_rp_sign(i, j) for j in range(RP_EMB_DIM)) for i in range(RP_DIM)
 )
 
-# parsed-projection memo, keyed per live SparkContext (see _rp_project)
-_RP_PROJECT_MEMO = None
-
 
 def _rp_project(col_name: str, signs=RP_SIGNS) -> Column:
     """The RP_DIM projected coordinates of a vector column as ONE array
@@ -1764,27 +1749,22 @@ def _rp_project(col_name: str, signs=RP_SIGNS) -> Column:
     (double(float) is exact) keep the values identical to casting the
     whole array first.
 
-    r11: the parsed Column is memoized per live SparkContext (the
-    load_tables pattern) — parsing the ~1,500-term string still cost
-    ~0.4 s of driver time PER CALL (breakdown probe: v29 build 0.85 s,
-    two `_rp_project` parses). A Column is an immutable unresolved
-    expression handle; reusing it across plans is exactly what `F.col`
-    does, and analysis re-instantiates fresh expression ids per query.
-    Keyed on the SparkContext so a stopped JVM's handle is never reused."""
-    if signs is RP_SIGNS:
-        import weakref
+    r11: the parsed Column is held per live SparkContext (`cache.held`)
+    — parsing the ~1,500-term string still cost ~0.4 s of driver time PER
+    CALL (breakdown probe: v29 build 0.85 s, two `_rp_project` parses). A
+    Column is an immutable unresolved expression handle; reusing it across
+    plans is exactly what `F.col` does, and analysis re-instantiates fresh
+    expression ids per query. Keyed on the SparkContext so a stopped JVM's
+    handle is never reused."""
+    from pyspark import SparkContext
 
-        global _RP_PROJECT_MEMO
-        if _RP_PROJECT_MEMO is None:
-            _RP_PROJECT_MEMO = weakref.WeakKeyDictionary()
-        from pyspark import SparkContext
+    sc = SparkContext._active_spark_context
+    if signs is RP_SIGNS and sc is not None:
+        return held(sc, ("rp_project", col_name), lambda: _parse_projection(col_name, signs))
+    return _parse_projection(col_name, signs)
 
-        sc = SparkContext._active_spark_context
-        memo = _RP_PROJECT_MEMO.setdefault(sc, {}) if sc is not None else None
-        if memo is not None and col_name in memo:
-            return memo[col_name]
-    else:
-        memo = None
+
+def _parse_projection(col_name: str, signs) -> Column:
     chains = []
     for row in signs:
         chains.append(
@@ -1793,10 +1773,7 @@ def _rp_project(col_name: str, signs=RP_SIGNS) -> Column:
                 for j, s in enumerate(row)
             )
         )
-    col = F.expr("array(" + ", ".join(chains) + ")")
-    if memo is not None:
-        memo[col_name] = col
-    return col
+    return F.expr("array(" + ", ".join(chains) + ")")
 
 
 def _rp_dot(a: Column, b: Column) -> Column:

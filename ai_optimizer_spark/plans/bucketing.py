@@ -45,16 +45,7 @@ def ensure_bucketed_facts(
     tables = load_tables(spark, sf_dir)
     for tbl, key in _BUCKET_SPECS.items():
         if not spark.catalog.tableExists(names[tbl]):
-            # the in-memory catalog forgets tables between sessions but the
-            # warehouse directory survives — clear a stale location so the
-            # managed-table create doesn't refuse it
-            import os
-            import shutil
-
-            warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-            loc = os.path.join(warehouse.removeprefix("file:"), names[tbl])
-            if warehouse.startswith(("file:", "/")) and os.path.exists(loc):
-                shutil.rmtree(loc)
+            _clear_stale_location(spark, names[tbl])
             (
                 tables[tbl]
                 .write.format("parquet")
@@ -102,15 +93,9 @@ def ensure_clustered_store(
     tag = re.sub(r"\W", "_", sf_dir.strip("/").rsplit("/", 1)[-1])
     name = f"embeddings_ivf_{tag}"
     if not spark.catalog.tableExists(name):
-        import os
-        import shutil
-
         from ..operators.similarity import _ivf_assign
 
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-        loc = os.path.join(warehouse.removeprefix("file:"), name)
-        if warehouse.startswith(("file:", "/")) and os.path.exists(loc):
-            shutil.rmtree(loc)
+        _clear_stale_location(spark, name)
         emb = load_tables(spark, sf_dir)["embeddings"]
         _, assigned = _ivf_assign(emb, n_centroids)
         (
@@ -217,15 +202,9 @@ def ensure_cell_radii(
     tag = re.sub(r"\W", "_", sf_dir.strip("/").rsplit("/", 1)[-1])
     name = f"cell_radii_{tag}"
     if not spark.catalog.tableExists(name):
-        import os
-        import shutil
-
         from ..functions import vector as V
 
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-        loc = os.path.join(warehouse.removeprefix("file:"), name)
-        if warehouse.startswith(("file:", "/")) and os.path.exists(loc):
-            shutil.rmtree(loc)
+        _clear_stale_location(spark, name)
         store = spark.table(ensure_clustered_store(spark, sf_dir, n_centroids))
         cents = store.filter(F.col("vec_id") < n_centroids).select(
             F.col("vec_id").alias("cid2"), F.col("embedding").alias("ce")
@@ -437,7 +416,10 @@ def quantized_clustered_topk(
 def _clear_stale_location(spark: SparkSession, name: str) -> None:
     """The in-memory catalog forgets tables between sessions but the
     warehouse directory survives — clear a stale location so the managed
-    create doesn't refuse it (shared by every ensure_* writer here)."""
+    create doesn't refuse it (shared by every ensure_* writer here).
+    Not safe for two live processes on one warehouse: a table this
+    session's catalog does not know may be another process's store, still
+    being read, and its directory is deleted all the same."""
     import os
     import shutil
 

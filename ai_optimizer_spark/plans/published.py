@@ -51,11 +51,11 @@ from __future__ import annotations
 import os
 import re
 import uuid
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import held
 from ..tables import load_tables
 from .bucketing import IVF_N_CENTROIDS, ensure_sq8_clustered_store
 
@@ -66,11 +66,6 @@ _GEOM_RE = re.compile(r"^gen-(\d{6})\.parquet$")
 _CELL_SCHEMA = "vec_id long, label int, scale double, codes array<tinyint>"
 # committed snapshot (geometry file) schema
 _GEOM_SCHEMA = "cid long, seed_vec_id long, r_cell double, n_vecs long, path string"
-
-# Snapshot rows memo, weak per session: (root, epoch) -> (file stamp,
-# rows). Committed epochs are write-once, so a hit is exact; the stamp
-# (mtime, length) still guards against a root rebuilt in place.
-_SNAPSHOT_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
 def _pub_root(
@@ -140,8 +135,9 @@ def resolve_snapshot(
     """(epoch, rows) where rows = [(cid, seed_vec_id, r_cell, n_vecs,
     path)] — the k-row model state a reader needs, collected once per
     session and epoch (a repeated resolve lists geoms/ and stats one file,
-    no Spark job). `epoch=None` resolves CURRENT. Raises if nothing is
-    published."""
+    no Spark job). Committed epochs are write-once; the file's stamp
+    (mtime, length) still guards against a root rebuilt in place.
+    `epoch=None` resolves CURRENT. Raises if nothing is published."""
     root = _pub_root(spark, sf_dir, n_centroids, label)
     eps = published_epochs(spark, sf_dir, n_centroids, label=label)
     if not eps:
@@ -152,16 +148,11 @@ def resolve_snapshot(
     path = os.path.join(root, "geoms", f"gen-{ep:06d}.parquet")
     fs, jvm = _fs(spark, path)
     st = fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(path))
-    stamp = (st.getModificationTime(), st.getLen())
-    memo = _SNAPSHOT_MEMO.setdefault(spark, {})
-    held = memo.get((root, ep))
-    if held is None or held[0] != stamp:
-        rows = sorted(
-            (int(r.cid), int(r.seed_vec_id), float(r.r_cell), int(r.n_vecs), str(r.path))
-            for r in spark.read.schema(_GEOM_SCHEMA).parquet(path).collect()
-        )
-        held = memo[(root, ep)] = (stamp, tuple(rows))
-    return ep, list(held[1])
+    rows = held(spark, ("snapshot", root, ep), lambda: tuple(sorted(
+        (int(r.cid), int(r.seed_vec_id), float(r.r_cell), int(r.n_vecs), str(r.path))
+        for r in spark.read.schema(_GEOM_SCHEMA).parquet(path).collect()
+    )), stamp=(st.getModificationTime(), st.getLen()))
+    return ep, list(rows)
 
 
 def _commit_snapshot(

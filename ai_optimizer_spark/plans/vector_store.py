@@ -25,12 +25,11 @@ import json
 import os
 import shutil
 import uuid
-import weakref
 
-from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import held
 from ..embedding import embed_column
 from ..functions import text as T
 from .nl2sql import validate_identifier
@@ -512,24 +511,18 @@ def refresh_store(
     return populate_store(spark, catalog, name, chunks)
 
 
-# Similarity Column per live SparkContext and metric, over the store's
-# `embedding` and a `_q` query-vector column. Building the higher-order
-# expression is ~50 py4j calls, ~50 ms of Python plus JVM CPU per store
-# per request on a 4-core box; the per-request query vector rides in
-# `_q`, which Catalyst collapses back into one literal. A Column is an
-# immutable unresolved expression handle (the `similarity._rp_project`
-# precedent); keyed on the SparkContext, so a stopped JVM's handle is
-# never reused.
-_SIM_MEMO: "weakref.WeakKeyDictionary[SparkContext, dict[str, Column]]" = weakref.WeakKeyDictionary()
-
-
 def _similarity(spark: SparkSession, metric: str) -> Column:
     """round(score, 3) for a registered distance metric (COSINE, DOT or
-    EUCLIDEAN), scaled like the retriever's hit list."""
+    EUCLIDEAN) over the store's `embedding` and a `_q` query-vector column,
+    scaled like the retriever's hit list. Building the higher-order
+    expression is ~50 py4j calls, ~50 ms of Python plus JVM CPU per store
+    per request on a 4-core box, so the Column is held per live
+    SparkContext and metric (`cache.held`; the `similarity._rp_project`
+    precedent); the per-request query vector rides in `_q`, which Catalyst
+    collapses back into one literal."""
     from ..functions import vector as V
 
-    per_sc = _SIM_MEMO.setdefault(spark.sparkContext, {})
-    if metric not in per_sc:
+    def build():
         emb, q = F.col("embedding"), F.col("_q")
         if "COSINE" in metric:
             sim = F.lit(1.0) - (F.lit(1.0) - V.cosine_similarity(emb, q)) / F.lit(2.0)
@@ -537,8 +530,9 @@ def _similarity(spark: SparkSession, metric: str) -> Column:
             sim = V.dot(emb, q)
         else:
             sim = F.lit(1.0) / (F.lit(1.0) + V.euclidean_distance(emb, q))
-        per_sc[metric] = F.round(sim, 3) + F.lit(0.0)
-    return per_sc[metric]
+        return F.round(sim, 3) + F.lit(0.0)
+
+    return held(spark.sparkContext, ("similarity", metric), build)
 
 
 def _scored_store(

@@ -23,7 +23,6 @@ Pieces:
 
 from __future__ import annotations
 
-import os
 import threading
 from contextlib import contextmanager
 
@@ -46,27 +45,8 @@ from ..tables import load_tables
 # 64 is derived from the STATE bound, not the local core count: map-side
 # partial aggregation means the state exchange carries (map_tasks × k)
 # digest rows regardless of input volume, so 64 stores stay far below the
-# 100 MB/partition guideline at any corpus size. Env-overridable for
-# cluster runs.
-def _stream_state_partitions() -> int:
-    """Parse the env override defensively (advice r10): a malformed value
-    must fall back to the derived default with a warning, not crash every
-    import of the streaming package."""
-    raw = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "64")
-    try:
-        return int(raw)
-    except ValueError:
-        import warnings
-
-        warnings.warn(
-            f"SPARK_GRAFT_STREAM_STATE_PARTITIONS={raw!r} is not an int; "
-            f"falling back to 64",
-            stacklevel=2,
-        )
-        return 64
-
-
-STREAM_STATE_PARTITIONS = _stream_state_partitions()
+# 100 MB/partition guideline at any corpus size.
+STREAM_STATE_PARTITIONS = 64
 
 
 @contextmanager

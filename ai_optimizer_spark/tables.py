@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .cache import held
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -30,22 +32,6 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# DataFrame-handle memo, keyed per live session (weak: a stopped session's
-# entries vanish with it), then per sf_dir, then per table with the table
-# path's stamp. This is METADATA reuse, not result caching: each
-# `spark.read.parquet` costs a driver-side footer read + a 1-task schema
-# job, and the engine's query functions call load_tables per invocation —
-# measured r11, a 125-query bench session paid ~10 such jobs per query
-# (~0.3-0.8 s each call) re-deriving identical scan plans. The memoized
-# DataFrame is an UNEXECUTED plan: every materialization still scans the
-# parquet files; nothing about results or data is retained. A production
-# session holds table handles in exactly this way (catalog/metastore
-# lookup once per table). A table rewritten since its handle was made
-# (another mtime or size) gets a fresh handle, so a memo keyed by handles
-# (similarity._IVF_MEMO) never serves state built from the old files.
-_TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, dict[str, tuple]]]" = None  # type: ignore[assignment]
-
-
 def _stamp(path: str) -> tuple[int, int] | None:
     """(mtime ns, size) of a local table path; None when it cannot be
     stat'ed (a remote URI, or a missing table the read then reports)."""
@@ -56,33 +42,31 @@ def _stamp(path: str) -> tuple[int, int] | None:
     return st.st_mtime_ns, st.st_size
 
 
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return normalize_event_ts(df) if name == "events" else df
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every driver parquet table as a DataFrame.
 
     Plain `spark.read.parquet` — schema comes from parquet footers (no
-    inference pass), filters/projections push down to the scan. Handles
-    are memoized per (session, sf_dir, table stamp); callers get a fresh
-    dict, so overwriting an entry (the sample_mod pattern) never leaks
-    into other callers.
+    inference pass), filters/projections push down to the scan. Each
+    handle is held per session (`cache.held`) under the table file's
+    stamp: every read costs a footer read and a 1-task schema job (r11:
+    ~10 per bench query), and a handle is an unexecuted plan, so reuse
+    retains no data. A table rewritten since (another mtime or size) gets
+    a fresh handle, so state held per handle (the IVF models) is never
+    served from the old files. Callers get a fresh dict, so overwriting an
+    entry (the sample_mod pattern) never leaks into other callers.
     """
-    global _TABLE_MEMO
-    if _TABLE_MEMO is None:
-        import weakref
-
-        _TABLE_MEMO = weakref.WeakKeyDictionary()
-    per_dir = _TABLE_MEMO.setdefault(spark, {}).setdefault(os.path.abspath(sf_dir), {})
-    tables = {}
-    for name in TABLE_NAMES:
-        path = f"{sf_dir}/{name}.parquet"
-        stamp = _stamp(path)
-        held = per_dir.get(name)
-        if held is None or held[0] != stamp:
-            df = spark.read.parquet(path)
-            if name == "events":
-                df = normalize_event_ts(df)
-            held = per_dir[name] = (stamp, df)
-        tables[name] = held[1]
-    return tables
+    root = os.path.abspath(sf_dir)
+    return {
+        name: held(spark, ("table", root, name),
+                   lambda name=name: _read(spark, sf_dir, name),
+                   stamp=_stamp(f"{sf_dir}/{name}.parquet"))
+        for name in TABLE_NAMES
+    }
 
 
 def normalize_event_ts(ev: DataFrame) -> DataFrame:

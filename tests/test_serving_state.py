@@ -6,23 +6,34 @@ and the IVF cell assignment are built once per session. Each guard counts
 the Spark jobs a call starts through a job group and `statusTracker`. The
 freshness tests pin the other half: reused state is never served stale
 after a refresh, a cache clear, a new epoch or a rewritten input table.
+The session tier itself (`cache.held`) is pinned last: stamps, owners,
+concurrent callers, and that no other module keeps a memo of its own.
 """
 
 from __future__ import annotations
 
+import ast
+import gc
 import os
 import shutil
+import threading
+import time
 import uuid
+import weakref
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
+from pyspark import StorageLevel
 
+import ai_optimizer_spark
 import ai_optimizer_spark.operators.similarity as S
 import ai_optimizer_spark.plans.published as P
-from ai_optimizer_spark.cache import release_shared_caches
+from ai_optimizer_spark.cache import active_shared_count, held, release_shared_caches
 from ai_optimizer_spark.plans import nl2sql
 from ai_optimizer_spark.plans.bucketing import clustered_ivf_topk
 from ai_optimizer_spark.plans.flow import VecsearchFlow, VecsearchSettings
@@ -106,9 +117,13 @@ def test_second_snapshot_resolve_starts_no_job(spark, sf_small, pub_root):
     assert again == (ep, rows) and len(rows) == K
 
 
+def _cache_entry(spark, df):
+    return spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+
+
 def _cached_and_loaded(spark, df) -> bool:
     """`df` is cached and every partition of it is in the block manager."""
-    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    cached = _cache_entry(spark, df)
     if not cached.isDefined():
         return False
     return cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
@@ -136,7 +151,7 @@ def test_second_ivf_topk_runs_no_assignment(spark, sf_small, assign_calls):
     t = load_tables(spark, sf_small)
     first = _ivf_rows(t)
     assert assign_calls == [K]
-    assigned = S._IVF_MEMO[t["embeddings"]][K]
+    assigned = S._ivf_model(t["embeddings"], K)
     # every partition of the assignment is in the block manager, so the
     # next request reads it instead of running the MapInPandas kernel
     assert _cached_and_loaded(spark, assigned)
@@ -145,7 +160,7 @@ def test_second_ivf_topk_runs_no_assignment(spark, sf_small, assign_calls):
     assert n == [1]  # the query-vector read: no centroid or model collect
     assert [tuple(r) for r in df.collect()] == first
     assert assign_calls == [K]
-    assert S._IVF_MEMO[t["embeddings"]][K] is assigned
+    assert S._ivf_model(t["embeddings"], K) is assigned
 
 
 def _serve(spark, sf, reader, query_id=3, n_probe=4):
@@ -216,9 +231,59 @@ def test_ivf_memo_rebuilds_after_cache_drops(spark, sf_small, assign_calls):
     assert _ivf_rows(t, query_id=5) == want
     release_shared_caches()
     assert _ivf_rows(t, query_id=5) == want
-    assert assign_calls == [K] * 3  # built, then rebuilt after each drop
-    assigned = S._IVF_MEMO[t["embeddings"]][K]
+    assert assign_calls == [K] * 2  # built, then rebuilt after clearCache() only
+    assigned = S._ivf_model(t["embeddings"], K)
     assert _cached_and_loaded(spark, assigned)
+
+
+def test_release_keeps_the_held_assignment(spark, sf_small, assign_calls):
+    t = load_tables(spark, sf_small)
+    release_shared_caches()
+    want = _ivf_rows(t, query_id=7)
+    assert active_shared_count() == 0  # the held assignment is not registered
+    assigned, builds = S._ivf_model(t["embeddings"], K), len(assign_calls)
+    release_shared_caches()
+    assert _cached_and_loaded(spark, assigned)
+    assert _ivf_rows(t, query_id=7) == want
+    assert S._ivf_model(t["embeddings"], K) is assigned
+    assert len(assign_calls) == builds
+
+
+def _sf_copy(sf_small, tmp_path):
+    """An sf dir whose embeddings.parquet is a private copy (so it can be
+    rewritten) and whose other tables link to `sf_small`."""
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for name in TABLE_NAMES:
+        src = f"{sf_small}/{name}.parquet"
+        if name == "embeddings":
+            shutil.copyfile(src, sf / f"{name}.parquet")
+            os.chmod(sf / f"{name}.parquet", 0o644)
+        else:
+            os.symlink(src, sf / f"{name}.parquet")
+    return sf
+
+
+def _shift_labels(sf):
+    """Rewrite embeddings.parquet with the same vectors, labels moved by 100."""
+    path = str(sf / "embeddings.parquet")
+    tbl = pq.read_table(path)
+    i = tbl.schema.get_field_index("label")
+    pq.write_table(tbl.set_column(i, "label", pc.add(tbl.column("label"), 100)), path)
+
+
+def test_replaced_assignment_is_unpersisted(spark, sf_small, tmp_path):
+    sf = _sf_copy(sf_small, tmp_path)
+    t = load_tables(spark, str(sf))
+    _ivf_rows(t)
+    old = S._ivf_model(t["embeddings"], K)
+    assert _cached_and_loaded(spark, old)
+    _shift_labels(sf)
+    load_tables(spark, str(sf))  # the session now holds the new handle
+    assert _cache_entry(spark, old).isDefined()  # the old handle is still live
+    del t
+    gc.collect()
+    assert not _cache_entry(spark, old).isDefined()
 
 
 def test_new_epoch_is_served_from_its_own_rows(spark, sf_small, pub_root):
@@ -238,23 +303,12 @@ def test_new_epoch_is_served_from_its_own_rows(spark, sf_small, pub_root):
 
 
 def test_rewritten_table_gets_fresh_handle(spark, sf_small, tmp_path):
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    for name in TABLE_NAMES:
-        src = f"{sf_small}/{name}.parquet"
-        if name == "embeddings":
-            shutil.copyfile(src, sf / f"{name}.parquet")
-            os.chmod(sf / f"{name}.parquet", 0o644)
-        else:
-            os.symlink(src, sf / f"{name}.parquet")
+    sf = _sf_copy(sf_small, tmp_path)
     t1 = load_tables(spark, str(sf))
     before = _ivf_rows(t1)
 
     # same vectors (so the same centroids and cells), labels moved by 100
-    path = str(sf / "embeddings.parquet")
-    tbl = pq.read_table(path)
-    i = tbl.schema.get_field_index("label")
-    pq.write_table(tbl.set_column(i, "label", pc.add(tbl.column("label"), 100)), path)
+    _shift_labels(sf)
 
     t2 = load_tables(spark, str(sf))
     assert t2["embeddings"] is not t1["embeddings"]
@@ -346,3 +400,74 @@ def test_flow_request_reads_catalog_once(spark, tmp_path, monkeypatch):
     assert len(reads) == 1
     assert {r.searched_table for r in hits.collect()} == {
         "table_docs", "stream_docs", "join_docs"}
+
+
+# ---------------------------------------------------------------------------
+# the session tier: cache.held
+# ---------------------------------------------------------------------------
+
+
+class _Owner:
+    """A weak-referenceable stand-in for a session, context or handle."""
+
+
+def test_held_rebuilds_when_the_stamp_changes():
+    owner, builds = _Owner(), []
+
+    def build():
+        builds.append(1)
+        return len(builds)
+
+    assert held(owner, "k", build, stamp=(1, 10)) == 1
+    assert held(owner, "k", build, stamp=(1, 10)) == 1
+    assert held(owner, "k", build, stamp=(2, 10)) == 2
+    assert held(owner, "j", build, stamp=(2, 10)) == 3  # each key is its own entry
+    assert held(owner, "k", build, stamp=(2, 10)) == 2
+
+
+def test_dropping_the_owner_drops_its_entries(spark):
+    owner, value = _Owner(), _Owner()
+    ref = weakref.ref(value)
+    held(owner, "plain", lambda: value)
+    df = spark.range(13).persist()
+    df.count()
+    assert held(owner, "persisted", lambda: df) is df
+    del value
+    gc.collect()
+    assert ref() is not None and df.storageLevel != StorageLevel.NONE
+    del owner
+    gc.collect()
+    assert ref() is None
+    assert df.storageLevel == StorageLevel.NONE
+
+
+def test_concurrent_callers_build_once():
+    owner, builds = _Owner(), []
+    gate = threading.Barrier(8)
+
+    def build():
+        builds.append(1)
+        time.sleep(0.05)
+        return object()
+
+    def ask(_):
+        gate.wait()
+        return held(owner, "k", build)
+
+    with ThreadPoolExecutor(8) as pool:
+        got = list(pool.map(ask, range(8)))
+    assert len(builds) == 1
+    assert all(g is got[0] for g in got)
+
+
+def test_cache_is_the_only_module_level_memo():
+    pkg = Path(ai_optimizer_spark.__file__).parent
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "cache.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            name = getattr(node, "id", None) or getattr(node, "attr", None)
+            if isinstance(node, ast.Global) or name == "WeakKeyDictionary":
+                found.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert found == [], "keep session state in cache.held, not a module memo"

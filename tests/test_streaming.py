@@ -196,20 +196,3 @@ def test_token_assembly_is_arrival_order_proof(spark, sf_small):
     want = {tuple(r) for r in assemble_messages(chunks).collect()}
     got = {tuple(r) for r in assemble_messages(scrambled).collect()}
     assert got == want and len(got) == 50
-
-
-def test_stream_state_partitions_env_fallback(monkeypatch):
-    """advice r10: a malformed SPARK_GRAFT_STREAM_STATE_PARTITIONS must
-    fall back to the 64 default with a warning, not crash the import-time
-    constant derivation."""
-    import warnings
-
-    from ai_optimizer_spark.streaming import event_stream as es
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "not-an-int")
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        assert es._stream_state_partitions() == 64
-    assert any("not an int" in str(x.message) for x in w)
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "17")
-    assert es._stream_state_partitions() == 17
