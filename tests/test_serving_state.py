@@ -225,28 +225,18 @@ def test_refresh_between_flow_requests_serves_new_rows(spark, tmp_path):
 
 def test_ivf_memo_rebuilds_after_cache_drops(spark, sf_small, assign_calls):
     spark.catalog.clearCache()
+    release_shared_caches()
     t = load_tables(spark, sf_small)
     want = _ivf_rows(t, query_id=5)
+    assert active_shared_count() == 0  # the held assignment is not registered
     spark.catalog.clearCache()
     assert _ivf_rows(t, query_id=5) == want
+    assigned = S._ivf_model(t["embeddings"], K)
     release_shared_caches()
     assert _ivf_rows(t, query_id=5) == want
     assert assign_calls == [K] * 2  # built, then rebuilt after clearCache() only
-    assigned = S._ivf_model(t["embeddings"], K)
-    assert _cached_and_loaded(spark, assigned)
-
-
-def test_release_keeps_the_held_assignment(spark, sf_small, assign_calls):
-    t = load_tables(spark, sf_small)
-    release_shared_caches()
-    want = _ivf_rows(t, query_id=7)
-    assert active_shared_count() == 0  # the held assignment is not registered
-    assigned, builds = S._ivf_model(t["embeddings"], K), len(assign_calls)
-    release_shared_caches()
-    assert _cached_and_loaded(spark, assigned)
-    assert _ivf_rows(t, query_id=7) == want
     assert S._ivf_model(t["embeddings"], K) is assigned
-    assert len(assign_calls) == builds
+    assert _cached_and_loaded(spark, assigned)
 
 
 def _sf_copy(sf_small, tmp_path):
