@@ -39,6 +39,7 @@ FACTORS = tuple(
 OPS = [
     "d1_exact_dedup",
     "d3_minhash_lsh_pairs",
+    "d3c_minhash_lsh_capped",
     "d4_simhash_pairs",
     "d6_dedup_clusters",
     "d15_repeated_substrings",

@@ -22,11 +22,13 @@ from ai_optimizer_spark.registry import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
 
-# Covers every shared_persist call site: minhash/LSH family (dedup.py),
-# exact-Jaccard + recall intersection, sweep, incremental, winnow, KMV/CMS
+# Covers every shared_persist call site: exact-Jaccard + recall
+# intersection, the cap sweep's signature frame, winnow, KMV/CMS
 # sketches (misc.py), sketch refreshes + drift (refresh.py), quality
 # classifier fit (textops.py), bloom decon, error curve (similarity.py),
-# and the composed e2e plans (curation.py).
+# and the composed e2e plans (curation.py). d3 and d24 persist nothing
+# (one bucket aggregate, one verifier); they stay in the sweep so that a
+# persist added back to them is released too.
 SWEEP = [
     "d3_minhash_lsh_pairs",
     "d21_lsh_recall",

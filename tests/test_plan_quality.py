@@ -1150,3 +1150,56 @@ def test_range_search_assigns_cells_once(spark):
     assert tree.count("Scan ExistingRDD") == 2  # radii aggregate + pruned scan
     # both scans read the same checkpoint RDD
     assert len(set(re.findall(r"(\w+RDD\[\d+\]) at localCheckpoint", plan))) == 1
+
+
+def _band_keyed_joins(plan: str) -> int:
+    """Joins of a formatted plan whose equi-join keys include a `band`
+    column: the band self-join and the bucket-count join-back both key on
+    it."""
+    return len(re.findall(r"\nLeft keys \[\d+\]: \[[^\]]*\bband#", plan))
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "d3_minhash_lsh_pairs",
+        "d3c_minhash_lsh_capped",
+        "d21_lsh_recall",
+        "d22_lsh_cap_recall_sweep",
+        "st12b_neardup_candidates_batch",
+        "e2e_dedup_manifest",
+    ],
+)
+def test_lsh_candidates_have_no_band_join(spark, name):
+    """LSH candidates come from one (band, key) aggregate whose id lists
+    enumerate the pairs: no band row is joined back to its bucket size
+    or to another band row."""
+    assert _band_keyed_joins(plan_of(spark, name)) == 0
+
+
+def test_incremental_lsh_probes_band_index_once(spark):
+    """d24's one band-keyed join is the delta's band rows probing the
+    corpus-side bucket aggregate (the stored band index)."""
+    assert _band_keyed_joins(plan_of(spark, "d24_incremental_lsh_dedup")) == 1
+
+
+def test_dedup_losers_job_budget(spark):
+    """The capped LSH pair plan that curation runs eagerly (the bounded
+    collect in `_propagate_labels`) starts at most 8 jobs at sf0.01; the
+    band self-join form with its join-back and shingle probes started 21."""
+    from ai_optimizer_spark.operators.dedup import (
+        LSH_MAX_BUCKET_DEFAULT,
+        dedup_losers,
+    )
+    from ai_optimizer_spark.tables import load_tables
+
+    t = load_tables(spark, "/root/testdata/sf0.01")
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    group = "dedup-losers-budget"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        dedup_losers(t, max_bucket_size=LSH_MAX_BUCKET_DEFAULT)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8

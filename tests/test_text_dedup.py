@@ -3,6 +3,7 @@ consistency (mirrors the reference's own unit strategy, SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import hashlib
 import math
 import pytest
 
@@ -670,3 +671,217 @@ def test_grid_salt_width_scales_with_hot_key():
     assert D._grid_salt_width(129) == 4
     assert D._grid_salt_width(640) == 16  # the verdict's 10x-hotter case
     assert D._grid_salt_width(10**9) == D.MAX_SHINGLE_SALT
+
+
+# sha256 of the sorted rows ("|"-joined reprs, NULL as "") that each LSH
+# reader returned while its candidates came from band self-joins with a
+# bucket-count join-back and its verification from shingle-index probes.
+# One bucket aggregate and one array-intersect verifier replaced those
+# plans; the rows may not move. "d3_cap3" is minhash_lsh_pairs with
+# max_bucket_size=3, which drops buckets at sf0.001 and sf0.1.
+LSH_ROW_DIGESTS = {
+    ("sf0.001", "d3_minhash_lsh_pairs"): (
+        "2007dad87af70ac43d2732f3022151abf02f88cc2abf500047bff2862acf8662",
+        28,
+    ),
+    ("sf0.001", "d3c_minhash_lsh_capped"): (
+        "2007dad87af70ac43d2732f3022151abf02f88cc2abf500047bff2862acf8662",
+        28,
+    ),
+    ("sf0.001", "d21_lsh_recall"): (
+        "ee410f4fab8f075d8f61c3e51eade3fd5cb0c1f6d5e61a8535f5f6631ca93908",
+        1,
+    ),
+    ("sf0.001", "d22_lsh_cap_recall_sweep"): (
+        "8e2a39850bfe99d82b64d2b1af56c0bdff0572deb176a79a64eb6defccc805bd",
+        2,
+    ),
+    ("sf0.001", "d24_incremental_lsh_dedup"): (
+        "fcfe505677e304dcdc75bc339e03f6c4da5fb731da8ef77c526b16d036fa8b29",
+        62,
+    ),
+    ("sf0.001", "st12b_neardup_candidates_batch"): (
+        "62dc412efa381dac4df36345c7ce542bbe4de42219cf4d62a025881c9e1fd896",
+        64,
+    ),
+    ("sf0.001", "d3_cap3"): (
+        "5a241716feb18a5b26e006c9a7953b5ee35450d868a6835377c74daf20ca33bd",
+        22,
+    ),
+    ("sf0.01", "d3_minhash_lsh_pairs"): (
+        "c1b3347b610c76118d59ddcbf236c6a12ba82dcdd9440f870c22f269df5d0092",
+        25,
+    ),
+    ("sf0.01", "d3c_minhash_lsh_capped"): (
+        "c1b3347b610c76118d59ddcbf236c6a12ba82dcdd9440f870c22f269df5d0092",
+        25,
+    ),
+    ("sf0.01", "d21_lsh_recall"): (
+        "f5a0d44b378f62eb7e63e2dbd50cfebaf97321caba1a43578dd4434b51d73429",
+        1,
+    ),
+    ("sf0.01", "d22_lsh_cap_recall_sweep"): (
+        "a0cc9b8555991f9f76eefaa81dafe13aa357cf3455203c417e393c763e31289e",
+        2,
+    ),
+    ("sf0.01", "d24_incremental_lsh_dedup"): (
+        "2d91ee3c8725aef86b5b19d29a4e4c0335a6d73fda7aedc9bf9b28077310b6f3",
+        62,
+    ),
+    ("sf0.01", "st12b_neardup_candidates_batch"): (
+        "19ca5a513aeeef6367c26e864cc20bb8812bb57bedc8ca7d56ad6410beccb9eb",
+        66,
+    ),
+    ("sf0.01", "d3_cap3"): (
+        "c1b3347b610c76118d59ddcbf236c6a12ba82dcdd9440f870c22f269df5d0092",
+        25,
+    ),
+    ("sf0.1", "d3_minhash_lsh_pairs"): (
+        "7b8f56142af01560277f16cec80b32be35870479ed761aa998d1b4152c2d8f86",
+        256,
+    ),
+    ("sf0.1", "d3c_minhash_lsh_capped"): (
+        "7b8f56142af01560277f16cec80b32be35870479ed761aa998d1b4152c2d8f86",
+        256,
+    ),
+    ("sf0.1", "d21_lsh_recall"): (
+        "e6ec7d70f32fbec88980ead13da2c2dabd4439c675755bb152f80cd50918260d",
+        1,
+    ),
+    ("sf0.1", "d22_lsh_cap_recall_sweep"): (
+        "4d0a2fafa5894d42d7214cde7d2131ddf2629fde9fb9136a0125aea844cba372",
+        3,
+    ),
+    ("sf0.1", "d24_incremental_lsh_dedup"): (
+        "eaf5a715393f2ce44fecf417fbd9c42b15841ccaa873db44540cf8b2c184b309",
+        625,
+    ),
+    ("sf0.1", "st12b_neardup_candidates_batch"): (
+        "3183e01b069beeffb3727c79c2b5f51a739a1aadd40471dc64da66ea375d2951",
+        1484,
+    ),
+    ("sf0.1", "d3_cap3"): (
+        "a407ec5f4561666a076c337131ec5a995732f8ca23b5b3b5d68c9690cf102c40",
+        252,
+    ),
+}
+
+
+def _rows_digest(df) -> tuple[str, int]:
+    rows = sorted(
+        "|".join("" if v is None else repr(v) for v in r) for r in df.collect()
+    )
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest(), len(rows)
+
+
+@pytest.mark.parametrize(
+    "sf,name",
+    [
+        pytest.param(sf, name, marks=[pytest.mark.slow] if sf == "sf0.1" else [])
+        for sf, name in LSH_ROW_DIGESTS
+    ],
+)
+def test_lsh_family_rows_match_recorded_digests(spark, sf, name):
+    from ai_optimizer_spark.registry import QUERIES
+
+    sf_dir = f"/root/testdata/{sf}"
+    spark.catalog.clearCache()
+    if name == "d3_cap3":
+        df = D.minhash_lsh_pairs(load_tables(spark, sf_dir), max_bucket_size=3)
+    else:
+        df = QUERIES[name](spark, sf_dir)
+    assert _rows_digest(df) == LSH_ROW_DIGESTS[(sf, name)]
+
+
+def _text_docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_lsh_bucket_cap_boundary_and_multi_band_pair(spark):
+    """A bucket of exactly `cap` docs is kept and one of `cap + 1` docs is
+    dropped whole; a pair that shares all four band buckets is reported
+    once by every consumer of the bucket pairs, and st12b counts its four
+    shared buckets in both directions."""
+    cap = 3
+    at_cap = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    over_cap = "red orange yellow green blue indigo violet black white grey"
+    pair = "one two three four five six seven eight nine ten eleven"
+    rows = [(i, at_cap) for i in range(cap)]
+    rows += [(10 + i, over_cap) for i in range(cap + 1)]
+    rows += [(20, pair), (21, pair)]
+    t = {"documents": _text_docs(spark, rows)}
+    sig = D.doc_signatures(t["documents"])
+
+    buckets = D._lsh_buckets(D._band_rows(sig), cap).collect()
+    assert {r.n for r in buckets} == {2, cap}  # cap + 1 is gone in every band
+    want = [(0, 1), (0, 2), (1, 2), (20, 21)]
+    got = D.minhash_lsh_pairs(t, max_bucket_size=cap).collect()
+    assert sorted((r.doc_a, r.doc_b) for r in got) == want  # each pair once
+    assert all(r.jaccard == 1.0 for r in got)
+    cands = D._lsh_candidate_pairs(sig, cap).collect()
+    assert sorted((r.doc_a, r.doc_b) for r in cands) == want
+    # one more slot keeps the over-cap bucket
+    wider = D.minhash_lsh_pairs(t, max_bucket_size=cap + 1).collect()
+    over = [(a, b) for a in range(10, 14) for b in range(a + 1, 14)]
+    assert sorted((r.doc_a, r.doc_b) for r in wider) == sorted(want + over)
+
+    hits = {
+        (r.new_doc, r.index_doc): r.n_band_hits
+        for r in D.streaming_neardup_candidates_batch(t).collect()
+    }
+    n_bands = D.MINHASH_HASHES // D.LSH_BAND_ROWS
+    assert hits[(20, 21)] == hits[(21, 20)] == n_bands
+    assert len(hits) == 2 * (3 + 6 + 1)  # uncapped: every pair, both ways
+
+
+def test_lsh_null_and_short_docs_have_no_signature_row(spark):
+    """NULL text and docs under SHINGLE_N words have no signature row, so
+    no band row, bucket, candidate or st12b hit, even when identical."""
+    rows = [
+        (1, None),
+        (2, None),
+        (3, "two words"),
+        (4, "two words"),
+        (5, "a b c d e f"),
+        (6, "a b c d e f"),
+    ]
+    t = {"documents": _text_docs(spark, rows)}
+    sig = D.doc_signatures(t["documents"])
+    assert sorted(r.doc_id for r in sig.collect()) == [5, 6]
+    assert {r.doc_id for r in D._band_rows(sig).collect()} == {5, 6}
+    pairs = D.minhash_lsh_pairs(t).collect()
+    assert [(r.doc_a, r.doc_b) for r in pairs] == [(5, 6)]
+    hits = D.streaming_neardup_candidates_batch(t).collect()
+    assert {(r.new_doc, r.index_doc) for r in hits} == {(5, 6), (6, 5)}
+
+
+def test_lsh_readers_on_empty_corpus(spark, sf_small):
+    """An empty corpus gives every LSH pair reader a typed empty frame and
+    d21 its all-zero row (d22's single floor row is pinned by
+    test_cap_sweep_empty_corpus_single_floor_row)."""
+    t = load_tables(spark, sf_small)
+    empty = {"documents": t["documents"].limit(0)}
+    pair_types = [("doc_a", "bigint"), ("doc_b", "bigint"), ("jaccard", "double")]
+    for cap in (None, D.LSH_MAX_BUCKET_DEFAULT):
+        df = D.minhash_lsh_pairs(empty, max_bucket_size=cap)
+        assert df.dtypes == pair_types and df.collect() == []
+    cands = D._lsh_candidate_pairs(D.doc_signatures(empty["documents"]), 3)
+    assert cands.dtypes == pair_types[:2] and cands.collect() == []
+    d24 = D.incremental_lsh_dedup(empty)
+    assert d24.dtypes == [
+        ("doc_id", "bigint"),
+        ("n_dups", "bigint"),
+        ("first_dup", "bigint"),
+        ("best_jaccard", "double"),
+        ("is_new", "boolean"),
+    ]
+    assert d24.collect() == []
+    st = D.streaming_neardup_candidates_batch(empty)
+    assert st.dtypes == [
+        ("new_doc", "bigint"),
+        ("index_doc", "bigint"),
+        ("n_band_hits", "bigint"),
+    ]
+    assert st.collect() == []
+    d21 = D.lsh_recall(empty).collect()
+    assert [tuple(r) for r in d21] == [(0, 0, 0, 0.0, 0.0)]
