@@ -92,7 +92,8 @@ def exact_dedup_hashkey(t: dict[str, DataFrame]) -> DataFrame:
 
 
 def _shingle_sets(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle) exploded inverted index + per-doc set size."""
+    """(doc_id, shingle): the exploded inverted index of each doc's
+    distinct shingles."""
     return docs.select(
         "doc_id", F.explode(T.word_shingles("text", SHINGLE_N)).alias("shingle")
     )
@@ -404,25 +405,18 @@ def _lsh_buckets(bands: DataFrame, max_bucket_size: int | None = None) -> DataFr
 
 def _bucket_pairs(buckets: DataFrame) -> DataFrame:
     """(doc_a, doc_b, n): every pair doc_a < doc_b of one bucket's sorted
-    ids, with the bucket's size n — one generator over each id list. A
-    pair sharing k buckets has k rows; consumers fold them as they need
-    (distinct, MIN(n), COUNT)."""
-    ids = F.col("ids")
-    m = F.size(ids)
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), m - 1),
-            lambda i: F.transform(
-                F.slice(ids, i + 1, m - i),
-                lambda d: F.struct(
-                    F.element_at(ids, i).alias("doc_a"), d.alias("doc_b")
-                ),
-            ),
-        )
-    )
+    ids, with the bucket's size n. Two generators stream the pairs row by
+    row — each id, then the ids after it — so no bucket's pair list is
+    ever one array. A pair sharing k buckets has k rows; consumers fold
+    them as they need (distinct, MIN(n), COUNT)."""
     return (
         buckets.filter(F.col("n") >= 2)
-        .select(F.inline(pairs), "n")
+        .select("n", "ids", F.posexplode("ids").alias("pos", "doc_a"))
+        .select(
+            "doc_a",
+            F.explode(F.slice("ids", F.col("pos") + 2, F.col("n"))).alias("doc_b"),
+            "n",
+        )
         .filter(F.col("doc_a") < F.col("doc_b"))
     )
 

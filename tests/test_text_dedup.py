@@ -834,6 +834,36 @@ def test_lsh_bucket_cap_boundary_and_multi_band_pair(spark):
     assert len(hits) == 2 * (3 + 6 + 1)  # uncapped: every pair, both ways
 
 
+def test_bucket_pairs_stream_one_large_bucket(spark):
+    """One band bucket of 3,000 docs yields each of its m(m-1)/2 pairs once
+    with n = m, and a two-doc bucket of another band adds its one pair.
+    The pairs come from per-row generators, so a bucket's pair list is
+    never one array (whose length Spark bounds)."""
+    m = 3000
+    hot = spark.range(m).select(
+        F.col("id").alias("doc_id"), F.lit(0).alias("band"), F.lit("hot").alias("key")
+    )
+    small = spark.createDataFrame(
+        [(5, 1, "k"), (7, 1, "k")], "doc_id long, band int, key string"
+    )
+    pairs = D._bucket_pairs(D._lsh_buckets(hot.unionByName(small)))
+    got = pairs.groupBy("n").agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.sum("doc_a").alias("sum_a"),
+        F.sum("doc_b").alias("sum_b"),
+    )
+    # sum over a < b of a is sum_a a·(m−1−a); of b, sum_b b·b
+    want = {
+        m: (
+            m * (m - 1) // 2,
+            sum(a * (m - 1 - a) for a in range(m)),
+            sum(b * b for b in range(m)),
+        ),
+        2: (1, 5, 7),
+    }
+    assert {r.n: tuple(r)[1:] for r in got.collect()} == want
+
+
 def test_lsh_null_and_short_docs_have_no_signature_row(spark):
     """NULL text and docs under SHINGLE_N words have no signature row, so
     no band row, bucket, candidate or st12b hit, even when identical."""
